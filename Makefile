@@ -3,7 +3,7 @@
 
 SF_DIR ?= /root/testdata/sf0.01
 
-.PHONY: test sweep bench scale all
+.PHONY: test verify sweep bench scale all
 
 # metadata-plane scale proof: synthetic 1M-file manifest + 2k-commit CDF
 # log; wall times + plan assertions (see SCALE.md "Measured metadata plane")
@@ -12,6 +12,12 @@ scale:
 
 test:
 	python -m pytest tests/ -q
+
+# the Tier-1 verify command from ROADMAP.md, then the benchmark's rule tests
+verify:
+	export SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local; \
+	timeout -k 10 2670 python -m pytest tests/ -q --continue-on-collection-errors -p no:cacheprovider && \
+	python3 -m pytest perfbench/tests -q
 
 # full oracle sweep: every queries() entry vs its DuckDB oracle (the
 # driver samples 50; this is the 100% insurance run — see SWEEP_r03.log)

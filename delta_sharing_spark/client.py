@@ -191,13 +191,9 @@ def _query_over_http(spark: SparkSession, url: str,
                      limit: int | None = None,
                      row_ids: bool = False) -> DataFrame:
     """QueryTable over the REST endpoint and rebuild the DataFrame from
-    the response — delta format when the server forces it (column-mapped
-    tables), parquet profile otherwise (reference flow:
+    the response, in whichever format the server answered (reference flow:
     python/delta_sharing/delta_sharing.py load_as_spark -> rest_client)."""
-    from delta_sharing_spark.deltaformat import (
-        delta_lines_to_spark,
-        profile_lines_to_spark,
-    )
+    from delta_sharing_spark.deltaformat import snapshot_lines_to_spark
 
     profile_path, share, schema, table = _parse_url(url)
     profile = DeltaSharingProfile.read_from_file(profile_path)
@@ -225,15 +221,10 @@ def _query_over_http(spark: SparkSession, url: str,
                 "spark.delta.sharing.network.asyncQueryTimeout",
                 "600000")) / 1000.0,
         )
-    headers, lines = client.list_files_in_table(
+    _h, lines = client.list_files_in_table(
         share, schema, table, version=version, timestamp=timestamp,
         limit_hint=limit, response_formats="delta,parquet", **kwargs)
-    responded_delta = "responseformat=delta" in headers.get(
-        "delta-sharing-capabilities", "").replace(" ", "").lower()
-    if responded_delta:
-        df = delta_lines_to_spark(spark, lines, row_ids=row_ids)
-    else:
-        df = profile_lines_to_spark(spark, lines, row_ids=row_ids)
+    df = snapshot_lines_to_spark(spark, lines, row_ids=row_ids)
     if limit is not None:
         df = df.limit(limit)
     return df
@@ -393,6 +384,7 @@ def load_table_changes_as_spark(
     actions' ``baseRowId``/``defaultRowCommitVersion`` (NULL on
     cdc/remove rows — change images carry no materialized ids)."""
     from delta_sharing_spark.cdf import table_changes, table_changes_actions
+    from delta_sharing_spark.deltaformat import changes_lines_to_spark
 
     spark = spark or SparkSession.getActiveSession()
     if spark is None:
@@ -408,7 +400,7 @@ def load_table_changes_as_spark(
             ending_timestamp=ending_timestamp,
             response_formats="delta,parquet",
             include_historical_metadata=True)
-        return _changes_lines_to_spark(spark, lines, row_ids=row_ids)
+        return changes_lines_to_spark(spark, lines, row_ids=row_ids)
     table = _resolve(spark, url)
     if row_ids:
         # the in-process leg shares the wire rebuild: the actions form
@@ -420,370 +412,13 @@ def load_table_changes_as_spark(
             starting_timestamp=starting_timestamp,
             ending_timestamp=ending_timestamp,
             include_historical_metadata=True)
-        return _changes_lines_to_spark(spark, out["actions"],
-                                       row_ids=True)
+        return changes_lines_to_spark(spark, out["actions"], row_ids=True)
     return table_changes(
         spark, table.log.path,
         starting_version=starting_version, ending_version=ending_version,
         starting_timestamp=starting_timestamp,
         ending_timestamp=ending_timestamp,
     )
-
-
-def _delta_changes_to_profile_shape(lines: list) -> list:
-    """Delta-format changes lines (file wrappers with deltaSingleAction
-    add/cdc/remove) → the parquet-profile line shape, so one assembly
-    handles both formats. The deltaMetadata wrapper keeps its
-    schemaString + configuration (column-mapping resolution needs both)."""
-    out = []
-    for line in lines:
-        if "metaData" in line and "deltaMetadata" in line["metaData"]:
-            out.append({"metaData": dict(line["metaData"]["deltaMetadata"])})
-        elif "file" in line and "deltaSingleAction" in line["file"]:
-            w = line["file"]
-            kind = next(iter(w["deltaSingleAction"]))
-            a = w["deltaSingleAction"][kind]
-            key = {"add": "add", "remove": "remove", "cdc": "cdf"}.get(kind)
-            if key is None:
-                # ``txn`` (and any future non-file single action) has no
-                # path/size — pass txn through under its own key,
-                # forward-compat skip anything else.
-                if kind == "txn":
-                    out.append({"txn": dict(a)})
-                continue
-            entry = {
-                "url": a["path"], "id": w.get("id"),
-                "partitionValues": a.get("partitionValues", {}),
-                "version": w.get("version"),
-                "timestamp": w.get("timestamp"),
-            }
-            for k in ("baseRowId", "defaultRowCommitVersion",
-                      "deletionVector"):
-                # row-tracking fields pass through for row_ids=True, and
-                # the DV descriptor so DV-masked adds are scanned as
-                # their LOGICAL content (survivors only)
-                if a.get(k) is not None:
-                    entry[k] = a[k]
-            out.append({key: entry})
-        else:
-            out.append(line)
-    return out
-
-
-def _changes_lines_to_spark(spark: SparkSession, lines: list,
-                            row_ids: bool = False) -> DataFrame:
-    """Wire CDF response → DataFrame: one explicit-schema scan per (schema
-    epoch, action kind), per-file commit version/timestamp attached by a
-    broadcast path join (union-of-scans shape as the reference's
-    RemoteDeltaCDFRelation, client/.../RemoteDeltaCDFRelation.scala:85-140).
-
-    Schema epochs: a historical ``metaData`` line
-    (``includeHistoricalMetadata``) starts a new epoch — files after it
-    were written under ITS (physical) schema and are read with it
-    explicitly, then converted to the END-OF-RANGE logical schema (the
-    LAST metaData line's — see target below): rename via stable physical
-    names, widening casts, null-fill columns added later, drop columns
-    removed later. Files before the first historical metaData read under
-    the head's physical schema — under includeHistoricalMetadata the head
-    IS the range-start snapshot's metaData (ref
-    DeltaSharedTable.scala:735-739), so that is exactly their write-time
-    schema; on plain responses the head is the latest snapshot's and the
-    scan relies on immutable physical names plus Spark-4 parquet widening
-    (int→long/float→double), lossless for every read-compatible history.
-    A non-widening change raises — the in-process ``table_changes``
-    parity. Accepts both the parquet-profile shape and the delta format
-    the server forces for column-mapped tables.
-
-    ``row_ids=True`` (requires a row-tracked table) appends
-    ``_row_id`` / ``_row_commit_version`` to INSERT rows, reconstructed
-    from each add action's ``baseRowId``/``defaultRowCommitVersion`` +
-    parquet row index with materialized-column overrides — the
-    range/changes twin of the snapshot-form reconstruction
-    (deltaformat.py). cdc/remove rows carry NULL ids: Delta does not
-    materialize row ids into change-data pre/post-image files."""
-    import json as _json
-
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    from delta_sharing_spark.deltaformat import (
-        _attach_row_ids,
-        _check_base_row_ids,
-        _row_tracking_cols,
-    )
-    from delta_sharing_spark.streaming.schema import (
-        _datatype_read_compatible,
-        _widenable,
-    )
-
-    if any("file" in line and "deltaSingleAction" in line.get("file", {})
-           for line in lines):
-        lines = _delta_changes_to_profile_shape(lines)
-
-    def parse_meta(m: dict) -> tuple[T.StructType, bool]:
-        return (T.StructType.fromJson(_json.loads(m["schemaString"])),
-                (m.get("configuration") or {}).get(
-                    "delta.columnMapping.mode") == "name")
-
-    head: tuple[T.StructType, bool] | None = None
-    # conversion TARGET = the LAST metaData line's schema — the
-    # end-of-range snapshot's, whichever head the server chose: under
-    # includeHistoricalMetadata the head is the range-START snapshot's
-    # (ref DeltaSharedTable.scala:735-739) and every in-range change
-    # arrives as a historical line, so the last line IS the end-of-range
-    # schema; without historical lines the head (latest) is also the
-    # last. Keeping the target at end-of-range matches the in-process
-    # table_changes output (renamed columns under their final name,
-    # widened types at their final width).
-    target_config: dict = {}
-    target: tuple[T.StructType, bool] | None = None
-    # epochs: list of (epoch_schema, cm, {"add": [...], ...})
-    epochs: list[tuple[T.StructType, bool, dict[str, list[dict]]]] = []
-    for line in lines:
-        if "metaData" in line and "schemaString" in line["metaData"]:
-            schema_cm = parse_meta(line["metaData"])
-            if head is None:
-                head = schema_cm
-            target = schema_cm
-            target_config = line["metaData"].get("configuration") or {}
-            epochs.append((*schema_cm, {"add": [], "cdf": [],
-                                        "remove": []}))
-            continue
-        for kind in ("add", "cdf", "remove"):
-            if kind in line:
-                if not epochs:
-                    raise ValueError(
-                        "changes response lacks a metaData line")
-                epochs[-1][2][kind].append(line[kind])
-    if head is None or target is None:
-        raise ValueError("changes response lacks a metaData line")
-    schema, cm = target
-    mat_id, mat_ver = _row_tracking_cols(target_config)
-    if row_ids:
-        _check_base_row_ids(
-            [(a.get("url"), a.get("baseRowId"))
-             for _s, _c, groups in epochs for a in groups["add"]])
-
-    def phys_name(f: T.StructField, mapped: bool) -> str:
-        return ((f.metadata or {}).get("delta.columnMapping.physicalName",
-                                       f.name) if mapped else f.name)
-
-    def physical(st: T.StructType, mapped: bool) -> T.StructType:
-        return T.StructType([
-            T.StructField(phys_name(f, mapped), f.dataType, True)
-            for f in st.fields])
-
-    target_phys_of = {f.name: phys_name(f, cm) for f in schema.fields}
-    target_type_of_phys = {target_phys_of[f.name]: f.dataType
-                           for f in schema.fields}
-    out_fields = schema.fields + [
-        T.StructField("_change_type", T.StringType()),
-        T.StructField("_commit_version", T.LongType()),
-        T.StructField("_commit_timestamp", T.LongType()),
-    ] + ([T.StructField("_row_id", T.LongType()),
-          T.StructField("_row_commit_version", T.LongType())]
-         if row_ids else [])
-    parts: list[DataFrame] = []
-    for ep_schema, ep_cm, groups in epochs:
-        ep_phys = physical(ep_schema, ep_cm)
-        # non-widening mid-range change is unreadable — reject clearly
-        # (SchemaUtils.scala:37-90 read-compat gate direction)
-        for f in ep_schema.fields:
-            p = phys_name(f, ep_cm)
-            dst = target_type_of_phys.get(p)
-            if dst is None:
-                continue  # column dropped later
-            if not (f.dataType == dst
-                    or _datatype_read_compatible(f.dataType, dst)
-                    or _widenable(f.dataType, dst)):
-                raise ValueError(
-                    f"incompatible schema change across the changes "
-                    f"range: column '{p}' was "
-                    f"{f.dataType.simpleString()} and is now "
-                    f"{dst.simpleString()}; query a narrower range")
-        def finalize(df, attach_ids):
-            cols = set(df.columns)
-            return df.select(
-                *[(F.col(target_phys_of[f.name]).cast(f.dataType)
-                   if target_phys_of[f.name] in cols
-                   else F.lit(None).cast(f.dataType)).alias(f.name)
-                  for f in schema.fields],
-                # cdc files carry _change_type in their bytes; add/remove
-                # got the inferred constant
-                F.col("_change_type").cast("string").alias("_change_type"),
-                F.col("_commit_version"), F.col("_commit_timestamp"),
-                # cdc/remove rows: NULL ids (no materialized ids in
-                # change-data images — Delta "Row Tracking" scope)
-                *([F.col("_row_id"), F.col("_row_commit_version")]
-                  if attach_ids else
-                  ([F.lit(None).cast("long").alias("_row_id"),
-                    F.lit(None).cast("long").alias("_row_commit_version")]
-                   if row_ids else [])),
-            )
-
-        for kind, change_type in (("cdf", None), ("add", "insert"),
-                                  ("remove", "delete")):
-            all_actions = groups[kind]
-            # DV-carrying adds (a DV-mode DELETE/UPDATE in the range):
-            # the action's logical content is the file MINUS the masked
-            # rows — scanned per file below with the row_index anti-join,
-            # exactly like the snapshot-form rebuild (deltaformat.py)
-            dv_actions = [a for a in all_actions
-                          if a.get("deletionVector")] \
-                if kind == "add" else []
-            actions = [a for a in all_actions
-                       if not a.get("deletionVector")] \
-                if kind == "add" else all_actions
-            attach_ids = row_ids and kind == "add"
-            if dv_actions:
-                parts.extend(
-                    finalize(_dv_add_scan(
-                        spark, a, physical(ep_schema, ep_cm), attach_ids,
-                        mat_id, mat_ver, target_type_of_phys), attach_ids)
-                    for a in dv_actions)
-            if not actions:
-                continue
-            # typed partition values (absent from the file bytes)
-            pv_union: dict[str, bool] = {}
-            for a in actions:
-                pv_union.update({k: True
-                                 for k in (a.get("partitionValues") or {})})
-            meta = spark.createDataFrame(
-                [(a["url"], int(a["version"]), int(a["timestamp"]),
-                  *[(a.get("partitionValues") or {}).get(k) or None
-                    for k in pv_union],
-                  *([a.get("baseRowId"),
-                     a.get("defaultRowCommitVersion")]
-                    if attach_ids else []))
-                 for a in actions],
-                T.StructType(
-                    [T.StructField("__path", T.StringType()),
-                     T.StructField("_commit_version", T.LongType()),
-                     T.StructField("_commit_timestamp", T.LongType())]
-                    + [T.StructField(f"__pv_{k}", T.StringType())
-                       for k in pv_union]
-                    + ([T.StructField("__rt_base", T.LongType()),
-                        T.StructField("__rt_ver", T.LongType())]
-                       if attach_ids else [])))
-            read_schema = ep_phys
-            if kind == "cdf":
-                # cdc files physically carry their own _change_type
-                read_schema = T.StructType(
-                    list(ep_phys.fields)
-                    + [T.StructField("_change_type", T.StringType())])
-            if attach_ids:
-                # materialized row-id override columns: only maintenance/
-                # DML-written files carry them, the rest null-fill and
-                # fall back to baseRowId + row index
-                read_schema = T.StructType(
-                    list(read_schema.fields)
-                    + [T.StructField(mat_id, T.LongType()),
-                       T.StructField(mat_ver, T.LongType())])
-            # partition columns never live in the file bytes
-            read_schema = T.StructType(
-                [f for f in read_schema.fields if f.name not in pv_union])
-            # __path is captured ONCE at scan time — input_file_name() is
-            # undefined after a join, so all per-file attributes ride a
-            # single broadcast join on it
-            df = spark.read.schema(read_schema) \
-                .parquet(*[a["url"] for a in actions])
-            if attach_ids:
-                df = df.select(
-                    "*", F.col("_metadata.row_index").alias("__rt_ri"))
-            df = (
-                df.withColumn("__path", F.url_decode(F.regexp_replace(
-                    F.regexp_replace(F.input_file_name(), "^file:(//)?", ""),
-                    r"\+", "%2B")))
-                .join(F.broadcast(meta), "__path")
-                .drop("__path")
-            )
-            if attach_ids:
-                df = _attach_row_ids(df, mat_id, mat_ver,
-                                     F.col("__rt_base"),
-                                     F.col("__rt_ver")) \
-                    .drop("__rt_base", "__rt_ver")
-            if change_type is not None:
-                df = df.withColumn("_change_type", F.lit(change_type))
-            for k in pv_union:  # pv keys are physical names
-                df = df.withColumn(
-                    k, F.col(f"__pv_{k}").cast(
-                        target_type_of_phys.get(k, T.StringType()))
-                ).drop(f"__pv_{k}")
-            parts.append(finalize(df, attach_ids))
-    if not parts:
-        return spark.createDataFrame([], T.StructType(out_fields))
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
-
-
-def _dv_add_scan(spark: SparkSession, a: dict, ep_phys, attach_ids: bool,
-                 mat_id: str, mat_ver: str, target_type_of_phys: dict):
-    """One DV-masked add from a changes/range response: scan the file,
-    anti-join the deletion vector on the pre-deletion row index (ids stay
-    stable for survivors), stamp the action's commit version/timestamp
-    and typed partition values."""
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    from delta_sharing_spark.deltaformat import _attach_row_ids
-
-    pv = a.get("partitionValues") or {}
-    read_schema = T.StructType(
-        [f for f in ep_phys.fields if f.name not in pv]
-        + ([T.StructField(mat_id, T.LongType()),
-            T.StructField(mat_ver, T.LongType())] if attach_ids else []))
-    df = spark.read.schema(read_schema).parquet(a["url"]) \
-        .select("*", F.col("_metadata.row_index").alias("__ri"))
-    dv = a["deletionVector"]
-    if dv.get("storageType") == "i":
-        from delta_sharing_spark.plans.dvcodec import decode_inline_dv
-
-        dv_rows = spark.createDataFrame(
-            [(ri,) for ri in decode_inline_dv(dv["pathOrInlineDv"],
-                                              dv.get("sizeInBytes"))],
-            "__ri long")
-    else:
-        keys = sorted({k for k in (a.get("id"), a.get("url")) if k})
-        dv_rows = (spark.read.parquet(dv["pathOrInlineDv"])
-                   .filter(F.col("path").isin(keys))
-                   .select(F.col("row_index").alias("__ri")))
-    df = df.join(F.broadcast(dv_rows), "__ri", "left_anti")
-    if attach_ids:
-        df = _attach_row_ids(
-            df.withColumnRenamed("__ri", "__rt_ri"), mat_id, mat_ver,
-            F.lit(a.get("baseRowId")).cast("long"),
-            F.lit(a.get("defaultRowCommitVersion")).cast("long"))
-    else:
-        df = df.drop("__ri")
-    df = (df.withColumn("_change_type", F.lit("insert"))
-          .withColumn("_commit_version", F.lit(int(a["version"])))
-          .withColumn("_commit_timestamp", F.lit(int(a["timestamp"]))))
-    for k, v in pv.items():
-        col = F.lit(None) if v in ("", None) else F.lit(v)
-        df = df.withColumn(k, col.cast(
-            target_type_of_phys.get(k, T.StringType())))
-    return df
-
-
-def _partition_value(raw: str | None, type_name: str):
-    """Convert a partition-directory string to the column's type (ref
-    python/delta_sharing/converter.py to_converters semantics: empty string
-    / missing -> null)."""
-    if raw is None or raw == "":
-        return None
-    if type_name in ("byte", "short", "integer", "long"):
-        return int(raw)
-    if type_name in ("float", "double") or type_name.startswith("decimal"):
-        return float(raw)
-    if type_name == "boolean":
-        return raw == "true"
-    if type_name == "date":
-        return pd.Timestamp(raw).date()
-    if type_name == "timestamp":
-        return pd.Timestamp(raw)
-    return raw  # string and anything lexical
 
 
 def load_table_changes_as_pandas(
@@ -794,77 +429,16 @@ def load_table_changes_as_pandas(
     ending_timestamp: str | None = None,
     spark: SparkSession | None = None,
 ) -> pd.DataFrame:
-    """CDF as a pandas DataFrame built driver-side from the wire-shaped
-    action stream — no Spark scan, mirroring the reference's direct pandas
-    path (python/delta_sharing/reader.py table_changes_to_pandas,
-    reader.py:640-688): each add/cdf/remove file is read with pyarrow,
-    partition columns are filled from partitionValues, and the three
-    virtual columns (_change_type, _commit_version, _commit_timestamp) are
-    attached per action."""
-    import json as _json
-
-    import pyarrow.parquet as pq
-
-    from delta_sharing_spark.cdf import table_changes_actions
-
-    spark = spark or SparkSession.getActiveSession()
-    if spark is None:
-        raise RuntimeError("no active SparkSession")
-    profile_path, share, schema, table_name = _parse_url(url)
-    profile = DeltaSharingProfile.read_from_file(profile_path)
-    if _is_http(profile.endpoint):
-        lines = _rest_client(profile).list_table_changes(
-            share, schema, table_name,
-            starting_version=starting_version,
-            ending_version=ending_version,
-            starting_timestamp=starting_timestamp,
-            ending_timestamp=ending_timestamp,
-            response_formats="delta,parquet")
-        if any("file" in ln and "deltaSingleAction" in ln.get("file", {})
-               for ln in lines):
-            lines = _delta_changes_to_profile_shape(lines)
-        payload = {"actions": lines}
-    else:
-        table = _resolve(spark, url)
-        payload = table_changes_actions(
-            spark, table.log.path,
-            starting_version=starting_version,
-            ending_version=ending_version,
-            starting_timestamp=starting_timestamp,
-            ending_timestamp=ending_timestamp,
-        )
-    schema_fields: list[tuple[str, str]] = []
-    for line in payload["actions"]:
-        if "metaData" in line:
-            parsed = _json.loads(line["metaData"]["schemaString"])
-            schema_fields = [
-                (f["name"],
-                 f["type"] if isinstance(f["type"], str) else "struct")
-                for f in parsed["fields"]
-            ]
-            break
-    col_order = [n for n, _ in schema_fields] + [
-        "_change_type", "_commit_version", "_commit_timestamp"]
-
-    frames: list[pd.DataFrame] = []
-    for line in payload["actions"]:
-        kind = next(iter(line))
-        if kind not in ("add", "cdf", "remove"):
-            continue
-        action = line[kind]
-        pdf = pq.read_table(action["url"]).to_pandas()
-        for name, type_name in schema_fields:
-            if name not in pdf.columns:
-                pdf[name] = _partition_value(
-                    action.get("partitionValues", {}).get(name), type_name)
-        if kind != "cdf":  # cdc files carry their own _change_type column
-            pdf["_change_type"] = "insert" if kind == "add" else "delete"
-        pdf["_commit_version"] = int(action["version"])
-        pdf["_commit_timestamp"] = int(action["timestamp"])
-        frames.append(pdf[col_order])
-    if not frames:
-        return pd.DataFrame(columns=col_order)
-    return pd.concat(frames, ignore_index=True)
+    """CDF as a pandas DataFrame (reference
+    python/delta_sharing/delta_sharing.py load_table_changes_as_pandas):
+    the Spark read of :func:`load_table_changes_as_spark`, collected —
+    the way :func:`load_as_pandas` works, so both paths share one rebuild
+    (column mapping, typed partition values, deletion vectors)."""
+    return load_table_changes_as_spark(
+        url, starting_version=starting_version,
+        ending_version=ending_version,
+        starting_timestamp=starting_timestamp,
+        ending_timestamp=ending_timestamp, spark=spark).toPandas()
 
 
 class SharingClient:

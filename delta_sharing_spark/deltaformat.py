@@ -1,4 +1,4 @@
-"""Delta response format (``responseformat=delta``) — PROTOCOL.md:4014-4137.
+"""The Delta Sharing wire action format, read and written in one place.
 
 When a client sets ``delta-sharing-capabilities: responseformat=delta``, the
 server wraps each action as a *delta* action instead of the parquet-profile
@@ -10,10 +10,15 @@ delta log and read with a delta library (reference client reconstruction:
 python/delta_sharing/reader.py:303-336; wire shape
 PROTOCOL.md:4014-4137).
 
-Two pure functions: :func:`actions_to_delta_format` converts the engine's
-parquet-profile action stream, and :func:`delta_lines_to_spark` is the
-client-side reconstruction back to a DataFrame (the in-engine twin of the
-reference's delta-log rebuild).
+- :func:`actions_to_delta_format` wraps the engine's parquet-profile action
+  stream (server side); :func:`unwrap_delta_lines` is its inverse, so every
+  client-side reader parses one shape whichever format the server chose.
+- :func:`delta_lines_txns` reads SetTransaction state from a response.
+- :func:`snapshot_lines_to_spark` (QueryTable snapshot responses) and
+  :func:`changes_lines_to_spark` (changes and version-range responses) turn
+  a response into a DataFrame. Both hand schema epochs of file actions to
+  one scan builder, ``_scan_epochs`` — the single place wire file actions
+  become a Spark scan.
 """
 
 from __future__ import annotations
@@ -151,375 +156,305 @@ def _row_tracking_cols(configuration: dict[str, Any] | None
             cfg.get(MAT_ROW_VER_KEY, MAT_ROW_VER_DEFAULT))
 
 
-def _check_base_row_ids(entries) -> None:
-    """row_ids=True requires every wire action to carry baseRowId;
-    ``entries`` is (label, baseRowId) per action."""
-    missing = [k for k, b in entries if b is None]
-    if missing:
-        raise ValueError(
-            "row_ids=True: response actions lack baseRowId (table "
-            f"not row-tracked, or pre-enablement files): {missing[:3]}")
+def unwrap_delta_lines(lines: list[dict[str, Any]]) -> list[dict[str, Any]]:
+    """Delta-format response lines → the parquet-profile shape (the inverse
+    of :func:`actions_to_delta_format`); parquet-profile lines pass through
+    unchanged, so the line shape alone tells the two formats apart.
 
-
-def _rt_read_schema(names_types, mat_id: str, mat_ver: str):
-    """Explicit scan schema for row-id reconstruction: the data columns
-    plus the materialized override columns — only maintenance-written
-    files carry the latter (the rest null-fill and fall back to
-    baseRowId + row index); footer inference would be sample-dependent."""
-    from pyspark.sql import types as T
-
-    return T.StructType(
-        [T.StructField(n, dt, True) for n, dt in names_types]
-        + [T.StructField(mat_id, T.LongType(), True),
-           T.StructField(mat_ver, T.LongType(), True)])
-
-
-def _attach_row_ids(df, mat_id: str, mat_ver: str, base, ver):
-    """_row_id = materialized override else base + row index;
-    _row_commit_version = materialized override else the file default —
-    the one reconstruction both response formats share."""
-    from pyspark.sql import functions as F
-
-    return (df.withColumn("_row_id", F.coalesce(
-                F.col(mat_id), base + F.col("__rt_ri")))
-            .withColumn("_row_commit_version",
-                        F.coalesce(F.col(mat_ver), ver))
-            .drop("__rt_ri", mat_id, mat_ver))
-
-
-def delta_lines_to_spark(spark: SparkSession,
-                         lines: list[dict[str, Any]],
-                         row_ids: bool = False) -> DataFrame:
-    """Client-side reconstruction: delta-format query response → DataFrame.
-
-    Reads every deltaSingleAction.add parquet path and attaches typed
-    partition-value columns per the shared schema — the in-engine twin of
-    the reference client's local-delta-log rebuild
-    (python/delta_sharing/reader.py:303-336).
-
-    ``row_ids=True`` additionally reconstructs the Delta row-tracking
-    columns ``_row_id`` / ``_row_commit_version`` from the wire actions'
-    ``baseRowId``/``defaultRowCommitVersion`` + parquet row index, with
-    materialized-column overrides — the remote twin of
-    ``SharedTable.to_df(row_ids=True)``."""
-    import json
-
-    from pyspark.sql import functions as F
-    from pyspark.sql import types as T
-
-    schema: T.StructType | None = None
-    cm = False
-    config: dict[str, Any] = {}
-    adds: list[tuple[dict[str, Any], str | None]] = []
+    File wrappers become ``add``/``remove``/``cdf`` lines carrying the
+    wrapper's id, version and timestamp. ``txn`` (SetTransaction state, no
+    path/size) passes through under its own key; any unknown single-action
+    kind is skipped for forward compatibility."""
+    out: list[dict[str, Any]] = []
     for line in lines:
-        if "metaData" in line:
-            meta = line["metaData"]["deltaMetadata"]
-            schema = T.StructType.fromJson(json.loads(meta["schemaString"]))
-            config = meta.get("configuration") or {}
-            cm = config.get("delta.columnMapping.mode") == "name"
-        elif "file" in line:
-            single = line["file"]["deltaSingleAction"]
-            if "add" in single:
-                adds.append((single["add"], line["file"].get("id")))
-    if schema is None:
-        raise ValueError("delta-format response lacks a metaData line")
-    rt_extras = ["_row_id", "_row_commit_version"] if row_ids else []
-    if row_ids:
-        _check_base_row_ids([(a.get("path"), a.get("baseRowId"))
-                             for a, _i in adds])
-    if not adds:
-        out_schema = T.StructType(
-            list(schema.fields)
-            + [T.StructField(c, T.LongType(), True) for c in rt_extras])
-        return spark.createDataFrame([], out_schema)
-    # column mapping (readerFeature columnMapping, delta protocol): files
-    # and partitionValues are keyed by the immutable PHYSICAL names stamped
-    # in each field's metadata; a delta reader resolves them back to the
-    # logical names — this is why such tables are delta-format-only
-    phys_of = {
-        f.name: ((f.metadata or {}).get("delta.columnMapping.physicalName",
-                                        f.name) if cm else f.name)
-        for f in schema.fields
-    }
-    type_of = {phys_of[f.name]: f.dataType for f in schema.fields}
-    mat_id, mat_ver = _row_tracking_cols(config)
-    from delta_sharing_spark.table import SharedTable
-
-    if row_ids:
-        read_schema = _rt_read_schema(
-            [(phys_of[f.name], SharedTable._cast_type(f.dataType))
-             for f in schema.fields],
-            mat_id, mat_ver)
-    else:
-        # ALWAYS scan under the declared (physical-name, wide) schema:
-        # footer inference on a type-widened table is file-order
-        # dependent — a narrow footer would read wide files wrongly;
-        # the explicit schema upcasts narrow files natively instead
-        # (the in-process read's contract, SharedTable._normalize)
-        read_schema = T.StructType([
-            T.StructField(phys_of[f.name],
-                          SharedTable._cast_type(f.dataType), True)
-            for f in schema.fields])
-
-    def finish(df: DataFrame) -> DataFrame:
-        # cast to the DECLARED types (nullability-relaxed targets): a
-        # type-widened table's old files carry the narrow types, and an
-        # inferred-schema scan would otherwise serve them as-is —
-        # diverging from the in-process read (SharedTable._normalize)
-        from delta_sharing_spark.table import SharedTable
-
-        return df.select(
-            *[F.col(phys_of[f.name])
-              .cast(SharedTable._cast_type(f.dataType)).alias(f.name)
-              for f in schema.fields],
-            *rt_extras)
-
-    scan_path = F.url_decode(F.regexp_replace(
-        F.regexp_replace(F.input_file_name(), "^file:(//)?", ""),
-        r"\+", "%2B"))
-    parts: list[DataFrame] = []
-    # clean adds in ONE grouped scan (plan size O(1) in file count),
-    # physical-keyed partition values via a broadcast path join
-    clean = [(a, i) for a, i in adds if not a.get("deletionVector")]
-    if clean:
-        pv_keys = sorted({k for a, _i in clean
-                          for k in (a.get("partitionValues") or {})})
-        reader = spark.read
-        if read_schema is not None:
-            reader = reader.schema(read_schema)
-        df = reader.parquet(*[a["path"] for a, _i in clean])
-        if row_ids:
-            df = df.select("*",
-                           F.col("_metadata.row_index").alias("__rt_ri"))
-        if pv_keys or row_ids:
-            from pyspark.sql import types as T2
-
-            meta = spark.createDataFrame(
-                [(a["path"],
-                  *[(a.get("partitionValues") or {}).get(k) or None
-                    for k in pv_keys],
-                  *([a.get("baseRowId"),
-                     a.get("defaultRowCommitVersion")] if row_ids else []))
-                 for a, _i in clean],
-                T2.StructType(
-                    [T2.StructField("__path", T2.StringType())]
-                    + [T2.StructField(f"__pv_{k}", T2.StringType())
-                       for k in pv_keys]
-                    + ([T2.StructField("__rt_base", T2.LongType()),
-                        T2.StructField("__rt_ver", T2.LongType())]
-                       if row_ids else [])))
-            df = (df.withColumn("__path", scan_path)
-                  .join(F.broadcast(meta), "__path").drop("__path"))
-            for k in pv_keys:
-                df = df.withColumn(
-                    k, F.col(f"__pv_{k}").cast(type_of[k])
-                ).drop(f"__pv_{k}")
-            if row_ids:
-                df = _attach_row_ids(df, mat_id, mat_ver,
-                                     F.col("__rt_base"),
-                                     F.col("__rt_ver")) \
-                    .drop("__rt_base", "__rt_ver")
-        parts.append(finish(df))
-    for add, file_id in adds:
-        dv = add.get("deletionVector")
-        if not dv:
-            continue
-        # apply the deletion vector client-side: each add is a single
-        # file, so _metadata.row_index alone keys the anti-join
-        reader = spark.read
-        if read_schema is not None:
-            reader = reader.schema(read_schema)
-        df = reader.parquet(add["path"]) \
-            .select("*", F.col("_metadata.row_index").alias("__ri"))
-        if dv.get("storageType") == "i":
-            from delta_sharing_spark.plans.dvcodec import (
-                decode_inline_dv)
-
-            dv_rows = spark.createDataFrame(
-                [(ri,) for ri in
-                 decode_inline_dv(dv["pathOrInlineDv"],
-                                  dv.get("sizeInBytes"))],
-                "__ri long")
+        if "metaData" in line and "deltaMetadata" in line["metaData"]:
+            m = dict(line["metaData"]["deltaMetadata"])
+            if line["metaData"].get("version") is not None:
+                m["version"] = line["metaData"]["version"]
+            out.append({"metaData": m})
+        elif "protocol" in line and "deltaProtocol" in line["protocol"]:
+            p = dict(line["protocol"]["deltaProtocol"])
+            if line["protocol"].get("version") is not None:
+                p["version"] = line["protocol"]["version"]
+            out.append({"protocol": p})
+        elif "file" in line and "deltaSingleAction" in line["file"]:
+            w = line["file"]
+            kind = next(iter(w["deltaSingleAction"]))
+            a = w["deltaSingleAction"][kind]
+            key = {"add": "add", "remove": "remove", "cdc": "cdf"}.get(kind)
+            if key is None:
+                if kind == "txn":
+                    out.append({"txn": dict(a)})
+                continue
+            entry = {
+                "url": a["path"], "id": w.get("id", a["path"]),
+                "partitionValues": a.get("partitionValues", {}),
+                "size": a.get("size", 0), "stats": a.get("stats"),
+                "version": w.get("version"), "timestamp": w.get("timestamp"),
+            }
+            for k in ("deletionVector", "baseRowId",
+                      "defaultRowCommitVersion"):
+                if a.get(k) is not None:
+                    entry[k] = a[k]
+            out.append({key: entry})
         else:
-            dv_rows = (
-                spark.read.parquet(dv["pathOrInlineDv"])
-                .filter(F.col("path") == file_id)
-                .select(F.col("row_index").alias("__ri"))
-            )
-        df = df.join(F.broadcast(dv_rows), "__ri", "left_anti")
-        if row_ids:
-            # deleted rows keep their positions: row_index is the
-            # pre-deletion physical index, so surviving ids stay stable
-            df = _attach_row_ids(
-                df.withColumnRenamed("__ri", "__rt_ri"), mat_id, mat_ver,
-                F.lit(add["baseRowId"]),
-                F.lit(add.get("defaultRowCommitVersion")).cast("long"))
-        else:
-            df = df.drop("__ri")
-        for name, value in (add.get("partitionValues") or {}).items():
-            col = (F.lit(None) if value == "" or value is None
-                   else F.lit(value))
-            df = df.withColumn(name, col.cast(type_of[name]))
-        parts.append(finish(df))
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
+            out.append(line)
     return out
 
 
-def profile_lines_to_spark(spark: SparkSession,
+def snapshot_lines_to_spark(spark: SparkSession,
+                            lines: list[dict[str, Any]],
+                            row_ids: bool = False) -> DataFrame:
+    """QueryTable snapshot response (either format) → DataFrame: the HTTP
+    twin of ``SharedTable.to_df`` (reference table assembly,
+    python/delta_sharing/reader.py:303-336 and 630-674).
+
+    ``row_ids=True`` also rebuilds ``_row_id`` / ``_row_commit_version``
+    from the actions' ``baseRowId``/``defaultRowCommitVersion`` — the
+    remote twin of ``SharedTable.to_df(row_ids=True)``."""
+    meta, files = None, []
+    for line in unwrap_delta_lines(lines):
+        if "metaData" in line:
+            meta = line["metaData"]
+        elif "file" in line or "add" in line:
+            files.append(line.get("file") or line["add"])
+    if meta is None:
+        raise ValueError("query response lacks a metaData line")
+    return _scan_epochs(spark, [(meta, {"add": files})], row_ids,
+                        changes=False)
+
+
+def changes_lines_to_spark(spark: SparkSession,
                            lines: list[dict[str, Any]],
                            row_ids: bool = False) -> DataFrame:
-    """Parquet-profile query response → DataFrame: the HTTP twin of the
-    in-engine read path (reference client's table assembly,
-    python/delta_sharing/reader.py:630-674 converters + null-fill).
+    """Changes or version-range response (either format) → DataFrame with
+    ``_change_type`` / ``_commit_version`` / ``_commit_timestamp`` (the
+    union-of-scans shape of the reference's RemoteDeltaCDFRelation,
+    client/.../RemoteDeltaCDFRelation.scala:85-140).
 
-    Reads every ``file`` line's parquet url, applies inline/path deletion
-    vectors client-side, attaches typed partition values from
-    partitionValues, and normalizes to the shared schemaString (cast +
-    null-fill + column order). ``row_ids=True`` reconstructs
-    ``_row_id``/``_row_commit_version`` from the file lines'
-    ``baseRowId``/``defaultRowCommitVersion`` (this engine's parquet
-    profile includes them as optional extras) — the remote twin of
-    ``SharedTable.to_df(row_ids=True)``."""
+    Every ``metaData`` line starts a schema epoch: the files after it were
+    written under its schema. The output schema is the LAST metaData
+    line's, the end of the range — under ``includeHistoricalMetadata`` the
+    head is the range-start snapshot's (ref DeltaSharedTable.scala:735-739)
+    and every in-range change follows as a historical line.
+
+    ``row_ids=True`` (requires a row-tracked table) adds ``_row_id`` /
+    ``_row_commit_version`` to insert rows; cdc/remove rows carry NULL ids
+    (Delta does not materialize row ids into change-data images)."""
+    epochs: list[tuple[dict[str, Any], dict[str, list[dict[str, Any]]]]] = []
+    for line in unwrap_delta_lines(lines):
+        if "metaData" in line:
+            epochs.append((line["metaData"],
+                           {"cdf": [], "add": [], "remove": []}))
+            continue
+        for kind in ("add", "cdf", "remove"):
+            if kind in line:
+                if not epochs:
+                    raise ValueError(
+                        "changes response lacks a metaData line")
+                epochs[-1][1][kind].append(line[kind])
+    if not epochs:
+        raise ValueError("changes response lacks a metaData line")
+    return _scan_epochs(spark, epochs, row_ids, changes=True)
+
+
+_CHANGE_TYPE = {"add": "insert", "remove": "delete"}
+
+
+def _schema_of(meta: dict[str, Any]):
+    """(schema, {logical name: physical name}) of a metaData action; with
+    column mapping off every physical name is the logical one."""
     import json
 
+    from pyspark.sql import types as T
+
+    schema = T.StructType.fromJson(json.loads(meta["schemaString"]))
+    cm = (meta.get("configuration") or {}).get(
+        "delta.columnMapping.mode") == "name"
+    return schema, {
+        f.name: ((f.metadata or {}).get("delta.columnMapping.physicalName",
+                                        f.name) if cm else f.name)
+        for f in schema.fields}
+
+
+def _scan_epochs(spark: SparkSession,
+                 epochs: list[tuple[dict[str, Any],
+                                    dict[str, list[dict[str, Any]]]]],
+                 row_ids: bool, changes: bool) -> DataFrame:
+    """The one scan of wire file actions. ``epochs`` pairs each metaData
+    action with the profile-shape file actions written under it, grouped by
+    kind (``add``/``cdf``/``remove``); the last epoch's schema is the
+    output schema.
+
+    - Column mapping: files and partitionValues are keyed by PHYSICAL
+      names; each epoch is read under its own physical schema and renamed
+      to the target's logical names, so a rename mid-range keeps values.
+    - Scans: every epoch/kind reads its files without a deletion vector in
+      ONE explicit-schema scan (plan size O(1) in file count; footer
+      inference on a type-widened table would be file-order dependent).
+      Partition values, commit version/timestamp and row-id bases attach
+      by a broadcast join on the scanned path.
+    - Deletion vectors: a DV-carrying file is scanned alone and anti-joined
+      on its pre-deletion row index; a stored DV's rows are keyed by the
+      candidates of ``RemoteTableLog.dv_scan_keys`` (the Python Data
+      Source's rule), so clone-referenced files resolve too.
+    - Row ids: ``_row_id`` = materialized override else baseRowId + row
+      index; ``_row_commit_version`` = override else the file default.
+    - Types: every column casts to ``SharedTable._cast_type`` of the
+      target type (widening, nested nullability relaxed); a non-widening
+      change between an epoch and the target raises."""
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
-    schema: T.StructType | None = None
-    config: dict[str, Any] = {}
-    files: list[dict[str, Any]] = []
-    for line in lines:
-        if "metaData" in line and "schemaString" in line["metaData"]:
-            schema = T.StructType.fromJson(
-                json.loads(line["metaData"]["schemaString"]))
-            config = line["metaData"].get("configuration") or {}
-        elif "file" in line:
-            files.append(line["file"])
-    if schema is None:
-        raise ValueError("response lacks a metaData line with schemaString")
-    rt_extras = ["_row_id", "_row_commit_version"] if row_ids else []
-    if row_ids:
-        _check_base_row_ids([(f.get("id"), f.get("baseRowId"))
-                             for f in files])
-    if not files:
-        out_schema = T.StructType(
-            list(schema.fields)
-            + [T.StructField(c, T.LongType(), True) for c in rt_extras])
-        return spark.createDataFrame([], out_schema)
-    type_of = {f.name: f.dataType for f in schema.fields}
-    mat_id, mat_ver = _row_tracking_cols(config)
+    from delta_sharing_spark.plans.dvcodec import decode_inline_dv
+    from delta_sharing_spark.sources.remote import RemoteTableLog, _parse_file
+    from delta_sharing_spark.streaming.schema import (
+        _datatype_read_compatible,
+        _widenable,
+    )
     from delta_sharing_spark.table import SharedTable
 
+    target_meta = epochs[-1][0]
+    schema, phys_of = _schema_of(target_meta)
+    mat_id, mat_ver = _row_tracking_cols(target_meta.get("configuration"))
     if row_ids:
-        read_schema = _rt_read_schema(
-            [(f.name, SharedTable._cast_type(f.dataType))
-             for f in schema.fields],
-            mat_id, mat_ver)
-    else:
-        # explicit declared schema, nullability-relaxed: footer inference
-        # on a type-widened table is file-order dependent (see
-        # delta_lines_to_spark); partition columns null-fill here and the
-        # typed partitionValues overwrite below
-        read_schema = T.StructType([
-            T.StructField(f.name, SharedTable._cast_type(f.dataType), True)
-            for f in schema.fields])
+        missing = [a.get("url") for _m, g in epochs for a in g["add"]
+                   if a.get("baseRowId") is None]
+        if missing:
+            raise ValueError(
+                "row_ids=True: response actions lack baseRowId (table "
+                f"not row-tracked, or pre-enablement files): {missing[:3]}")
+    type_of = {phys_of[f.name]: f.dataType for f in schema.fields}
+    extras = ([("_change_type", T.StringType()),
+               ("_commit_version", T.LongType()),
+               ("_commit_timestamp", T.LongType())] if changes else []) \
+        + ([("_row_id", T.LongType()),
+            ("_row_commit_version", T.LongType())] if row_ids else [])
 
-    def normalize(df: DataFrame) -> DataFrame:
-        lower = {c.lower(): c for c in df.columns}
-        return df.select(*([
-            (F.col(lower[fld.name.lower()])
-             .cast(SharedTable._cast_type(fld.dataType))
-             if fld.name.lower() in lower
-             else F.lit(None).cast(SharedTable._cast_type(fld.dataType)))
-            .alias(fld.name)
-            for fld in schema.fields
-        ] + [F.col(c) for c in rt_extras]))
+    def finish(df: DataFrame) -> DataFrame:
+        have = set(df.columns)
+        return df.select(
+            *[(F.col(phys_of[f.name]) if phys_of[f.name] in have
+               else F.lit(None))
+              .cast(SharedTable._cast_type(f.dataType)).alias(f.name)
+              for f in schema.fields],
+            *[(F.col(n) if n in have else F.lit(None)).cast(t).alias(n)
+              for n, t in extras])
 
     scan_path = F.url_decode(F.regexp_replace(
         F.regexp_replace(F.input_file_name(), "^file:(//)?", ""),
         r"\+", "%2B"))
     parts: list[DataFrame] = []
-    # clean files read in ONE grouped scan — plan size stays O(1) in file
-    # count, partition values attach via a broadcast path join (per-file
-    # plan nodes at 10k+ files are a driver-side planning blow-up)
-    clean = [f for f in files if not f.get("deletionVector")]
-    if clean:
-        pv_keys = sorted({k for f in clean
-                          for k in (f.get("partitionValues") or {})})
-        reader = spark.read
-        if read_schema is not None:
-            reader = reader.schema(read_schema)
-        df = reader.parquet(*[f["url"] for f in clean])
-        if row_ids:
-            df = df.select("*",
-                           F.col("_metadata.row_index").alias("__rt_ri"))
-        if pv_keys or row_ids:
-            meta = spark.createDataFrame(
-                [(f["url"],
-                  *[(f.get("partitionValues") or {}).get(k) or None
-                    for k in pv_keys],
-                  *([f.get("baseRowId"),
-                     f.get("defaultRowCommitVersion")] if row_ids else []))
-                 for f in clean],
-                T.StructType(
-                    [T.StructField("__path", T.StringType())]
-                    + [T.StructField(f"__pv_{k}", T.StringType())
-                       for k in pv_keys]
+    for meta, groups in epochs:
+        ep_schema, ep_phys_of = _schema_of(meta)
+        ep_fields = []
+        for f in ep_schema.fields:
+            p = ep_phys_of[f.name]
+            dst = type_of.get(p)
+            if dst is not None and not (
+                    f.dataType == dst
+                    or _datatype_read_compatible(f.dataType, dst)
+                    or _widenable(f.dataType, dst)):
+                # SchemaUtils.scala:37-90 read-compat gate direction
+                raise ValueError(
+                    f"incompatible schema change across the changes "
+                    f"range: column '{p}' was "
+                    f"{f.dataType.simpleString()} and is now "
+                    f"{dst.simpleString()}; query a narrower range")
+            ep_fields.append(T.StructField(
+                p, SharedTable._cast_type(f.dataType), True))
+        for kind, actions in groups.items():
+            attach_ids = row_ids and kind == "add"
+            # cdc files carry their own _change_type; only maintenance-
+            # written files carry the materialized row-id columns (the
+            # rest null-fill and fall back to baseRowId + row index)
+            extra_read = (
+                [T.StructField("_change_type", T.StringType())]
+                if kind == "cdf" else []) + (
+                [T.StructField(mat_id, T.LongType()),
+                 T.StructField(mat_ver, T.LongType())]
+                if attach_ids else [])
+            clean = [a for a in actions if not a.get("deletionVector")]
+            scans = ([clean] if clean else []) + [
+                [a] for a in actions if a.get("deletionVector")]
+            for files in scans:
+                dv = files[0].get("deletionVector")
+                pv_keys = sorted({k for a in files
+                                  for k in (a.get("partitionValues") or {})})
+                attrs = T.StructType(
+                    [T.StructField(f"__pv_{k}", T.StringType())
+                     for k in pv_keys]
+                    + ([T.StructField("_commit_version", T.LongType()),
+                        T.StructField("_commit_timestamp", T.LongType())]
+                       if changes else [])
                     + ([T.StructField("__rt_base", T.LongType()),
                         T.StructField("__rt_ver", T.LongType())]
-                       if row_ids else [])))
-            df = (df.withColumn("__path", scan_path)
-                  .join(F.broadcast(meta), "__path").drop("__path"))
-            for k in pv_keys:
-                df = df.withColumn(
-                    k, F.col(f"__pv_{k}").cast(type_of.get(k, "string"))
-                ).drop(f"__pv_{k}")
-            if row_ids:
-                df = _attach_row_ids(df, mat_id, mat_ver,
-                                     F.col("__rt_base"),
-                                     F.col("__rt_ver")) \
-                    .drop("__rt_base", "__rt_ver")
-        parts.append(normalize(df))
-    for f in files:
-        dv = f.get("deletionVector")
-        if not dv:
-            continue
-        reader = spark.read
-        if read_schema is not None:
-            reader = reader.schema(read_schema)
-        df = reader.parquet(f["url"]) \
-            .select("*", F.col("_metadata.row_index").alias("__ri"))
-        if dv.get("storageType") == "i":
-            from delta_sharing_spark.plans.dvcodec import decode_inline_dv
+                       if attach_ids else []))
 
-            dv_rows = spark.createDataFrame(
-                [(ri,) for ri in
-                 decode_inline_dv(dv["pathOrInlineDv"],
-                                  dv.get("sizeInBytes"))],
-                "__ri long")
-        else:
-            dv_rows = (
-                spark.read.parquet(dv["pathOrInlineDv"])
-                .filter(F.col("path") == f.get("id"))
-                .select(F.col("row_index").alias("__ri"))
-            )
-        df = df.join(F.broadcast(dv_rows), "__ri", "left_anti")
-        if row_ids:
-            # surviving rows keep their pre-deletion physical index, so
-            # reconstructed ids are stable across the DV delete
-            df = _attach_row_ids(
-                df.withColumnRenamed("__ri", "__rt_ri"), mat_id, mat_ver,
-                F.lit(f["baseRowId"]),
-                F.lit(f.get("defaultRowCommitVersion")).cast("long"))
-        else:
-            df = df.drop("__ri")
-        for name, value in (f.get("partitionValues") or {}).items():
-            col = (F.lit(None) if value == "" or value is None
-                   else F.lit(value))
-            df = df.withColumn(name, col.cast(type_of.get(name, "string")))
-        parts.append(normalize(df))
+                rows = [(a["url"],
+                         *[(a.get("partitionValues") or {}).get(k) or None
+                           for k in pv_keys],
+                         *([int(a["version"]), int(a["timestamp"])]
+                           if changes else []),
+                         *([a.get("baseRowId"),
+                            a.get("defaultRowCommitVersion")]
+                           if attach_ids else []))
+                        for a in files]
+                # partition columns never live in the file bytes
+                df = spark.read.schema(T.StructType(
+                    [f for f in ep_fields if f.name not in pv_keys]
+                    + extra_read)).parquet(*[a["url"] for a in files])
+                if attach_ids or dv:
+                    df = df.select(
+                        "*", F.col("_metadata.row_index").alias("__rt_ri"))
+                if dv:
+                    if dv.get("storageType") == "i":
+                        dv_rows = spark.createDataFrame(
+                            [(ri,) for ri in decode_inline_dv(
+                                dv["pathOrInlineDv"],
+                                dv.get("sizeInBytes"))],
+                            "__rt_ri long")
+                    else:
+                        dv_path, _root, keys = RemoteTableLog.dv_scan_keys(
+                            _parse_file(files[0]))
+                        dv_rows = (spark.read.parquet(dv_path)
+                                   .filter(F.col("path").isin(keys))
+                                   .select(F.col("row_index")
+                                           .alias("__rt_ri")))
+                    # deleted rows keep their positions: row_index is the
+                    # pre-deletion index, so surviving ids stay stable
+                    df = df.join(F.broadcast(dv_rows), "__rt_ri",
+                                 "left_anti")
+                    df = df.select("*", *[
+                        F.lit(v).cast(fld.dataType).alias(fld.name)
+                        for fld, v in zip(attrs.fields, rows[0][1:])])
+                elif attrs.fields:
+                    # __path is captured at scan time: input_file_name()
+                    # is undefined after a join
+                    meta_df = spark.createDataFrame(
+                        rows, T.StructType([T.StructField("__path",
+                                                    T.StringType())]
+                                     + attrs.fields))
+                    df = (df.withColumn("__path", scan_path)
+                          .join(F.broadcast(meta_df), "__path"))
+                df = df.withColumns({
+                    k: F.col(f"__pv_{k}").cast(type_of.get(k, T.StringType()))
+                    for k in pv_keys})
+                if attach_ids:
+                    df = df.withColumns({
+                        "_row_id": F.coalesce(
+                            F.col(mat_id),
+                            F.col("__rt_base") + F.col("__rt_ri")),
+                        "_row_commit_version": F.coalesce(
+                            F.col(mat_ver), F.col("__rt_ver"))})
+                if changes and kind in _CHANGE_TYPE:
+                    df = df.withColumn("_change_type",
+                                       F.lit(_CHANGE_TYPE[kind]))
+                parts.append(finish(df))
+    if not parts:
+        return spark.createDataFrame([], T.StructType(
+            list(schema.fields)
+            + [T.StructField(n, t, True) for n, t in extras]))
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)

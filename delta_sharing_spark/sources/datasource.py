@@ -210,7 +210,7 @@ def _read_file_batches(partition: _FilePartition) -> Iterator:
         if rt is not None:
             # _row_id = materialized override else baseRowId + row index;
             # _row_commit_version = override else the file default — the
-            # executor-side twin of deltaformat._attach_row_ids. Files with
+            # executor-side twin of deltaformat._scan_epochs. Files with
             # no base (cdc/remove images) carry NULL ids.
             import pyarrow.compute as pc
 
@@ -1189,7 +1189,7 @@ class SharedTableDataSource(DataSource):
                 ] + ([
                     # Delta row-tracking ids for insert rows, NULL on
                     # cdc/remove change images (matches the batch
-                    # _changes_lines_to_spark(row_ids=True) rebuild)
+                    # changes_lines_to_spark(row_ids=True) rebuild)
                     T.StructField("_row_id", T.LongType(), True),
                     T.StructField("_row_commit_version", T.LongType(), True),
                 ] if row_ids else [])

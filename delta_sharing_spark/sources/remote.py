@@ -28,6 +28,8 @@ import os
 from dataclasses import dataclass, field
 from typing import Any
 
+from delta_sharing_spark.deltaformat import unwrap_delta_lines
+
 
 @dataclass
 class _WireFile:
@@ -118,54 +120,6 @@ class _WireSnapshot:
         if m is None:
             return pcols
         return [m.get(c, c) for c in pcols]
-
-
-def _unwrap_delta_lines(lines: list[dict]) -> list[dict]:
-    """Delta-format response lines → the parquet-profile shape, so one
-    parser handles both (the server forces delta for column-mapped tables;
-    wire shape PROTOCOL.md:4014-4137)."""
-    out: list[dict] = []
-    for line in lines:
-        if "metaData" in line and "deltaMetadata" in line["metaData"]:
-            m = dict(line["metaData"]["deltaMetadata"])
-            if line["metaData"].get("version") is not None:
-                m["version"] = line["metaData"]["version"]
-            out.append({"metaData": m})
-        elif "protocol" in line and "deltaProtocol" in line["protocol"]:
-            p = dict(line["protocol"]["deltaProtocol"])
-            if line["protocol"].get("version") is not None:
-                p["version"] = line["protocol"]["version"]
-            out.append({"protocol": p})
-        elif "file" in line and "deltaSingleAction" in line["file"]:
-            w = line["file"]
-            kind = next(iter(w["deltaSingleAction"]))
-            a = w["deltaSingleAction"][kind]
-            key = {"add": "add", "remove": "remove", "cdc": "cdf"}.get(kind)
-            if key is None:
-                # Non-file single actions: ``txn`` (SetTransaction state,
-                # no path/size — table.py emits it on first-page delta
-                # responses) passes through under its own key so
-                # deltaformat.delta_lines_txns can still read it; any
-                # future unknown kind is forward-compat skipped rather
-                # than crashing the snapshot parse.
-                if kind == "txn":
-                    out.append({"txn": dict(a)})
-                continue
-            entry = {
-                "url": a["path"], "id": w.get("id", a["path"]),
-                "partitionValues": a.get("partitionValues", {}),
-                "size": a.get("size", 0), "stats": a.get("stats"),
-                "version": w.get("version"), "timestamp": w.get("timestamp"),
-            }
-            if a.get("deletionVector") is not None:
-                entry["deletionVector"] = a["deletionVector"]
-            for k in ("baseRowId", "defaultRowCommitVersion"):
-                if a.get(k) is not None:
-                    entry[k] = a[k]
-            out.append({key: entry})
-        else:
-            out.append(line)
-    return out
 
 
 def _parse_file(action: dict) -> _WireFile:
@@ -265,7 +219,7 @@ class RemoteTableLog:
         headers, lines = self._client.list_files_in_table(
             self.share, self.schema, self.table, version=version,
             timestamp=timestamp, response_formats="delta,parquet")
-        lines = _unwrap_delta_lines(lines)
+        lines = unwrap_delta_lines(lines)
         meta, files = None, []
         for line in lines:
             if "metaData" in line:
@@ -327,9 +281,6 @@ class RemoteTableLog:
                 lo = hi + 1
                 continue
             self._fetch_window(lo, hi)
-            for v in range(lo, hi + 1):
-                self._commits.setdefault(
-                    v, _WireCommit(v, 0, None, [], [], []))
             lo = hi + 1
 
     def _fetch_window(self, start: int, end: int) -> None:
@@ -367,65 +318,37 @@ class RemoteTableLog:
             # same lines an unpaged response would have carried at once.
             pages.extend(lines)
             if not token:
-                self._ingest_window_lines(pages, start)
+                self._ingest_window_lines(pages, start, end)
                 return
         raise RuntimeError(
             "pagination token loop exceeded 100000 pages — server keeps "
             "returning nextPageToken")
 
-    def _ingest_window_lines(self, lines: list[dict], start: int) -> None:
-        lines = _unwrap_delta_lines(lines)
-        first_meta = True
-        for line in lines:
-            kind = next(iter(line))
-            if kind == "metaData":
-                m = line["metaData"]
-                v = m.get("version")
-                if first_meta:
-                    first_meta = False
-                    if self.read_change_feed:
-                        # the changes head metaData is the range-START
-                        # snapshot's (we request includeHistoricalMetadata,
-                        # ref DeltaSharedTable.scala:735-739) — in-range
-                        # schema changes, including the start version's own
-                        # metaData, arrive as historical metaData lines
-                        continue
-                    # range head metaData = the snapshot AT the window
-                    # start; attaching it there re-runs the compat gate at
-                    # every window boundary, so a schema commit landing
-                    # exactly on one is never missed (trivially passes when
-                    # nothing changed)
-                    v = start
-                if v is None:
-                    continue
-                c = self._commit_at(int(v))
-                c.metadata = _parse_metadata(m)
-            elif kind == "protocol":
-                v = line["protocol"].get("version")
-                if v is not None and int(v) > start:
-                    c = self._commit_at(int(v))
-                    c.protocol = {k: val for k, val
-                                  in line["protocol"].items()
-                                  if k != "version"}
-            elif kind in ("add", "remove", "cdf"):
-                a = line[kind]
-                v = int(a["version"])
-                c = self._commit_at(v)
-                if a.get("timestamp") is not None:
-                    c.timestamp = int(a["timestamp"])
-                f = _parse_file(a)
-                if kind == "add":
-                    c.adds.append(f)
-                elif kind == "remove":
-                    c.removes.append(f)
-                else:
-                    c.cdc.append(f)
-
-    def _commit_at(self, v: int) -> _WireCommit:
-        c = self._commits.get(v)
-        if c is None:
-            c = self._commits[v] = _WireCommit(v, 0, None, [], [], [])
-        return c
+    def _ingest_window_lines(self, lines: list[dict], start: int,
+                             end: int) -> None:
+        """Cache the commits of one fetched [start, end] window. The
+        window's response is authoritative for every version in it, so its
+        commits REPLACE any cached ones: a window re-requested because a
+        later version in it was missing must not append its actions onto
+        the versions already cached (that re-delivered rows). Versions the
+        response has no lines for get empty placeholders — presence in
+        ``_commits`` is the fetched marker."""
+        head, commits = _group_commits(lines, start)
+        if head is not None and not self.read_change_feed:
+            # range head metaData = the snapshot AT the window start;
+            # attaching it there re-runs the compat gate at every window
+            # boundary, so a schema commit landing exactly on one is never
+            # missed (trivially passes when nothing changed). The changes
+            # head is the range-start snapshot's (includeHistoricalMetadata,
+            # ref DeltaSharedTable.scala:735-739): in-range schema changes,
+            # the start version's own included, arrive as historical lines.
+            c = commits.setdefault(
+                start, _WireCommit(start, 0, None, [], [], []))
+            if c.metadata is None:
+                c.metadata = _parse_metadata(head)
+        for v in range(start, end + 1):
+            self._commits[v] = commits.get(v) or _WireCommit(
+                v, 0, None, [], [], [])
 
 
 def _is_empty(c: _WireCommit) -> bool:
@@ -443,16 +366,15 @@ def _trailer_token(lines: list[dict]) -> "str | None":
     return None
 
 
-def _commits_from_change_lines(
-        lines: list[dict]) -> tuple[dict, list[_WireCommit]]:
-    """Group a changes-RPC response into per-version wire commits.
-    Returns ``(head_configuration, commits)`` — the head metaData's table
-    configuration rides along (row-id reconstruction needs the
-    materialized-column names); historical metaData lines carry their
-    version and become per-commit metadata."""
-    lines = _unwrap_delta_lines(lines)
+def _group_commits(lines: list[dict], start: "int | None" = None
+                   ) -> "tuple[dict | None, dict[int, _WireCommit]]":
+    """Group a range or changes response (either format) into fresh
+    per-version wire commits. Returns ``(head metaData, commits)``: the
+    first metaData line is the response head; later ones carry their
+    version and become that commit's metadata. Versioned protocol lines
+    after ``start`` become per-commit protocol (a range head protocol is
+    stamped with ``start`` itself)."""
     commits: dict[int, _WireCommit] = {}
-    head_config: dict = {}
 
     def at(v: int) -> _WireCommit:
         c = commits.get(v)
@@ -460,17 +382,22 @@ def _commits_from_change_lines(
             c = commits[v] = _WireCommit(v, 0, None, [], [], [])
         return c
 
-    first_meta = True
-    for line in lines:
+    head: "dict | None" = None
+    for line in unwrap_delta_lines(lines):
         kind = next(iter(line))
         if kind == "metaData":
-            if first_meta:
-                first_meta = False
-                head_config = line["metaData"].get("configuration") or {}
+            if head is None:
+                head = line["metaData"]
                 continue
             v = line["metaData"].get("version")
             if v is not None:
                 at(int(v)).metadata = _parse_metadata(line["metaData"])
+        elif kind == "protocol":
+            v = line["protocol"].get("version")
+            if v is not None and (start is None or int(v) > start):
+                at(int(v)).protocol = {k: val for k, val
+                                       in line["protocol"].items()
+                                       if k != "version"}
         elif kind in ("add", "remove", "cdf"):
             a = line[kind]
             c = at(int(a["version"]))
@@ -479,7 +406,17 @@ def _commits_from_change_lines(
             f = _parse_file(a)
             (c.adds if kind == "add" else
              c.removes if kind == "remove" else c.cdc).append(f)
-    return head_config, [commits[v] for v in sorted(commits)]
+    return head, commits
+
+
+def _commits_from_change_lines(
+        lines: list[dict]) -> tuple[dict, list[_WireCommit]]:
+    """A changes-RPC response as ``(head_configuration, commits)`` in
+    version order — the head metaData's table configuration rides along
+    (row-id reconstruction needs the materialized-column names)."""
+    head, commits = _group_commits(lines)
+    return ((head or {}).get("configuration") or {},
+            [commits[v] for v in sorted(commits)])
 
 
 def parse_remote_path(path: str) -> tuple[str, str, str, str] | None:
@@ -539,8 +476,7 @@ def remote_schema_json(profile_path: str, share: str, schema: str,
     profile.check_not_expired()
     lines = _rest_client(profile).query_table_metadata(
         share, schema, table, version=version)
-    lines = _unwrap_delta_lines(lines)
-    for line in lines:
+    for line in unwrap_delta_lines(lines):
         if "metaData" in line:
             m = line["metaData"]
             return m["schemaString"], (m.get("configuration") or {})

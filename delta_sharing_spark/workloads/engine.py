@@ -1379,10 +1379,10 @@ def eng_rest_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     live server returns the data-change add actions of commits 1..2, each
     stamped with its commit version + timestamp; reconstructing them
     per-commit must value-match a DuckDB replay of the same appends."""
-    from delta_sharing_spark.client import _changes_lines_to_spark
+    from delta_sharing_spark.deltaformat import changes_lines_to_spark
 
     lines = _range_rest_lines(spark, sf_dir)
-    df = _changes_lines_to_spark(spark, lines)
+    df = changes_lines_to_spark(spark, lines)
     return (df.filter(F.col("_change_type") == "insert")
             .groupBy(F.col("_commit_version").alias("commit_version"))
             .agg(F.count("*").alias("n_rows"),
@@ -1394,10 +1394,10 @@ def eng_rest_range_paged(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Same range query driven page-by-page (maxFiles=1 + checksummed page
     tokens, the reference's (version, actionIndex) tokens): concatenated
     pages must reconstruct to the identical result."""
-    from delta_sharing_spark.client import _changes_lines_to_spark
+    from delta_sharing_spark.deltaformat import changes_lines_to_spark
 
     lines = _range_rest_lines(spark, sf_dir, max_files=1)
-    df = _changes_lines_to_spark(spark, lines)
+    df = changes_lines_to_spark(spark, lines)
     return (df.filter(F.col("_change_type") == "insert")
             .groupBy(F.col("_commit_version").alias("commit_version"))
             .agg(F.count("*").alias("n_rows"),
@@ -1694,14 +1694,14 @@ def eng_rest_row_tracking_range(spark: SparkSession,
     ``_row_commit_version`` — per-row value gate against the rank replay
     (the deterministic one-sorted-file-per-batch id layout of
     ``_documents_rt``)."""
-    from delta_sharing_spark.client import _changes_lines_to_spark
+    from delta_sharing_spark.deltaformat import changes_lines_to_spark
 
     lines = _rt_wire_lines(
         spark, _documents_rt(spark, sf_dir), "documents_rt",
         lambda c: c.list_files_in_table(
             "s", "d", "documents_rt",
             starting_version=0, ending_version=1)[1])
-    df = _changes_lines_to_spark(spark, lines, row_ids=True)
+    df = changes_lines_to_spark(spark, lines, row_ids=True)
     return df.filter(F.col("_change_type") == "insert").select(
         "doc_id",
         F.col("_row_id").alias("row_id"),
@@ -1735,9 +1735,9 @@ def eng_rest_row_tracking_cdf(spark: SparkSession,
     live server — the CDF add actions carry baseRowId /
     defaultRowCommitVersion like the snapshot and range forms, and
     ``load_table_changes``-style reconstruction
-    (``_changes_lines_to_spark(row_ids=True)``) rebuilds each inserted
+    (``changes_lines_to_spark(row_ids=True)``) rebuilds each inserted
     row's stable id, per-row value gate."""
-    from delta_sharing_spark.client import _changes_lines_to_spark
+    from delta_sharing_spark.deltaformat import changes_lines_to_spark
 
     lines = _rt_wire_lines(
         spark, _documents_rt_cdf(spark, sf_dir), "documents_rt_cdf",
@@ -1745,7 +1745,7 @@ def eng_rest_row_tracking_cdf(spark: SparkSession,
             "s", "d", "documents_rt_cdf",
             starting_version=0, ending_version=1,
             include_historical_metadata=True))
-    df = _changes_lines_to_spark(spark, lines, row_ids=True)
+    df = changes_lines_to_spark(spark, lines, row_ids=True)
     return df.filter(F.col("_change_type") == "insert").select(
         "doc_id",
         F.col("_row_id").alias("row_id"),

@@ -873,7 +873,7 @@ class TestDeletionVectors:
                                                dv_table):
         from delta_sharing_spark.deltaformat import (
             actions_to_delta_format,
-            delta_lines_to_spark,
+            snapshot_lines_to_spark,
         )
 
         dv_table.delete("event_id % 3 = 0")
@@ -882,7 +882,7 @@ class TestDeletionVectors:
         adds = [line["file"]["deltaSingleAction"]["add"]
                 for line in lines if "file" in line]
         assert any("deletionVector" in a for a in adds)
-        df = delta_lines_to_spark(spark, lines)
+        df = snapshot_lines_to_spark(spark, lines)
         exp = events.filter("NOT (event_id % 3 = 0)")
         assert df.count() == exp.count()
         got = {r["event_id"] for r in df.select("event_id").collect()}

@@ -158,3 +158,54 @@ class TestRemoteDepth:
         budget = (N + 5) // WINDOW + 6
         assert n_ranges <= budget, \
             f"drain cost {n_ranges} range RPCs (budget {budget})"
+
+
+class _StubRangeClient:
+    """In-memory stand-in for the REST client: a table whose every version
+    holds one add, served by version-range QueryTable. Records each
+    requested [startingVersion, endingVersion] window."""
+
+    def __init__(self, latest: int):
+        self.latest = latest
+        self.windows: list[tuple[int, int]] = []
+
+    def query_table_version(self, share, schema, table,
+                            starting_timestamp=None):
+        return self.latest
+
+    def list_files_in_table(self, share, schema, table, starting_version,
+                            ending_version, **_kw):
+        self.windows.append((starting_version, ending_version))
+        schema_string = json.dumps({"type": "struct", "fields": [
+            {"name": "v", "type": "long", "nullable": True,
+             "metadata": {}}]})
+        lines = [{"protocol": {"minReaderVersion": 1}},
+                 {"metaData": {"schemaString": schema_string,
+                               "partitionColumns": [], "configuration": {},
+                               "version": starting_version}}]
+        lines += [{"add": {"url": f"/t/part-{v}.parquet",
+                           "id": f"part-{v}.parquet", "partitionValues": {},
+                           "size": 1, "version": v,
+                           "timestamp": 1000 + v}}
+                  for v in range(starting_version, ending_version + 1)]
+        return {}, lines
+
+
+def test_refetched_window_replaces_cached_commits(tmp_path):
+    """A window re-requested because a later version in it is uncached
+    replaces the versions already cached instead of appending onto them
+    (appending re-delivered those versions' rows to a stream)."""
+    from delta_sharing_spark.sources.remote import RemoteTableLog
+
+    prof = tmp_path / "prof.json"
+    prof.write_text(json.dumps({
+        "shareCredentialsVersion": 1, "endpoint": "http://127.0.0.1:9",
+        "bearerToken": "tok"}))
+    log = RemoteTableLog(str(prof), "s", "d", "t")
+    stub = log._client = _StubRangeClient(latest=2)
+    assert [len(c.adds) for c in log.commits(0)] == [1, 1, 1]
+    stub.latest = 4
+    commits = log.commits(1)
+    assert [c.version for c in commits] == [1, 2, 3, 4]
+    assert [len(c.adds) for c in commits] == [1, 1, 1, 1]
+    assert stub.windows == [(0, 2), (1, 4)]

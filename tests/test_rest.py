@@ -4,6 +4,7 @@ rest_client.py:97-120), plus a full catalog+query round trip over HTTP."""
 
 from __future__ import annotations
 
+import contextlib
 import json
 import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
@@ -210,7 +211,7 @@ class TestHttpProfile:
     network flow (delta_sharing.py -> rest_client) against our server."""
 
     @pytest.fixture(scope="class")
-    def http_url(self, spark, events, tmp_path_factory):
+    def http_env(self, spark, events, tmp_path_factory):
         from delta_sharing_spark.catalog import ShareCatalog
         from delta_sharing_spark.plans.log import TableLog
         from delta_sharing_spark.server import SharingServer
@@ -223,20 +224,56 @@ class TestHttpProfile:
         log.delete("event_id < 5")
         cm = str(base / "events_cm")
         log2 = TableLog(spark, cm)
-        log2.create(events.select("event_id", "value"), name="events_cm")
+        log2.create(events.select("event_id", "value"), name="events_cm",
+                    configuration={"enableChangeDataFeed": "true"})
         log2.enable_column_mapping()
         log2.rename_column("value", "score")
+        # tables served only inside _serving(), so the listing test keeps
+        # seeing exactly events and events_cm
+        extra = {"events_dec": str(base / "events_dec")}
+        TableLog(spark, extra["events_dec"]).create(
+            events.filter("event_id < 40").selectExpr(
+                "event_id",
+                "CAST(CASE WHEN event_id % 2 = 0 "
+                "THEN '12345678901234567.89' ELSE '-0.01' END "
+                "AS DECIMAL(20,2)) AS amount"),
+            partition_by=["amount"], name="events_dec",
+            configuration={"enableChangeDataFeed": "true"})
+        src = TableLog(spark, str(base / "src"))
+        src.create(events.filter("event_id < 100"), name="src",
+                   configuration={"enableDeletionVectors": "true"})
+        src.delete("event_id < 25")
+        extra["clone"] = src.clone_to(str(base / "clone")).path
         cat = ShareCatalog(spark)
         cat.add_table("s", "d", "events", d, cdf_enabled=True)
-        cat.add_table("s", "d", "events_cm", cm)
+        cat.add_table("s", "d", "events_cm", cm, cdf_enabled=True)
         srv = SharingServer(cat, bearer_token="tok")
         url = srv.serve_background()
         profile = str(base / "profile.json")
         with open(profile, "w") as f:
             json.dump({"shareCredentialsVersion": 1, "endpoint": url,
                        "bearerToken": "tok"}, f)
-        yield profile
+        yield srv, profile, extra
         srv.shutdown()
+
+    @pytest.fixture(scope="class")
+    def http_url(self, http_env):
+        return http_env[1]
+
+    @contextlib.contextmanager
+    def _serving(self, spark, http_env, name):
+        """Serve one of the fixture's extra tables as ``s.d.<name>`` for
+        the duration of the block; yields its profile URL."""
+        from delta_sharing_spark.catalog import ShareCatalog
+
+        srv, profile, extra = http_env
+        cat = ShareCatalog(spark)
+        cat.add_table("s", "d", name, extra[name], cdf_enabled=True)
+        listed, srv.catalog = srv.catalog, cat
+        try:
+            yield f"{profile}#s.d.{name}"
+        finally:
+            srv.catalog = listed
 
     def test_load_as_spark_http(self, spark, events, http_url):
         from delta_sharing_spark.client import load_as_spark
@@ -341,6 +378,54 @@ class TestHttpProfile:
             f"{http_url}#s.d.events", starting_version=1, spark=spark)
         assert set(pdf["_change_type"]) == {"delete"}
         assert len(pdf) == n_del
+
+    def test_changes_as_pandas_http_column_mapped(self, spark, events,
+                                                   http_url):
+        """Pandas CDF over a column-mapped, renamed table resolves the
+        physical column names like the Spark path: no null ``score``."""
+        from delta_sharing_spark.client import load_table_changes_as_pandas
+
+        pdf = load_table_changes_as_pandas(
+            f"{http_url}#s.d.events_cm", starting_version=0, spark=spark)
+        assert list(pdf.columns[:2]) == ["event_id", "score"]
+        assert len(pdf) == events.count()
+        assert int(pdf["score"].isna().sum()) == 0
+
+    def test_changes_as_pandas_http_decimal_partition(self, spark,
+                                                       http_env):
+        """A decimal(20,2) partition value round-trips exactly through the
+        pandas CDF, equal to the Spark path (no float rounding)."""
+        from decimal import Decimal
+
+        from delta_sharing_spark.client import (
+            load_table_changes_as_pandas,
+            load_table_changes_as_spark,
+        )
+
+        with self._serving(spark, http_env, "events_dec") as url:
+            pdf = load_table_changes_as_pandas(url, starting_version=0,
+                                               spark=spark)
+            via_spark = load_table_changes_as_spark(
+                url, starting_version=0, spark=spark).toPandas()
+        assert set(pdf["amount"]) == {Decimal("12345678901234567.89"),
+                                      Decimal("-0.01")}
+        key = ["event_id"]
+        assert pdf.sort_values(key).reset_index(drop=True)[
+            ["event_id", "amount"]].equals(
+            via_spark.sort_values(key).reset_index(drop=True)[
+                ["event_id", "amount"]])
+
+    def test_load_as_spark_http_clone_with_source_dv(self, spark,
+                                                     http_env):
+        """A shallow clone carrying its source's deletion vectors reads
+        over the wire with the masked rows removed (DV rows keyed by the
+        file id and its absolute url, like the Python Data Source)."""
+        from delta_sharing_spark.client import load_as_spark
+
+        with self._serving(spark, http_env, "clone") as url:
+            df = load_as_spark(url, spark=spark)
+            assert df.count() == 75
+            assert df.filter("event_id < 25").count() == 0
 
     def test_table_helpers_http_and_local(self, spark, events, http_url,
                                           tmp_path_factory):

@@ -1,8 +1,7 @@
 """Round-11 fixes and the parallel checkpoint build.
 
 - txn actions in delta-format responses must not crash the remote
-  parsers (sources/remote._unwrap_delta_lines and
-  client._delta_changes_to_profile_shape) — column-mapped tables FORCE
+  parser (deltaformat.unwrap_delta_lines) — column-mapped tables FORCE
   the delta response format and those responses carry SetTransaction
   lines since r10.
 - typed-stat pruning must cast through string so a client-supplied
@@ -96,7 +95,7 @@ class TestTxnRemoteParsers:
         assert ch.count() >= 120
 
     def test_unwrap_skips_unknown_kinds(self):
-        from delta_sharing_spark.sources.remote import _unwrap_delta_lines
+        from delta_sharing_spark.deltaformat import unwrap_delta_lines
 
         lines = [
             {"file": {"id": "txn:a",
@@ -105,21 +104,7 @@ class TestTxnRemoteParsers:
             {"file": {"id": "x",
                       "deltaSingleAction": {"futureKind": {"foo": 1}}}},
         ]
-        out = _unwrap_delta_lines(lines)
-        assert out == [{"txn": {"appId": "a", "version": 4}}]
-
-    def test_changes_parser_skips_unknown_kinds(self):
-        from delta_sharing_spark.client import (
-            _delta_changes_to_profile_shape)
-
-        lines = [
-            {"file": {"id": "txn:a",
-                      "deltaSingleAction": {"txn": {"appId": "a",
-                                                    "version": 4}}}},
-            {"file": {"id": "x",
-                      "deltaSingleAction": {"futureKind": {"foo": 1}}}},
-        ]
-        out = _delta_changes_to_profile_shape(lines)
+        out = unwrap_delta_lines(lines)
         assert out == [{"txn": {"appId": "a", "version": 4}}]
 
 

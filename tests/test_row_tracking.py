@@ -364,7 +364,7 @@ class TestRowTrackingWire:
 
     def test_profile_reconstruction_matches_in_process(self, spark,
                                                        table_dir):
-        from delta_sharing_spark.deltaformat import profile_lines_to_spark
+        from delta_sharing_spark.deltaformat import snapshot_lines_to_spark
 
         log = _rt_table(spark, table_dir)
         log.update_metadata(configuration={
@@ -373,7 +373,7 @@ class TestRowTrackingWire:
         log.delete("k IN (1, 6)")      # DV: positions survive
         log.optimize(target_file_rows=1_000_000_000)  # materializes ids
         v = log.update({"v": F.lit("x")}, condition="k = 3")
-        got = profile_lines_to_spark(
+        got = snapshot_lines_to_spark(
             spark, self._lines(spark, table_dir, {"parquet"}),
             row_ids=True)
         assert {r.k: (r._row_id, r._row_commit_version)
@@ -386,7 +386,7 @@ class TestRowTrackingWire:
     def test_delta_format_reconstruction_matches(self, spark, table_dir):
         from delta_sharing_spark.deltaformat import (
             actions_to_delta_format,
-            delta_lines_to_spark,
+            snapshot_lines_to_spark,
         )
 
         log = _rt_table(spark, table_dir)
@@ -399,18 +399,18 @@ class TestRowTrackingWire:
         adds = [ln["file"]["deltaSingleAction"]["add"]
                 for ln in lines if "file" in ln]
         assert all(a.get("baseRowId") is not None for a in adds)
-        got = delta_lines_to_spark(spark, lines, row_ids=True)
+        got = snapshot_lines_to_spark(spark, lines, row_ids=True)
         assert {r.k: (r._row_id, r._row_commit_version)
                 for r in got.collect()} == self._expected(spark, table_dir)
 
     def test_row_ids_on_untracked_table_raises(self, spark, table_dir):
-        from delta_sharing_spark.deltaformat import profile_lines_to_spark
+        from delta_sharing_spark.deltaformat import snapshot_lines_to_spark
 
         log = TableLog(spark, table_dir)
         log.create(_one_file(spark.range(4).selectExpr(
             "id AS k", "CAST(id AS STRING) AS v")), name="plain")
         with pytest.raises(ValueError, match="baseRowId"):
-            profile_lines_to_spark(
+            snapshot_lines_to_spark(
                 spark, self._lines(spark, table_dir, {"parquet"}),
                 row_ids=True)
 
@@ -468,7 +468,7 @@ class TestRowTrackingWire:
 class TestRowIdsOverChangesAndRange:
     """Row ids over the range/changes RPC forms: add actions carry
     baseRowId/defaultRowCommitVersion and the client rebuild
-    (_changes_lines_to_spark(row_ids=True)) reconstructs stable ids for
+    (changes_lines_to_spark(row_ids=True)) reconstructs stable ids for
     insert rows — with materialized-column overrides for DML-written
     post-images — and NULL ids on cdc/remove rows."""
 
@@ -495,25 +495,25 @@ class TestRowIdsOverChangesAndRange:
 
     def test_changes_rebuild_insert_ids_exact(self, spark, table_dir):
         from delta_sharing_spark.cdf import table_changes_actions
-        from delta_sharing_spark.client import _changes_lines_to_spark
+        from delta_sharing_spark.deltaformat import changes_lines_to_spark
 
         log = self._cdf_rt_table(spark, table_dir)
         log.append(_one_file(spark.range(10, 14).selectExpr(
             "id AS k", "CAST(id*2 AS STRING) AS v")))
         out = table_changes_actions(spark, table_dir, starting_version=0)
-        df = _changes_lines_to_spark(spark, out["actions"], row_ids=True)
+        df = changes_lines_to_spark(spark, out["actions"], row_ids=True)
         rows = {r.k: (r._row_id, r._row_commit_version)
                 for r in df.filter("_change_type = 'insert'").collect()}
         assert rows == {k: (k, 0 if k < 10 else 1) for k in range(14)}
 
     def test_changes_cdc_rows_null_ids(self, spark, table_dir):
         from delta_sharing_spark.cdf import table_changes_actions
-        from delta_sharing_spark.client import _changes_lines_to_spark
+        from delta_sharing_spark.deltaformat import changes_lines_to_spark
 
         log = self._cdf_rt_table(spark, table_dir)
         log.delete("k >= 7")
         out = table_changes_actions(spark, table_dir, starting_version=1)
-        df = _changes_lines_to_spark(spark, out["actions"], row_ids=True)
+        df = changes_lines_to_spark(spark, out["actions"], row_ids=True)
         dels = df.filter("_change_type = 'delete'").collect()
         assert {r.k for r in dels} == {7, 8, 9}
         assert all(r._row_id is None and r._row_commit_version is None
@@ -523,13 +523,13 @@ class TestRowIdsOverChangesAndRange:
         """A rewrite-mode UPDATE's post-image file preserves row ids via
         the materialized columns; the range rebuild must honor them
         instead of recomputing base + index."""
-        from delta_sharing_spark.client import _changes_lines_to_spark
+        from delta_sharing_spark.deltaformat import changes_lines_to_spark
 
         log = _rt_table(spark, table_dir)
         log.update({"v": F.lit("upd")}, condition="k in (3, 7)")
         t = SharedTable(spark, table_dir)
         out = t.query_actions(starting_version=1)
-        df = _changes_lines_to_spark(spark, out["actions"], row_ids=True)
+        df = changes_lines_to_spark(spark, out["actions"], row_ids=True)
         upd = {r.k: (r._row_id, r._row_commit_version)
                for r in df.filter(
                    "_change_type = 'insert' and v = 'upd'").collect()}
@@ -550,7 +550,7 @@ class TestRowIdsOverChangesAndRange:
             table_changes,
             table_changes_actions,
         )
-        from delta_sharing_spark.client import _changes_lines_to_spark
+        from delta_sharing_spark.deltaformat import changes_lines_to_spark
 
         log = TableLog(spark, table_dir)
         df = spark.range(10).selectExpr("id AS k", "CAST(id AS INT) AS v")
@@ -577,7 +577,7 @@ class TestRowIdsOverChangesAndRange:
         out = table_changes_actions(spark, table_dir,
                                     starting_version=0, ending_version=1,
                                     include_historical_metadata=True)
-        rebuilt = _changes_lines_to_spark(spark, out["actions"],
+        rebuilt = changes_lines_to_spark(spark, out["actions"],
                                           row_ids=True)
         got = dict((f.name, f.dataType.simpleString())
                    for f in rebuilt.schema.fields)
@@ -591,7 +591,7 @@ class TestRowIdsOverChangesAndRange:
 
     def test_changes_row_ids_untracked_raises(self, spark, table_dir):
         from delta_sharing_spark.cdf import table_changes_actions
-        from delta_sharing_spark.client import _changes_lines_to_spark
+        from delta_sharing_spark.deltaformat import changes_lines_to_spark
 
         log = TableLog(spark, table_dir)
         log.create(spark.range(5).selectExpr("id AS k"), name="t",
@@ -599,7 +599,7 @@ class TestRowIdsOverChangesAndRange:
         log.append(spark.range(5, 8).selectExpr("id AS k"))
         out = table_changes_actions(spark, table_dir, starting_version=0)
         with pytest.raises(ValueError, match="lack baseRowId"):
-            _changes_lines_to_spark(spark, out["actions"], row_ids=True)
+            changes_lines_to_spark(spark, out["actions"], row_ids=True)
 
     def test_load_table_changes_row_ids_in_process(self, spark, table_dir,
                                                    tmp_path):
@@ -631,7 +631,7 @@ class TestRowIdsOverChangesAndRange:
         the range/changes wire; the client rebuild must serve the file's
         LOGICAL content (survivors only) — and keep survivor row ids
         stable through the pre-deletion row index."""
-        from delta_sharing_spark.client import _changes_lines_to_spark
+        from delta_sharing_spark.deltaformat import changes_lines_to_spark
 
         log = TableLog(spark, table_dir)
         df = spark.range(10).selectExpr("id AS k",
@@ -644,11 +644,11 @@ class TestRowIdsOverChangesAndRange:
         out = t.query_actions(starting_version=1)
         adds = [ln["add"] for ln in out["actions"] if "add" in ln]
         assert any(a.get("deletionVector") for a in adds)
-        plain = _changes_lines_to_spark(spark, out["actions"])
+        plain = changes_lines_to_spark(spark, out["actions"])
         assert sorted(r.k for r in
                       plain.filter("_change_type='insert'").collect()) \
             == list(range(7))
-        with_ids = _changes_lines_to_spark(spark, out["actions"],
+        with_ids = changes_lines_to_spark(spark, out["actions"],
                                            row_ids=True)
         got = sorted((r.k, r._row_id) for r in
                      with_ids.filter("_change_type='insert'").collect())
@@ -657,7 +657,7 @@ class TestRowIdsOverChangesAndRange:
     def test_range_rebuild_inline_dv(self, spark, table_dir):
         """Inline ('i'-storage) deletion vectors decode client-side in
         the range rebuild too."""
-        from delta_sharing_spark.client import _changes_lines_to_spark
+        from delta_sharing_spark.deltaformat import changes_lines_to_spark
 
         log = TableLog(spark, table_dir)
         log.create(_one_file(spark.range(6).selectExpr(
@@ -670,7 +670,7 @@ class TestRowIdsOverChangesAndRange:
         adds = [ln["add"] for ln in out["actions"] if "add" in ln]
         dv_types = {a["deletionVector"]["storageType"]
                     for a in adds if a.get("deletionVector")}
-        df = _changes_lines_to_spark(spark, out["actions"])
+        df = changes_lines_to_spark(spark, out["actions"])
         got = sorted(r.k for r in
                      df.filter("_change_type='insert'").collect())
         assert got == [0, 1, 3, 4, 5], f"dv storage was {dv_types}"
@@ -679,7 +679,7 @@ class TestRowIdsOverChangesAndRange:
         """Column-mapped (delta-format) range responses: the profile-shape
         conversion must carry the deletionVector through so DV-masked
         adds rebuild as survivors — not resurrect deleted rows."""
-        from delta_sharing_spark.client import _changes_lines_to_spark
+        from delta_sharing_spark.deltaformat import changes_lines_to_spark
         from delta_sharing_spark.deltaformat import actions_to_delta_format
 
         log = TableLog(spark, table_dir)
@@ -697,7 +697,7 @@ class TestRowIdsOverChangesAndRange:
                  if "file" in ln
                  and "add" in ln["file"]["deltaSingleAction"]]
         assert any(a.get("deletionVector") for a in dadds)
-        df = _changes_lines_to_spark(spark, delta_lines)
+        df = changes_lines_to_spark(spark, delta_lines)
         got = sorted(r.k for r in
                      df.filter("_change_type='insert'").collect())
         assert got == [0, 1, 2, 3, 4]
@@ -795,7 +795,7 @@ class TestRowIdsOverChangesAndRange:
         DV descriptor on adds of DV commits with no cdc files, and the
         row_ids rebuild must serve survivors with stable ids."""
         from delta_sharing_spark.cdf import table_changes_actions
-        from delta_sharing_spark.client import _changes_lines_to_spark
+        from delta_sharing_spark.deltaformat import changes_lines_to_spark
 
         log = TableLog(spark, table_dir)
         log.create(_one_file(spark.range(9).selectExpr(
@@ -813,7 +813,7 @@ class TestRowIdsOverChangesAndRange:
         out = table_changes_actions(spark, table_dir, starting_version=1)
         adds = [ln["add"] for ln in out["actions"] if "add" in ln]
         if any(a.get("deletionVector") for a in adds):
-            df = _changes_lines_to_spark(spark, out["actions"],
+            df = changes_lines_to_spark(spark, out["actions"],
                                          row_ids=True)
             ins = {r.k: r._row_id for r in
                    df.filter("_change_type='insert'").collect()}
@@ -821,7 +821,7 @@ class TestRowIdsOverChangesAndRange:
         else:
             # delete produced cdc files: deleted rows come back as
             # 'delete' changes, never as inserts
-            df = _changes_lines_to_spark(spark, out["actions"])
+            df = changes_lines_to_spark(spark, out["actions"])
             assert sorted(r.k for r in
                           df.filter("_change_type='delete'")
                           .collect()) == [6, 7, 8]

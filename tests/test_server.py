@@ -121,7 +121,7 @@ class TestEndpoints:
     def test_delta_response_format(self, server, spark, events):
         """responseformat=delta (PROTOCOL.md:4014-4137): delta-action
         wrappers on query/metadata/changes + client-side reconstruction."""
-        from delta_sharing_spark.deltaformat import delta_lines_to_spark
+        from delta_sharing_spark.deltaformat import snapshot_lines_to_spark
 
         caps = {"delta-sharing-capabilities": "responseformat=delta"}
         url = f"{server}/shares/share1/schemas/default/tables/events/query"
@@ -139,7 +139,7 @@ class TestEndpoints:
             add = f["deltaSingleAction"]["add"]
             assert add["path"].startswith("/") and "partitionValues" in add
         # reconstruction equals the table contents served in parquet format
-        df = delta_lines_to_spark(spark, lines)
+        df = snapshot_lines_to_spark(spark, lines)
         want = events.count() - events.filter("event_id < 5").count()
         assert df.count() == want
         assert "event_type" in df.columns  # partition column restored
@@ -161,7 +161,7 @@ class TestEndpoints:
         parquet-profile client (files store physical names) — the server
         must refuse parquet and serve delta (kernel gating,
         DeltaSharedTableKernel.scala:567-585)."""
-        from delta_sharing_spark.deltaformat import delta_lines_to_spark
+        from delta_sharing_spark.deltaformat import snapshot_lines_to_spark
 
         d = str(tmp_path_factory.mktemp("cm") / "events_cm")
         log = TableLog(spark, d)
@@ -193,7 +193,7 @@ class TestEndpoints:
             lines = _ndjson(body)
             proto = lines[0]["protocol"]["deltaProtocol"]
             assert proto["minReaderVersion"] == 2
-            df = delta_lines_to_spark(spark, lines)
+            df = snapshot_lines_to_spark(spark, lines)
             assert df.count() == events.count()
             # metadata endpoint stays readable for parquet clients and
             # advertises the reader requirement

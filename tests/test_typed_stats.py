@@ -462,9 +462,9 @@ class TestTxnOnTheWire:
         # and it matches the engine's own snapshot state exactly
         assert delta_lines_txns(lines) == log.snapshot().transactions
         # txn wrappers must not disturb the client's data rebuild
-        from delta_sharing_spark.deltaformat import delta_lines_to_spark
+        from delta_sharing_spark.deltaformat import snapshot_lines_to_spark
 
-        assert delta_lines_to_spark(spark, lines).count() == 201
+        assert snapshot_lines_to_spark(spark, lines).count() == 201
 
     def test_parquet_profile_stays_txn_free(self, spark, txn_env):
         d, _log, _profile = txn_env
