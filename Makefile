@@ -13,10 +13,11 @@ scale:
 test:
 	python -m pytest tests/ -q
 
-# the Tier-1 verify command from ROADMAP.md, then the benchmark's rule tests
+# the Tier-1 verify command from ROADMAP.md (plus --durations=25, so the
+# log carries the slowest tests), then the benchmark's rule tests
 verify:
 	export SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local; \
-	timeout -k 10 2670 python -m pytest tests/ -q --continue-on-collection-errors -p no:cacheprovider && \
+	timeout -k 10 2670 python -m pytest tests/ -q --continue-on-collection-errors -p no:cacheprovider --durations=25 && \
 	python3 -m pytest perfbench/tests -q
 
 # full oracle sweep: every queries() entry vs its DuckDB oracle (the

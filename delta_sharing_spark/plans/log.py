@@ -31,6 +31,7 @@ scales out on a cluster with millions of files.
 from __future__ import annotations
 
 import json
+import logging
 import os
 import shutil
 import threading
@@ -57,6 +58,8 @@ from delta_sharing_spark.plans.actions import (
     parse_action,
 )
 from delta_sharing_spark.plans.stats import collect_file_stats
+
+_LOG = logging.getLogger("dss.log")
 
 LOG_DIR = "_dsl_log"
 DATA_DIR = "data"
@@ -436,7 +439,7 @@ def _parsed_struct_udfs(spec):
     the stats-JSON string columns EXECUTOR-SIDE, under exactly the Python
     cast rules the driver builders use (:func:`_typed_stat_value` /
     :func:`stat_lookup` are the SAME shared functions, so value
-    equivalence with the fork/serial builders is by construction — no SQL
+    equivalence with the serial builder is by construction — no SQL
     cast-semantics gap). Used by the Spark-job checkpoint writer when the
     source manifest's struct layout no longer matches the current schema's
     spec (the first checkpoint after a schema change); Arrow-batched,
@@ -678,84 +681,18 @@ def write_checkpoint_files(table, final: str) -> bool:
     return _install_checkpoint(tmp, final)
 
 
-# --- parallel checkpoint build ---------------------------------------
+# --- checkpoint writers ----------------------------------------------
 #
 # Above this many file actions, the per-row Python serialization (action
 # JSON wrapper + stats re-encode + typed stat structs) dominates a
 # checkpoint write (~47 µs/row single-threaded — 470 s at 10M files), so
-# parts/sidecars are built in FORKED worker processes: the single-node
-# stand-in for the Spark job Delta itself runs checkpointing as (the
-# reference defers checkpoint materialization to Delta for exactly this
-# reason). fork shares the materialized snapshot copy-on-write, so ten
-# million AddFiles are never pickled; workers only write parquet files
-# and return (index, path, size, digest) tuples. Below the threshold the
-# serial path stands — fork+pool setup (~0.5 s with a large heap) would
-# dominate small writes, and sessionless/non-fork platforms always use it.
+# when a session, a shared filesystem and a prior checkpoint exist the
+# write runs as a SPARK JOB over the manifest DataFrame — the shape Delta
+# itself checkpoints with: executors serialize and write, the driver
+# materializes no AddFile. Every other write is the serial pyarrow
+# builder, which sessionless contexts (the Python Data Source planner)
+# need anyway.
 CHECKPOINT_PARALLEL_MIN_FILES = 250_000
-
-# copy-on-write payload for forked checkpoint workers; set by the parent
-# immediately before Pool creation, cleared after. Never read by threads.
-# _FORK_LOCK serializes the set→fork→clear window: two concurrent
-# checkpoint writes (server/maintenance threads, two TableLogs in one
-# process) must never fork workers that inherit the OTHER job's state —
-# that would build parts/sidecars from the wrong table's data.
-_FORK_STATE: dict = {}
-_FORK_LOCK = threading.Lock()
-
-
-def _fork_pool_available() -> bool:
-    import multiprocessing as mp
-
-    return "fork" in mp.get_all_start_methods()
-
-
-def _fork_child_init() -> None:
-    """Runs in every forked checkpoint worker: the cyclic GC must never
-    walk the inherited heap — a gen-2 collection writes every object's
-    GC header, copying the parent's ENTIRE copy-on-write heap into each
-    child (measured: 8.9 GB private RSS per worker and an OOM kill at a
-    10M-file manifest). The parent freezes its heap before forking (see
-    ``_fork_map``); disabling the collector in the child is the second
-    belt — per-job garbage is bounded and reclaimed by refcounting."""
-    import gc
-
-    gc.disable()
-
-
-def _fork_map(worker, jobs, state: dict) -> list:
-    """Run ``worker(job)`` across forked processes with ``state`` shared
-    copy-on-write via the module global. Results come back in job order.
-    Caller must have checked ``_fork_pool_available()``.
-
-    ProcessPoolExecutor (not mp.Pool) so a worker death — OOM kill,
-    segfault — raises BrokenProcessPool instead of hanging the map
-    forever. ``gc.freeze()`` moves the parent's live heap to the
-    permanent generation first: forked children then never GC-traverse
-    (= never copy-on-write) the inherited snapshot."""
-    import gc
-    import multiprocessing as mp
-    from concurrent.futures import ProcessPoolExecutor
-
-    global _FORK_STATE
-    # cap at 16 workers: with a multi-GB inherited heap the per-job cost
-    # is memory-traffic-bound and falls off a cliff past ~half the cores
-    # (measured at a 10M-file snapshot: 8 workers 5.6 s/job, 16 workers
-    # 5.7 s/job, 32 workers 52 s/job — 10x). 16 keeps perfect per-job
-    # scaling and halves aggregate copy-on-write residency.
-    procs = min(len(jobs), os.cpu_count() or 4, 16)
-    # hold the lock from state publication through pool shutdown: every
-    # fork must happen while _FORK_STATE is OUR state (see _FORK_LOCK)
-    with _FORK_LOCK:
-        _FORK_STATE = state
-        gc.freeze()
-        try:
-            with ProcessPoolExecutor(
-                    max_workers=procs, mp_context=mp.get_context("fork"),
-                    initializer=_fork_child_init) as ex:
-                return list(ex.map(worker, jobs))
-        finally:
-            gc.unfreeze()
-            _FORK_STATE = {}
 
 
 def _add_manifest_row(add: AddFile):
@@ -763,6 +700,10 @@ def _add_manifest_row(add: AddFile):
     stats ride as DICTS — checkpoint_arrow_table serializes the JSON
     string columns and builds the typed ``*_parsed`` structs."""
     st = add.stats_dict()
+    # manifest numRecords is LOGICAL rows (physical minus DV cardinality)
+    # — what limitHint accounting uses (ref kernel
+    # DeltaSharedTableKernel.scala:446-449); the action_json column still
+    # round-trips the exact physical stats
     return (dumps_action(add), add.path,
             list(add.partitionValues.items()), add.size,
             add.logical_records,
@@ -773,14 +714,13 @@ def _add_manifest_row(add: AddFile):
 
 
 def _adds_arrow_table(adds, spec, chunk: int = CHECKPOINT_ROW_GROUP_ROWS):
-    """Arrow checkpoint table over a list of adds (the per-part/-sidecar
-    build both the serial and forked paths share). Built in row-group-
-    sized chunks: the intermediate Python row tuples/strings for a 100k-
-    row part are ~0.5-1 GB of transient objects, and 16 forked workers
-    each holding that high-water alongside the driver JVM is real memory
-    pressure at a 10M-file manifest — chunking caps it at ~1/3. Output
-    bytes are identical (parquet row groups are cut every ``chunk`` rows
-    either way; verified chunked == single-shot)."""
+    """Arrow checkpoint table over a list of adds (the classic-checkpoint
+    and sidecar row build every driver-side writer shares). Built in
+    row-group-sized chunks: the intermediate Python row tuples/strings
+    for a 100k-row part are ~0.5-1 GB of transient objects, and chunking
+    caps that high-water at ~1/3. Output bytes are identical (parquet row
+    groups are cut every ``chunk`` rows either way; verified chunked ==
+    single-shot)."""
     import pyarrow as pa
 
     def build(sub):
@@ -794,30 +734,39 @@ def _adds_arrow_table(adds, spec, chunk: int = CHECKPOINT_ROW_GROUP_ROWS):
         build(adds[i:i + chunk]) for i in range(0, len(adds), chunk))
 
 
-def _write_classic_part(job) -> None:
-    """Forked worker: build one classic-checkpoint part over the adds in
-    [lo, hi) of the shared snapshot file list and write it."""
-    import pyarrow.parquet as pq
+def _state_rows(snap, extra=()) -> list:
+    """(kind, action_json, path) for every non-add row a checkpoint
+    carries, in order: metaData, protocol, ``extra`` (v2's
+    checkpointMetadata and sidecar rows), then the table-wide trailing
+    state — SetTransaction epochs (so sink idempotency replays from the
+    checkpoint instead of the full commit history) and domainMetadata
+    (row-tracking high-water mark etc. — a snapshot resolved from the
+    checkpoint alone must see it). Shared by every checkpoint writer.
 
-    lo, hi, part_path = job
-    t = _adds_arrow_table(_FORK_STATE["files"][lo:hi], _FORK_STATE["spec"])
-    pq.write_table(t, part_path, row_group_size=CHECKPOINT_ROW_GROUP_ROWS)
+    Txns are retention-capped (Delta's setTransactionRetentionDuration
+    shape, by count): only the most recently active writers persist — a
+    txn map otherwise grows one entry per queryId forever and bloats
+    every checkpoint. An evicted (ancient) writer restarting re-appends
+    its last batch — the documented Delta retention trade-off."""
+    rows = [("metaData", dumps_action(snap.metadata), None),
+            ("protocol", dumps_action(Protocol()), None), *extra]
+    recent = list(snap.transactions.items())[-TXN_RETENTION_MAX:]
+    for app_id, epoch in sorted(recent):
+        rows.append(("txn", json.dumps({"appId": app_id, "version": epoch}),
+                     None))
+    for domain, cfg in sorted(snap.domain_metadata.items()):
+        rows.append(("domainMetadata",
+                     dumps_action(DomainMetadata(domain, cfg)), None))
+    return rows
 
 
-def _parse_adds_rowgroup(job) -> list:
-    """Forked worker: parse one parquet row group's add actions into
-    AddFile objects. Jobs are (file_path, row_group_idx) so a 10M-row
-    checkpoint splits into ~300 independent parses; results return via
-    the pool's normal pickle path (AddFile is a plain dataclass)."""
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
-
-    path, rg = job
-    t = pq.ParquetFile(path).read_row_group(
-        rg, columns=["kind", "action_json"])
-    lines = t.filter(pc.equal(t.column("kind"), "add")) \
-        .column("action_json").to_pylist()
-    return [parse_action(line) for line in lines]
+def _state_arrow_table(rows, spec=None):
+    """Checkpoint arrow table over :func:`_state_rows` output: every
+    typed manifest column except ``path`` is null on these rows."""
+    kinds, jsons, paths = (list(c) for c in zip(*rows))
+    blank = [None] * len(kinds)
+    return checkpoint_arrow_table(kinds, jsons, paths, *([blank] * 8),
+                                  stats_fields=spec)
 
 
 def _sidecar_sha256(fp: str) -> str:
@@ -850,19 +799,16 @@ def _sidecar_sha256(fp: str) -> str:
     return digest
 
 
-def _build_sidecar_bucket(idx: int, state: dict | None = None):
-    """Build (or reuse) the sidecar for bucket ``idx`` of the shared
-    bucket list: content-address from (path, version) identities, write
-    only when the addressed file is absent. Runs serially (explicit
-    ``state``) or as a forked worker (copy-on-write ``_FORK_STATE``) —
-    identical bytes either way. Returns ``(rel_path, size_bytes,
-    sha256)``."""
+def _build_sidecar_bucket(idx: int, state: dict):
+    """Build (or reuse) the sidecar for bucket ``idx`` of
+    ``state["buckets"]``: content-address from (path, version)
+    identities, write only when the addressed file is absent. Returns
+    ``(rel_path, size_bytes, sha256)``."""
     import hashlib as _hl
 
     import pyarrow.parquet as pq
 
-    st = state if state is not None else _FORK_STATE
-    bucket = st["buckets"][idx]
+    bucket = state["buckets"][idx]
     bucket.sort(key=lambda a: a.path)
     # content address from (path, commit version) identities: an add's
     # full action for a given (path, version) is immutable in the log
@@ -873,13 +819,13 @@ def _build_sidecar_bucket(idx: int, state: dict | None = None):
     # stats-column layout: the version tag in the address means a new
     # checkpoint can never reuse an old-layout sidecar file, so one scan
     # never mixes parquet schemas with and without the parsed structs
-    h = _hl.sha256(("sidecar-v2\n" + st["spec_tag"] + "\n" + "\n".join(
+    h = _hl.sha256(("sidecar-v2\n" + state["spec_tag"] + "\n" + "\n".join(
         f"{a.path}\x00{a.version}" for a in bucket)
     ).encode()).hexdigest()[:32]
     rel = os.path.join(SIDECAR_DIR, f"{h}.parquet")
-    fp = os.path.join(st["log_path"], rel)
+    fp = os.path.join(state["log_path"], rel)
     if not os.path.exists(fp):
-        t = _adds_arrow_table(bucket, st["spec"])
+        t = _adds_arrow_table(bucket, state["spec"])
         tmp = fp + f".{uuid.uuid4().hex}.tmp"
         # bounded row groups for the same scan-parallelism reason as
         # write_checkpoint_files
@@ -1415,12 +1361,18 @@ class TableLog:
         cps = [v for v in self._list_checkpoints() if v <= at_or_before]
         return cps[-1] if cps else None
 
-    def _write_last_checkpoint(self, version: int, final: str,
-                               n_adds: int, policy: str) -> None:
-        """Atomic (tmp+rename) update of the _last_checkpoint hint after
-        a checkpoint write — last writer wins; a crash between checkpoint
-        and pointer leaves a stale-low hint, which only costs the next
-        reader the listing fallback."""
+    def _publish_checkpoint(self, installed: bool, version: int,
+                            final: str, n_adds: int, policy: str) -> str:
+        """The one ending of every checkpoint write: raise unless
+        ``installed`` (a complete checkpoint sits at ``final``), else
+        point the _last_checkpoint hint at it and return ``final``. The
+        hint update is atomic (tmp+rename) — last writer wins; a crash
+        between checkpoint and pointer leaves a stale-low hint, which only
+        costs the next reader the listing fallback."""
+        if not installed:
+            raise OSError(
+                f"checkpoint install failed and no complete checkpoint "
+                f"exists at {final}")
         # a (re)install replaced the checkpoint files on disk: cached
         # files_df plans pin the OLD physical part listing and would
         # fail FILE_NOT_EXIST on re-evaluation (surfaced by the r12
@@ -1440,6 +1392,7 @@ class TableLog:
             os.replace(tmp, os.path.join(self.log_path, LAST_CHECKPOINT))
         except OSError:
             pass  # the pointer is an optimization; never fail the write
+        return final
 
     def write_checkpoint(self, version: int | None = None) -> str:
         """Materialize the active snapshot at ``version`` as a parquet
@@ -1448,8 +1401,10 @@ class TableLog:
         manifests scan in parallel). Rows carry the wrapped action JSON (exact
         log round-trip incl. the add's version/timestamp) plus typed manifest
         columns so ``files_df`` can scan the checkpoint directly as a
-        DataFrame. Written via pyarrow — works in sessionless contexts (the
-        Python Data Source planner) too.
+        DataFrame. Large tables with a prior checkpoint are written as a
+        Spark job (see :meth:`_use_spark_checkpoint`); every other write
+        is the serial pyarrow builder, which works in sessionless contexts
+        (the Python Data Source planner) too.
 
         With ``delta.checkpointPolicy=v2`` the checkpoint is a V2 manifest
         (Delta protocol "V2 Checkpoint Table Feature"): table-wide state
@@ -1461,6 +1416,8 @@ class TableLog:
         files changed and reuses every other sidecar byte-for-byte — the
         property that makes checkpointing a 100 TB / million-file table
         incremental instead of a full-manifest rewrite per interval."""
+        import pyarrow as pa
+
         snap = self.snapshot(version=version)
         cfg = snap.metadata.configuration
         # both spellings, like every other table property in this engine
@@ -1468,85 +1425,31 @@ class TableLog:
                          cfg.get("checkpointPolicy", "classic")).lower()
         if policy == "v2":
             return self._write_checkpoint_v2(snap)
-        if self.spark is not None \
-                and self._spark_writes_shared_fs() \
-                and self._latest_checkpoint(at_or_before=snap.version) \
-                is not None \
-                and self.file_counts(snap)[0] \
-                >= CHECKPOINT_PARALLEL_MIN_FILES:
-            out = self._write_checkpoint_classic_spark(snap)
-            if out is not None:
-                return out
-        if len(snap.files) >= CHECKPOINT_PARALLEL_MIN_FILES \
-                and _fork_pool_available():
-            return self._write_checkpoint_classic_parallel(snap)
-        kinds = ["metaData", "protocol"]
-        jsons = [dumps_action(snap.metadata), dumps_action(Protocol())]
-        paths, pvs, sizes = [None, None], [None, None], [None, None]
-        nrecs, mins, maxs = [None, None], [None, None], [None, None]
-        nulls, vers, tss = [None, None], [None, None], [None, None]
-        for add in snap.files:
-            st = add.stats_dict()
-            kinds.append("add")
-            jsons.append(dumps_action(add))
-            paths.append(add.path)
-            pvs.append(list(add.partitionValues.items()))
-            sizes.append(add.size)
-            # manifest numRecords is LOGICAL rows (physical minus DV
-            # cardinality) — what limitHint accounting uses (ref kernel
-            # DeltaSharedTableKernel.scala:446-449); the action_json column
-            # still round-trips the exact physical stats
-            nrecs.append(add.logical_records)
-            mins.append(st.get("minValues", {}))
-            maxs.append(st.get("maxValues", {}))
-            nulls.append(st.get("nullCount", {}))
-            vers.append(add.version)
-            tss.append(add.timestamp)
-        # retention cap (Delta's setTransactionRetentionDuration shape, by
-        # count): only the most recently active writers persist — a txn map
-        # otherwise grows one entry per queryId forever and bloats every
-        # checkpoint. An evicted (ancient) writer restarting re-appends its
-        # last batch — the documented Delta retention trade-off.
-        tk, tj = self._tail_state_rows(snap)
-        kinds += tk
-        jsons += tj
-        for lst in (paths, pvs, sizes, nrecs, mins, maxs, nulls,
-                    vers, tss):
-            lst.extend([None] * len(tk))
-        table = checkpoint_arrow_table(kinds, jsons, paths, pvs, sizes,
-                                       nrecs, mins, maxs, nulls, vers, tss,
-                                       stats_field_spec(snap.physical_schema))
+        if self._use_spark_checkpoint(snap):
+            return self._write_checkpoint_classic_spark(snap)
+        spec = stats_field_spec(snap.physical_schema)
+        tables = [_state_arrow_table(_state_rows(snap), spec)]
+        if snap.files:
+            tables.append(_adds_arrow_table(snap.files, spec))
         final = os.path.join(self.log_path, _fmt_checkpoint(snap.version))
-        if write_checkpoint_files(table, final):
-            self._write_last_checkpoint(snap.version, final,
-                                        len(snap.files), "classic")
-            return final
-        raise OSError(
-            f"checkpoint install failed and no complete checkpoint "
-            f"exists at {final}")
+        return self._publish_checkpoint(
+            write_checkpoint_files(pa.concat_tables(tables), final),
+            snap.version, final, len(snap.files), "classic")
 
-    def _add_manifest_entry(self, add: AddFile):
-        """One checkpoint/sidecar row for an add — see
-        :func:`_add_manifest_row` (module-level so forked checkpoint
-        workers can run it)."""
-        return _add_manifest_row(add)
-
-    def _tail_state_rows(self, snap: "Snapshot"):
-        """(kinds, jsons) for the table-wide trailing state every
-        checkpoint carries: SetTransaction epochs (retention-capped, so
-        sink idempotency replays from the checkpoint instead of the full
-        commit history) and domainMetadata (row-tracking high-water mark
-        etc. — a snapshot resolved from the checkpoint alone must see
-        it). Shared by the serial, parallel, and v2 writers."""
-        kinds, jsons = [], []
-        recent = list(snap.transactions.items())[-TXN_RETENTION_MAX:]
-        for app_id, epoch in sorted(recent):
-            kinds.append("txn")
-            jsons.append(json.dumps({"appId": app_id, "version": epoch}))
-        for domain, cfg in sorted(snap.domain_metadata.items()):
-            kinds.append("domainMetadata")
-            jsons.append(dumps_action(DomainMetadata(domain, cfg)))
-        return kinds, jsons
+    def _use_spark_checkpoint(self, snap: "Snapshot") -> bool:
+        """The one writer choice, for classic and v2 checkpoints alike:
+        the Spark job (executors serialize and write; the driver
+        materializes no AddFile) when a session exists, its executors
+        share this filesystem, a prior checkpoint exists to seed the
+        manifest DataFrame, and the table has at least
+        CHECKPOINT_PARALLEL_MIN_FILES files. Otherwise the serial
+        builder."""
+        return (self.spark is not None
+                and self._spark_writes_shared_fs()
+                and self._latest_checkpoint(at_or_before=snap.version)
+                is not None
+                and self.file_counts(snap)[0]
+                >= CHECKPOINT_PARALLEL_MIN_FILES)
 
     def _spark_writes_shared_fs(self) -> bool:
         """Whether the Spark-job checkpoint/sidecar writers are safe here:
@@ -1556,11 +1459,10 @@ class TableLog:
         and on a cluster only when the log lives on a shared mount (NFS,
         FUSE-mounted object store). Cluster deployments on shared storage
         opt in with ``spark.dsl.checkpoint.sharedFilesystem=true``;
-        otherwise the fork/serial builders (driver-side IO, always
-        correct) stand. Without this gate a cluster run would scatter
-        sidecars across executor-local disks — the integrity verify fails
-        loudly later, but the write itself would have appeared to
-        succeed."""
+        otherwise the serial builder (driver-side IO, always correct)
+        stands. Without this gate a cluster run would scatter sidecars
+        across executor-local disks — the integrity verify fails loudly
+        later, but the write itself would have appeared to succeed."""
         try:
             master = self.meta_spark.conf.get("spark.master", "")
         except Exception:
@@ -1574,8 +1476,7 @@ class TableLog:
         except Exception:
             return False
 
-    def _write_checkpoint_classic_spark(self, snap: "Snapshot"
-                                        ) -> "str | None":
+    def _write_checkpoint_classic_spark(self, snap: "Snapshot") -> str:
         """Classic checkpoint as a SPARK JOB over the manifest DataFrame —
         the shape Delta itself runs checkpointing as, and the reference
         defers to Delta for: the new checkpoint's add rows are the
@@ -1583,22 +1484,21 @@ class TableLog:
         (small) replayed tail, serialized and written as parquet parts BY
         EXECUTORS. The driver never materializes an AddFile, so a 10M-file
         checkpoint costs neither the O(files) parse (``materialize_s``)
-        nor the O(files) row build the forked path still pays.
+        nor the O(files) row build the serial builder pays.
 
         After a schema change the manifest's carried ``*_parsed`` structs
         no longer match the current spec; they are then REBUILT
         executor-side from the stats-JSON string columns by scalar pandas
         UDFs running the same ``_typed_stat_value``/``stat_lookup``
         functions as the driver builders (``_parsed_struct_udfs``) — the
-        write stays a Spark job instead of declining to the O(files)
-        fork build (r11 verdict item #2).
+        write stays a Spark job (r11 verdict item #2).
 
         Row equivalence with the serial writer: add rows' ``action_json``
         is the same wrapped JSON round-tripped from the source checkpoint
         (parse_action -> AddFile -> wrap() is byte-stable), typed columns
         are carried through unchanged (or rebuilt under the shared Python
         cast rules), and the non-add state rows are the identical
-        driver-built header/tail. Only file layout differs
+        driver-built :func:`_state_rows`. Only file layout differs
         (Spark part files; readers are name-based and pyarrow's dataset
         ignores ``_``/``.``-prefixed markers)."""
         spec = stats_field_spec(snap.physical_schema)
@@ -1620,15 +1520,12 @@ class TableLog:
         adds_df = manifest.withColumn("kind", F.lit("add")).select(layout)
         # non-add state rows (metaData/protocol/txn/domainMetadata):
         # driver-built, O(1) + O(writers) rows
-        kinds = ["metaData", "protocol"]
-        jsons = [dumps_action(snap.metadata), dumps_action(Protocol())]
-        tk, tj = self._tail_state_rows(snap)
         head_schema = T.StructType(
             [T.StructField("kind", T.StringType())]
             + list(adds_df.schema.fields[1:]))
         pad = (None,) * (len(layout) - 2)
         head_df = self.meta_spark.createDataFrame(
-            [(k, j) + pad for k, j in zip(kinds + tk, jsons + tj)],
+            [(k, j) + pad for k, j, _path in _state_rows(snap)],
             head_schema)
         final = os.path.join(self.log_path, _fmt_checkpoint(snap.version))
         tmp = final + f".{uuid.uuid4().hex}.tmp"
@@ -1648,61 +1545,9 @@ class TableLog:
         # non-destructive swap: the prior checkpoint is only deleted
         # AFTER the new one is installed (see _install_checkpoint), and
         # _last_checkpoint only advances onto a verified-complete install
-        if _install_checkpoint(tmp, final):
-            n, _sz = self.file_counts(snap)
-            self._write_last_checkpoint(snap.version, final, n, "classic")
-            return final
-        raise OSError(
-            f"checkpoint install failed and no complete checkpoint "
-            f"exists at {final}")
-
-    def _write_checkpoint_classic_parallel(self, snap: "Snapshot") -> str:
-        """Classic checkpoint for LARGE manifests: add rows are built and
-        written as part files by forked workers (copy-on-write snapshot,
-        no pickling — see CHECKPOINT_PARALLEL_MIN_FILES), the single-node
-        stand-in for Delta's checkpoint-as-a-Spark-job. Byte-equivalent
-        rows to the serial path; only part boundaries differ (part 0
-        carries the non-add state rows), and checkpoint readers filter by
-        ``kind``, never by row order."""
-        import pyarrow.parquet as pq
-
-        spec = stats_field_spec(snap.physical_schema)
-        kinds = ["metaData", "protocol"]
-        jsons = [dumps_action(snap.metadata), dumps_action(Protocol())]
-        tk, tj = self._tail_state_rows(snap)
-        kinds += tk
-        jsons += tj
-        blank = [None] * len(kinds)
-        head = checkpoint_arrow_table(
-            kinds, jsons, list(blank), list(blank), list(blank),
-            list(blank), list(blank), list(blank), list(blank),
-            list(blank), list(blank), stats_fields=spec)
-        final = os.path.join(self.log_path, _fmt_checkpoint(snap.version))
-        tmp = final + f".{uuid.uuid4().hex}.tmp"
-        os.makedirs(tmp)
-        pq.write_table(head, os.path.join(tmp, "part-00000.parquet"),
-                       row_group_size=CHECKPOINT_ROW_GROUP_ROWS)
-        n = len(snap.files)
-        jobs = [
-            (lo, min(lo + CHECKPOINT_PART_ROWS, n),
-             os.path.join(tmp, f"part-{i + 1:05d}.parquet"))
-            for i, lo in enumerate(range(0, n, CHECKPOINT_PART_ROWS))
-        ]
-        try:
-            _fork_map(_write_classic_part, jobs,
-                      {"files": snap.files, "spec": spec})
-        except BaseException:
-            shutil.rmtree(tmp, ignore_errors=True)
-            raise
-        # non-destructive swap (handles a pre-existing file OR directory
-        # at final — both layouts exist); _last_checkpoint only advances
-        # onto a verified-complete install
-        if _install_checkpoint(tmp, final):
-            self._write_last_checkpoint(snap.version, final, n, "classic")
-            return final
-        raise OSError(
-            f"checkpoint install failed and no complete checkpoint "
-            f"exists at {final}")
+        return self._publish_checkpoint(
+            _install_checkpoint(tmp, final), snap.version, final,
+            self.file_counts(snap)[0], "classic")
 
     def _write_checkpoint_v2_spark(self, snap: "Snapshot", nbuckets: int,
                                    spec, spec_tag: str) -> list:
@@ -1719,7 +1564,7 @@ class TableLog:
         Schema changes are a non-event here: each task rebuilds its
         bucket's rows from ``action_json`` via ``parse_action`` +
         ``_adds_arrow_table(..., spec)`` — the CURRENT spec, under the
-        same Python cast rules as the fork builder — so the manifest's
+        same Python cast rules as the serial builder — so the manifest's
         carried struct layout never matters (r11 declined on a spec
         mismatch; r12 removed that decline).
 
@@ -1792,79 +1637,38 @@ class TableLog:
         # file-dependent)
         spec = stats_field_spec(snap.physical_schema)
         spec_tag = json.dumps(spec)
-        kinds = ["metaData", "protocol", "checkpointMetadata"]
-        jsons = [dumps_action(snap.metadata), dumps_action(Protocol()),
-                 json.dumps({"checkpointMetadata": {
-                     "version": snap.version,
-                     "tags": {"policy": "v2"}}})]
-        blank = [None, None, None]
-        paths, pvs, sizes = list(blank), list(blank), list(blank)
-        nrecs, mins, maxs = list(blank), list(blank), list(blank)
-        nulls, vers, tss = list(blank), list(blank), list(blank)
-        results = None
-        if self.spark is not None and n >= CHECKPOINT_PARALLEL_MIN_FILES \
-                and self._spark_writes_shared_fs() \
-                and self._latest_checkpoint(at_or_before=snap.version) \
-                is not None:
+        if self._use_spark_checkpoint(snap):
             # sidecars as a Spark job over the manifest plane (no AddFile
             # materialization)
-            rows = self._write_checkpoint_v2_spark(snap, nbuckets, spec,
-                                                   spec_tag)
-            results = [(r["rel"], r["size"], r["sha"]) for r in rows]
-        if results is None:
+            results = [(r["rel"], r["size"], r["sha"]) for r in
+                       self._write_checkpoint_v2_spark(snap, nbuckets, spec,
+                                                       spec_tag)]
+        else:
             buckets: list[list[AddFile]] = [[] for _ in range(nbuckets)]
             for add in snap.files:
                 b = int(_hl.md5(add.path.encode()).hexdigest()[:8],
                         16) % nbuckets
                 buckets[b].append(add)
-            nonempty = [i for i, b in enumerate(buckets) if b]
             state = {"buckets": buckets, "spec": spec,
                      "spec_tag": spec_tag, "log_path": self.log_path}
-            if n >= CHECKPOINT_PARALLEL_MIN_FILES \
-                    and _fork_pool_available():
-                # large manifest: sidecar builds fork out (copy-on-write
-                # buckets — see CHECKPOINT_PARALLEL_MIN_FILES). Each
-                # bucket's bytes are identical to the serial build;
-                # manifest order stays bucket order (pool.map preserves
-                # job order).
-                results = _fork_map(_build_sidecar_bucket, nonempty, state)
-            else:
-                results = [_build_sidecar_bucket(i, state)
-                           for i in nonempty]
-        for rel, size_bytes, sha in results:
-            kinds.append("sidecar")
-            jsons.append(json.dumps({"sidecar": {
-                "path": rel, "sizeInBytes": size_bytes,
-                # BYTES hash for read-side tamper detection (the filename
-                # is an identity-set address, not a bytes address); cached
-                # in a 64-byte companion so an unchanged bucket never
-                # re-hashes its parquet on later checkpoints
-                "tags": {"sha256": sha}}}))
-            for lst in (paths, pvs, sizes, nrecs, mins, maxs, nulls,
-                        vers, tss):
-                lst.append(None)
-            paths[-1] = rel  # typed column too, for driver-free listing
-        tk, tj = self._tail_state_rows(snap)
-        kinds += tk
-        jsons += tj
-        for lst in (paths, pvs, sizes, nrecs, mins, maxs, nulls,
-                    vers, tss):
-            lst.extend([None] * len(tk))
-        table = checkpoint_arrow_table(kinds, jsons, paths, pvs, sizes,
-                                       nrecs, mins, maxs, nulls, vers, tss)
+            results = [_build_sidecar_bucket(i, state)
+                       for i, b in enumerate(buckets) if b]
+        extra = [("checkpointMetadata", json.dumps({"checkpointMetadata": {
+            "version": snap.version, "tags": {"policy": "v2"}}}), None)]
+        # BYTES hash for read-side tamper detection (the filename is an
+        # identity-set address, not a bytes address); cached in a 64-byte
+        # companion so an unchanged bucket never re-hashes its parquet on
+        # later checkpoints. The typed path column carries the sidecar
+        # too, for driver-free listing.
+        extra += [("sidecar", json.dumps({"sidecar": {
+            "path": rel, "sizeInBytes": size_bytes,
+            "tags": {"sha256": sha}}}), rel)
+            for rel, size_bytes, sha in results]
+        table = _state_arrow_table(_state_rows(snap, extra))
         final = os.path.join(self.log_path, _fmt_checkpoint(snap.version))
-        if write_checkpoint_files(table, final):
-            self._write_last_checkpoint(snap.version, final, n, "v2")
-            return final
-        raise OSError(
-            f"checkpoint install failed and no complete checkpoint "
-            f"exists at {final}")
-
-    @staticmethod
-    def _sidecar_bytes_sha256(fp: str) -> str:
-        """See :func:`_sidecar_sha256` (module-level so forked checkpoint
-        workers can run it)."""
-        return _sidecar_sha256(fp)
+        return self._publish_checkpoint(
+            write_checkpoint_files(table, final), snap.version, final, n,
+            "v2")
 
     def _verify_sidecar(self, sc: dict, deep: bool = False) -> None:
         """Fail LOUDLY when a referenced sidecar's bytes disagree with
@@ -2065,20 +1869,12 @@ class TableLog:
         loop: allocating ~10M objects with the collector live re-walks a
         growing multi-GB heap every gen-2 threshold (measured ~25%+ of
         the wall at 3M rows, worse at 10M) while the loop itself creates
-        no cycles — refcounting reclaims all transient garbage.
-
-        Above CHECKPOINT_PARALLEL_MIN_FILES rows the parse fans out over
-        forked workers, one parquet row group per job (r12): the
-        json.loads + AddFile construction is the whole cost, parallelizes
-        perfectly, and the parent pays only the unpickle + dict merge —
-        measured 154.8 s -> ~40 s at a 10M-file checkpoint. Sidecars are
-        integrity-verified in the parent BEFORE any of their row groups
-        are dispatched, same trust order as the serial path."""
+        no cycles — refcounting reclaims all transient garbage. Sidecars
+        are integrity-verified BEFORE any of their rows are parsed."""
         import gc
 
         import pyarrow.compute as pc
         import pyarrow.dataset as pds
-        import pyarrow.parquet as pq
 
         fp = os.path.join(self.log_path, _fmt_checkpoint(version))
         dset = pds.dataset(fp, format="parquet")
@@ -2103,24 +1899,10 @@ class TableLog:
                 self._verify_sidecar(ref, deep=True)
                 side_paths.append(
                     os.path.join(self.log_path, ref["path"]))
-
-            parts = [f for f in dset.files] + side_paths
-            metas = [pq.ParquetFile(p).metadata for p in parts]
-            total_rows = sum(m.num_rows for m in metas)
-            if (total_rows >= CHECKPOINT_PARALLEL_MIN_FILES
-                    and _fork_pool_available()):
-                jobs = [(p, rg) for p, m in zip(parts, metas)
-                        for rg in range(m.num_row_groups)]
-                for chunk in _fork_map(_parse_adds_rowgroup, jobs, {}):
-                    for add in chunk:
-                        active[add.path] = add
-            else:
-                splice(dset.to_table(columns=["action_json"],
-                                     filter=pc.field("kind") == "add"))
-                for sp in side_paths:
-                    splice(pds.dataset(sp, format="parquet").to_table(
-                        columns=["action_json"],
-                        filter=pc.field("kind") == "add"))
+            for src in [fp] + side_paths:
+                splice(pds.dataset(src, format="parquet").to_table(
+                    columns=["action_json"],
+                    filter=pc.field("kind") == "add"))
         finally:
             if gc_was_on:
                 gc.enable()
@@ -2130,7 +1912,8 @@ class TableLog:
         """Auto-checkpoint after a write when the version hits the interval
         (``delta.checkpointInterval`` table config — Delta's spelling —
         with the bare ``checkpointInterval`` kept as an alias; default
-        10)."""
+        10). A failed checkpoint is logged at WARNING with its traceback
+        and never fails the commit — checkpointing is an optimization."""
         try:
             snap = self.snapshot(version=version)
             cfg = snap.metadata.configuration
@@ -2140,7 +1923,8 @@ class TableLog:
             if interval > 0 and version > 0 and version % interval == 0:
                 self.write_checkpoint(version)
         except Exception:
-            pass  # checkpointing is an optimization; never fail the commit
+            _LOG.warning("auto-checkpoint of %s at version %d failed",
+                         self.path, version, exc_info=True)
 
     # --------------------------------------------------- timestamp resolution
 

@@ -1,4 +1,4 @@
-"""Round-11 fixes and the parallel checkpoint build.
+"""Round-11 fixes and the checkpoint writers.
 
 - txn actions in delta-format responses must not crash the remote
   parser (deltaformat.unwrap_delta_lines) — column-mapped tables FORCE
@@ -13,8 +13,9 @@
 - a mid-clip video decode failure yields exactly ONE error row for the
   clip — no partial frame rows — and the workloads exclude errored
   clips entirely.
-- the parallel (forked) checkpoint build — classic parts and v2
-  sidecars — is byte/row-equivalent to the serial build.
+- multi-bucket v2 sidecars cold-read and are reused byte-for-byte;
+  the Spark-job checkpoint writers (classic parts and v2 sidecars) are
+  row/byte-equivalent to the serial builder.
 """
 
 from __future__ import annotations
@@ -230,62 +231,44 @@ class TestVideoErrorRows:
         assert {r["doc_id"] for r in clean.collect()} == {1}
 
 
+def _mk(spark, path, policy=None):
+    """Two-commit, 4-partition table the checkpoint-writer tests share."""
+    cfg = {"delta.checkpointInterval": "100"}
+    if policy:
+        cfg["delta.checkpointPolicy"] = policy
+    df = spark.range(0, 5000).select(
+        F.col("id"), (F.col("id") % 7).cast("double").alias("v"),
+        (F.col("id") % 4).cast("string").alias("cat"),
+    ).repartition(8)
+    log = TableLog(spark, path)
+    log.create(df, partition_by=["cat"], configuration=cfg)
+    log.append(df.selectExpr("id + 10000 as id", "v", "cat"))
+    return log
+
+
+def _checkpoint_rows(log):
+    """The latest checkpoint's rows, sorted: writers may order and split
+    rows differently, readers filter by ``kind``."""
+    import pyarrow.dataset as pds
+
+    cp = os.path.join(log.log_path,
+                      _fmt_checkpoint(log.latest_version()))
+    t = pds.dataset(cp, format="parquet").to_table()
+    rows = t.to_pylist()
+    return sorted(
+        ((r["kind"], r["action_json"], r["path"],
+          json.dumps(r["minValues_parsed"], sort_keys=True,
+                     default=str)
+          if "minValues_parsed" in t.schema.names else None)
+         for r in rows),
+        key=lambda x: (x[0], x[1]))
+
+
 class TestParallelCheckpoint:
-    """The forked checkpoint build (classic parts + v2 sidecars) must be
-    row-equivalent to the serial build; v2 sidecars must come out
-    byte-identical (same content addresses AND same bytes-sha256)."""
-
-    def _mk(self, spark, path, policy=None):
-        cfg = {"delta.checkpointInterval": "100"}
-        if policy:
-            cfg["delta.checkpointPolicy"] = policy
-        df = spark.range(0, 5000).select(
-            F.col("id"), (F.col("id") % 7).cast("double").alias("v"),
-            (F.col("id") % 4).cast("string").alias("cat"),
-        ).repartition(8)
-        log = TableLog(spark, path)
-        log.create(df, partition_by=["cat"], configuration=cfg)
-        log.append(df.selectExpr("id + 10000 as id", "v", "cat"))
-        return log
-
-    def _checkpoint_rows(self, log):
-        import pyarrow.dataset as pds
-
-        cp = os.path.join(log.log_path,
-                          _fmt_checkpoint(log.latest_version()))
-        t = pds.dataset(cp, format="parquet").to_table()
-        rows = t.to_pylist()
-        return sorted(
-            ((r["kind"], r["action_json"], r["path"],
-              json.dumps(r["minValues_parsed"], sort_keys=True,
-                         default=str)
-              if "minValues_parsed" in t.schema.names else None)
-             for r in rows),
-            key=lambda x: (x[0], x[1]))
-
-    def test_classic_parallel_equivalent(self, spark, tmp_path,
-                                         monkeypatch):
-        import delta_sharing_spark.plans.log as L
-
-        log = self._mk(spark, str(tmp_path / "t"))
-        log.write_checkpoint()
-        serial = self._checkpoint_rows(log)
-        cp = os.path.join(log.log_path,
-                          _fmt_checkpoint(log.latest_version()))
-        assert os.path.isfile(cp)  # small manifest -> single file
-        os.remove(cp)
-        monkeypatch.setattr(L, "CHECKPOINT_PARALLEL_MIN_FILES", 1)
-        monkeypatch.setattr(L, "CHECKPOINT_PART_ROWS", 3)
-        log.write_checkpoint()
-        assert os.path.isdir(cp)  # parallel -> part directory
-        assert len(os.listdir(cp)) > 2
-        parallel = self._checkpoint_rows(log)
-        assert parallel == serial
-        # a COLD log resolves the snapshot from the parallel checkpoint
-        cold = TableLog(spark, log.path)
-        snap = cold.snapshot()
-        assert len(snap.files) == len(log.snapshot().files)
-        assert SharedTable(spark, log.path).to_df().count() == 10000
+    """V2 sidecars over many buckets: a multi-bucket build must cold-read
+    to the same snapshot, and a rebuild over the same bucket geometry
+    must reuse every sidecar (same content addresses AND same
+    bytes-sha256)."""
 
     def test_v2_parallel_identical_sidecars(self, spark, tmp_path,
                                             monkeypatch):
@@ -293,32 +276,31 @@ class TestParallelCheckpoint:
 
         import delta_sharing_spark.plans.log as L
 
-        log = self._mk(spark, str(tmp_path / "t"), policy="v2")
+        log = _mk(spark, str(tmp_path / "t"), policy="v2")
         log.write_checkpoint()
-        serial_rows = self._checkpoint_rows(log)
+        serial_rows = _checkpoint_rows(log)
         serial_refs = sorted(
             (json.loads(j)["sidecar"]["path"],
              json.loads(j)["sidecar"]["tags"]["sha256"])
             for k, j, _p, _m in serial_rows if k == "sidecar")
         assert serial_refs
-        # wipe checkpoint AND sidecars so the parallel path rebuilds
+        # wipe checkpoint AND sidecars so the multi-bucket build writes
         # every byte from scratch
         cp = os.path.join(log.log_path,
                           _fmt_checkpoint(log.latest_version()))
         os.remove(cp) if os.path.isfile(cp) else shutil.rmtree(cp)
         shutil.rmtree(os.path.join(log.log_path, L.SIDECAR_DIR))
-        monkeypatch.setattr(L, "CHECKPOINT_PARALLEL_MIN_FILES", 1)
         monkeypatch.setattr(L, "SIDECAR_TARGET_ROWS", 3)
         log.write_checkpoint()
-        parallel_rows = self._checkpoint_rows(log)
-        parallel_refs = sorted(
+        rebuilt_rows = _checkpoint_rows(log)
+        rebuilt_refs = sorted(
             (json.loads(j)["sidecar"]["path"],
              json.loads(j)["sidecar"]["tags"]["sha256"])
-            for k, j, _p, _m in parallel_rows if k == "sidecar")
+            for k, j, _p, _m in rebuilt_rows if k == "sidecar")
         # NOTE: bucket count differs (SIDECAR_TARGET_ROWS patched), so
         # addresses differ from serial_refs — what must hold is that the
         # cold read reconstructs the same snapshot
-        assert parallel_refs
+        assert rebuilt_refs
         cold = TableLog(spark, log.path)
         snap = cold.snapshot()
         assert len(snap.files) == len(log.snapshot().files)
@@ -329,23 +311,22 @@ class TestParallelCheckpoint:
                                                       monkeypatch):
         import delta_sharing_spark.plans.log as L
 
-        log = self._mk(spark, str(tmp_path / "t"), policy="v2")
+        log = _mk(spark, str(tmp_path / "t"), policy="v2")
         log.write_checkpoint()
-        serial_rows = self._checkpoint_rows(log)
+        serial_rows = _checkpoint_rows(log)
         serial_refs = sorted(
             (json.loads(j)["sidecar"]["path"],
              json.loads(j)["sidecar"]["tags"]["sha256"])
             for k, j, _p, _m in serial_rows if k == "sidecar")
-        # same bucket geometry, parallel build: content addressing must
-        # REUSE every serial sidecar (same paths, same byte hashes)
-        monkeypatch.setattr(L, "CHECKPOINT_PARALLEL_MIN_FILES", 1)
+        # same bucket geometry, rebuilt: content addressing must REUSE
+        # every sidecar (same paths, same byte hashes)
         log.write_checkpoint()
-        parallel_rows = self._checkpoint_rows(log)
-        parallel_refs = sorted(
+        rebuilt_rows = _checkpoint_rows(log)
+        rebuilt_refs = sorted(
             (json.loads(j)["sidecar"]["path"],
              json.loads(j)["sidecar"]["tags"]["sha256"])
-            for k, j, _p, _m in parallel_rows if k == "sidecar")
-        assert parallel_refs == serial_refs
+            for k, j, _p, _m in rebuilt_rows if k == "sidecar")
+        assert rebuilt_refs == serial_refs
 
 
 class TestNestedTypedStats:
@@ -498,13 +479,12 @@ class TestNestedTypedStats:
         assert kept == tail
 
 
-class TestSparkJobCheckpoint(TestParallelCheckpoint):
+class TestSparkJobCheckpoint:
     """Classic checkpoint written as a Spark job over the manifest
     DataFrame (no AddFile materialization) — row-equivalent to the
     serial builder; after a schema change it rebuilds the typed structs
     executor-side under the shared Python cast rules (r12) instead of
-    declining. Inherits the fixture/row helpers (and re-runs the
-    parent's parallel tests over the same shapes, which is harmless)."""
+    declining."""
 
     def test_classic_spark_job_write_equivalent(self, spark, tmp_path,
                                                 monkeypatch):
@@ -513,7 +493,7 @@ class TestSparkJobCheckpoint(TestParallelCheckpoint):
         builder and cold-reads identically."""
         import delta_sharing_spark.plans.log as L
 
-        log = self._mk(spark, str(tmp_path / "t"))
+        log = _mk(spark, str(tmp_path / "t"))
         log.write_checkpoint()          # seed checkpoint (serial)
         df2 = spark.range(20000, 21000).select(
             F.col("id"), (F.col("id") % 7).cast("double").alias("v"),
@@ -522,7 +502,7 @@ class TestSparkJobCheckpoint(TestParallelCheckpoint):
         log.append(df2.selectExpr("id + 5000 as id", "v", "cat"))
         v = log.latest_version()
         log.write_checkpoint(version=v)  # serial (below threshold)
-        serial = self._checkpoint_rows(log)
+        serial = _checkpoint_rows(log)
         cp = os.path.join(log.log_path, _fmt_checkpoint(v))
         os.remove(cp) if os.path.isfile(cp) else __import__(
             "shutil").rmtree(cp)
@@ -531,7 +511,7 @@ class TestSparkJobCheckpoint(TestParallelCheckpoint):
         out = log.write_checkpoint(version=v)
         assert out == cp and os.path.isdir(cp)
         assert all(n.endswith(".parquet") for n in os.listdir(cp))
-        sparkjob = self._checkpoint_rows(log)
+        sparkjob = _checkpoint_rows(log)
         assert sparkjob == serial
         cold = TableLog(spark, log.path)
         snap = cold.snapshot()
@@ -553,7 +533,7 @@ class TestSparkJobCheckpoint(TestParallelCheckpoint):
 
         import delta_sharing_spark.plans.log as L
 
-        log = self._mk(spark, str(tmp_path / "t"))
+        log = _mk(spark, str(tmp_path / "t"))
         log.write_checkpoint()          # seed checkpoint, OLD spec
         log.add_column("extra", T.LongType())
         df2 = spark.range(20000, 21000).select(
@@ -563,7 +543,7 @@ class TestSparkJobCheckpoint(TestParallelCheckpoint):
         log.append(df2)
         v = log.latest_version()
         log.write_checkpoint(version=v)   # serial (below threshold)
-        serial = self._checkpoint_rows(log)
+        serial = _checkpoint_rows(log)
         cp = os.path.join(log.log_path, _fmt_checkpoint(v))
         os.remove(cp) if os.path.isfile(cp) else shutil.rmtree(cp)
         log._files_df_cache.clear()
@@ -571,7 +551,7 @@ class TestSparkJobCheckpoint(TestParallelCheckpoint):
         out = log.write_checkpoint(version=v)
         # the Spark job wrote it (part directory), no decline
         assert out == cp and os.path.isdir(cp)
-        sparkjob = self._checkpoint_rows(log)
+        sparkjob = _checkpoint_rows(log)
         assert sparkjob == serial
         # and the NEW column's typed stats are present in the struct
         t = pds.dataset(cp, format="parquet").to_table()
@@ -594,7 +574,7 @@ class TestSparkJobCheckpoint(TestParallelCheckpoint):
         import delta_sharing_spark.plans.log as L
         from pyspark.sql import types as T
 
-        log = self._mk(spark, str(tmp_path / "t"), policy="v2")
+        log = _mk(spark, str(tmp_path / "t"), policy="v2")
         log.write_checkpoint()            # seed, OLD spec
         log.add_column("extra", T.LongType())
         df2 = spark.range(30000, 31000).select(
@@ -604,7 +584,7 @@ class TestSparkJobCheckpoint(TestParallelCheckpoint):
         log.append(df2)
         v = log.latest_version()
         log.write_checkpoint(version=v)   # serial build of v (new spec)
-        serial_rows = self._checkpoint_rows(log)
+        serial_rows = _checkpoint_rows(log)
         serial_refs = sorted(
             (json.loads(j)["sidecar"]["path"],
              json.loads(j)["sidecar"]["tags"]["sha256"])
@@ -626,7 +606,7 @@ class TestSparkJobCheckpoint(TestParallelCheckpoint):
         log._files_df_cache.clear()
         monkeypatch.setattr(L, "CHECKPOINT_PARALLEL_MIN_FILES", 1)
         log.write_checkpoint(version=v)
-        spark_rows = self._checkpoint_rows(log)
+        spark_rows = _checkpoint_rows(log)
         spark_refs = sorted(
             (json.loads(j)["sidecar"]["path"],
              json.loads(j)["sidecar"]["tags"]["sha256"])
@@ -645,7 +625,7 @@ class TestSparkJobCheckpoint(TestParallelCheckpoint):
 
         import delta_sharing_spark.plans.log as L
 
-        log = self._mk(spark, str(tmp_path / "t"), policy="v2")
+        log = _mk(spark, str(tmp_path / "t"), policy="v2")
         log.write_checkpoint()            # seed (serial, v=1)
         df2 = spark.range(30000, 31000).select(
             F.col("id"), (F.col("id") % 7).cast("double").alias("v"),
@@ -653,7 +633,7 @@ class TestSparkJobCheckpoint(TestParallelCheckpoint):
         log.append(df2)
         v = log.latest_version()
         log.write_checkpoint(version=v)   # serial build of v
-        serial_rows = self._checkpoint_rows(log)
+        serial_rows = _checkpoint_rows(log)
         serial_refs = sorted(
             (json.loads(j)["sidecar"]["path"],
              json.loads(j)["sidecar"]["tags"]["sha256"])
@@ -674,7 +654,7 @@ class TestSparkJobCheckpoint(TestParallelCheckpoint):
         log._files_df_cache.clear()
         monkeypatch.setattr(L, "CHECKPOINT_PARALLEL_MIN_FILES", 1)
         out = log.write_checkpoint(version=v)
-        spark_rows = self._checkpoint_rows(log)
+        spark_rows = _checkpoint_rows(log)
         spark_refs = sorted(
             (json.loads(j)["sidecar"]["path"],
              json.loads(j)["sidecar"]["tags"]["sha256"])
@@ -695,7 +675,7 @@ class TestSparkJobCheckpoint(TestParallelCheckpoint):
         from delta_sharing_spark.plans.log import (
             PARSED_STAT_COLS, stats_field_spec)
 
-        log = self._mk(spark, str(tmp_path / "t"))
+        log = _mk(spark, str(tmp_path / "t"))
         log.write_checkpoint()
         snap = log.snapshot()
         manifest = log.files_df(snap)

@@ -101,7 +101,7 @@ def build_manifest_table(n_files: int, version: int):
 
 def _synth_add_columns(lo: int, hi: int, version: int):
     """Column lists for synthetic add rows [lo, hi) — the per-chunk body
-    shared by the serial builder and the forked part writers."""
+    shared by the single-table builder and the part-by-part writer."""
     from delta_sharing_spark.plans.actions import AddFile  # noqa: F401
 
     kinds, jsons, paths, pvs, sizes = [], [], [], [], []
@@ -139,21 +139,6 @@ def _synth_add_columns(lo: int, hi: int, version: int):
             vers, tss)
 
 
-def _synth_part(job) -> None:
-    """Forked worker: generate + write one part of the synthetic
-    checkpoint (the setup-side mirror of the engine's parallel classic
-    write — generation AND serialization both fan out)."""
-    import pyarrow.parquet as pq
-
-    from delta_sharing_spark.plans.log import (
-        CHECKPOINT_ROW_GROUP_ROWS, _FORK_STATE, checkpoint_arrow_table)
-
-    lo, hi, part_path = job
-    t = checkpoint_arrow_table(*_synth_add_columns(lo, hi, 0),
-                               stats_fields=_FORK_STATE["spec"])
-    pq.write_table(t, part_path, row_group_size=CHECKPOINT_ROW_GROUP_ROWS)
-
-
 def write_synthetic_table(root: str, n_files: int) -> float:
     """Table dir with one commit JSON at version 0 + a checkpoint parquet
     carrying the whole manifest. Returns checkpoint write seconds."""
@@ -178,17 +163,15 @@ def write_synthetic_table(root: str, n_files: int) -> float:
         CHECKPOINT_PARALLEL_MIN_FILES,
         CHECKPOINT_PART_ROWS,
         CHECKPOINT_ROW_GROUP_ROWS,
-        _fork_map,
-        _fork_pool_available,
         checkpoint_arrow_table,
         stats_field_spec,
         write_checkpoint_files,
     )
 
     final = os.path.join(log_dir, _fmt_checkpoint(0))
-    if n_files >= CHECKPOINT_PARALLEL_MIN_FILES and _fork_pool_available():
-        # parallel setup mirroring the engine's forked classic write:
-        # each part generated AND serialized in a worker process
+    if n_files >= CHECKPOINT_PARALLEL_MIN_FILES:
+        # large manifest: generate and write one part at a time, so only
+        # one part's rows are ever in memory
         import uuid
 
         import pyarrow.parquet as pq
@@ -207,13 +190,12 @@ def write_synthetic_table(root: str, n_files: int) -> float:
             list(blank), stats_fields=spec)
         pq.write_table(head, os.path.join(tmp, "part-00000.parquet"),
                        row_group_size=CHECKPOINT_ROW_GROUP_ROWS)
-        jobs = [
-            (lo, min(lo + CHECKPOINT_PART_ROWS, n_files),
-             os.path.join(tmp, f"part-{i + 1:05d}.parquet"))
-            for i, lo in enumerate(range(0, n_files,
-                                         CHECKPOINT_PART_ROWS))
-        ]
-        _fork_map(_synth_part, jobs, {"spec": spec})
+        for i, lo in enumerate(range(0, n_files, CHECKPOINT_PART_ROWS)):
+            hi = min(lo + CHECKPOINT_PART_ROWS, n_files)
+            t = checkpoint_arrow_table(*_synth_add_columns(lo, hi, 0),
+                                       stats_fields=spec)
+            pq.write_table(t, os.path.join(tmp, f"part-{i + 1:05d}.parquet"),
+                           row_group_size=CHECKPOINT_ROW_GROUP_ROWS)
         os.rename(tmp, final)
     else:
         table = build_manifest_table(n_files, version=0)
@@ -476,11 +458,10 @@ def main() -> None:
             f"materializing a {args.files:,}-file manifest — no longer "
             "O(files) bounded")
 
-    # --- the ENGINE's own checkpoint write over the materialized
-    # manifest (the real maintenance path, not the synthetic setup):
-    # above CHECKPOINT_PARALLEL_MIN_FILES this forks part builders over
-    # the copy-on-write snapshot — the single-node stand-in for Delta's
-    # checkpoint-as-a-Spark-job shape.
+    # --- the ENGINE's own checkpoint write (the real maintenance path,
+    # not the synthetic setup): above CHECKPOINT_PARALLEL_MIN_FILES, with
+    # the synthetic checkpoint as the prior one, it runs as a Spark job
+    # over the manifest DataFrame — Delta's checkpoint shape.
     t0 = time.perf_counter()
     log.write_checkpoint()
     out["engine_checkpoint_write_s"] = round(time.perf_counter() - t0, 3)
