@@ -3,7 +3,7 @@
 
 SF_DIR ?= /root/testdata/sf0.01
 
-.PHONY: test verify sweep bench scale all
+.PHONY: test verify sweep bench scale perf-ab all
 
 # metadata-plane scale proof: synthetic 1M-file manifest + 2k-commit CDF
 # log; wall times + plan assertions (see SCALE.md "Measured metadata plane")
@@ -27,5 +27,14 @@ sweep:
 
 bench:
 	python bench.py
+
+# A/B one benchmark workload: REV (checked out in a temporary git worktree)
+# against the working tree, runs alternating per seed; prints every run's
+# end-to-end metrics and the per-side medians (see tools/perf_ab.py)
+REV ?= HEAD
+WORKLOAD ?= serve_protocol
+SEEDS ?= 1 2 3
+perf-ab:
+	python3 tools/perf_ab.py --rev $(REV) --workload $(WORKLOAD) --seeds $(SEEDS)
 
 all: test sweep bench

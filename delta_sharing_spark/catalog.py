@@ -13,6 +13,8 @@ from __future__ import annotations
 import base64
 import json
 import os
+import threading
+from collections import OrderedDict
 from dataclasses import dataclass, field
 
 from pyspark.sql import SparkSession
@@ -20,6 +22,9 @@ from pyspark.sql import SparkSession
 from delta_sharing_spark.table import SharedTable
 
 DEFAULT_MAX_RESULTS = 500  # ref SharedTableManager.scala:38
+# long-lived table handles per catalog (ref deltaTableCacheSize,
+# ServerConfig.scala:87; DeltaSharedTableLoader.scala:32-56)
+TABLE_CACHE_SIZE = 10
 
 
 @dataclass(frozen=True)
@@ -103,6 +108,12 @@ class ShareCatalog:
     def __init__(self, spark: SparkSession):
         self.spark = spark
         self._shares: dict[str, _ShareConfig] = {}
+        # table location -> SharedTable, least recently used first: a
+        # handle keeps its log's snapshot, manifest-plan, file-count and
+        # commit caches across requests. Every cache hit inside the log
+        # re-checks the files on disk, so a handle needs no expiry.
+        self._tables: OrderedDict[str, SharedTable] = OrderedDict()
+        self._tables_lock = threading.Lock()
 
     # ------------------------------------------------------------ definition
 
@@ -192,13 +203,24 @@ class ShareCatalog:
 
     def load_table(self, qualified: str) -> SharedTable:
         """Resolve ``share.schema.table`` -> SharedTable (the reference's
-        profile-URL fragment, python/delta_sharing/delta_sharing.py:37-52)."""
+        profile-URL fragment, python/delta_sharing/delta_sharing.py:37-52).
+        Returns the catalog's long-lived handle for the table's location,
+        from an LRU of TABLE_CACHE_SIZE handles."""
         parts = qualified.split(".")
         if len(parts) != 3:
             raise CatalogError(
                 f"expected share.schema.table, got {qualified!r}")
-        t = self.get_table(*parts)
-        return SharedTable(self.spark, t.location)
+        location = self.get_table(*parts).location
+        with self._tables_lock:
+            table = self._tables.get(location)
+            if table is not None:
+                self._tables.move_to_end(location)
+                return table
+            table = self._tables[location] = SharedTable(self.spark,
+                                                         location)
+            if len(self._tables) > TABLE_CACHE_SIZE:
+                self._tables.popitem(last=False)
+        return table
 
 
 def register_share_views(catalog: ShareCatalog, share: str,

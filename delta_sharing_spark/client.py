@@ -296,7 +296,7 @@ def _metadata_lines(url: str, spark: SparkSession | None) -> list[dict]:
     if spark is None:
         raise RuntimeError("no active SparkSession")
     t = _resolve(spark, url)
-    out = t.query_actions(max_files=0, metadata_only=True)
+    out = t.query_actions(metadata_only=True)
     return [line for line in out["actions"]
             if "protocol" in line or "metaData" in line]
 

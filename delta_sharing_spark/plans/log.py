@@ -295,6 +295,18 @@ def _fmt_checkpoint(v: int) -> str:
     return f"{v:020d}.checkpoint.parquet"
 
 
+def _file_identity(fp: str) -> "tuple[int, int] | None":
+    """``(st_ino, st_mtime_ns)`` of a log file or checkpoint, None when it
+    is gone: what the per-version caches re-check on every hit, so a file
+    replaced or removed under a cached entry (expiry, checkpoint
+    reinstall, a table recreated at the same location) is noticed."""
+    try:
+        st = os.stat(fp)
+    except OSError:
+        return None
+    return (st.st_ino, st.st_mtime_ns)
+
+
 # Typed min/max stats columns (Delta's ``stats_parsed`` shape): columns of
 # these atomic Spark types additionally materialize as TYPED struct fields
 # beside the stats-JSON strings in every checkpoint/sidecar row, so the
@@ -955,11 +967,14 @@ class Snapshot:
 
     @property
     def files(self) -> list[AddFile]:
-        if self._files is None:
-            self._files = self._files_provider()
-            self._files_provider = None
-            self.num_files_hint = len(self._files)
-        return self._files
+        files = self._files
+        if files is None:
+            # a cached snapshot is shared by concurrent requests: read the
+            # provider once, since another thread may materialize first
+            provider = self._files_provider
+            files = provider() if provider is not None else self._files
+            self.files = files
+        return files
 
     @files.setter
     def files(self, value: list[AddFile]) -> None:
@@ -1081,19 +1096,27 @@ class TableLog:
         self.data_path = os.path.join(self.path, DATA_DIR)
         self.cdc_path = os.path.join(self.path, CDC_DIR)
         self.dv_path = os.path.join(self.path, DV_DIR)
-        # version -> Snapshot. Committed log files are immutable (append-only
-        # versions, atomic no-clobber commits), so a resolved snapshot never
-        # goes stale; only "latest" resolution re-lists the directory.
-        self._snap_cache: dict[int, Snapshot] = {}
+        # version -> (Snapshot, (identity of the version's commit file, or
+        # of its checkpoint once the commit was expired; identity of the
+        # seed checkpoint of a lazy file list)). Committed log files are
+        # immutable, but expire_log deletes them and a table can be
+        # recreated at the same location, so every hit re-stats them
+        # (_cached_snapshot); only "latest" resolution re-lists the
+        # directory.
+        self._snap_cache: dict[int, tuple[Snapshot, tuple]] = {}
         self._files_df_cache: dict[int, tuple] = {}
         # sidecar content hashes verified this process, keyed by relative
         # path -> (size, mtime): the lazy manifest plane deep-verifies
         # every sidecar ONCE before its bytes serve any query
         self._sidecar_deep_verified: dict[str, tuple] = {}
-        # committed log files are immutable → parsed commits cache cleanly;
-        # callers that poll (streaming latestOffset every trigger) pay
-        # O(new commits) parsing instead of O(all commits) per call
-        self._commit_cache: dict[int, Commit] = {}
+        # version -> (Commit, commit file identity): parsed commits cache
+        # cleanly; callers that poll (streaming latestOffset every trigger)
+        # pay O(new commits) parsing instead of O(all commits) per call
+        self._commit_cache: dict[int, tuple[Commit, tuple]] = {}
+        # a catalog handle serves concurrent requests: this lock guards
+        # the cache dicts above and is held only around dict operations,
+        # never around IO or a Spark job
+        self._cache_lock = threading.Lock()
 
     # ------------------------------------------------------------------ read
 
@@ -1116,13 +1139,18 @@ class TableLog:
         return versions[-1]
 
     def read_commit(self, version: int) -> Commit:
-        cached = self._commit_cache.get(version)
-        if cached is not None:
-            return cached
+        fp = os.path.join(self.log_path, _fmt_version(version))
+        ident = _file_identity(fp)
+        with self._cache_lock:
+            cached = self._commit_cache.get(version)
+        if cached is not None and cached[1] == ident:
+            return cached[0]
         commit = self._read_commit_uncached(version)
-        self._commit_cache[version] = commit
-        while len(self._commit_cache) > 512:
-            self._commit_cache.pop(next(iter(self._commit_cache)))
+        if ident is not None:
+            with self._cache_lock:
+                self._commit_cache[version] = (commit, ident)
+                while len(self._commit_cache) > 512:
+                    self._commit_cache.pop(next(iter(self._commit_cache)))
         return commit
 
     def _read_commit_uncached(self, version: int) -> Commit:
@@ -1188,9 +1216,13 @@ class TableLog:
             raise VersionNotFoundError(
                 f"version {version} not in [0, {self.latest_version()}]"
             )
-        cached = self._snap_cache.get(version)
+        cached = self._cached_snapshot(version)
         if cached is not None:
             return cached
+        # captured BEFORE the build, like files_df's checkpoint identity: a
+        # file swapped in mid-build fails the next hit's re-stat instead of
+        # validating a stale entry forever
+        ident = self._version_identity(version)
         # truncated-history guard (expire_log): a version is resolvable only
         # as checkpoint(≤version) + a COMPLETE commit tail (cp, version], or
         # as a full replay from commit 0. Anything else would silently
@@ -1215,21 +1247,23 @@ class TableLog:
         domains: dict[str, str] = {}
         ts = 0
         start = 0
-        base: Snapshot | None = None
         cp_seed: int | None = None
         cp_rows = 0
-        base_version = max(
-            (v for v in self._snap_cache if v < version), default=None
-        )
+        with self._cache_lock:
+            base_version = max(
+                (v for v in self._snap_cache if v < version), default=None
+            )
+        base = (None if base_version is None
+                else self._cached_snapshot(base_version))
         cp_version = self._latest_checkpoint(at_or_before=version)
-        if cp_version is not None and (base_version is None
+        if cp_version is not None and (base is None
                                        or cp_version > base_version):
+            base = None
             metadata, ts, txns, domains, cp_rows = \
                 self._read_checkpoint_light(cp_version)
             cp_seed = cp_version
             start = cp_version + 1
-        elif base_version is not None:
-            base = self._snap_cache[base_version]
+        elif base is not None:
             metadata = base.metadata
             ts = base.timestamp
             txns = dict(base.transactions)
@@ -1327,10 +1361,50 @@ class TableLog:
                     else {})
             snap = Snapshot(version, ts, metadata, _apply_tail(seed),
                             transactions=txns, domain_metadata=domains)
-        self._snap_cache[version] = snap
-        while len(self._snap_cache) > self._SNAP_CACHE_SIZE:
-            self._snap_cache.pop(next(iter(self._snap_cache)))
+        # a lazy file list also depends on its seed checkpoint, which a
+        # later expire_log may delete while this version stays retained
+        cp_ident = self._checkpoint_identity(snap.cp_version)
+        if ident is not None and (snap.cp_version is None
+                                  or cp_ident is not None):
+            with self._cache_lock:
+                self._snap_cache[version] = (snap, (ident, cp_ident))
+                while len(self._snap_cache) > self._SNAP_CACHE_SIZE:
+                    self._snap_cache.pop(next(iter(self._snap_cache)))
         return snap
+
+    def _checkpoint_identity(self, cp_version: "int | None"
+                             ) -> "tuple[int, int] | None":
+        return None if cp_version is None else _file_identity(
+            os.path.join(self.log_path, _fmt_checkpoint(cp_version)))
+
+    def _version_identity(self, version: int) -> "tuple[int, int] | None":
+        """The on-disk identity a cached snapshot of ``version`` is bound
+        to: its commit file, or its checkpoint once the commit expired."""
+        return (_file_identity(os.path.join(self.log_path,
+                                            _fmt_version(version)))
+                or self._checkpoint_identity(version))
+
+    def _cached_snapshot(self, version: int) -> "Snapshot | None":
+        """The cached snapshot of ``version`` if its file — and, while
+        its file list is lazy, its seed checkpoint — is unchanged on disk.
+        A mismatch means the history was expired or the table was
+        recreated at this location — possibly by another TableLog or
+        process — so every per-version cache of this log is dropped and
+        the caller resolves again through the truncated-history guard."""
+        with self._cache_lock:
+            hit = self._snap_cache.get(version)
+        if hit is None:
+            return None
+        snap, (ident, cp_ident) = hit
+        if self._version_identity(version) == ident and (
+                snap.files_materialized
+                or self._checkpoint_identity(snap.cp_version) == cp_ident):
+            return snap
+        with self._cache_lock:
+            self._snap_cache.clear()
+            self._commit_cache.clear()
+            self._files_df_cache.clear()
+        return None
 
     # ------------------------------------------------------------ checkpoints
 
@@ -1378,7 +1452,8 @@ class TableLog:
         # fail FILE_NOT_EXIST on re-evaluation (surfaced by the r12
         # non-destructive install, which really does swap the dir where
         # the old path silently kept the stale files) — drop them all
-        self._files_df_cache.clear()
+        with self._cache_lock:
+            self._files_df_cache.clear()
         try:
             size = (sum(os.path.getsize(os.path.join(final, p))
                         for p in os.listdir(final))
@@ -2093,17 +2168,15 @@ class TableLog:
         engine whose input is replaced mid-read; Delta sidesteps it by
         never rewriting a version's checkpoint) — the guarantee here is
         that evaluations STARTING after an install are never stale."""
-        cached = self._files_df_cache.get(snapshot.version)
+        with self._cache_lock:
+            cached = self._files_df_cache.get(snapshot.version)
         if cached is not None:
             df0, fp0, ident0 = cached
             if fp0 is None:
                 return df0  # built from driver rows — no disk dependency
-            try:
-                st = os.stat(fp0)
-                if (st.st_ino, st.st_mtime_ns) == ident0:
-                    return df0
-            except OSError:
-                pass  # checkpoint replaced/removed — rebuild below
+            if _file_identity(fp0) == ident0:
+                return df0
+            # checkpoint replaced/removed — rebuild below
         cp_version = self._latest_checkpoint(at_or_before=snapshot.version)
         # capture the checkpoint identity BEFORE building the plan: a
         # reinstall landing between plan build and a post-build stat
@@ -2115,10 +2188,8 @@ class TableLog:
         fp = ident = None
         if cp_version is not None:
             fp = os.path.join(self.log_path, _fmt_checkpoint(cp_version))
-            try:
-                st = os.stat(fp)
-                ident = (st.st_ino, st.st_mtime_ns)
-            except OSError:
+            ident = _file_identity(fp)
+            if ident is None:
                 fp = None  # raced away before the build — don't cache
         if cp_version is not None and cp_version == snapshot.version \
                 and not snapshot.tail_changed:
@@ -2177,9 +2248,10 @@ class TableLog:
             # validate — the next call rebuilds against whatever is on
             # disk then
             return df
-        self._files_df_cache[snapshot.version] = (df, fp, ident)
-        while len(self._files_df_cache) > 8:
-            self._files_df_cache.pop(next(iter(self._files_df_cache)))
+        with self._cache_lock:
+            self._files_df_cache[snapshot.version] = (df, fp, ident)
+            while len(self._files_df_cache) > 8:
+                self._files_df_cache.pop(next(iter(self._files_df_cache)))
         return df
 
     def file_counts(self, snapshot: Snapshot) -> tuple[int, int]:
@@ -2211,10 +2283,12 @@ class TableLog:
                        paths: list[str]) -> list[AddFile]:
         """The AddFile actions for ``paths`` (path-sorted) WITHOUT
         materializing ``.files`` on a LARGE lazy snapshot (r12 — serving
-        must not pin an O(files) AddFile dict for the session). A
-        selective prune fetches only the kept rows' ``action_json`` via
-        a broadcast semi-join against the manifest plane — O(kept), not
-        O(files), on a 5M-file table; an unselective prune (the response
+        must not pin an O(files) AddFile dict for the session). For
+        callers holding a path list; the read and serving paths prune and
+        fetch in one job instead (``SharedTable.kept_adds``). A
+        selective path list fetches only the kept rows' ``action_json``
+        via a broadcast semi-join against the manifest plane — O(kept),
+        not O(files), on a 5M-file table; an unselective one (the response
         is O(files) anyway) streams the whole manifest once and filters
         driver-side — no broadcast of millions of path strings, cost
         proportional to the response.
@@ -5221,7 +5295,6 @@ class TableLog:
                     os.remove(self._crc_path(v))
                 except FileNotFoundError:
                     pass
-                self._commit_cache.pop(v, None)
             # checkpoints below the seeding one go too: an orphaned old
             # checkpoint would (a) let snapshot(expired_version) silently
             # serve stale state instead of raising, and (b) pin every data
@@ -5253,7 +5326,8 @@ class TableLog:
                     if fn.endswith(".parquet.sha256") and not os.path.exists(
                             os.path.join(sidecar_dir, fn[:-7])):
                         os.remove(os.path.join(sidecar_dir, fn))
-            self._snap_cache.clear()
+        # cached snapshots and commits of the expired versions fail their
+        # file-identity check on the next hit (_cached_snapshot)
         return expendable
 
     def vacuum(self, dry_run: bool = False,

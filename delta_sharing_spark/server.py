@@ -33,6 +33,7 @@ consumers use the DataFrame APIs directly and skip HTTP entirely.
 from __future__ import annotations
 
 import json
+import logging
 import re
 import threading
 from collections import deque
@@ -44,6 +45,8 @@ from delta_sharing_spark.catalog import CatalogError, ShareCatalog
 from delta_sharing_spark.cdf import CDFError, table_changes_actions
 from delta_sharing_spark.plans.log import TableNotFoundError, VersionNotFoundError
 from delta_sharing_spark.table import SharedTable
+
+_LOG = logging.getLogger("dss.server")
 
 NDJSON = "application/x-ndjson; charset=utf-8"
 JSON_CT = "application/json; charset=utf-8"
@@ -226,10 +229,13 @@ class SharingServer:
                                 ValueError) as exc:
                             return self._deny(400, str(exc))
                         except Exception as exc:  # noqa: BLE001
-                            # unexpected server-side failure: still a
-                            # protocol-shaped error document, with the
+                            # unexpected server-side failure: the operator
+                            # gets the traceback in the log; the client a
+                            # protocol-shaped error document with the
                             # exception CLASS only (no traceback/message
-                            # leak to the client)
+                            # leak)
+                            _LOG.error("%s %s failed", method, url.path,
+                                       exc_info=True)
                             return self._deny(
                                 500, "internal server error "
                                 f"({type(exc).__name__})")
@@ -445,7 +451,6 @@ class SharingServer:
         out = t.query_actions(
             version=int(params["version"]) if "version" in params else None,
             timestamp=params.get("timestamp"),
-            max_files=0,
             response_formats=sorted(self._response_formats(h)),
             metadata_only=True,
         )

@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from delta_sharing_spark.plans.actions import AddFile, parse_action
 from delta_sharing_spark.plans.log import (
     Snapshot,
     TableLog,
@@ -424,16 +425,19 @@ class SharedTable:
         limit_hint: int | None = None,
     ) -> list[str]:
         """Run the metadata-plane prune; returns kept file paths (relative).
+        The read and serving paths use ``kept_adds`` instead, which returns
+        the kept actions themselves; this path list serves callers that
+        need only the paths (tests, the scale bench, workload probes).
 
         Order mirrors the reference: json predicates (stats + partitions,
         Unknown keeps) -> SQL hints (partitions only, best-effort) -> limit
         cutoff on cumulative numRecords.
 
-        Threshold hybrid: small manifests (< PRUNE_DRIVER_MAX_FILES, no SQL
-        hints) prune in a driver loop with the sessionless evaluator — zero
-        Spark jobs on the read path; large manifests prune as a DataFrame
-        job that scales out. SQL hints need Catalyst (F.expr), so they
-        always take the DataFrame path.
+        Threshold hybrid: small manifests (<= PRUNE_DRIVER_MAX_FILES, no
+        SQL hints) prune in a driver loop with the sessionless evaluator —
+        zero Spark jobs on the read path; large manifests prune as a
+        DataFrame job that scales out. SQL hints need Catalyst (F.expr), so
+        they always take the DataFrame path.
         """
         # column mapping: file partitionValues/stats are keyed by PHYSICAL
         # names — translate the hints (and evaluate against the physical
@@ -465,6 +469,33 @@ class SharedTable:
         manifest = self._pruned_manifest(
             snapshot, json_predicate_hints, predicate_hints, limit_hint)
         return [r["path"] for r in manifest.select("path").collect()]
+
+    def kept_adds(
+        self,
+        snapshot: Snapshot,
+        json_predicate_hints: str | dict | None = None,
+        predicate_hints: list[str] | None = None,
+        limit_hint: int | None = None,
+    ) -> list[AddFile]:
+        """The prune and the fetch of the kept ``AddFile``s (path-sorted)
+        in one step. A large lazy manifest (``num_files_hint`` above
+        PRUNE_DRIVER_MAX_FILES) collects ``path, action_json`` from the
+        pruned manifest in ONE Spark job (plus the limit cutoff's own
+        jobs), never a path list that a second job joins back; small or
+        materialized manifests run ``pruned_files`` and filter the
+        in-memory file list."""
+        if (snapshot.files_materialized
+                or (snapshot.num_files_hint or 0) <= PRUNE_DRIVER_MAX_FILES):
+            return self.log.adds_for_paths(
+                snapshot, self.pruned_files(
+                    snapshot, json_predicate_hints, predicate_hints,
+                    limit_hint))
+        manifest = self._pruned_manifest(
+            snapshot, self.log._physical_hints(snapshot, json_predicate_hints),
+            predicate_hints, limit_hint)
+        rows = manifest.select("path", "action_json").collect()
+        return [parse_action(r["action_json"])
+                for r in sorted(rows, key=lambda r: r["path"])]
 
     def _pruned_manifest(
         self,
@@ -659,13 +690,13 @@ class SharedTable:
                 "(see TableLog.enable_row_tracking)")
         if limit is not None and limit_hint is None:
             limit_hint = limit
-        paths = self.pruned_files(
+        kept_adds = self.kept_adds(
             snap,
             json_predicate_hints=json_predicate_hints,
             predicate_hints=predicate_hints,
             limit_hint=limit_hint,
         )
-        if not paths:
+        if not kept_adds:
             empty_schema = snap.schema
             if row_ids:
                 from pyspark.sql import types as T
@@ -683,9 +714,6 @@ class SharedTable:
         # snap threads column mapping through the scan: files are read
         # under PHYSICAL names and renamed back to logical (a renamed
         # column's data lives under its immutable physical name).
-        # adds_for_paths fetches only the kept actions from the manifest
-        # plane when the snapshot is lazy and the prune was selective
-        kept_adds = self.log.adds_for_paths(snap, paths)
         if row_ids:
             df = self.log.read_adds_with_row_ids(snap, kept_adds,
                                                  schema=snap.schema)
@@ -797,7 +825,14 @@ class SharedTable:
         the client did not declare is refused (the reference's
         SnapshotChecker.assertTableProperties). ``None`` (no declaration)
         keeps the engine's documented legacy behavior — descriptors are
-        served and the delta-format gate alone protects column mapping."""
+        served and the delta-format gate alone protects column mapping.
+
+        ``metadata_only`` (getTableMetadata) lists no files: the response
+        is the ``protocol`` and ``metaData`` lines, whose counts come from
+        the memoized ``file_counts``. An unpaged listing fetches its kept
+        actions through ``kept_adds`` (one Spark job on a large lazy
+        manifest, none on a small one); a paged listing over a large lazy
+        manifest cuts its page in the same single job."""
         import base64
         import time as _time
 
@@ -901,7 +936,9 @@ class SharedTable:
             start = int(decoded.get("start", 0))
             last_path = decoded.get("lastPath")
         next_token = None
-        if (max_files is not None and not snap.files_materialized
+        if metadata_only:
+            page = []  # getTableMetadata (includeFiles=false): no listing
+        elif (max_files is not None and not snap.files_materialized
                 and (snap.num_files_hint or 0) > PRUNE_DRIVER_MAX_FILES):
             # paged query over a LAZY manifest: prune + path-order +
             # page cut run as ONE Spark job and the driver holds only
@@ -918,8 +955,6 @@ class SharedTable:
             # checkpoint's parquet scan. An offset cut would grow the
             # heap to offset+page rows and re-discard every earlier page
             # per request (measured: page 2 ≥ page 1 at 10M files).
-            from delta_sharing_spark.plans.actions import parse_action
-
             jph = self.log._physical_hints(snap, json_predicate_hints)
             manifest = self._pruned_manifest(
                 snap, jph, predicate_hints, limit_hint)
@@ -953,14 +988,12 @@ class SharedTable:
                     payload["lastPath"] = last_path
                 next_token = mint_page_token(payload, checksum)
         else:
-            # adds_for_paths keeps a LAZY snapshot lazy (manifest-plane
-            # fetch of only the kept actions — r12): the unpaged route
-            # must never pin an O(files) AddFile dict to serve a pruned
-            # (or even full — that response is O(files) anyway) listing
-            files = self.log.adds_for_paths(
-                snap,
-                self.pruned_files(snap, json_predicate_hints,
-                                  predicate_hints, limit_hint))
+            # kept_adds keeps a LAZY snapshot lazy (one manifest-plane
+            # job fetches only the kept actions): the unpaged route must
+            # never pin an O(files) AddFile dict to serve a pruned (or
+            # even full — that response is O(files) anyway) listing
+            files = self.kept_adds(snap, json_predicate_hints,
+                                   predicate_hints, limit_hint)
             end = (len(files) if max_files is None
                    else min(start + max_files, len(files)))
             page = files[start:end]
@@ -1249,31 +1282,3 @@ class SharedTable:
         return {"version": snap.version, "actions": lines,
                 "respondedFormat": responded_format,
                 "nextPageToken": next_token, "refreshToken": None}
-
-
-_TABLE_CACHE: dict[str, tuple[float, SharedTable]] = {}
-_TABLE_CACHE_SIZE = 10        # ref deltaTableCacheSize, ServerConfig.scala:87
-_TABLE_CACHE_TTL_S = 3600.0   # ref 60-min expiry, DeltaSharedTableLoader.scala:34-36
-
-
-def load_shared_table(spark: SparkSession, path: str) -> SharedTable:
-    """LRU+TTL table loader cache (ref DeltaSharedTableLoader.scala:32-56).
-
-    The SharedTable object itself is cheap; the cache's value is keeping a
-    stable handle per table path so repeated queries share any session-level
-    state (and mirrors the reference's loader surface)."""
-    import os as _os
-    import time as _time
-
-    key = _os.path.abspath(path)
-    now = _time.monotonic()
-    hit = _TABLE_CACHE.get(key)
-    if hit is not None and now - hit[0] < _TABLE_CACHE_TTL_S:
-        _TABLE_CACHE[key] = (now, hit[1])
-        return hit[1]
-    table = SharedTable(spark, key)
-    _TABLE_CACHE[key] = (now, table)
-    while len(_TABLE_CACHE) > _TABLE_CACHE_SIZE:
-        oldest = min(_TABLE_CACHE, key=lambda k: _TABLE_CACHE[k][0])
-        del _TABLE_CACHE[oldest]
-    return table
