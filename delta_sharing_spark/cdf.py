@@ -297,7 +297,7 @@ def table_changes(
 
 def table_changes_actions(
     spark: SparkSession,
-    path: str,
+    path: "str | TableLog",
     starting_version: int | None = None,
     ending_version: int | None = None,
     starting_timestamp: str | None = None,
@@ -322,14 +322,18 @@ def table_changes_actions(
     the range END pinned at the first page so commits arriving
     mid-pagination are ignored, non-file lines riding with the page
     containing their neighbouring files, head protocol/metaData repeated
-    on every page."""
+    on every page.
+
+    ``path`` is the table location, or the ``TableLog`` of a long-lived
+    table handle, whose snapshot and commit caches then serve the
+    request."""
     from delta_sharing_spark.table import (
         ActionPager,
         decode_page_token,
         page_checksum,
     )
 
-    log = TableLog(spark, path)
+    log = path if isinstance(path, TableLog) else TableLog(spark, path)
     if not log.snapshot().metadata.cdf_enabled:
         raise CDFError("change data feed is not enabled on this table")
     start, end = _resolve_range(
@@ -340,7 +344,7 @@ def table_changes_actions(
     # snapshot, range and changes forms); the table path binds the token
     # to this table like the reference's tableConfig.id
     checksum = page_checksum({
-        "path": path,
+        "path": log.path,
         "startingVersion": starting_version,
         "endingVersion": ending_version,
         "startingTimestamp": starting_timestamp,

@@ -154,6 +154,17 @@ def kmeans_assign(vectors: DataFrame, cents: DataFrame,
     )
 
 
+def _check_vector_lengths(op: str, flat, rows: int, dim: int) -> None:
+    """Raise unless a batch's flattened embeddings hold exactly ``rows``
+    vectors of ``dim`` values: a mis-sized vector whose flat length still
+    divides by ``dim`` would otherwise reshape into misaligned rows and
+    silently corrupt every partial."""
+    if flat.size != rows * dim:
+        raise ValueError(
+            f"{op}: embedding vectors must all have length {dim}; a batch "
+            f"of {rows} rows holds {flat.size} values")
+
+
 def _lloyd_partials_fn(cells: list, cents: list, dim: int):
     """mapInArrow factory: one corpus pass computing, per task, the exact
     integer update partials of a Lloyd iteration against the broadcast
@@ -186,6 +197,7 @@ def _lloyd_partials_fn(cells: list, cents: list, dim: int):
                     "kmeans_fit: null embedding rows are not supported "
                     "(the dense-vector contract)")
             flat = col.flatten().to_numpy(zero_copy_only=False)
+            _check_vector_lengths("kmeans_fit", flat, len(col), dim)
             X = flat.astype(np.float64).reshape(-1, dim)
             acc = np.zeros((X.shape[0], C.shape[0]), dtype=np.float64)
             for j in range(dim):
@@ -596,6 +608,7 @@ def _pq_partials_fn(books: dict, m: int, sub_len: int):
                     "pq_fit: null embedding rows are not supported "
                     "(the dense-vector contract)")
             flat = col.flatten().to_numpy(zero_copy_only=False)
+            _check_vector_lengths("pq_fit", flat, len(col), m * sub_len)
             X = flat.astype(np.float64).reshape(-1, m * sub_len)
             for s in range(m):
                 Xs = X[:, s * sub_len:(s + 1) * sub_len]

@@ -136,8 +136,10 @@ CHECKPOINT_PART_ROWS = 100_000
 CHECKPOINT_ROW_GROUP_ROWS = 32_768
 # adds_for_paths materializes .files (memoized, O(small) memory) at or
 # below this manifest size instead of collecting the manifest plane —
-# same cutoff as table.PRUNE_DRIVER_MAX_FILES (a Spark job per request
-# costs ~0.4 s; a 10k-AddFile list costs ~10 MB once)
+# same cutoff as table.PRUNE_DRIVER_MAX_FILES: a 10k-AddFile list costs
+# ~10 MB once. Above it the manifest plane answers: files_df's
+# driver-resident LocalRelation up to Spark's local-relation bound, a
+# checkpoint scan (~0.4 s of Spark job per request) beyond it
 ADDS_SMALL_MANIFEST_MAX = 10_000
 
 CHECKPOINT_POLICY_KEY = "delta.checkpointPolicy"
@@ -330,6 +332,17 @@ PARSED_STAT_COLS = ("minValues_parsed", "maxValues_parsed",
                     "nullCount_parsed")
 
 
+def _arrow_parsed_spec(schema) -> "list[tuple[str, str]] | None":
+    """The (name, kind) typed-stats spec stored in an Arrow manifest
+    table's ``minValues_parsed`` struct; None when the table predates the
+    typed columns."""
+    if "minValues_parsed" not in schema.names:
+        return None
+    kind_of = {t: k for k, t in _stat_arrow_types().items()}
+    return [(f.name, kind_of[f.type])
+            for f in schema.field("minValues_parsed").type]
+
+
 def stats_field_spec(schema: T.StructType) -> list[tuple[str, str]]:
     """(name, kind) for every column eligible for typed stats columns.
     Keyed by whatever names the given schema carries — pass the PHYSICAL
@@ -407,15 +420,25 @@ def _typed_stat_value(v, kind: str):
 _STAT_FAST_CLS = {"i": int, "f": float, "b": bool, "s": str}
 
 
+def _stat_arrow_types() -> dict:
+    """kind -> the Arrow type a typed-stats struct field stores it as:
+    the one map the builders write with and ``_arrow_parsed_spec`` reads
+    back."""
+    import pyarrow as pa
+
+    return {"i": pa.int64(), "f": pa.float64(),
+            "b": pa.bool_(), "s": pa.string()}
+
+
 def _parsed_struct_arrays(dicts, spec):
     """Arrow StructArray over per-row stats dicts: one flat value list per
     field (never 10M python dicts), rows with no stats masked null."""
     import pyarrow as pa
 
     cols, names = [], []
+    arrow_types = _stat_arrow_types()
     for name, kind in spec:
-        pa_t = {"i": pa.int64(), "f": pa.float64(),
-                "b": pa.bool_(), "s": pa.string()}[kind]
+        pa_t = arrow_types[kind]
         fast = _STAT_FAST_CLS[kind]
         vals = []
         append = vals.append
@@ -707,8 +730,15 @@ def write_checkpoint_files(table, final: str) -> bool:
 CHECKPOINT_PARALLEL_MIN_FILES = 250_000
 
 
+# the fields of an _add_manifest_row, in order: checkpoint_arrow_table's
+# columns after ``kinds``
+_ADD_ROW_FIELDS = ("action_json", "path", "partitionValues", "size",
+                   "numRecords", "minValues", "maxValues", "nullCount",
+                   "version", "timestamp")
+
+
 def _add_manifest_row(add: AddFile):
-    """One checkpoint/sidecar row for an add: (json, typed columns);
+    """One checkpoint/sidecar row for an add (``_ADD_ROW_FIELDS``);
     stats ride as DICTS — checkpoint_arrow_table serializes the JSON
     string columns and builds the typed ``*_parsed`` structs."""
     st = add.stats_dict()
@@ -737,8 +767,10 @@ def _adds_arrow_table(adds, spec, chunk: int = CHECKPOINT_ROW_GROUP_ROWS):
 
     def build(sub):
         rows = [_add_manifest_row(a) for a in sub]
+        cols = ([list(c) for c in zip(*rows)] if rows
+                else [[] for _ in _ADD_ROW_FIELDS])
         return checkpoint_arrow_table(
-            ["add"] * len(rows), *map(list, zip(*rows)), stats_fields=spec)
+            ["add"] * len(rows), *cols, stats_fields=spec)
 
     if len(adds) <= chunk:
         return build(adds)
@@ -1104,6 +1136,9 @@ class TableLog:
         # (_cached_snapshot); only "latest" resolution re-lists the
         # directory.
         self._snap_cache: dict[int, tuple[Snapshot, tuple]] = {}
+        # version -> (manifest DataFrame, checkpoint path, its identity
+        # — both None when built on the driver —, driver-resident
+        # checkpoint manifest?): see files_df
         self._files_df_cache: dict[int, tuple] = {}
         # sidecar content hashes verified this process, keyed by relative
         # path -> (size, mtime): the lazy manifest plane deep-verifies
@@ -1791,9 +1826,11 @@ class TableLog:
         on a 1M-row checkpoint costs ~2 s per files_df cache miss)."""
         import pyarrow.parquet as pq
 
+        import pyarrow.compute as pc
+
         fp = os.path.join(self.log_path, _fmt_checkpoint(version))
         kinds = pq.read_table(fp, columns=["kind"]).column("kind")
-        if "sidecar" not in set(kinds.to_pylist()):
+        if not pc.any(pc.equal(kinds, "sidecar")).as_py():
             return []
         cols = pq.read_table(fp, columns=["kind", "action_json"])
         out = []
@@ -2061,41 +2098,22 @@ class TableLog:
         ]
     )
 
-    @staticmethod
-    def _manifest_rows(files, parsed_spec=None) -> list[tuple]:
-        """Driver-built manifest rows (checkpoint tails / small manifests).
-        With ``parsed_spec`` ([(name, kind)], see ``stats_field_spec``) each
-        row also carries the typed ``*_parsed`` structs so a tail union
-        matches the checkpoint scan's schema exactly."""
-        rows = []
-        for add in files:
-            st = add.stats_dict()
-            mins = st.get("minValues", {})
-            maxs = st.get("maxValues", {})
-            nulls = st.get("nullCount", {})
-            row = (
-                add.path,
-                add.partitionValues,
-                add.size,
-                add.logical_records,
-                json.dumps(mins, default=str),
-                json.dumps(maxs, default=str),
-                json.dumps(nulls, default=str),
-                add.version,
-                add.timestamp,
-                dumps_action(add),
-            )
-            if parsed_spec is not None:
-                row += (
-                    tuple(_typed_stat_value(_stat_lookup(mins, n), k)
-                          for n, k in parsed_spec),
-                    tuple(_typed_stat_value(_stat_lookup(maxs, n), k)
-                          for n, k in parsed_spec),
-                    tuple(_typed_stat_value(_stat_lookup(nulls, n), "i")
-                          for n, _ in parsed_spec),
-                )
-            rows.append(row)
-        return rows
+    @classmethod
+    def _manifest_columns(cls, parsed: bool) -> list[str]:
+        """Manifest column names, with the typed ``*_parsed`` structs
+        appended when ``parsed``."""
+        return ([f.name for f in cls._MANIFEST_SCHEMA.fields]
+                + (list(PARSED_STAT_COLS) if parsed else []))
+
+    @classmethod
+    def _manifest_arrow(cls, files, parsed_spec=None):
+        """Driver-built manifest rows (checkpoint tails, checkpoint-less
+        manifests, candidate sets) as one Arrow table in the manifest
+        column layout. Built by the checkpoint writers' own row builder,
+        so with ``parsed_spec`` ([(name, kind)], see ``stats_field_spec``)
+        the typed ``*_parsed`` structs are exactly a checkpoint's."""
+        return _adds_arrow_table(files, parsed_spec).select(
+            cls._manifest_columns(bool(parsed_spec)))
 
     @classmethod
     def _manifest_schema(cls, parsed_spec=None) -> T.StructType:
@@ -2129,34 +2147,143 @@ class TableLog:
                         for sf in f.dataType.fields]
         return None
 
-    def _checkpoint_manifest_df(self, cp_version: int) -> DataFrame:
-        cp = os.path.join(self.log_path, _fmt_checkpoint(cp_version))
-        # v2 checkpoints keep the adds in sidecar parquets (identical
-        # column layout): scan those directly — the manifest itself is
-        # O(buckets), the sidecar scan parallelizes like any parquet read
+    def _checkpoint_manifest_sources(self, cp_version: int) -> list[str]:
+        """The parquet files (or multi-part directory) holding a
+        checkpoint's add rows: v2 checkpoints keep them in sidecar
+        parquets of identical column layout (integrity-verified here),
+        classic ones in the checkpoint itself."""
         sidecars = self._checkpoint_sidecars(cp_version)
-        src = ([os.path.join(self.log_path, rel) for rel in sidecars]
-               if sidecars else [cp])
+        if sidecars:
+            return [os.path.join(self.log_path, rel) for rel in sidecars]
+        return [os.path.join(self.log_path, _fmt_checkpoint(cp_version))]
+
+    def _checkpoint_manifest_df(self, src: list[str]) -> DataFrame:
+        """The scan of the add rows in ``src``
+        (``_checkpoint_manifest_sources``); the manifest of a v2
+        checkpoint is O(buckets), its sidecar scan parallelizes like any
+        parquet read."""
         df = self.meta_spark.read.parquet(*src)
-        cols = [f.name for f in self._MANIFEST_SCHEMA.fields]
         # typed *_parsed stats columns ride along when the checkpoint has
         # them (post-r10 format); absent on older checkpoints — pruning
         # then falls back to get_json_object per column
-        cols += [c for c in PARSED_STAT_COLS if c in df.columns]
-        return df.filter(F.col("kind") == "add").select(*cols)
+        return df.filter(F.col("kind") == "add").select(
+            *self._manifest_columns("minValues_parsed" in df.columns))
+
+    def _checkpoint_tail(self, snapshot: Snapshot, cp_version: int
+                         ) -> "tuple[set[str], list[AddFile]]":
+        """(paths touched after checkpoint ``cp_version``, the tail's
+        active adds path-sorted) for ``snapshot``. The tail between
+        checkpoints is bounded by the interval, so both stay small
+        relative to the checkpoint. A lazy snapshot seeded from THIS
+        checkpoint already carries the replayed tail (with
+        version/timestamp/row-tracking stamps); otherwise the tail
+        commits are re-read. Neither touches ``snapshot.files``."""
+        if snapshot.cp_version == cp_version:
+            return snapshot.tail_changed, sorted(
+                snapshot.tail_adds.values(), key=lambda a: a.path)
+        changed: set[str] = set()
+        tail_active: dict[str, AddFile] = {}
+        rt = snapshot.row_tracking_enabled
+        for v in range(cp_version + 1, snapshot.version + 1):
+            commit = self.read_commit(v)
+            for r in commit.removes:
+                changed.add(r.path)
+                tail_active.pop(r.path, None)
+            for a in commit.adds:
+                a.version = commit.version
+                a.timestamp = commit.timestamp
+                if rt and a.defaultRowCommitVersion is None:
+                    a.defaultRowCommitVersion = commit.version
+                changed.add(a.path)
+                tail_active[a.path] = a
+        return changed, sorted(tail_active.values(), key=lambda a: a.path)
+
+    def _resident_checkpoint_manifest(
+            self, src: list[str], changed: "set[str]",
+            tail: "list[AddFile]") -> "DataFrame | None":
+        """The checkpoint-plus-tail manifest as ONE driver-resident
+        ``LocalRelation``, or None when it does not fit under the manifest
+        session's ``spark.sql.execution.arrow.localRelationThreshold``.
+        The checkpoint's add rows are read with pyarrow, tail-changed
+        paths dropped and the tail rows appended in Arrow: Catalyst
+        folds a filter or projection over one LocalRelation, but not
+        over a union of two, which would run as a Spark job again.
+
+        The bound is checked before reading (the footers' row-group
+        byte sizes, so a million-file checkpoint is never pulled to the
+        driver), after reading (the Arrow size) and after building (Spark
+        really made a LocalRelation)."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        import pyarrow.dataset as pds
+
+        dset = pds.dataset(src[0] if len(src) == 1 else src,
+                           format="parquet")
+        bound = (self.meta_spark._jsparkSession.sessionState().conf()
+                 .arrowLocalRelationThreshold())
+        footer_bytes = 0
+        for frag in dset.get_fragments():
+            md = frag.metadata
+            footer_bytes += sum(md.row_group(i).total_byte_size
+                                for i in range(md.num_row_groups))
+        if footer_bytes > bound:
+            return None
+        tbl = dset.to_table(
+            columns=self._manifest_columns(
+                "minValues_parsed" in dset.schema.names),
+            filter=pc.field("kind") == "add")
+        if tbl.nbytes > bound:
+            # the footers count parquet's uncompressed bytes, ~20% below
+            # the Arrow size Spark checks: skip a build Spark would refuse
+            return None
+        spec = _arrow_parsed_spec(tbl.schema)
+        if changed:
+            tbl = tbl.filter(pc.invert(pc.is_in(
+                tbl.column("path"),
+                value_set=pa.array(list(changed), pa.string()))))
+        if tail:
+            # the tail mirrors the CHECKPOINT's typed-stats struct exactly
+            # (fields AND stored types), even after a schema change
+            # between the checkpoint and the tail commits
+            tbl = pa.concat_tables(
+                [tbl, self._manifest_arrow(tail, spec).cast(tbl.schema)])
+        # path-sorted (see files_df), in one chunk: the filtered read
+        # leaves empty chunks (state rows, changed paths), and Spark's
+        # Arrow reader ends the stream at the first empty batch, silently
+        # dropping every row after it
+        df = self.meta_spark.createDataFrame(
+            tbl.sort_by("path").combine_chunks(), self._manifest_schema(spec))
+        # above the bound Spark plans a parallelized RDD instead
+        plan = df._jdf.queryExecution().logical()
+        return df if plan.getClass().getSimpleName() == "LocalRelation" \
+            else None
 
     def files_df(self, snapshot: Snapshot) -> DataFrame:
-        """The file manifest as a DataFrame — the engine's scale path for
-        file-level pruning: at millions of files the prune itself must be a
-        Spark job, not a driver loop (the reference caps pages at 10k files
-        for the same reason, ServerConfig.scala:93).
+        """The file manifest as a DataFrame, the input of every
+        manifest-plane prune, page and count. Two storages, one schema:
 
-        Served from the newest parquet checkpoint when one exists: exact hit
-        scans it directly; otherwise checkpoint minus tail-changed paths,
-        union the (small) tail adds — the manifest never materializes as
-        O(total files) driver rows.
+        - Driver-resident: when the manifest fits within Spark's own
+          local-relation bound (the manifest session's
+          ``spark.sql.execution.arrow.localRelationThreshold``, 48 MB by
+          default — about 80k files), it is built ONCE per snapshot as
+          one Arrow table (checkpoint add rows minus tail-changed paths,
+          plus the tail rows) and handed to Spark as a ``LocalRelation``.
+          Catalyst's ``ConvertToLocalRelation`` rule then evaluates the
+          prune filter and the ``path, action_json`` projection during
+          optimization, so a pruned listing runs no Spark job. Its rows
+          are path-sorted, and folding a filter, projection or limit
+          keeps their order, which the paged listing relies on. A
+          checkpoint-less manifest is always built this way from the
+          snapshot's files (whatever Spark makes of it).
+        - Scan: above the bound, the newest parquet checkpoint is
+          scanned directly; exact hit scans it, otherwise checkpoint
+          minus tail-changed paths, union the (small) tail adds. The
+          manifest never materializes as O(total files) driver rows, and
+          the prune runs as a Spark job that scales out — at millions of
+          files it must (the reference caps pages at 10k files for the
+          same reason, ServerConfig.scala:93).
 
-        Cache entries record the checkpoint file's identity (inode +
+        Scan entries record the checkpoint file's identity (inode +
         mtime) and re-stat on every hit: a checkpoint reinstall — by
         this instance, another TableLog, or another process — swaps the
         file/dir under the cached plan, and re-evaluating a plan pinned
@@ -2167,89 +2294,80 @@ class TableLog:
         scan can still fail that scan (filesystem TOCTOU, same as any
         engine whose input is replaced mid-read; Delta sidesteps it by
         never rewriting a version's checkpoint) — the guarantee here is
-        that evaluations STARTING after an install are never stale."""
+        that evaluations STARTING after an install are never stale.
+        Driver-built entries have no disk dependency; the snapshot
+        identity check (``_cached_snapshot``) drops them with the rest
+        when the table is recreated. A log keeps at most one
+        driver-resident checkpoint manifest, the newest version's, so
+        driver memory stays bounded by the table-handle cache size times
+        the bound: a snapshot older than the cached resident one takes
+        the scan plan (cached like any other), so traffic alternating
+        between versions never rebuilds a resident manifest per
+        request."""
         with self._cache_lock:
             cached = self._files_df_cache.get(snapshot.version)
+            newer_resident = any(
+                e[3] and v > snapshot.version
+                for v, e in self._files_df_cache.items())
         if cached is not None:
-            df0, fp0, ident0 = cached
+            df0, fp0, ident0, _ = cached
             if fp0 is None:
-                return df0  # built from driver rows — no disk dependency
+                return df0  # built on the driver — no disk dependency
             if _file_identity(fp0) == ident0:
                 return df0
             # checkpoint replaced/removed — rebuild below
         cp_version = self._latest_checkpoint(at_or_before=snapshot.version)
-        # capture the checkpoint identity BEFORE building the plan: a
-        # reinstall landing between plan build and a post-build stat
-        # would cache the stale plan under the NEW identity — which then
-        # validates forever (a permanent wedge of the exact failure this
-        # check exists to prevent). A pre-build identity made stale by a
-        # concurrent reinstall simply fails the next hit's re-stat and
-        # rebuilds.
         fp = ident = None
-        if cp_version is not None:
-            fp = os.path.join(self.log_path, _fmt_checkpoint(cp_version))
-            ident = _file_identity(fp)
-            if ident is None:
-                fp = None  # raced away before the build — don't cache
-        if cp_version is not None and cp_version == snapshot.version \
-                and not snapshot.tail_changed:
-            df = self._checkpoint_manifest_df(cp_version)
-        elif cp_version is not None:
-            # paths touched (added/removed/re-added) after the checkpoint;
-            # the tail between checkpoints is bounded by the interval so
-            # this set stays small relative to the checkpoint. A lazy
-            # snapshot seeded from THIS checkpoint already carries the
-            # replayed tail (with version/timestamp/row-tracking stamps) —
-            # use it; otherwise re-read the tail commits. Neither path
-            # touches snapshot.files.
-            if snapshot.cp_version == cp_version:
-                changed = snapshot.tail_changed
-                tail = sorted(snapshot.tail_adds.values(),
-                              key=lambda a: a.path)
-            else:
-                changed = set()
-                tail_active: dict[str, AddFile] = {}
-                rt = snapshot.row_tracking_enabled
-                for v in range(cp_version + 1, snapshot.version + 1):
-                    commit = self.read_commit(v)
-                    for r in commit.removes:
-                        changed.add(r.path)
-                        tail_active.pop(r.path, None)
-                    for a in commit.adds:
-                        a.version = commit.version
-                        a.timestamp = commit.timestamp
-                        if rt and a.defaultRowCommitVersion is None:
-                            a.defaultRowCommitVersion = commit.version
-                        changed.add(a.path)
-                        tail_active[a.path] = a
-                tail = sorted(tail_active.values(), key=lambda a: a.path)
-            base = self._checkpoint_manifest_df(cp_version)
-            if changed:
-                base = base.filter(~F.col("path").isin(*changed))
-            df = base
-            if tail:
-                # the tail union mirrors the CHECKPOINT's typed-stats
-                # struct exactly (fields AND their stored types), so the
-                # union always type-checks even after a schema change
-                # between the checkpoint and the tail commits
-                spec = self._parsed_spec_of(base)
-                df = base.unionByName(
-                    self.meta_spark.createDataFrame(
-                        self._manifest_rows(tail, spec),
-                        self._manifest_schema(spec)))
-        else:
+        resident = False
+        if cp_version is None:
             spec = stats_field_spec(snapshot.physical_schema) or None
             df = self.meta_spark.createDataFrame(
-                self._manifest_rows(snapshot.files, spec),
+                self._manifest_arrow(snapshot.files, spec).sort_by("path"),
                 self._manifest_schema(spec))
-        if cp_version is not None and fp is None:
-            # the checkpoint couldn't be fingerprinted before the build:
-            # the df DOES depend on it, so don't cache a plan we can't
-            # validate — the next call rebuilds against whatever is on
-            # disk then
-            return df
+        else:
+            # capture the checkpoint identity BEFORE reading its sources
+            # or building the plan: a reinstall landing between the build
+            # and a later stat would cache the stale plan under the NEW
+            # identity — which then validates forever (a permanent wedge
+            # of the exact failure this check exists to prevent). A
+            # pre-build identity made stale by a concurrent reinstall
+            # simply fails the next hit's re-stat and rebuilds.
+            fp = os.path.join(self.log_path, _fmt_checkpoint(cp_version))
+            ident = _file_identity(fp)
+            if cp_version == snapshot.version and not snapshot.tail_changed:
+                changed, tail = set(), []
+            else:
+                changed, tail = self._checkpoint_tail(snapshot, cp_version)
+            src = self._checkpoint_manifest_sources(cp_version)
+            df = None if newer_resident else \
+                self._resident_checkpoint_manifest(src, changed, tail)
+            if df is not None:
+                fp = ident = None
+                resident = True
+            else:
+                df = self._checkpoint_manifest_df(src)
+                if changed:
+                    df = df.filter(~F.col("path").isin(*changed))
+                if tail:
+                    spec = self._parsed_spec_of(df)
+                    df = df.unionByName(self.meta_spark.createDataFrame(
+                        self._manifest_arrow(tail, spec),
+                        self._manifest_schema(spec)))
+                if ident is None:
+                    # the checkpoint raced away before the build: the df
+                    # DOES depend on it, so don't cache a plan we can't
+                    # validate — the next call rebuilds against whatever
+                    # is on disk then
+                    return df
         with self._cache_lock:
-            self._files_df_cache[snapshot.version] = (df, fp, ident)
+            if resident:
+                older = [v for v, e in self._files_df_cache.items() if e[3]]
+                if any(v > snapshot.version for v in older):
+                    return df  # a newer one was cached meanwhile
+                for v in older:
+                    del self._files_df_cache[v]
+            self._files_df_cache[snapshot.version] = (df, fp, ident,
+                                                      resident)
             while len(self._files_df_cache) > 8:
                 self._files_df_cache.pop(next(iter(self._files_df_cache)))
         return df
@@ -5707,7 +5825,7 @@ class TableLog:
             return df.select(*sel)
 
         cand = envelope(self.meta_spark.createDataFrame(
-            self._manifest_rows(candidates), self._MANIFEST_SCHEMA), "c_")
+            self._manifest_arrow(candidates), self._MANIFEST_SCHEMA), "c_")
         allf = envelope(self.files_df(snap), "g_")
         cond = F.col("g_path") != F.col("c_path")
         for i in range(len(columns)):
@@ -5768,7 +5886,7 @@ class TableLog:
             return df.select(*sel)
 
         rw = envelope(self.meta_spark.createDataFrame(
-            self._manifest_rows(rewrite), self._MANIFEST_SCHEMA), "c_")
+            self._manifest_arrow(rewrite), self._MANIFEST_SCHEMA), "c_")
         allf = envelope(self.files_df(snap), "g_")
         cond = F.lit(True)
         for i in range(len(columns)):

@@ -618,7 +618,7 @@ class SharingServer:
                 and int(params["maxFiles"]) <= 0:
             return h._deny(400, "maxFiles must be positive.")
         out = table_changes_actions(
-            t.spark, t.log.path,
+            t.spark, t.log,
             starting_version=(int(params["startingVersion"])
                               if "startingVersion" in params else None),
             ending_version=(int(params["endingVersion"])

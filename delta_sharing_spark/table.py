@@ -46,13 +46,16 @@ from delta_sharing_spark.plans.predicates import (
 )
 
 # Below this file count the manifest prune runs as a driver loop over the
-# (already in-memory) snapshot file list; above it, as a DataFrame job.
-# Rationale: a Spark job + collect costs ~0.3-0.4 s of fixed overhead —
-# pure loss for small manifests — while at millions of files the driver
-# loop is the thing that doesn't scale. The reference pages file listings
-# at 10k for the same crossover reason (ServerConfig.scala:93). Both
-# evaluators implement identical three-valued semantics, enforced by the
-# hypothesis property suite (tests/test_property_pruning.py).
+# (already in-memory) snapshot file list; above it, as a DataFrame filter
+# over ``TableLog.files_df``. That DataFrame is driver-resident up to
+# Spark's local-relation bound (about 80k files at the default 48 MB):
+# Catalyst evaluates the filter while optimizing, with no Spark job and no
+# AddFile objects. Above the bound it scans the checkpoint, and the prune
+# is a Spark job (~0.3-0.4 s of fixed overhead) that scales out where a
+# driver loop would not. The reference pages file listings at 10k for the
+# same crossover reason (ServerConfig.scala:93). Both evaluators implement
+# identical three-valued semantics, enforced by the hypothesis property
+# suite (tests/test_property_pruning.py) under both manifest storages.
 PRUNE_DRIVER_MAX_FILES = 10_000
 
 # Page tokens expire after 3 days (ref queryTablePageTokenTtlMs,
@@ -436,8 +439,11 @@ class SharedTable:
         Threshold hybrid: small manifests (<= PRUNE_DRIVER_MAX_FILES, no
         SQL hints) prune in a driver loop with the sessionless evaluator —
         zero Spark jobs on the read path; large manifests prune as a
-        DataFrame job that scales out. SQL hints need Catalyst (F.expr), so
-        they always take the DataFrame path.
+        DataFrame filter over ``files_df``, which Catalyst evaluates on the
+        driver while the manifest is driver-resident and which runs as a
+        Spark job that scales out above Spark's local-relation bound. SQL
+        hints need Catalyst (F.expr), so they always take the DataFrame
+        path.
         """
         # column mapping: file partitionValues/stats are keyed by PHYSICAL
         # names — translate the hints (and evaluate against the physical
@@ -480,10 +486,11 @@ class SharedTable:
         """The prune and the fetch of the kept ``AddFile``s (path-sorted)
         in one step. A large lazy manifest (``num_files_hint`` above
         PRUNE_DRIVER_MAX_FILES) collects ``path, action_json`` from the
-        pruned manifest in ONE Spark job (plus the limit cutoff's own
-        jobs), never a path list that a second job joins back; small or
-        materialized manifests run ``pruned_files`` and filter the
-        in-memory file list."""
+        pruned manifest — no Spark job while ``files_df`` is
+        driver-resident, ONE above Spark's local-relation bound (plus the
+        limit cutoff's own jobs there), never a path list that a second
+        job joins back; small or materialized manifests run
+        ``pruned_files`` and filter the in-memory file list."""
         if (snapshot.files_materialized
                 or (snapshot.num_files_hint or 0) <= PRUNE_DRIVER_MAX_FILES):
             return self.log.adds_for_paths(
@@ -562,12 +569,23 @@ class SharedTable:
         )
 
     @staticmethod
+    def _driver_resident(manifest: DataFrame) -> bool:
+        """Whether Catalyst folds ``manifest`` (a driver-resident
+        ``files_df`` and the filters on it) into one ``LocalRelation``:
+        then collecting from it runs no Spark job, while every job over
+        it ships the relation's rows inside its tasks."""
+        plan = manifest._jdf.queryExecution().optimizedPlan()
+        return plan.getClass().getSimpleName() == "LocalRelation"
+
+    @staticmethod
     def _limit_prefix_filter(manifest: DataFrame, limit_hint: int) -> DataFrame:
         """Keep files while the running row count of *previous* files (in
         path order) is below the limit (kernel early-termination semantics:
         DeltaSharedTableKernel.scala:446-449,723-733).
 
-        Distributed two-phase prefix sum — no unpartitioned window: range-
+        A driver-resident manifest collects its ``path, numRecords`` with
+        no Spark job, so the prefix sum is a driver sort there. Otherwise,
+        a distributed two-phase prefix sum — no unpartitioned window: range-
         partition the manifest by path (persisted, because the range
         partitioner samples per job — both phases must see the SAME
         boundaries), collect the P per-partition totals (P rows, not P
@@ -577,6 +595,18 @@ class SharedTable:
         never funnels through a single task."""
         from pyspark.storagelevel import StorageLevel
 
+        if SharedTable._driver_resident(manifest):
+            # the kept files are a path-order prefix: one range predicate
+            # folds back in (an IN list of them would be evaluated per
+            # row and per listed path)
+            last, total = None, 0
+            for path, n in sorted(
+                    manifest.select("path", "numRecords").collect()):
+                if total >= limit_hint:
+                    break
+                last, total = path, total + (n or 0)
+            return manifest.filter(F.lit(False) if last is None
+                                   else F.col("path") <= last)
         parts = max(1, manifest.sparkSession.sparkContext.defaultParallelism)
         m = (
             # ONLY the columns the prefix sum needs: dragging the wide
@@ -941,7 +971,8 @@ class SharedTable:
         elif (max_files is not None and not snap.files_materialized
                 and (snap.num_files_hint or 0) > PRUNE_DRIVER_MAX_FILES):
             # paged query over a LAZY manifest: prune + path-order +
-            # page cut run as ONE Spark job and the driver holds only
+            # page cut run as ONE Spark job (none while the manifest is
+            # driver-resident, below) and the driver holds only
             # the served page's actions — a 5M-file table never
             # materializes 5M AddFiles to serve a 1000-file page (the
             # reference kernel's per-batch iteration with early stop,
@@ -960,12 +991,15 @@ class SharedTable:
                 snap, jph, predicate_hints, limit_hint)
             sel = manifest.select("path", "action_json")
             if last_path is not None:
-                rows = (
-                    sel.filter(F.col("path") > last_path)
-                    .orderBy("path")
-                    .limit(max_files + 1)
-                    .collect()
-                )
+                sel = sel.filter(F.col("path") > last_path)
+            if self._driver_resident(manifest) and (
+                    last_path is not None or not start):
+                # a driver-resident manifest is path-sorted and Catalyst
+                # folds the filter and the limit into its LocalRelation:
+                # no sort, no Spark job
+                rows = sel.limit(max_files + 1).collect()
+            elif last_path is not None:
+                rows = sel.orderBy("path").limit(max_files + 1).collect()
             else:
                 # start > 0 without lastPath = a pre-r10 token: honor it
                 # via the offset form once; the token minted BELOW

@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import os
 import sys
+from contextlib import contextmanager
 
 import pytest
 
@@ -34,3 +35,46 @@ def lineitem(spark):
 @pytest.fixture()
 def table_dir(tmp_path):
     return str(tmp_path / "table")
+
+
+class ManifestStorage:
+    """How ``TableLog.files_df`` stores a checkpointed manifest, toggled
+    with Spark's own local-relation bound on the manifest session:
+    "resident" keeps the default bound (a small manifest becomes one
+    driver-side ``LocalRelation``), "scan" sets it to 0 (the checkpoint
+    is scanned). Build the ``TableLog`` inside the test: ``files_df``
+    caches per log."""
+
+    KEY = "spark.sql.execution.arrow.localRelationThreshold"
+    NAMES = ("resident", "scan")
+
+    def __init__(self, name: str):
+        self.name = name
+
+    def check(self, manifest) -> None:
+        """Assert that ``manifest`` (a ``files_df``) has this storage."""
+        plan = manifest._jdf.queryExecution().logical()
+        resident = plan.getClass().getSimpleName() == "LocalRelation"
+        assert resident == (self.name == "resident"), plan.toString()
+
+
+@contextmanager
+def manifest_storage_set(spark, name: str):
+    """Within the block, ``files_df`` builds ``name`` storage (one of
+    ``ManifestStorage.NAMES``); yields the ``ManifestStorage``. Tests that
+    keep their id loop over both storages with it."""
+    from delta_sharing_spark.plans.log import manifest_session
+
+    meta = manifest_session(spark)
+    if name == "scan":
+        meta.conf.set(ManifestStorage.KEY, "0")
+    try:
+        yield ManifestStorage(name)
+    finally:
+        meta.conf.unset(ManifestStorage.KEY)
+
+
+@pytest.fixture(params=ManifestStorage.NAMES)
+def manifest_storage(request, spark):
+    with manifest_storage_set(spark, request.param) as storage:
+        yield storage

@@ -508,14 +508,29 @@ class TestCheckpoints:
         assert len(snap.files) == len(log.snapshot(version=0).files)
 
     def test_files_df_scans_checkpoint(self, spark, many_version_table):
-        log = TableLog(spark, many_version_table)
-        snap = log.snapshot(version=10)
-        df = log.files_df(snap)
+        from delta_sharing_spark.plans.log import manifest_session
+
+        # above Spark's local-relation bound (set to 0 here) the manifest
+        # is a scan of the checkpoint; below it, the checkpoint's rows
+        # read into one driver-resident LocalRelation
+        meta = manifest_session(spark)
+        key = "spark.sql.execution.arrow.localRelationThreshold"
+        meta.conf.set(key, "0")
+        try:
+            log = TableLog(spark, many_version_table)
+            snap = log.snapshot(version=10)
+            df = log.files_df(snap)
+        finally:
+            meta.conf.unset(key)
         # served from the checkpoint parquet, not createDataFrame rows
         assert "parquet" in df._jdf.queryExecution().optimizedPlan().toString().lower()
         assert df.count() == len(snap.files)
         paths = {r.path for r in df.select("path").collect()}
         assert paths == {f.path for f in snap.files}
+        resident = TableLog(spark, many_version_table).files_df(snap)
+        assert resident._jdf.queryExecution().logical().getClass() \
+            .getSimpleName() == "LocalRelation"
+        assert {r.path for r in resident.select("path").collect()} == paths
 
     def test_multipart_checkpoint_roundtrip(self, spark, events, tmp_path,
                                             monkeypatch):
@@ -556,15 +571,29 @@ class TestCheckpoints:
         assert not os.path.exists(cp_path)
 
     def test_files_df_checkpoint_plus_tail(self, spark, many_version_table):
+        from delta_sharing_spark.plans.log import manifest_session
+
         # latest (v12) has no exact checkpoint: manifest = checkpoint(10)
-        # scan + the two tail adds, never O(total files) driver rows
-        log = TableLog(spark, many_version_table)
-        snap = log.snapshot()  # version 12
-        df = log.files_df(snap)
+        # scan + the two tail adds, never O(total files) driver rows —
+        # above Spark's local-relation bound (set to 0 here); below it,
+        # the same rows merged in Arrow into one LocalRelation
+        meta = manifest_session(spark)
+        key = "spark.sql.execution.arrow.localRelationThreshold"
+        meta.conf.set(key, "0")
+        try:
+            log = TableLog(spark, many_version_table)
+            snap = log.snapshot()  # version 12
+            df = log.files_df(snap)
+        finally:
+            meta.conf.unset(key)
         plan = df._jdf.queryExecution().optimizedPlan().toString().lower()
         assert "parquet" in plan
         paths = {r.path for r in df.select("path").collect()}
         assert paths == {f.path for f in snap.files}
+        resident = TableLog(spark, many_version_table).files_df(snap)
+        assert resident._jdf.queryExecution().logical().getClass() \
+            .getSimpleName() == "LocalRelation"
+        assert {r.path for r in resident.select("path").collect()} == paths
 
     def test_files_df_tail_with_removes(self, spark, events, tmp_path):
         d = str(tmp_path / "tailrm")

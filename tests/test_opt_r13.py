@@ -303,6 +303,42 @@ class TestFusedLloyd:
         df = spark.createDataFrame([], "vec_id long, embedding array<double>")
         assert kmeans_fit(df, k=4, iters=2, dim=8).count() == 0
 
+    @staticmethod
+    def _embedding_batch(vectors):
+        import pyarrow as pa
+
+        return pa.record_batch(
+            [pa.array(vectors, pa.list_(pa.float64()))],
+            names=["embedding"])
+
+    def test_lloyd_partials_reject_mis_sized_vectors(self):
+        # two 2-value vectors flatten to 4 values, which reshape(-1, 4)
+        # would silently read as ONE 4-dim vector
+        from delta_sharing_spark.operators.similarity import (
+            _lloyd_partials_fn,
+        )
+
+        fn = _lloyd_partials_fn([0], [[0.0, 0.0, 0.0, 0.0]], 4)
+        batch = self._embedding_batch([[1.0, 2.0], [3.0, 4.0]])
+        with pytest.raises(ValueError, match="length 4"):
+            list(fn([batch]))
+        ok = self._embedding_batch([[1.0, 2.0, 3.0, 4.0]])
+        assert list(fn([ok]))[0].num_rows == 4
+
+    def test_pq_partials_reject_mis_sized_vectors(self):
+        # m=2 subspaces of 2 values: three 4-value vectors and one
+        # 0-value vector flatten to 12 values, still divisible by 4
+        from delta_sharing_spark.operators.similarity import _pq_partials_fn
+
+        books = {0: ([0], [[0.0, 0.0]]), 1: ([0], [[0.0, 0.0]])}
+        fn = _pq_partials_fn(books, 2, 2)
+        batch = self._embedding_batch(
+            [[1.0, 2.0, 3.0, 4.0]] * 3 + [[]])
+        with pytest.raises(ValueError, match="length 4"):
+            list(fn([batch]))
+        ok = self._embedding_batch([[1.0, 2.0, 3.0, 4.0]] * 3)
+        assert list(fn([ok]))[0].num_rows == 4
+
 
 class TestWinnowBatchVectorization:
     def test_matches_per_doc_reference(self):

@@ -275,6 +275,66 @@ def test_nested_missing_stats_only_widen(rows_data, tree):
         assert kept_empty, "losing stats must never cause a skip"
 
 
+# --- manifest storage (driver-resident vs scan) ------------------------
+#
+# The same random predicates pruned on the manifest plane of a real
+# checkpointed table with a tail, under both storages ``files_df`` picks
+# (the ``manifest_storage`` fixture): the kept set, including a limitHint
+# cutoff, must equal the sessionless driver loop's.
+
+
+@pytest.fixture(scope="module")
+def storage_table(spark, tmp_path_factory):
+    """A table of int columns c1, c2 (with nulls) in about 30 files whose
+    stats differ: checkpointed, then a tail that appends and rewrites."""
+    from delta_sharing_spark.plans.log import TableLog
+
+    path = str(tmp_path_factory.mktemp("storage_prop") / "t")
+    data = []
+    for g in range(30):
+        for j in range(6):
+            c1 = None if (g + j) % 5 == 0 else (g % 7) - 3 + j % 2
+            c2 = None if (g * j) % 4 == 1 else ((g // 4) % 7) - 3
+            data.append((g, g * 6 + j, c1, c2))
+    df = spark.createDataFrame(data, "g int, id int, c1 int, c2 int")
+    log = TableLog(spark, path)
+    log.create(df.repartitionByRange(24, "g").drop("g"),
+               configuration={"delta.checkpointInterval": "100"})
+    log.write_checkpoint()
+    log.append(spark.createDataFrame(
+        [(1000 + i, i % 7 - 3, None) for i in range(6)],
+        "id int, c1 int, c2 int"))
+    log.delete("id < 12")
+    return path
+
+
+@settings(max_examples=20, deadline=None,
+          suppress_health_check=[HealthCheck.too_slow,
+                                 HealthCheck.function_scoped_fixture])
+@given(tree=trees(), limit=st.one_of(st.none(), st.integers(0, 120)))
+def test_manifest_storage_matches_driver_loop(
+        spark, storage_table, manifest_storage, tree, limit):
+    from delta_sharing_spark.plans.log import TableLog
+    from delta_sharing_spark.table import SharedTable
+
+    table = SharedTable(spark, storage_table)
+    snap = table.log.snapshot()
+    manifest_storage.check(table.log.files_df(snap))
+    files = sorted(TableLog(spark, storage_table).snapshot().files,
+                   key=lambda a: a.path)
+    want, total = [], 0
+    for a in files:
+        if not keep_file(tree, a.partitionValues, a.stats_dict(), []):
+            continue
+        if limit is not None and total >= limit:
+            break
+        want.append(a.path)
+        total += a.logical_records
+    got = sorted(r["path"] for r in table._pruned_manifest(
+        snap, tree, None, limit).select("path").collect())
+    assert got == want
+
+
 class TestAsyncQuery:
     def test_submit_poll_dedup(self, spark, events, tmp_path):
         from delta_sharing_spark.asyncquery import AsyncQueryManager

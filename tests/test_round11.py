@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 
 from delta_sharing_spark.plans.log import TableLog, _fmt_checkpoint
 from delta_sharing_spark.table import SharedTable
+from tests.conftest import ManifestStorage, manifest_storage_set
 
 
 class TestTxnRemoteParsers:
@@ -458,25 +459,30 @@ class TestNestedTypedStats:
         from delta_sharing_spark.plans.predicates import (
             file_keep_condition, parsed_stat_fields)
 
-        log = self._mk(spark, str(tmp_path / "t"))
-        log.write_checkpoint()
-        hi = spark.range(100_000, 101_000).select(
-            F.col("id"),
-            F.struct(F.lit(99.0).alias("qty"), F.lit("zz").alias("grp"),
-                     F.struct((F.col("id") * 3).alias("deep"))
-                     .alias("inner")).alias("m"))
-        log.append(hi)
-        snap = log.snapshot()
-        m = log.files_df(snap)
-        pf = parsed_stat_fields(m)
-        assert "m.qty" in pf
-        kept = {r["path"] for r in m.filter(
-            file_keep_condition(self._hint("m.qty", "double",
-                                           "greaterThan", 90),
-                                snap.partition_columns, pf))
-            .select("path").collect()}
-        tail = {a.path for a in snap.files if a.version == snap.version}
-        assert kept == tail
+        for name in ManifestStorage.NAMES:
+            with manifest_storage_set(spark, name) as storage:
+                log = self._mk(spark, str(tmp_path / storage.name))
+                log.write_checkpoint()
+                hi = spark.range(100_000, 101_000).select(
+                    F.col("id"),
+                    F.struct(F.lit(99.0).alias("qty"),
+                             F.lit("zz").alias("grp"),
+                             F.struct((F.col("id") * 3).alias("deep"))
+                             .alias("inner")).alias("m"))
+                log.append(hi)
+                snap = log.snapshot()
+                m = log.files_df(snap)
+                storage.check(m)
+                pf = parsed_stat_fields(m)
+                assert "m.qty" in pf
+                kept = {r["path"] for r in m.filter(
+                    file_keep_condition(self._hint("m.qty", "double",
+                                                   "greaterThan", 90),
+                                        snap.partition_columns, pf))
+                    .select("path").collect()}
+                tail = {a.path for a in snap.files
+                        if a.version == snap.version}
+                assert kept == tail
 
 
 class TestSparkJobCheckpoint:
@@ -675,27 +681,31 @@ class TestSparkJobCheckpoint:
         from delta_sharing_spark.plans.log import (
             PARSED_STAT_COLS, stats_field_spec)
 
-        log = _mk(spark, str(tmp_path / "t"))
-        log.write_checkpoint()
-        snap = log.snapshot()
-        manifest = log.files_df(snap)
-        layout = ["kind", "action_json", "path", "partitionValues",
-                  "size", "numRecords", "minValues", "maxValues",
-                  "nullCount", "version", "timestamp"]
-        if stats_field_spec(snap.physical_schema):
-            layout += list(PARSED_STAT_COLS)
-        adds_df = manifest.withColumn("kind", F.lit("add")).select(layout)
-        plan = adds_df._jdf.queryExecution().executedPlan().toString()
-        assert plan.count("Exchange") == 0, plan
+        for name in ManifestStorage.NAMES:
+            with manifest_storage_set(spark, name) as storage:
+                log = _mk(spark, str(tmp_path / storage.name))
+                log.write_checkpoint()
+                snap = log.snapshot()
+                manifest = log.files_df(snap)
+                storage.check(manifest)
+                layout = ["kind", "action_json", "path", "partitionValues",
+                          "size", "numRecords", "minValues", "maxValues",
+                          "nullCount", "version", "timestamp"]
+                if stats_field_spec(snap.physical_schema):
+                    layout += list(PARSED_STAT_COLS)
+                adds_df = manifest.withColumn(
+                    "kind", F.lit("add")).select(layout)
+                plan = adds_df._jdf.queryExecution().executedPlan().toString()
+                assert plan.count("Exchange") == 0, plan
 
-        b = (F.conv(F.substring(F.md5(F.col("path")), 1, 8), 16, 10)
-             .cast("long") % 4)
+                b = (F.conv(F.substring(F.md5(F.col("path")), 1, 8), 16, 10)
+                     .cast("long") % 4)
 
-        def noop(pdf):
-            return pd.DataFrame([(0,)], columns=["x"])
+                def noop(pdf):
+                    return pd.DataFrame([(0,)], columns=["x"])
 
-        v2plan = (manifest.select("action_json", "path", "version")
-                  .withColumn("__b", b).groupBy("__b")
-                  .applyInPandas(noop, "x long")
-                  ._jdf.queryExecution().executedPlan().toString())
-        assert v2plan.count("Exchange") == 1, v2plan
+                v2plan = (manifest.select("action_json", "path", "version")
+                          .withColumn("__b", b).groupBy("__b")
+                          .applyInPandas(noop, "x long")
+                          ._jdf.queryExecution().executedPlan().toString())
+                assert v2plan.count("Exchange") == 1, v2plan

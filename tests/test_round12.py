@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 
 from delta_sharing_spark.plans.log import TableLog, _fmt_checkpoint
 from delta_sharing_spark.table import SharedTable
+from tests.conftest import ManifestStorage, manifest_storage_set
 
 
 class TestLazyServingPlane:
@@ -611,26 +612,34 @@ class TestFilesDfCacheInvalidation:
         r12 non-destructive install)."""
         import delta_sharing_spark.plans.log as L
 
-        d = str(tmp_path / "t")
-        log = TableLog(spark, d)
-        df = spark.range(0, 2000).selectExpr(
-            "id", "cast(id % 3 as string) as cat")
-        log.create(df.repartition(4), partition_by=["cat"],
-                   configuration={"delta.checkpointInterval": "100"})
-        log.write_checkpoint()
-        snap = log.snapshot()
-        n0 = log.files_df(snap).count()
-        # reinstall the checkpoint at the same version (maintenance
-        # rewrite) — multi-part path forced so the dir really swaps
-        old_parts = L.CHECKPOINT_PART_ROWS
-        try:
-            L.CHECKPOINT_PART_ROWS = 1
-            log.write_checkpoint()
-        finally:
-            L.CHECKPOINT_PART_ROWS = old_parts
-        assert log.files_df(log.snapshot()).count() == n0
-        # and the old cached plan is gone (fresh listing, no stale pin)
-        assert log.files_df(snap).count() == n0
+        # under both manifest storages: the scan plan's cache entry is
+        # the one pinned to the checkpoint on disk
+        for name in ManifestStorage.NAMES:
+            with manifest_storage_set(spark, name) as storage:
+                d = str(tmp_path / storage.name)
+                log = TableLog(spark, d)
+                df = spark.range(0, 2000).selectExpr(
+                    "id", "cast(id % 3 as string) as cat")
+                log.create(df.repartition(4), partition_by=["cat"],
+                           configuration={
+                               "delta.checkpointInterval": "100"})
+                log.write_checkpoint()
+                snap = log.snapshot()
+                n0 = log.files_df(snap).count()
+                storage.check(log.files_df(snap))
+                # reinstall the checkpoint at the same version
+                # (maintenance rewrite) — multi-part path forced so the
+                # dir really swaps
+                old_parts = L.CHECKPOINT_PART_ROWS
+                try:
+                    L.CHECKPOINT_PART_ROWS = 1
+                    log.write_checkpoint()
+                finally:
+                    L.CHECKPOINT_PART_ROWS = old_parts
+                assert log.files_df(log.snapshot()).count() == n0
+                # and the old cached plan is gone (fresh listing, no
+                # stale pin)
+                assert log.files_df(snap).count() == n0
 
     def test_cross_instance_reinstall(self, spark, tmp_path):
         """The reader and the rewriter are DIFFERENT TableLog
@@ -640,26 +649,32 @@ class TestFilesDfCacheInvalidation:
         via any in-process signal."""
         import delta_sharing_spark.plans.log as L
 
-        d = str(tmp_path / "t")
-        writer = TableLog(spark, d)
-        df = spark.range(0, 2000).selectExpr(
-            "id", "cast(id % 3 as string) as cat")
-        writer.create(df.repartition(4), partition_by=["cat"],
-                      configuration={"delta.checkpointInterval": "100"})
-        writer.write_checkpoint()
+        for name in ManifestStorage.NAMES:
+            with manifest_storage_set(spark, name) as storage:
+                d = str(tmp_path / storage.name)
+                writer = TableLog(spark, d)
+                df = spark.range(0, 2000).selectExpr(
+                    "id", "cast(id % 3 as string) as cat")
+                writer.create(df.repartition(4), partition_by=["cat"],
+                              configuration={
+                                  "delta.checkpointInterval": "100"})
+                writer.write_checkpoint()
 
-        reader = TableLog(spark, d)
-        rsnap = reader.snapshot()
-        n0 = reader.files_df(rsnap).count()
-        old_parts = L.CHECKPOINT_PART_ROWS
-        try:
-            L.CHECKPOINT_PART_ROWS = 1  # force the multi-part dir swap
-            writer.write_checkpoint()
-        finally:
-            L.CHECKPOINT_PART_ROWS = old_parts
-        # reader's cache entry is now stale on disk; must rebuild, and
-        # the rebuilt plan must evaluate (not FILE_NOT_EXIST)
-        assert reader.files_df(rsnap).count() == n0
+                reader = TableLog(spark, d)
+                rsnap = reader.snapshot()
+                n0 = reader.files_df(rsnap).count()
+                storage.check(reader.files_df(rsnap))
+                old_parts = L.CHECKPOINT_PART_ROWS
+                try:
+                    # force the multi-part dir swap
+                    L.CHECKPOINT_PART_ROWS = 1
+                    writer.write_checkpoint()
+                finally:
+                    L.CHECKPOINT_PART_ROWS = old_parts
+                # reader's cache entry is now stale on disk; must
+                # rebuild, and the rebuilt plan must evaluate (not
+                # FILE_NOT_EXIST)
+                assert reader.files_df(rsnap).count() == n0
 
 
 class TestServeDuringReinstall:
@@ -676,22 +691,26 @@ class TestServeDuringReinstall:
         deleted parts."""
         import delta_sharing_spark.plans.log as L
 
-        d = str(tmp_path / "t")
-        writer = TableLog(spark, d)
-        df = spark.range(0, 2000).selectExpr(
-            "id", "cast(id % 3 as string) as cat")
-        writer.create(df.repartition(4), partition_by=["cat"],
-                      configuration={"delta.checkpointInterval": "100"})
-        writer.write_checkpoint()
-        reader = TableLog(spark, d)
-        rsnap = reader.snapshot()
-        expect = reader.files_df(rsnap).count()
-
-        old = L.CHECKPOINT_PART_ROWS
-        try:
-            for i in range(6):
-                L.CHECKPOINT_PART_ROWS = 1 if i % 2 == 0 else old
+        for name in ManifestStorage.NAMES:
+            with manifest_storage_set(spark, name) as storage:
+                d = str(tmp_path / storage.name)
+                writer = TableLog(spark, d)
+                df = spark.range(0, 2000).selectExpr(
+                    "id", "cast(id % 3 as string) as cat")
+                writer.create(df.repartition(4), partition_by=["cat"],
+                              configuration={
+                                  "delta.checkpointInterval": "100"})
                 writer.write_checkpoint()
-                assert reader.files_df(rsnap).count() == expect
-        finally:
-            L.CHECKPOINT_PART_ROWS = old
+                reader = TableLog(spark, d)
+                rsnap = reader.snapshot()
+                expect = reader.files_df(rsnap).count()
+                storage.check(reader.files_df(rsnap))
+
+                old = L.CHECKPOINT_PART_ROWS
+                try:
+                    for i in range(6):
+                        L.CHECKPOINT_PART_ROWS = 1 if i % 2 == 0 else old
+                        writer.write_checkpoint()
+                        assert reader.files_df(rsnap).count() == expect
+                finally:
+                    L.CHECKPOINT_PART_ROWS = old

@@ -219,6 +219,66 @@ class TestConcurrentHandle:
             assert len({body for _, body in outs}) == 1, key
 
 
+    def test_resident_manifests_from_eight_threads(self, spark, tmp_path,
+                                                   monkeypatch):
+        # hinted prunes of two versions interleaved on one handle: only
+        # the newer version's manifest stays driver-resident (one per
+        # log), and every answer must still be its own version's
+        import sys
+
+        import delta_sharing_spark.table as table_mod
+        from delta_sharing_spark.table import SharedTable
+
+        path = str(tmp_path / "t")
+        log = _build(spark, path, commits=3)
+        log.write_checkpoint()
+        log.append(_rows(spark, 500, 560))
+        monkeypatch.setattr(table_mod, "PRUNE_DRIVER_MAX_FILES", -1)
+        hint = _hint("greaterThanOrEqual", "id", "long", 100)
+        handle = SharedTable(spark, path)
+        want = {v: sorted(_kept(TableLog(spark, path).snapshot(version=v),
+                                hint))
+                for v in (2, 3)}
+        errors: list = []
+        start = threading.Barrier(8)
+
+        def worker(i: int) -> None:
+            start.wait()
+            try:
+                for k in range(6):
+                    v = 2 + (i + k) % 2
+                    snap = handle.log.snapshot(version=v)
+                    got = [a.path for a in handle.kept_adds(snap, hint)]
+                    assert got == want[v], (v, got)
+            except Exception as exc:  # surfaced below
+                errors.append(exc)
+
+        old = sys.getswitchinterval()
+        sys.setswitchinterval(1e-5)
+        try:
+            threads = [threading.Thread(target=worker, args=(i,))
+                       for i in range(8)]
+            for th in threads:
+                th.start()
+            for th in threads:
+                th.join(timeout=300)
+        finally:
+            sys.setswitchinterval(old)
+        assert not any(th.is_alive() for th in threads)
+        assert not errors, errors
+        assert {v for v, e in handle.log._files_df_cache.items()
+                if e[3]} == {3}
+
+
+def _kept(snap, hint: str) -> list[str]:
+    """Paths the sessionless driver loop keeps for ``hint``."""
+    from delta_sharing_spark.plans.predicates import keep_file
+
+    return [a.path for a in snap.files
+            if keep_file(json.loads(hint), a.partitionValues,
+                         a.stats_dict(), snap.partition_columns)]
+
+
 class TestServerErrorLogging:
     def test_500_logs_traceback(self, spark, served, caplog):
         srv, client, path = served
@@ -249,32 +309,103 @@ def _job_ids(spark) -> set[int]:
 
 
 class TestJobBudget:
-    def test_large_manifest_query_one_job_metadata_none(
-            self, spark, served, monkeypatch):
+    """Served requests on a checkpointed table with a tail, pruned on the
+    manifest plane (``PRUNE_DRIVER_MAX_FILES`` patched to -1): the
+    manifest fits Spark's local-relation bound, so it is driver-resident
+    and a warm hinted query runs no Spark job."""
+
+    @staticmethod
+    def _table(spark, path, monkeypatch) -> TableLog:
         import delta_sharing_spark.table as table_mod
 
-        srv, client, path = served
         log = _build(spark, path, commits=3)
         log.write_checkpoint()
         log.append(_rows(spark, 500, 560))     # a tail after the checkpoint
-        # the large-manifest path: prune on the manifest plane
         monkeypatch.setattr(table_mod, "PRUNE_DRIVER_MAX_FILES", -1)
+        return log
+
+    @staticmethod
+    def _jobs(spark, client, p, body=None):
+        before = _job_ids(spark)
+        out = client.lines(p, body)
+        return out, len(_job_ids(spark) - before)
+
+    def test_large_manifest_query_and_metadata_run_no_job(
+            self, spark, served, monkeypatch):
+        srv, client, path = served
+        self._table(spark, path, monkeypatch)
         hint = {"jsonPredicateHints": _hint("lessThan", "id", "long", 120)}
         warm = client.lines(Q + "/query", hint)
-
-        def jobs(p, body=None):
-            before = _job_ids(spark)
-            out = client.lines(p, body)
-            return out, len(_job_ids(spark) - before)
-
-        query, n_query = jobs(Q + "/query", {
+        query, n_query = self._jobs(spark, client, Q + "/query", {
             "jsonPredicateHints": _hint("greaterThanOrEqual", "id", "long",
                                         100)})
-        assert n_query == 1
+        assert n_query == 0
         assert any("file" in ln for ln in query)
-        again, n_again = jobs(Q + "/query", hint)
-        assert n_again == 1 and again == warm
-        meta, n_meta = jobs(Q + "/metadata")
+        again, n_again = self._jobs(spark, client, Q + "/query", hint)
+        assert n_again == 0 and again == warm
+        meta, n_meta = self._jobs(spark, client, Q + "/metadata")
         assert n_meta == 0
         assert [next(iter(ln)) for ln in meta] == ["protocol", "metaData"]
         assert meta[1] == warm[1]
+
+    def test_query_after_append_runs_no_job(self, spark, served,
+                                            monkeypatch):
+        srv, client, path = served
+        log = self._table(spark, path, monkeypatch)
+        hint = {"jsonPredicateHints": _hint("greaterThanOrEqual", "id",
+                                            "long", 500)}
+        before = client.lines(Q + "/query", hint)
+        log.append(_rows(spark, 900, 950))
+        after, n_after = self._jobs(spark, client, Q + "/query", hint)
+        assert n_after == 0
+        files = {ln["file"]["id"] for ln in after if "file" in ln}
+        new = {a.path for a in log.read_commit(log.latest_version()).adds}
+        assert new <= files
+        assert files - new == {ln["file"]["id"] for ln in before
+                               if "file" in ln}
+
+    def test_alternating_versions_keep_one_resident_manifest(
+            self, spark, served, monkeypatch):
+        # the newest version's manifest stays resident (no job); an older
+        # version takes its cached scan plan (one job) instead of
+        # rebuilding a resident manifest on every alternation
+        srv, client, path = served
+        log = self._table(spark, path, monkeypatch)
+        new = log.latest_version()
+        hint = _hint("greaterThanOrEqual", "id", "long", 100)
+        first = {v: client.lines(Q + "/query", {
+            "jsonPredicateHints": hint, "version": v})
+            for v in (new, new - 1)}
+        for _ in range(2):
+            for v, jobs in ((new, 0), (new - 1, 1)):
+                out, n = self._jobs(spark, client, Q + "/query", {
+                    "jsonPredicateHints": hint, "version": v})
+                assert (n, out) == (jobs, first[v]), v
+        cache = srv.catalog.load_table("s.d.t").log._files_df_cache
+        assert {v for v, e in cache.items() if e[3]} == {new}
+        assert cache[new - 1][1] is not None   # the scan plan's checkpoint
+
+    def test_above_local_relation_bound_keeps_scan_plan(
+            self, spark, served, monkeypatch):
+        from delta_sharing_spark.plans.log import manifest_session
+
+        srv, client, path = served
+        self._table(spark, path, monkeypatch)
+        hint = {"jsonPredicateHints": _hint("lessThan", "id", "long", 120)}
+        resident = client.lines(Q + "/query", hint)
+        handle = srv.catalog.load_table("s.d.t")
+        meta = manifest_session(spark)
+        key = "spark.sql.execution.arrow.localRelationThreshold"
+        meta.conf.set(key, "0")
+        try:
+            handle.log._files_df_cache.clear()
+            client.lines(Q + "/query", hint)
+            scan, n_scan = self._jobs(spark, client, Q + "/query", hint)
+            plan = handle.log.files_df(handle.log.snapshot())
+            # the checkpoint is scanned, the tail rides as a union
+            assert "parquet" in \
+                plan._jdf.queryExecution().logical().toString()
+        finally:
+            meta.conf.unset(key)
+        assert n_scan == 1
+        assert scan == resident

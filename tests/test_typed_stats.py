@@ -38,6 +38,7 @@ from delta_sharing_spark.plans.predicates import (
     parsed_stat_fields,
 )
 from delta_sharing_spark.table import SharedTable
+from tests.conftest import ManifestStorage, manifest_storage_set
 
 
 def _mk_table(spark, path, interval="1"):
@@ -149,57 +150,73 @@ class TestTypedStatsCheckpoint:
     def test_tail_union_prunes_tail_files(self, spark, tmp_path):
         # checkpoint at v0, two appends after: tail rows must carry the
         # typed structs (union type-checks) and BE pruned by them
-        log = _mk_table(spark, str(tmp_path / "t"), interval="100")
-        log.write_checkpoint()
-        hi = spark.range(100_000, 101_000).select(
-            F.col("id"), F.lit(1.0).alias("v"), F.lit("zz").alias("s"),
-            F.to_date(F.lit("2025-06-01")).alias("dt"),
-            F.lit("9").alias("cat"))
-        log.append(hi)
-        snap = log.snapshot()
-        m = log.files_df(snap)
-        assert parsed_stat_fields(m)  # union kept the typed columns
-        # only the tail file(s) survive an id > 99_999 prune
-        kept = {r["path"] for r in m.filter(
-            file_keep_condition(_hint("id", "long", "greaterThan", 99_999),
-                                snap.partition_columns,
-                                parsed_stat_fields(m)))
-            .select("path").collect()}
-        tail_paths = {a.path for a in snap.files if a.version == snap.version}
-        assert kept == tail_paths
-        # and the inverse prune drops exactly the tail
-        kept2 = {r["path"] for r in m.filter(
-            file_keep_condition(_hint("id", "long", "lessThan", 50_000),
-                                snap.partition_columns,
-                                parsed_stat_fields(m)))
-            .select("path").collect()}
-        assert kept2 and not (kept2 & tail_paths)
+        # both manifest storages: driver-resident (tail merged in Arrow)
+        # and scan (tail unioned onto the checkpoint scan)
+        for name in ManifestStorage.NAMES:
+            with manifest_storage_set(spark, name) as storage:
+                log = _mk_table(spark, str(tmp_path / storage.name),
+                                interval="100")
+                log.write_checkpoint()
+                hi = spark.range(100_000, 101_000).select(
+                    F.col("id"), F.lit(1.0).alias("v"), F.lit("zz").alias("s"),
+                    F.to_date(F.lit("2025-06-01")).alias("dt"),
+                    F.lit("9").alias("cat"))
+                log.append(hi)
+                snap = log.snapshot()
+                m = log.files_df(snap)
+                storage.check(m)
+                assert parsed_stat_fields(m)  # union kept the typed columns
+                # only the tail file(s) survive an id > 99_999 prune
+                kept = {r["path"] for r in m.filter(
+                    file_keep_condition(_hint("id", "long", "greaterThan",
+                                              99_999),
+                                        snap.partition_columns,
+                                        parsed_stat_fields(m)))
+                    .select("path").collect()}
+                tail_paths = {a.path for a in snap.files
+                              if a.version == snap.version}
+                assert kept == tail_paths
+                # and the inverse prune drops exactly the tail
+                kept2 = {r["path"] for r in m.filter(
+                    file_keep_condition(_hint("id", "long", "lessThan",
+                                              50_000),
+                                        snap.partition_columns,
+                                        parsed_stat_fields(m)))
+                    .select("path").collect()}
+                assert kept2 and not (kept2 & tail_paths)
 
     def test_added_column_falls_back_to_json(self, spark, tmp_path):
         # column added AFTER the checkpoint: not in the parsed struct, so
         # the keep condition must fall back to JSON for it — and the tail
         # files (which have stats for it) must still prune correctly
-        log = _mk_table(spark, str(tmp_path / "t"), interval="100")
-        log.write_checkpoint()
-        log.add_column("extra", T.LongType())
-        ext = spark.range(0, 500).select(
-            F.col("id"), F.lit(1.0).alias("v"), F.lit("zz").alias("s"),
-            F.to_date(F.lit("2025-06-01")).alias("dt"),
-            F.lit("9").alias("cat"), (F.col("id") + 10).alias("extra"))
-        log.append(ext)
-        snap = log.snapshot()
-        m = log.files_df(snap)
-        pf = parsed_stat_fields(m)
-        assert "extra" not in pf and "id" in pf
-        kept = {r["path"] for r in m.filter(
-            file_keep_condition(_hint("extra", "long", "greaterThan", 10**6),
-                                snap.partition_columns, pf))
-            .select("path").collect()}
-        # checkpoint files lack 'extra' stats entirely -> Unknown -> kept;
-        # the tail file has stats proving no match -> pruned
-        tail_paths = {a.path for a in snap.files if a.version == snap.version}
-        assert not (kept & tail_paths)
-        assert kept == {a.path for a in snap.files} - tail_paths
+        for name in ManifestStorage.NAMES:
+            with manifest_storage_set(spark, name) as storage:
+                log = _mk_table(spark, str(tmp_path / storage.name),
+                                interval="100")
+                log.write_checkpoint()
+                log.add_column("extra", T.LongType())
+                ext = spark.range(0, 500).select(
+                    F.col("id"), F.lit(1.0).alias("v"), F.lit("zz").alias("s"),
+                    F.to_date(F.lit("2025-06-01")).alias("dt"),
+                    F.lit("9").alias("cat"), (F.col("id") + 10).alias("extra"))
+                log.append(ext)
+                snap = log.snapshot()
+                m = log.files_df(snap)
+                storage.check(m)
+                pf = parsed_stat_fields(m)
+                assert "extra" not in pf and "id" in pf
+                kept = {r["path"] for r in m.filter(
+                    file_keep_condition(_hint("extra", "long",
+                                              "greaterThan", 10**6),
+                                        snap.partition_columns, pf))
+                    .select("path").collect()}
+                # checkpoint files lack 'extra' stats entirely -> Unknown
+                # -> kept; the tail file has stats proving no match ->
+                # pruned
+                tail_paths = {a.path for a in snap.files
+                              if a.version == snap.version}
+                assert not (kept & tail_paths)
+                assert kept == {a.path for a in snap.files} - tail_paths
 
     def test_widened_type_union_stays_consistent(self, spark, tmp_path):
         # widen int->long between checkpoint and tail: the stored kind is
@@ -207,29 +224,32 @@ class TestTypedStatsCheckpoint:
         # family never changes the manifest struct type), the tail struct
         # mirrors the CHECKPOINT's stored types via _parsed_spec_of, and
         # the widened tail file still prunes on the typed path
-        log = TableLog(spark, str(tmp_path / "t"))
-        df = spark.range(0, 3000).select(
-            F.col("id").cast("int").alias("n"),
-            (F.col("id") % 4).cast("string").alias("cat"))
-        log.create(df, partition_by=["cat"],
-                   configuration={"delta.checkpointInterval": "100",
-                                  "delta.enableTypeWidening": "true"})
-        log.write_checkpoint()
-        log.widen_column_type("n", T.LongType())
-        tail = spark.range(0, 10).select(
-            (F.col("id") + 10_000).alias("n"), F.lit("9").alias("cat"))
-        log.append(tail)
-        snap = log.snapshot()
-        m = log.files_df(snap)
-        assert m.count() == len(snap.files)  # union planned + ran
-        kept = {r["path"] for r in m.filter(
-            file_keep_condition(_hint("n", "long", "greaterThanOrEqual",
-                                      10_000),
-                                snap.partition_columns,
-                                parsed_stat_fields(m)))
-            .select("path").collect()}
-        assert kept == {a.path for a in snap.files
-                        if a.version == snap.version}
+        for name in ManifestStorage.NAMES:
+            with manifest_storage_set(spark, name) as storage:
+                log = TableLog(spark, str(tmp_path / storage.name))
+                df = spark.range(0, 3000).select(
+                    F.col("id").cast("int").alias("n"),
+                    (F.col("id") % 4).cast("string").alias("cat"))
+                log.create(df, partition_by=["cat"],
+                           configuration={"delta.checkpointInterval": "100",
+                                          "delta.enableTypeWidening": "true"})
+                log.write_checkpoint()
+                log.widen_column_type("n", T.LongType())
+                tail = spark.range(0, 10).select(
+                    (F.col("id") + 10_000).alias("n"), F.lit("9").alias("cat"))
+                log.append(tail)
+                snap = log.snapshot()
+                m = log.files_df(snap)
+                storage.check(m)
+                assert m.count() == len(snap.files)  # union planned + ran
+                kept = {r["path"] for r in m.filter(
+                    file_keep_condition(_hint("n", "long",
+                                              "greaterThanOrEqual", 10_000),
+                                        snap.partition_columns,
+                                        parsed_stat_fields(m)))
+                    .select("path").collect()}
+                assert kept == {a.path for a in snap.files
+                                if a.version == snap.version}
 
     def test_v2_sidecars_carry_and_readdress(self, spark, tmp_path):
         log = TableLog(spark, str(tmp_path / "t"))
@@ -375,11 +395,21 @@ class TestPathRangePaging:
     def test_page2_plan_pushes_path_filter(self, spark, forged):
         # the page-2 shape: filter(path > last) + top-(k+1); the path
         # predicate must reach the parquet scan (PushedFilters) so a page
-        # deep in a 10M-file manifest skips row groups, not just rows
+        # deep in a 10M-file manifest skips row groups, not just rows.
+        # A manifest that size is scanned; this 12k-file one would be
+        # driver-resident, so the local-relation bound is set to 0
         from pyspark.sql import functions as F
 
-        log = TableLog(spark, forged)
-        m = log.files_df(log.snapshot())
+        from delta_sharing_spark.plans.log import manifest_session
+
+        meta = manifest_session(spark)
+        key = "spark.sql.execution.arrow.localRelationThreshold"
+        meta.conf.set(key, "0")
+        try:
+            log = TableLog(spark, forged)
+            m = log.files_df(log.snapshot())
+        finally:
+            meta.conf.unset(key)
         plan = (m.select("path", "action_json")
                 .filter(F.col("path") > "data/cat=c07/part-00005000")
                 .orderBy("path").limit(1001)
@@ -824,3 +854,162 @@ def test_typed_prune_under_column_mapping(spark, tmp_path):
                                snap.physical_partition_columns))
     assert kept == want
     assert 0 < len(kept) < len(snap.files)  # the prune actually bit
+
+
+def _storage_rows(spark, lo, hi):
+    """Every stats kind: long, double with nulls, string, date, timestamp
+    and decimal (both without min/max stats: Unknown keeps), a nested
+    struct with a nullable leaf."""
+    return spark.range(lo, hi).select(
+        F.col("id"),
+        F.when(F.col("id") % 11 == 0, None)
+        .otherwise((F.col("id") / 500).cast("int").cast("double"))
+        .alias("v"),
+        F.concat(F.lit("s"), F.lpad((F.col("id") / 400).cast("int")
+                                    .cast("string"), 2, "0")).alias("s"),
+        F.date_add(F.to_date(F.lit("2024-01-01")),
+                   (F.col("id") / 100).cast("int")).alias("dt"),
+        F.timestamp_seconds(F.lit(1_700_000_000) + F.col("id") * 600)
+        .alias("ts"),
+        (F.col("id") / 100).cast("decimal(10,2)").alias("dec"),
+        F.struct((F.col("id") / 100).cast("int").alias("qty"),
+                 F.when(F.col("id") % 3 == 0, None).otherwise(F.lit("t"))
+                 .alias("tag")).alias("m"),
+        (F.col("id") % 4).cast("string").alias("cat"),
+    )
+
+
+def _storage_hints(s_name: str) -> list[dict]:
+    """One hint per stats kind (logical names; ``s_name`` is the string
+    column's current name), plus null counts, a partition conjunction and
+    a negation."""
+    def h(col, vtype, op, value):
+        return json.loads(_hint(col, vtype, op, value))
+
+    def null(col, vtype):
+        return {"op": "isNull", "children": [
+            {"op": "column", "name": col, "valueType": vtype}]}
+
+    return [
+        h("id", "long", "greaterThan", 3000),
+        h("v", "double", "equal", 3.0),
+        null("v", "double"),
+        h(s_name, "string", "greaterThanOrEqual", "s09"),
+        h("dt", "date", "lessThan", "2024-01-12"),
+        h("ts", "timestamp", "greaterThanOrEqual", "2023-11-25T00:00:00Z"),
+        h("dec", "double", "greaterThan", 25.5),
+        h("m.qty", "int", "lessThan", 5),
+        null("m.tag", "string"),
+        null("id", "long"),
+        {"op": "and", "children": [
+            h("cat", "string", "equal", "2"),
+            h("id", "long", "lessThan", 2000)]},
+        {"op": "not", "children": [h(s_name, "string", "equal", "s03")]},
+    ]
+
+
+@pytest.fixture(scope="module")
+def storage_tables(spark, tmp_path_factory):
+    """name -> (path, current name of the string column) for four
+    checkpoint layouts of the same rows, each with a tail after the
+    checkpoint that adds files and rewrites some (a delete): classic,
+    multi-part, v2 with several sidecars, and column-mapped (string
+    column renamed before the checkpoint)."""
+    import delta_sharing_spark.plans.log as log_mod
+
+    root = tmp_path_factory.mktemp("storage")
+    out = {}
+    for name in ("classic", "multipart", "v2", "mapped"):
+        path = str(root / name)
+        conf = {"delta.checkpointInterval": "100"}
+        if name == "v2":
+            conf["delta.checkpointPolicy"] = "v2"
+        log = TableLog(spark, path)
+        log.create(_storage_rows(spark, 0, 4000).repartitionByRange(10, "id"),
+                   partition_by=["cat"], configuration=conf)
+        s_name = "s"
+        if name == "mapped":
+            log.enable_column_mapping()
+            log.rename_column("s", "label")
+            s_name = "label"
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(log_mod, "CHECKPOINT_PART_ROWS", 10)
+            mp.setattr(log_mod, "SIDECAR_TARGET_ROWS", 8)
+            log.write_checkpoint()
+        tail = _storage_rows(spark, 4000, 4400)
+        if name == "mapped":
+            tail = tail.withColumnRenamed("s", "label")
+        log.append(tail.repartition(2))
+        log.delete("id < 150")
+        out[name] = (path, s_name)
+    return out
+
+
+class TestManifestStorageParity:
+    """Driver-resident and scanned manifests (``manifest_storage``) keep
+    the same files as the sessionless driver loop, page the same walk
+    and cut ``limitHint`` at the same file, for every checkpoint layout."""
+
+    @pytest.fixture(params=["classic", "multipart", "v2", "mapped"])
+    def layout(self, request, storage_tables, spark, manifest_storage,
+               monkeypatch):
+        import delta_sharing_spark.table as table_mod
+
+        # the manifest plane serves the prune, even at this size
+        monkeypatch.setattr(table_mod, "PRUNE_DRIVER_MAX_FILES", -1)
+        path, s_name = storage_tables[request.param]
+        truth = TableLog(spark, path).snapshot()
+        assert truth.cp_version is not None and truth.tail_changed
+        table = SharedTable(spark, path)
+        snap = table.log.snapshot()
+        manifest_storage.check(table.log.files_df(snap))
+        if request.param == "multipart":
+            cp = os.path.join(table.log.log_path,
+                              _fmt_checkpoint(snap.cp_version))
+            assert os.path.isdir(cp)
+        if request.param == "v2":
+            assert len(table.log._checkpoint_sidecars(snap.cp_version)) > 1
+        return table, snap, truth, s_name
+
+    def test_kept_sets_match_driver_loop(self, layout):
+        from delta_sharing_spark.plans.predicates import keep_file
+
+        table, snap, truth, s_name = layout
+        pruning = 0
+        for hint in _storage_hints(s_name):
+            jph = table.log._physical_hints(snap, hint)
+            got = sorted(r["path"] for r in table._pruned_manifest(
+                snap, jph, None, None).select("path").collect())
+            want = sorted(
+                a.path for a in truth.files
+                if keep_file(jph, a.partitionValues, a.stats_dict(),
+                             truth.physical_partition_columns))
+            assert got == want, hint
+            assert [a.path for a in table.kept_adds(snap, hint)] == want
+            pruning += len(want) < len(truth.files)
+        assert pruning >= 7  # the hints really prune
+
+    def test_paged_walk_and_limit_cutoffs(self, layout):
+        table, snap, truth, _ = layout
+        paths = sorted(a.path for a in truth.files)
+        seen, token = [], None
+        while True:
+            out = table.query_actions(max_files=9, page_token=token,
+                                      response_formats={"delta"})
+            seen += [ln["file"]["id"] for ln in out["actions"]
+                     if "file" in ln]
+            token = out["nextPageToken"]
+            if not token:
+                break
+        assert seen == paths
+        records = {a.path: a.logical_records for a in truth.files}
+        for limit in (1, 700, 2500):
+            want, total = [], 0
+            for p in paths:
+                if total >= limit:
+                    break
+                want.append(p)
+                total += records[p]
+            got = [a.path for a in table.kept_adds(snap, None, None, limit)]
+            assert got == want, limit
+        assert not snap.files_materialized

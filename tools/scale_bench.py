@@ -26,6 +26,20 @@ cdf_plan + cdf_count
                    build must be O(commits) driver work + ONE parquet
                    scan per action kind (plan-asserted), never one scan
                    per version
+resident_<n>k     (only with ``--resident-only``, which runs the warmup
+                   and these sections alone) a hinted prune (kept_adds,
+                   1% of files kept) and one 1000-file page on a
+                   20k-file manifest, which files_df holds
+                   driver-resident, and on a 150k-file one above Spark's
+                   local-relation bound, which it scans; each repeated
+                   with the bound set to 0 (scan storage), and the kept
+                   sets and pages asserted equal
+resident_heap      (also ``--resident-only``) JVM heap after a full GC
+                   with 4 handles each holding an 80k-file manifest
+                   driver-resident (just under the default bound), and
+                   a hinted prune alternating between two versions of
+                   one of them: the newer stays resident, the older
+                   takes its cached scan plan, neither is rebuilt
 
 Output: one JSON line with all timings, plus a markdown table on stderr
 ready to paste into SCALE.md.
@@ -297,6 +311,136 @@ def count_parquet_scans(df) -> int:
     return len(re.findall(r"Scan parquet|FileScan parquet", plan))
 
 
+RESIDENT_SIZES = (20_000, 150_000)
+RESIDENT_HEAP_FILES = 80_000
+RESIDENT_HEAP_TABLES = 4
+
+
+def _job_ids(spark) -> set:
+    """Every job the driver knows, once the listener bus is drained."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return set(sc.statusTracker().getJobIdsForGroup())
+
+
+def _storage(manifest) -> str:
+    plan = manifest._jdf.queryExecution().logical()
+    return ("resident" if plan.getClass().getSimpleName() == "LocalRelation"
+            else "scan")
+
+
+def resident_sections(spark, workdir: str, out: dict) -> None:
+    """The ``resident_<n>k`` sections (see the module docstring)."""
+    from delta_sharing_spark.plans.log import TableLog, manifest_session
+    from delta_sharing_spark.table import SharedTable
+
+    meta = manifest_session(spark)
+    key = "spark.sql.execution.arrow.localRelationThreshold"
+
+    def jobs() -> set:
+        return _job_ids(spark)
+
+    def measure(root: str, n: int, tag: str) -> tuple:
+        table = SharedTable(spark, root)
+        snap = table.log.snapshot()
+        t0 = time.perf_counter()
+        manifest = table.log.files_df(snap)
+        out[f"{tag}_build_s"] = round(time.perf_counter() - t0, 3)
+        table.log.file_counts(snap)  # the once-per-snapshot count
+        out[f"{tag}_storage"] = _storage(manifest)
+        keep = n // 100
+        hints = stats_predicate(0, keep * ROWS_PER_FILE - 1)
+        before = jobs()
+        t0 = time.perf_counter()
+        kept = [a.path for a in table.kept_adds(snap, hints)]
+        out[f"{tag}_prune_s"] = round(time.perf_counter() - t0, 3)
+        out[f"{tag}_prune_jobs"] = len(jobs() - before)
+        assert len(kept) == keep, (len(kept), keep)
+        t0 = time.perf_counter()
+        page = table.query_actions(max_files=1_000)
+        out[f"{tag}_page_s"] = round(time.perf_counter() - t0, 3)
+        files = [ln["file"]["id"] for ln in page["actions"] if "file" in ln]
+        assert len(files) == 1_000, len(files)
+        assert not snap.files_materialized
+        return kept, files
+
+    for n in RESIDENT_SIZES:
+        root = os.path.join(workdir, f"resident_{n}")
+        os.makedirs(root, exist_ok=True)
+        write_synthetic_table(root, n)
+        tag = f"resident_{n // 1000}k"
+        # twice: the second, warm pass is the one reported
+        for _ in range(2):
+            got = measure(root, n, tag)
+            meta.conf.set(key, "0")
+            try:
+                want = measure(root, n, f"{tag}_scan")
+            finally:
+                meta.conf.unset(key)
+        assert out[f"{tag}_scan_storage"] == "scan"
+        assert got == want, f"{tag}: kept set or page differs by storage"
+        shutil.rmtree(root, ignore_errors=True)
+
+
+def resident_heap_sections(spark, workdir: str, out: dict) -> None:
+    """The ``resident_heap`` section (see the module docstring)."""
+    from delta_sharing_spark.table import SharedTable
+
+    jvm = spark._jvm
+
+    def heap_mb() -> int:
+        for _ in range(3):
+            jvm.java.lang.System.gc()
+            time.sleep(0.3)
+        rt = jvm.java.lang.Runtime.getRuntime()
+        return round((rt.totalMemory() - rt.freeMemory()) / 2**20)
+
+    n, k = RESIDENT_HEAP_FILES, RESIDENT_HEAP_TABLES
+    hints = stats_predicate(0, n // 100 * ROWS_PER_FILE - 1)
+    out["resident_heap_base_mb"] = heap_mb()
+    roots, tables = [], []
+    for i in range(k):
+        root = os.path.join(workdir, f"resident_heap_{i}")
+        os.makedirs(root, exist_ok=True)
+        write_synthetic_table(root, n)
+        table = SharedTable(spark, root)
+        snap = table.log.snapshot()
+        assert _storage(table.log.files_df(snap)) == "resident"
+        assert len(table.kept_adds(snap, hints)) == n // 100
+        roots.append(root)
+        tables.append(table)
+    out["resident_heap_mb"] = heap_mb()
+    out["resident_heap_per_table_mb"] = round(
+        (out["resident_heap_mb"] - out["resident_heap_base_mb"]) / k)
+    # one handle, one appended commit, then hinted prunes of the new
+    # (1) and the old (0) version in turn
+    table = tables[0]
+    lo = n * ROWS_PER_FILE
+    table.log.append(spark.range(lo, lo + 10).selectExpr(
+        "id", "cast(id as double) as v", "'c00' as cat"))
+    snaps = {v: table.log.snapshot(version=v) for v in (1, 0)}
+    for snap in snaps.values():
+        table.kept_adds(snap, hints)  # each version's manifest, once
+    wall = {v: [] for v in snaps}
+    jobs = {v: 0 for v in snaps}
+    for _ in range(8):
+        for v, snap in snaps.items():
+            before = _job_ids(spark)
+            t0 = time.perf_counter()
+            assert len(table.kept_adds(snap, hints)) == n // 100
+            wall[v].append(time.perf_counter() - t0)
+            jobs[v] = max(jobs[v], len(_job_ids(spark) - before))
+    for v, snap in snaps.items():
+        tag = f"resident_alt_v{v}"
+        out[f"{tag}_storage"] = _storage(table.log.files_df(snap))
+        out[f"{tag}_prune_s"] = round(sorted(wall[v])[len(wall[v]) // 2], 3)
+        out[f"{tag}_prune_jobs"] = jobs[v]
+    assert out["resident_alt_v1_storage"] == "resident"
+    assert out["resident_alt_v0_storage"] == "scan"
+    for root in roots:
+        shutil.rmtree(root, ignore_errors=True)
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--files", type=int, default=1_000_000)
@@ -308,12 +452,17 @@ def main() -> None:
                     help="stop after the lazy-plane + materialization "
                          "sections (skip clustering/CDF/v2-checkpoint — "
                          "the 5M-file gate run)")
+    ap.add_argument("--resident-only", action="store_true",
+                    help="run only the warmup and the resident_<n>k "
+                         "and resident_heap sections (not part of the "
+                         "default run, so its "
+                         "million-file sections run on an unchanged JVM)")
     args = ap.parse_args()
 
     from delta_sharing_spark.session import get_spark
     from delta_sharing_spark.table import (
         PRUNE_DRIVER_MAX_FILES, SharedTable)
-    from delta_sharing_spark.plans.log import TableLog
+    from delta_sharing_spark.plans.log import TableLog, manifest_session
     from delta_sharing_spark.cdf import table_changes
 
     spark = get_spark()
@@ -334,13 +483,48 @@ def main() -> None:
     from delta_sharing_spark.plans.predicates import (
         file_keep_condition, parsed_stat_fields)
 
-    warm_manifest = slog.files_df(ssnap)
+    # warm the checkpoint-scan plans the million-file sections run: a
+    # 10k-file manifest would otherwise be driver-resident (below Spark's
+    # local-relation bound), so the bound is set to 0 for the warmup
+    meta = manifest_session(spark)
+    meta.conf.set("spark.sql.execution.arrow.localRelationThreshold", "0")
+    try:
+        warm_manifest = TableLog(spark, small).files_df(ssnap)
+    finally:
+        meta.conf.unset("spark.sql.execution.arrow.localRelationThreshold")
     warm_hints = stats_predicate(0, 999)
     warm_manifest.filter(
         file_keep_condition(warm_hints, ssnap.partition_columns,
                             parsed_stat_fields(warm_manifest))
     ).select("path").collect()
     stable._limit_prefix_filter(warm_manifest, 1_000).count()
+
+    if args.resident_only:
+        resident_sections(spark, args.workdir, out)
+        resident_heap_sections(spark, args.workdir, out)
+        shutil.rmtree(args.workdir, ignore_errors=True)
+        print(json.dumps(out))
+        sys.stderr.write(
+            "\n| Path | Measured | Shape |\n|---|---|---|\n" + "".join(
+                f"| Hinted prune / 1000-file page, {n // 1000}k files |"
+                f" {out[f'resident_{n // 1000}k_prune_s']}s /"
+                f" {out[f'resident_{n // 1000}k_page_s']}s"
+                f" | {out[f'resident_{n // 1000}k_storage']} manifest,"
+                f" {out[f'resident_{n // 1000}k_prune_jobs']} prune jobs |\n"
+                for n in RESIDENT_SIZES)
+            + f"| JVM heap, {RESIDENT_HEAP_TABLES} resident"
+            f" {RESIDENT_HEAP_FILES // 1000}k-file manifests |"
+            f" +{out['resident_heap_mb'] - out['resident_heap_base_mb']} MB"
+            f" ({out['resident_heap_per_table_mb']} MB each) |"
+            " after a full GC |\n"
+            + "| Hinted prune alternating two versions, new / old |"
+            f" {out['resident_alt_v1_prune_s']}s /"
+            f" {out['resident_alt_v0_prune_s']}s |"
+            f" {out['resident_alt_v1_storage']}"
+            f" ({out['resident_alt_v1_prune_jobs']} jobs) /"
+            f" {out['resident_alt_v0_storage']}"
+            f" ({out['resident_alt_v0_prune_jobs']} jobs) |\n")
+        return
 
     big = os.path.join(args.workdir, "big")
     os.makedirs(big, exist_ok=True)
