@@ -45,10 +45,9 @@ _DRIVER_PRIORITY = [
     # round-11 addition, re-fronted once for a second green row
     "eng_prune_typed_nested",
     # round-12 engine-plane reworks: re-front the queries whose serving
-    # paths changed (adds_for_paths stays on the manifest plane for
-    # unselective prunes, the unpaged REST route fetches kept actions
-    # the same way, non-destructive checkpoint installs, schema-change-
-    # surviving Spark-job checkpoint writers)
+    # paths changed (the unpaged REST route fetches its kept actions
+    # from the pruned manifest, non-destructive checkpoint installs,
+    # schema-change-surviving Spark-job checkpoint writers)
     "eng_snapshot_latest_append",
     "eng_snapshot_prune_filter",
     "eng_limit_exact",

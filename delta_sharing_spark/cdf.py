@@ -36,6 +36,7 @@ from delta_sharing_spark.plans.log import (
     Snapshot,
     TableLog,
     is_noop_merge,
+    wire_protocol,
 )
 from delta_sharing_spark.streaming.schema import (
     _datatype_read_compatible,
@@ -331,6 +332,7 @@ def table_changes_actions(
         ActionPager,
         decode_page_token,
         page_checksum,
+        wire_file,
     )
 
     log = path if isinstance(path, TableLog) else TableLog(spark, path)
@@ -375,11 +377,7 @@ def table_changes_actions(
     # head protocol mirrors the end snapshot's reader requirement (the
     # range form's derivation): a column-mapped table advertises
     # minReaderVersion 2 so clients know what a read needs
-    head_proto: dict = (
-        {"minReaderVersion": 2, "minWriterVersion": 5}
-        if (snap.metadata.configuration or {}).get(
-            "delta.columnMapping.mode") == "name"
-        else {"minReaderVersion": 1})
+    head_proto = wire_protocol(snap.column_mapping)
     if include_historical_protocol:
         # stamp the head protocol's version only under the opt-in,
         # preserving the legacy wire shape otherwise (ref
@@ -442,48 +440,17 @@ def table_changes_actions(
                     "delta.columnMapping.mode") == "name"
         if commit.cdc:
             for c in commit.cdc:
-                emit_file({"cdf": {
-                    "url": log.abs_path(c.path), "id": c.path,
-                    "partitionValues": c.partitionValues, "size": c.size,
-                    "timestamp": commit.timestamp,
-                    "version": commit.version}})
+                emit_file({"cdf": wire_file(
+                    log, c, commit.version, commit.timestamp)})
         else:
             for a in commit.adds:
-                if not a.dataChange:
-                    continue
-                line = {"add": {
-                    "url": log.abs_path(a.path), "id": a.path,
-                    "partitionValues": a.partitionValues, "size": a.size,
-                    "stats": a.stats, "timestamp": commit.timestamp,
-                    "version": commit.version}}
-                if a.baseRowId is not None:
-                    # row-tracking AddFile fields ride the changes form too
-                    # (verbatim delta actions, matching the snapshot and
-                    # version-range responses) so a CDF consumer can
-                    # reconstruct stable row ids for inserted rows
-                    line["add"]["baseRowId"] = a.baseRowId
-                    line["add"]["defaultRowCommitVersion"] = (
-                        a.defaultRowCommitVersion
-                        if a.defaultRowCommitVersion is not None
-                        else commit.version)
-                if a.deletionVector:
-                    # the add's logical content excludes DV-masked rows;
-                    # without the descriptor a consumer re-serves deleted
-                    # rows as inserts (same stamping as the range form)
-                    dv = dict(a.deletionVector)
-                    if dv.get("storageType") == "u":
-                        dv["pathOrInlineDv"] = log.abs_path(
-                            dv["pathOrInlineDv"])
-                    line["add"]["deletionVector"] = dv
-                emit_file(line)
+                if a.dataChange:
+                    emit_file({"add": wire_file(
+                        log, a, commit.version, commit.timestamp)})
             for r in commit.removes:
-                if not r.dataChange:
-                    continue
-                emit_file({"remove": {
-                    "url": log.abs_path(r.path), "id": r.path,
-                    "partitionValues": r.partitionValues, "size": r.size,
-                    "timestamp": commit.timestamp,
-                    "version": commit.version}})
+                if r.dataChange:
+                    emit_file({"remove": wire_file(
+                        log, r, commit.version, commit.timestamp)})
     lines += pager.lines
     # wire parity: Delta-Table-Version on the changes RPC is the STARTING
     # version of the files in the response (PROTOCOL.md:2432-2436;

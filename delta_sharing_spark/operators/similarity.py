@@ -165,6 +165,22 @@ def _check_vector_lengths(op: str, flat, rows: int, dim: int) -> None:
             f"of {rows} rows holds {flat.size} values")
 
 
+def _fixed_point(op: str, X):
+    """``FLOOR(X * 1e12)`` as int64 — the exact integer update terms of
+    the fused Lloyd rounds. Raises unless every term fits int64 (|x| below
+    about 9.2e6, finite): numpy's cast would wrap silently where the SQL
+    DECIMAL(38,0) sum it mirrors does not."""
+    import numpy as np
+
+    scaled = np.floor(X * 1e12)
+    if not (np.abs(scaled) < 2.0 ** 63).all():
+        raise ValueError(
+            f"{op}: embedding values must be finite and below "
+            f"{2.0 ** 63 / 1e12:.4g} in magnitude for the exact fixed-point "
+            "update (FLOOR(x * 1e12) as int64)")
+    return scaled.astype(np.int64)
+
+
 def _lloyd_partials_fn(cells: list, cents: list, dim: int):
     """mapInArrow factory: one corpus pass computing, per task, the exact
     integer update partials of a Lloyd iteration against the broadcast
@@ -204,7 +220,7 @@ def _lloyd_partials_fn(cells: list, cents: list, dim: int):
                 d = X[:, j:j + 1] - C[None, :, j]
                 acc += d * d
             amin = acc.argmin(axis=1)
-            X_int = np.floor(X * 1e12).astype(np.int64)
+            X_int = _fixed_point("kmeans_fit", X)
             for ci in range(C.shape[0]):
                 mask = amin == ci
                 cnt = int(mask.sum())
@@ -618,7 +634,7 @@ def _pq_partials_fn(books: dict, m: int, sub_len: int):
                     d = Xs[:, j:j + 1] - C[None, :, j]
                     acc += d * d
                 amin = acc.argmin(axis=1)
-                Xs_int = np.floor(Xs * 1e12).astype(np.int64)
+                Xs_int = _fixed_point("pq_fit", Xs)
                 cells_s = books[s][0]
                 for ci in range(C.shape[0]):
                     mask = amin == ci

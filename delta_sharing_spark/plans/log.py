@@ -134,13 +134,6 @@ CHECKPOINT_PART_ROWS = 100_000
 # parquet row-group bound for checkpoint/sidecar writers: a scan's real
 # parallelism is one task per row group (see write_checkpoint_files)
 CHECKPOINT_ROW_GROUP_ROWS = 32_768
-# adds_for_paths materializes .files (memoized, O(small) memory) at or
-# below this manifest size instead of collecting the manifest plane —
-# same cutoff as table.PRUNE_DRIVER_MAX_FILES: a 10k-AddFile list costs
-# ~10 MB once. Above it the manifest plane answers: files_df's
-# driver-resident LocalRelation up to Spark's local-relation bound, a
-# checkpoint scan (~0.4 s of Spark job per request) beyond it
-ADDS_SMALL_MANIFEST_MAX = 10_000
 
 CHECKPOINT_POLICY_KEY = "delta.checkpointPolicy"
 SIDECAR_DIR = "_sidecars"
@@ -200,15 +193,6 @@ class MetadataChangedError(Exception):
     MetadataChangedException taxonomy)."""
 
 
-def _file_stats_dict(add) -> dict:
-    """Parse an AddFile's stats JSON for the sessionless predicate
-    evaluator; unparsable/missing stats -> {} (evaluates Unknown -> kept)."""
-    try:
-        return json.loads(add.stats) if add.stats else {}
-    except (TypeError, ValueError):
-        return {}
-
-
 def _file_may_match(add, predicate: dict | str | None,
                     partition_columns: list[str]) -> bool:
     """Could ``add`` contain a row matching ``predicate``? True unless the
@@ -219,7 +203,7 @@ def _file_may_match(add, predicate: dict | str | None,
 
     if predicate is None:
         return True
-    return keep_file(predicate, add.partitionValues, _file_stats_dict(add),
+    return keep_file(predicate, add.partitionValues, add.stats_dict(),
                      partition_columns)
 
 
@@ -284,9 +268,20 @@ def derive_wire_protocol(commit, prev_cm: bool) -> "dict | None":
         cm_now = (commit.metadata.configuration or {}).get(
             "delta.columnMapping.mode") == "name"
         if cm_now != prev_cm:
-            return ({"minReaderVersion": 2, "minWriterVersion": 5}
-                    if cm_now else {"minReaderVersion": 1})
+            return wire_protocol(cm_now)
     return None
+
+
+def wire_protocol(column_mapping: bool) -> dict:
+    """The protocol action a wire response carries for a table with or
+    without column mapping: column mapping needs reader protocol 2 (Delta
+    protocol table); plain tables stay at the reference's "fake"
+    minReaderVersion 1 (DeltaSharedTableKernel.scala:193). ONE mapping
+    for the snapshot head, the range and changes heads and the derived
+    historical lines. Returns a fresh dict: callers stamp a version on
+    it."""
+    return ({"minReaderVersion": 2, "minWriterVersion": 5}
+            if column_mapping else {"minReaderVersion": 1})
 
 
 def _fmt_version(v: int) -> str:
@@ -2376,7 +2371,9 @@ class TableLog:
         """(numFiles, totalSizeBytes) for the snapshot WITHOUT
         materializing ``.files``: already-materialized snapshots count in
         memory, else the ``.crc`` checksum sidecar answers O(1) (its
-        whole point), else ONE distributed agg over the manifest plane.
+        whole point), else the manifest plane: a driver-resident manifest
+        collects its ``size`` column with no Spark job, a scanned one
+        runs ONE distributed agg.
         Memoized per snapshot — the metaData wire line needs these on
         every query RPC."""
         if snapshot._counts is not None:
@@ -2390,57 +2387,28 @@ class TableLog:
                     and "tableSizeBytes" in crc:
                 counts = (int(crc["numFiles"]), int(crc["tableSizeBytes"]))
             else:
-                row = self.files_df(snapshot).agg(
-                    F.count("*").alias("n"),
-                    F.sum("size").alias("s")).collect()[0]
-                counts = (int(row["n"]), int(row["s"] or 0))
+                manifest = self.files_df(snapshot)
+                if self._driver_resident(manifest):
+                    # folded into the LocalRelation: no Spark job (an
+                    # aggregate over it would run two)
+                    sizes = [r[0] for r in manifest.select("size").collect()]
+                    counts = (len(sizes), sum(s or 0 for s in sizes))
+                else:
+                    row = manifest.agg(
+                        F.count("*").alias("n"),
+                        F.sum("size").alias("s")).collect()[0]
+                    counts = (int(row["n"]), int(row["s"] or 0))
         snapshot._counts = counts
         return counts
 
-    def adds_for_paths(self, snapshot: Snapshot,
-                       paths: list[str]) -> list[AddFile]:
-        """The AddFile actions for ``paths`` (path-sorted) WITHOUT
-        materializing ``.files`` on a LARGE lazy snapshot (r12 — serving
-        must not pin an O(files) AddFile dict for the session). For
-        callers holding a path list; the read and serving paths prune and
-        fetch in one job instead (``SharedTable.kept_adds``). A
-        selective path list fetches only the kept rows' ``action_json``
-        via a broadcast semi-join against the manifest plane — O(kept),
-        not O(files), on a 5M-file table; an unselective one (the response
-        is O(files) anyway) streams the whole manifest once and filters
-        driver-side — no broadcast of millions of path strings, cost
-        proportional to the response.
-
-        Small manifests (<= ADDS_SMALL_MANIFEST_MAX, same cutoff as the
-        prune hybrid's PRUNE_DRIVER_MAX_FILES) materialize instead:
-        their AddFile list is O(small) memory, memoized on the Snapshot,
-        while re-collecting the manifest plane costs a full Spark job
-        (~0.4 s) per request — the lazy dance only pays above the
-        threshold. Already-materialized snapshots filter in memory
-        (free)."""
-        kept = set(paths)
-        hint = snapshot.num_files_hint or 0
-        if (snapshot.files_materialized
-                or hint <= ADDS_SMALL_MANIFEST_MAX):
-            return [a for a in snapshot.files if a.path in kept]
-        if not paths:
-            return []
-        manifest = self.files_df(snapshot)
-        if len(kept) * 2 >= hint:
-            rows = manifest.select("path", "action_json").collect()
-            adds = [parse_action(r["action_json"]) for r in rows
-                    if r["path"] in kept]
-        else:
-            keep_df = self.meta_spark.createDataFrame(
-                [(p,) for p in paths], "path string")
-            rows = (
-                manifest
-                .join(F.broadcast(keep_df), "path", "left_semi")
-                .select("action_json")
-                .collect()
-            )
-            adds = [parse_action(r["action_json"]) for r in rows]
-        return sorted(adds, key=lambda a: a.path)
+    @staticmethod
+    def _driver_resident(manifest: DataFrame) -> bool:
+        """Whether Catalyst folds ``manifest`` (a driver-resident
+        ``files_df`` and the filters on it) into one ``LocalRelation``:
+        then collecting from it runs no Spark job, while every job over
+        it ships the relation's rows inside its tasks."""
+        plan = manifest._jdf.queryExecution().optimizedPlan()
+        return plan.getClass().getSimpleName() == "LocalRelation"
 
     def abs_path(self, rel: str) -> str:
         return os.path.join(self.path, rel)

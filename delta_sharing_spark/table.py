@@ -31,12 +31,18 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from delta_sharing_spark.plans.actions import AddFile, parse_action
+from delta_sharing_spark.plans.actions import (
+    AddCDCFile,
+    AddFile,
+    RemoveFile,
+    parse_action,
+)
 from delta_sharing_spark.plans.log import (
     Snapshot,
     TableLog,
     VersionNotFoundError,
     derive_wire_protocol,
+    wire_protocol,
 )
 from delta_sharing_spark.plans.predicates import (
     file_keep_condition,
@@ -45,22 +51,78 @@ from delta_sharing_spark.plans.predicates import (
     sql_hint_keep_condition,
 )
 
-# Below this file count the manifest prune runs as a driver loop over the
-# (already in-memory) snapshot file list; above it, as a DataFrame filter
-# over ``TableLog.files_df``. That DataFrame is driver-resident up to
-# Spark's local-relation bound (about 80k files at the default 48 MB):
-# Catalyst evaluates the filter while optimizing, with no Spark job and no
-# AddFile objects. Above the bound it scans the checkpoint, and the prune
-# is a Spark job (~0.3-0.4 s of fixed overhead) that scales out where a
-# driver loop would not. The reference pages file listings at 10k for the
-# same crossover reason (ServerConfig.scala:93). Both evaluators implement
-# identical three-valued semantics, enforced by the hypothesis property
-# suite (tests/test_property_pruning.py) under both manifest storages.
+# Where a prune runs is decided in ONE place, ``SharedTable.
+# _prunes_on_driver``: a snapshot whose file list is in memory, or cheap to
+# load (at most this many files), and no SQL hints prunes as a driver loop
+# over ``snapshot.files`` and keeps the AddFile objects themselves. Every
+# other prune is a DataFrame filter over ``TableLog.files_df`` that
+# collects the kept ``path, action_json``. That DataFrame is driver-
+# resident up to Spark's local-relation bound (about 80k files at the
+# default 48 MB): Catalyst evaluates the filter while optimizing, with no
+# Spark job and no AddFile objects. Above the bound it scans the
+# checkpoint, and the prune is a Spark job (~0.3-0.4 s of fixed overhead)
+# that scales out where a driver loop would not. SQL hints need Catalyst
+# (F.expr), so they always take the DataFrame side. The reference pages
+# file listings at 10k for the same crossover reason (ServerConfig.scala:
+# 93). Both evaluators implement identical three-valued semantics,
+# enforced by the hypothesis property suite (tests/test_property_pruning.py)
+# under both manifest storages.
 PRUNE_DRIVER_MAX_FILES = 10_000
 
 # Page tokens expire after 3 days (ref queryTablePageTokenTtlMs,
 # ServerConfig.scala:94)
 PAGE_TOKEN_TTL_MS = 3 * 24 * 3_600_000
+
+
+def _limit_cutoff(records, limit_hint: int) -> int:
+    """How many files, in path order, a ``limit_hint`` keeps: each file
+    while the rows of the files before it stay below the limit (kernel
+    early-termination semantics: DeltaSharedTableKernel.scala:446-449,
+    723-733). ``records`` is the files' row counts (None counts 0); it is
+    read only up to the cutoff."""
+    kept = total = 0
+    for n in records:
+        if total >= limit_hint:
+            break
+        kept, total = kept + 1, total + (n or 0)
+    return kept
+
+
+def wire_file(log: TableLog, f: "AddFile | RemoveFile | AddCDCFile",
+              version: int, timestamp: int,
+              row_tracking: bool = True) -> "dict[str, Any]":
+    """The wire fields of one add, remove or cdf action — ONE encoder for
+    the snapshot, version-range and changes forms: the absolute url, the
+    relative path as id, and the commit ``version``/``timestamp``. An add
+    also carries its stats, its row-tracking fields and its deletion
+    vector."""
+    out: dict[str, Any] = {
+        "url": log.abs_path(f.path), "id": f.path,
+        "partitionValues": f.partitionValues, "size": f.size,
+        "timestamp": timestamp, "version": version}
+    if not isinstance(f, AddFile):
+        return out
+    out["stats"] = f.stats
+    if row_tracking and f.baseRowId is not None:
+        # row-tracking fields ride the wire so a remote client can
+        # reconstruct stable _row_id/_row_commit_version (Delta AddFile
+        # carries them; the delta response format passes them through
+        # verbatim, and this engine's parquet profile includes them as
+        # optional extras)
+        out["baseRowId"] = f.baseRowId
+        out["defaultRowCommitVersion"] = (
+            f.defaultRowCommitVersion
+            if f.defaultRowCommitVersion is not None else version)
+    if f.deletionVector:
+        # the add's logical content excludes DV-masked rows: without the
+        # descriptor a consumer re-serves deleted rows. Path-based DVs go
+        # on the wire absolute (like file urls); inline DVs carry the
+        # encoded vector itself
+        dv = dict(f.deletionVector)
+        if dv.get("storageType") == "u":
+            dv["pathOrInlineDv"] = log.abs_path(dv["pathOrInlineDv"])
+        out["deletionVector"] = dv
+    return out
 
 
 def page_checksum(params: "dict[str, Any]") -> str:
@@ -427,54 +489,23 @@ class SharedTable:
         predicate_hints: list[str] | None = None,
         limit_hint: int | None = None,
     ) -> list[str]:
-        """Run the metadata-plane prune; returns kept file paths (relative).
-        The read and serving paths use ``kept_adds`` instead, which returns
-        the kept actions themselves; this path list serves callers that
-        need only the paths (tests, the scale bench, workload probes).
+        """The kept files' paths. No package code calls this: read the
+        paths off ``kept_adds``. It stays because the benchmark's tracer
+        (perfbench/trace.py) wraps it by name."""
+        return [a.path for a in self.kept_adds(
+            snapshot, json_predicate_hints, predicate_hints, limit_hint)]
 
-        Order mirrors the reference: json predicates (stats + partitions,
-        Unknown keeps) -> SQL hints (partitions only, best-effort) -> limit
-        cutoff on cumulative numRecords.
-
-        Threshold hybrid: small manifests (<= PRUNE_DRIVER_MAX_FILES, no
-        SQL hints) prune in a driver loop with the sessionless evaluator —
-        zero Spark jobs on the read path; large manifests prune as a
-        DataFrame filter over ``files_df``, which Catalyst evaluates on the
-        driver while the manifest is driver-resident and which runs as a
-        Spark job that scales out above Spark's local-relation bound. SQL
-        hints need Catalyst (F.expr), so they always take the DataFrame
-        path.
-        """
-        # column mapping: file partitionValues/stats are keyed by PHYSICAL
-        # names — translate the hints (and evaluate against the physical
-        # partition columns) or pruning silently degrades to keep-all
-        json_predicate_hints = self.log._physical_hints(
-            snapshot, json_predicate_hints)
-        pcols_list = snapshot.physical_partition_columns
-        # the threshold decision uses the lazy hint (checkpoint row count
-        # + tail), never materializing a big manifest just to count it;
-        # small lazy snapshots materialize inside the loop, cheaply
-        if ((snapshot.num_files_hint or 0) <= PRUNE_DRIVER_MAX_FILES
-                and not predicate_hints):
-            files = snapshot.files  # path-sorted by Snapshot construction
-            if json_predicate_hints:
-                files = [
-                    f for f in files
-                    if keep_file(json_predicate_hints, f.partitionValues,
-                                 f.stats_dict(), pcols_list)
-                ]
-            if limit_hint is not None:
-                out, prev_rows = [], 0
-                for f in files:
-                    if prev_rows >= limit_hint:
-                        break
-                    out.append(f)
-                    prev_rows += f.logical_records or 0
-                files = out
-            return [f.path for f in files]
-        manifest = self._pruned_manifest(
-            snapshot, json_predicate_hints, predicate_hints, limit_hint)
-        return [r["path"] for r in manifest.select("path").collect()]
+    @staticmethod
+    def _prunes_on_driver(snapshot: Snapshot,
+                          predicate_hints: list[str] | None) -> bool:
+        """Whether a prune runs as a driver loop over ``snapshot.files``
+        (see PRUNE_DRIVER_MAX_FILES): no SQL hints, and the file list is
+        already in memory or small. The size check reads the lazy hint
+        (checkpoint row count + tail), so a big manifest is never
+        materialized just to count it."""
+        return not predicate_hints and (
+            snapshot.files_materialized
+            or (snapshot.num_files_hint or 0) <= PRUNE_DRIVER_MAX_FILES)
 
     def kept_adds(
         self,
@@ -484,22 +515,40 @@ class SharedTable:
         limit_hint: int | None = None,
     ) -> list[AddFile]:
         """The prune and the fetch of the kept ``AddFile``s (path-sorted)
-        in one step. A large lazy manifest (``num_files_hint`` above
-        PRUNE_DRIVER_MAX_FILES) collects ``path, action_json`` from the
-        pruned manifest — no Spark job while ``files_df`` is
-        driver-resident, ONE above Spark's local-relation bound (plus the
-        limit cutoff's own jobs there), never a path list that a second
-        job joins back; small or materialized manifests run
-        ``pruned_files`` and filter the in-memory file list."""
-        if (snapshot.files_materialized
-                or (snapshot.num_files_hint or 0) <= PRUNE_DRIVER_MAX_FILES):
-            return self.log.adds_for_paths(
-                snapshot, self.pruned_files(
-                    snapshot, json_predicate_hints, predicate_hints,
-                    limit_hint))
-        manifest = self._pruned_manifest(
-            snapshot, self.log._physical_hints(snapshot, json_predicate_hints),
-            predicate_hints, limit_hint)
+        in one step — the serving plane's only prune. Order mirrors the
+        reference: json predicates (stats + partitions, Unknown keeps) ->
+        SQL hints (partitions only, best-effort) -> limit cutoff on
+        cumulative numRecords.
+
+        ``_prunes_on_driver`` picks the side. The driver loop filters the
+        in-memory file list with the sessionless evaluator and runs no
+        Spark job. Otherwise the kept ``path, action_json`` rows are
+        collected from the pruned manifest: no Spark job while
+        ``files_df`` is driver-resident, ONE above Spark's local-relation
+        bound (plus the limit cutoff's own jobs there)."""
+        # column mapping: file partitionValues/stats are keyed by PHYSICAL
+        # names — translate the hints (and evaluate against the physical
+        # partition columns) or pruning silently degrades to keep-all
+        json_predicate_hints = self.log._physical_hints(
+            snapshot, json_predicate_hints)
+        if not self._prunes_on_driver(snapshot, predicate_hints):
+            return self._manifest_adds(self._pruned_manifest(
+                snapshot, json_predicate_hints, predicate_hints,
+                limit_hint))
+        pcols = snapshot.physical_partition_columns
+        files = [  # path-sorted by Snapshot construction
+            f for f in snapshot.files
+            if not json_predicate_hints
+            or keep_file(json_predicate_hints, f.partitionValues,
+                         f.stats_dict(), pcols)]
+        if limit_hint is not None:
+            files = files[:_limit_cutoff(
+                (f.logical_records for f in files), limit_hint)]
+        return files
+
+    @staticmethod
+    def _manifest_adds(manifest: DataFrame) -> list[AddFile]:
+        """The actions of a (pruned) manifest, path-sorted."""
         rows = manifest.select("path", "action_json").collect()
         return [parse_action(r["action_json"])
                 for r in sorted(rows, key=lambda r: r["path"])]
@@ -512,8 +561,8 @@ class SharedTable:
         limit_hint: int | None,
     ) -> DataFrame:
         """The manifest DataFrame with every prune applied (json
-        predicates -> SQL hints -> limit cutoff) — the distributed half
-        of ``pruned_files``, also consumed directly by the paged wire
+        predicates -> SQL hints -> limit cutoff) — the DataFrame side of
+        ``kept_adds``, also consumed directly by the paged wire
         path so a page RPC over a huge lazy manifest never collects the
         full kept set. ``json_predicate_hints`` must already be
         translated to physical names (``_physical_hints``)."""
@@ -569,15 +618,6 @@ class SharedTable:
         )
 
     @staticmethod
-    def _driver_resident(manifest: DataFrame) -> bool:
-        """Whether Catalyst folds ``manifest`` (a driver-resident
-        ``files_df`` and the filters on it) into one ``LocalRelation``:
-        then collecting from it runs no Spark job, while every job over
-        it ships the relation's rows inside its tasks."""
-        plan = manifest._jdf.queryExecution().optimizedPlan()
-        return plan.getClass().getSimpleName() == "LocalRelation"
-
-    @staticmethod
     def _limit_prefix_filter(manifest: DataFrame, limit_hint: int) -> DataFrame:
         """Keep files while the running row count of *previous* files (in
         path order) is below the limit (kernel early-termination semantics:
@@ -595,18 +635,14 @@ class SharedTable:
         never funnels through a single task."""
         from pyspark.storagelevel import StorageLevel
 
-        if SharedTable._driver_resident(manifest):
+        if TableLog._driver_resident(manifest):
             # the kept files are a path-order prefix: one range predicate
             # folds back in (an IN list of them would be evaluated per
             # row and per listed path)
-            last, total = None, 0
-            for path, n in sorted(
-                    manifest.select("path", "numRecords").collect()):
-                if total >= limit_hint:
-                    break
-                last, total = path, total + (n or 0)
-            return manifest.filter(F.lit(False) if last is None
-                                   else F.col("path") <= last)
+            rows = sorted(manifest.select("path", "numRecords").collect())
+            kept = _limit_cutoff((n for _, n in rows), limit_hint)
+            return manifest.filter(F.col("path") <= rows[kept - 1][0]
+                                   if kept else F.lit(False))
         parts = max(1, manifest.sparkSession.sparkContext.defaultParallelism)
         m = (
             # ONLY the columns the prefix sum needs: dragging the wide
@@ -661,10 +697,13 @@ class SharedTable:
                              SharedTable._cast_type(dtype.valueType), True)
         return dtype
 
-    def _normalize(self, df: DataFrame, snapshot: Snapshot) -> DataFrame:
+    def _normalize(self, df: DataFrame, snapshot: Snapshot,
+                   extras: "tuple[str, ...]" = ()) -> DataFrame:
         """Projection normalization (ref python/delta_sharing/reader.py:630-674):
         case-insensitive resolve, cast to declared types, null-fill columns
-        missing from older files, order columns per the declared schema."""
+        missing from older files, order columns per the declared schema;
+        the named engine-derived ``extras`` (row tracking ids etc.) are
+        kept after the declared schema."""
         lower = {c.lower(): c for c in df.columns}
         cols = []
         for field in snapshot.schema.fields:
@@ -674,22 +713,7 @@ class SharedTable:
                 cols.append(F.lit(None).cast(dt).alias(field.name))
             else:
                 cols.append(F.col(src).cast(dt).alias(field.name))
-        return df.select(*cols)
-
-    def _normalize_with_extras(self, df: DataFrame, snapshot: Snapshot,
-                               extras: list[str]) -> DataFrame:
-        """_normalize, keeping the named engine-derived columns (row
-        tracking ids etc.) appended after the declared schema."""
-        lower = {c.lower(): c for c in df.columns}
-        cols = []
-        for field in snapshot.schema.fields:
-            src = lower.get(field.name.lower())
-            dt = self._cast_type(field.dataType)
-            if src is None:
-                cols.append(F.lit(None).cast(dt).alias(field.name))
-            else:
-                cols.append(F.col(src).cast(dt).alias(field.name))
-        return df.select(*cols, *[F.col(e) for e in extras])
+        return df.select(*cols, *extras)
 
     def to_df(
         self,
@@ -747,8 +771,8 @@ class SharedTable:
         if row_ids:
             df = self.log.read_adds_with_row_ids(snap, kept_adds,
                                                  schema=snap.schema)
-            df = self._normalize_with_extras(
-                df, snap, ["_row_id", "_row_commit_version"])
+            df = self._normalize(
+                df, snap, ("_row_id", "_row_commit_version"))
         else:
             df = self.log.read_adds(kept_adds, schema=snap.schema,
                                     snap=snap)
@@ -859,10 +883,14 @@ class SharedTable:
 
         ``metadata_only`` (getTableMetadata) lists no files: the response
         is the ``protocol`` and ``metaData`` lines, whose counts come from
-        the memoized ``file_counts``. An unpaged listing fetches its kept
-        actions through ``kept_adds`` (one Spark job on a large lazy
-        manifest, none on a small one); a paged listing over a large lazy
-        manifest cuts its page in the same single job."""
+        the memoized ``file_counts``. A listing prunes where
+        ``_prunes_on_driver`` says. An unpaged listing fetches its kept
+        actions through ``kept_adds``; a paged listing that does not
+        prune on the driver cuts its page from the pruned manifest (no
+        Spark job while the manifest is driver-resident, one above
+        Spark's local-relation bound). A paged listing ignores SQL hints
+        in that choice, so it never materializes a large lazy
+        snapshot."""
         import base64
         import time as _time
 
@@ -968,13 +996,14 @@ class SharedTable:
         next_token = None
         if metadata_only:
             page = []  # getTableMetadata (includeFiles=false): no listing
-        elif (max_files is not None and not snap.files_materialized
-                and (snap.num_files_hint or 0) > PRUNE_DRIVER_MAX_FILES):
-            # paged query over a LAZY manifest: prune + path-order +
-            # page cut run as ONE Spark job (none while the manifest is
-            # driver-resident, below) and the driver holds only
-            # the served page's actions — a 5M-file table never
-            # materializes 5M AddFiles to serve a 1000-file page (the
+        elif (max_files is not None
+                and not self._prunes_on_driver(snap, None)):
+            # paged query over a large LAZY manifest (SQL hints do not
+            # matter here): prune + path-order + page cut run as ONE
+            # Spark job (none while the manifest is driver-resident,
+            # below) and the driver holds only the served page's
+            # actions — a 5M-file table never materializes 5M AddFiles
+            # to serve a 1000-file page (the
             # reference kernel's per-batch iteration with early stop,
             # DeltaSharedTableKernel.scala:293-297,446-449). Fetching
             # max_files+1 rows answers has-next without a count job.
@@ -992,7 +1021,7 @@ class SharedTable:
             sel = manifest.select("path", "action_json")
             if last_path is not None:
                 sel = sel.filter(F.col("path") > last_path)
-            if self._driver_resident(manifest) and (
+            if self.log._driver_resident(manifest) and (
                     last_path is not None or not start):
                 # a driver-resident manifest is path-sorted and Catalyst
                 # folds the filter and the limit into its LocalRelation:
@@ -1022,10 +1051,10 @@ class SharedTable:
                     payload["lastPath"] = last_path
                 next_token = mint_page_token(payload, checksum)
         else:
-            # kept_adds keeps a LAZY snapshot lazy (one manifest-plane
-            # job fetches only the kept actions): the unpaged route must
-            # never pin an O(files) AddFile dict to serve a pruned (or
-            # even full — that response is O(files) anyway) listing
+            # kept_adds keeps a large LAZY snapshot lazy (the pruned
+            # manifest yields only the kept actions): the unpaged route
+            # must never pin an O(files) AddFile dict to serve a pruned
+            # (or even full — that response is O(files) anyway) listing
             files = self.kept_adds(snap, json_predicate_hints,
                                    predicate_hints, limit_hint)
             end = (len(files) if max_files is None
@@ -1034,13 +1063,8 @@ class SharedTable:
             if end < len(files):
                 next_token = mint_page_token(
                     {"version": snap.version, "start": end}, checksum)
-        # column mapping needs reader protocol 2 (Delta protocol table);
-        # plain tables stay at the reference's "fake" minReaderVersion 1
-        # (DeltaSharedTableKernel.scala:193)
-        proto = {"minReaderVersion": 2, "minWriterVersion": 5,
-                 } if snap.column_mapping else {"minReaderVersion": 1}
         lines: list[dict[str, Any]] = [
-            {"protocol": proto},
+            {"protocol": wire_protocol(snap.column_mapping)},
             {
                 "metaData": {
                     **self.metadata(version=snap.version),
@@ -1064,37 +1088,8 @@ class SharedTable:
                 lines.append({"txn": {"appId": app_id, "version": epoch}})
         rt = snap.row_tracking_enabled
         for add in page:
-            line = {
-                "file": {
-                    "url": self.log.abs_path(add.path),
-                    "id": add.path,
-                    "partitionValues": add.partitionValues,
-                    "size": add.size,
-                    "stats": add.stats,
-                    "version": add.version,
-                    "timestamp": add.timestamp,
-                }
-            }
-            if rt and add.baseRowId is not None:
-                # row-tracking fields ride the wire so a remote client can
-                # reconstruct stable _row_id/_row_commit_version (Delta
-                # AddFile carries them; the delta response format passes
-                # them through verbatim, and this engine's parquet profile
-                # includes them as optional extras)
-                line["file"]["baseRowId"] = add.baseRowId
-                line["file"]["defaultRowCommitVersion"] = (
-                    add.defaultRowCommitVersion
-                    if add.defaultRowCommitVersion is not None
-                    else add.version)
-            if add.deletionVector:
-                dv = dict(add.deletionVector)
-                if dv.get("storageType") == "u":
-                    # path-based DVs go on the wire absolute (like file
-                    # urls); inline DVs carry the encoded vector itself
-                    dv["pathOrInlineDv"] = self.log.abs_path(
-                        dv["pathOrInlineDv"])
-                line["file"]["deletionVector"] = dv
-            lines.append(line)
+            lines.append({"file": wire_file(
+                self.log, add, add.version, add.timestamp, row_tracking=rt)})
         if next_token or new_refresh_token or include_end_stream_action:
             # trailer emitted when it carries a token, OR when the client
             # opted in via delta-sharing-capabilities:
@@ -1208,9 +1203,7 @@ class SharedTable:
             # 578-588)
             end = int(decoded.get("end", end))
             resume = decoded
-        proto = {"minReaderVersion": 2, "minWriterVersion": 5,
-                 } if snap.column_mapping else {"minReaderVersion": 1}
-        head_proto = dict(proto)
+        head_proto = wire_protocol(snap.column_mapping)
         if emit_protocol:
             # stamp the head protocol's version only under the opt-in,
             # preserving the legacy wire shape otherwise (ref
@@ -1260,34 +1253,12 @@ class SharedTable:
                         "delta-sharing-capabilities: responseformat=delta")
                 pager.prev_cm = cm_next
             for a in commit.adds:
-                if not a.dataChange:
-                    continue
-                line = {"add": {
-                    "url": self.log.abs_path(a.path), "id": a.path,
-                    "partitionValues": a.partitionValues, "size": a.size,
-                    "stats": a.stats, "timestamp": ts, "version": v}}
-                if a.baseRowId is not None:
-                    # row-tracking AddFile fields ride the range form too
-                    # (verbatim delta actions) so a streaming consumer can
-                    # reconstruct stable row ids
-                    line["add"]["baseRowId"] = a.baseRowId
-                    line["add"]["defaultRowCommitVersion"] = (
-                        a.defaultRowCommitVersion
-                        if a.defaultRowCommitVersion is not None else v)
-                if a.deletionVector:
-                    dv = dict(a.deletionVector)
-                    if dv.get("storageType") == "u":
-                        dv["pathOrInlineDv"] = self.log.abs_path(
-                            dv["pathOrInlineDv"])
-                    line["add"]["deletionVector"] = dv
-                out.append((True, line))
+                if a.dataChange:
+                    out.append((True, {"add": wire_file(self.log, a, v, ts)}))
             for r in commit.removes:
-                if not r.dataChange:
-                    continue
-                out.append((True, {"remove": {
-                    "url": self.log.abs_path(r.path), "id": r.path,
-                    "partitionValues": r.partitionValues, "size": r.size,
-                    "timestamp": ts, "version": v}}))
+                if r.dataChange:
+                    out.append((True, {
+                        "remove": wire_file(self.log, r, v, ts)}))
             return out
 
         # page-gate + resume bookkeeping shared with the changes form

@@ -256,7 +256,7 @@ def eng_snapshot_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Engine-path full snapshot scan — the BASELINE.md <=2x-of-plain-Spark
     surface, benchmarked against its plain twin ``plain_snapshot_full``.
     The read path is zero-Spark-job on the metadata plane: cached snapshot
-    + driver-loop prune (table.py PRUNE_DRIVER_MAX_FILES hybrid)."""
+    + driver-loop prune (``SharedTable._prunes_on_driver``)."""
     t = SharedTable(spark, _lineitem_shared(spark, sf_dir))
     return t.to_df()
 
@@ -340,8 +340,8 @@ def eng_prune_typed_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     stats_parsed shape): the checkpointed 25-commit fixture's files_df
     carries minValues_parsed/maxValues_parsed structs; the prune runs as
     a manifest DataFrame filter reading native parquet values (never
-    get_json_object), the kept files are fetched via the lazy
-    adds-for-paths semi-join, and the exact row filter on top makes the
+    get_json_object), the kept actions are collected from that filter's
+    ``action_json``, and the exact row filter on top makes the
     result SQL-checkable (best-effort-server / exact-client contract,
     PROTOCOL.md:2124-2137). Mirrors the reference kernel pruning on
     typed checkpoint-read columns
@@ -357,11 +357,9 @@ def eng_prune_typed_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     manifest = t.log.files_df(snap)
     assert parsed_stat_fields(manifest), \
         "checkpointed manifest must carry the typed stats structs"
-    # force the DataFrame prune (the <=10k-file hybrid would driver-loop)
-    kept = [r["path"] for r in
-            t._pruned_manifest(snap, hints, None, None)
-            .select("path").collect()]
-    adds = t.log.adds_for_paths(snap, kept)
+    # force the DataFrame prune (kept_adds would driver-loop this small
+    # table)
+    adds = t._manifest_adds(t._pruned_manifest(snap, hints, None, None))
     df = t.log.read_adds(adds, snap=snap)
     return df.filter(F.col("l_quantity") >= 48).agg(
         F.count("*").alias("n_rows"),
@@ -407,7 +405,8 @@ def eng_prune_typed_nested(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference protocol (PROTOCOL.md:3908-4013) and the checkpoint carries
     typed dotted-path struct fields (Delta's ``stats_parsed`` covers the
     same paths), so the manifest prune reads a native parquet value for
-    the struct leaf — never a per-row JSON parse. The exact row filter on
+    the struct leaf — never a per-row JSON parse — and the kept actions
+    are collected from that filter's ``action_json``. The exact row filter on
     top keeps the result SQL-checkable (best-effort-server /
     exact-client contract)."""
     from delta_sharing_spark.plans.predicates import parsed_stat_fields
@@ -421,10 +420,7 @@ def eng_prune_typed_nested(spark: SparkSession, sf_dir: str) -> DataFrame:
     manifest = t.log.files_df(snap)
     assert "m.qty" in parsed_stat_fields(manifest), \
         "checkpointed manifest must carry dotted typed stats fields"
-    kept = [r["path"] for r in
-            t._pruned_manifest(snap, hints, None, None)
-            .select("path").collect()]
-    adds = t.log.adds_for_paths(snap, kept)
+    adds = t._manifest_adds(t._pruned_manifest(snap, hints, None, None))
     df = t.log.read_adds(adds, snap=snap)
     return df.filter(F.col("m.qty") >= 48).agg(
         F.count("*").alias("n_rows"),

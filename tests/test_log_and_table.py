@@ -620,7 +620,8 @@ class TestPruning:
         hints = {"op": "equal", "children": [
             {"op": "column", "name": "event_type", "valueType": "string"},
             {"op": "literal", "value": "click", "valueType": "string"}]}
-        kept = t.pruned_files(snap, json_predicate_hints=hints)
+        kept = [a.path for a in
+                t.kept_adds(snap, json_predicate_hints=hints)]
         assert 0 < len(kept) < len(snap.files)
         # result still correct (prune is a superset of matching rows)
         full_clicks = t.to_df().filter("event_type = 'click'").count()
@@ -637,18 +638,22 @@ class TestPruning:
         hints = {"op": "greaterThan", "children": [
             {"op": "column", "name": "event_id", "valueType": "long"},
             {"op": "literal", "value": "100", "valueType": "long"}]}
-        kept = t.pruned_files(snap, json_predicate_hints=hints)
+        kept = [a.path for a in
+                t.kept_adds(snap, json_predicate_hints=hints)]
         assert len(kept) < len(snap.files)  # v1 files skipped via max stats
 
     def test_sql_hint_prune(self, spark, versioned_table):
         t = SharedTable(spark, versioned_table)
         snap = t.log.snapshot()
-        kept = t.pruned_files(snap, predicate_hints=["event_type = 'click'"])
+        kept = [a.path for a in t.kept_adds(
+            snap, predicate_hints=["event_type = 'click'"])]
         assert 0 < len(kept) < len(snap.files)
         # non-parsable / non-partition hints are skipped best-effort
-        kept2 = t.pruned_files(snap, predicate_hints=["value > 1"])
+        kept2 = [a.path for a in
+                 t.kept_adds(snap, predicate_hints=["value > 1"])]
         assert len(kept2) == len(snap.files)
-        kept3 = t.pruned_files(snap, predicate_hints=["garbage ==== "])
+        kept3 = [a.path for a in
+                 t.kept_adds(snap, predicate_hints=["garbage ==== "])]
         assert len(kept3) == len(snap.files)
 
     def test_sql_hint_column_name_inside_literal(self, spark, versioned_table):
@@ -659,21 +664,22 @@ class TestPruning:
         snap = t.log.snapshot()
         # literal body == the partition column's own name; no partition value
         # equals the string "event_type", so a correct rewrite keeps nothing
-        kept = t.pruned_files(
-            snap, predicate_hints=["event_type = 'event_type'"])
+        kept = [a.path for a in t.kept_adds(
+            snap, predicate_hints=["event_type = 'event_type'"])]
         assert len(kept) == 0
         # sanity: a correctly-quoted ordinary value still prunes
-        kept2 = t.pruned_files(snap, predicate_hints=["event_type = 'click'"])
+        kept2 = [a.path for a in t.kept_adds(
+            snap, predicate_hints=["event_type = 'click'"])]
         assert 0 < len(kept2) < len(snap.files)
         # escaped-quote literal ('' = one quote) parses and is not mangled
-        kept3 = t.pruned_files(
-            snap, predicate_hints=["event_type = 'it''s event_type'"])
+        kept3 = [a.path for a in t.kept_adds(
+            snap, predicate_hints=["event_type = 'it''s event_type'"])]
         assert len(kept3) == 0
 
     def test_limit_hint_cuts_files(self, spark, versioned_table):
         t = SharedTable(spark, versioned_table)
         snap = t.log.snapshot()
-        kept = t.pruned_files(snap, limit_hint=10)
+        kept = [a.path for a in t.kept_adds(snap, limit_hint=10)]
         # expected: minimal path-ordered prefix whose cumulative numRecords
         # reaches the limit (kernel early-termination semantics)
         ordered = sorted(snap.files, key=lambda a: a.path)
@@ -847,7 +853,8 @@ class TestDeletionVectors:
         t = SharedTable(spark, dv_table.path)
         first = sorted(snap.files, key=lambda a: a.path)[0]
         # a hint equal to the first file's LOGICAL rows must cut after it
-        paths = t.pruned_files(snap, limit_hint=first.logical_records)
+        paths = [a.path for a in
+                 t.kept_adds(snap, limit_hint=first.logical_records)]
         assert len(paths) == 1
 
     def test_optimize_purges_dvs(self, spark, events, dv_table):
@@ -1430,7 +1437,8 @@ class TestZOrder:
                 {"op": "column", "name": col, "valueType": "long"},
                 {"op": "literal", "value": str(value), "valueType": "long"}]}
             snap = t.log.snapshot()
-            return len(t.pruned_files(snap, json_predicate_hints=hints)), \
+            return len([a.path for a in
+                        t.kept_adds(snap, json_predicate_hints=hints)]), \
                 len(snap.files)
 
     # before: partkey predicate prunes nothing (every file spans all values)
@@ -4190,14 +4198,11 @@ class TestLazyManifest:
                 {"op": "column", "name": "id", "valueType": "long"},
                 {"op": "literal", "value": "4999", "valueType": "long"}]},
         ]}
-        kept = t.pruned_files(snap, json_predicate_hints=hints)
+        kept = [a.path for a in
+                t.kept_adds(snap, json_predicate_hints=hints)]
         assert len(kept) == 5  # 1000 rows/file, ids [0,5000)
-        kept = t.pruned_files(snap, limit_hint=2_500)
+        kept = [a.path for a in t.kept_adds(snap, limit_hint=2_500)]
         assert len(kept) == 3
-        assert not snap.files_materialized
-        # post-prune data fetch pulls only the kept actions
-        adds = t.log.adds_for_paths(snap, kept)
-        assert [a.path for a in adds] == sorted(kept)
         assert not snap.files_materialized
 
     def test_tail_commit_over_lazy_base(self, spark, forged):

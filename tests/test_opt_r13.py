@@ -339,6 +339,36 @@ class TestFusedLloyd:
         ok = self._embedding_batch([[1.0, 2.0, 3.0, 4.0]] * 3)
         assert list(fn([ok]))[0].num_rows == 4
 
+    def test_partials_reject_values_past_fixed_point_range(self):
+        # FLOOR(x * 1e12) of |x| = 1e7 is 1e19, past int64's 9.22e18:
+        # numpy's cast would wrap it into a wrong update sum
+        from delta_sharing_spark.operators.similarity import (
+            _lloyd_partials_fn,
+            _pq_partials_fn,
+        )
+
+        kmeans = _lloyd_partials_fn([0], [[0.0, 0.0, 0.0, 0.0]], 4)
+        pq = _pq_partials_fn({0: ([0], [[0.0, 0.0]]),
+                              1: ([0], [[0.0, 0.0]])}, 2, 2)
+        for fn in (kmeans, pq):
+            for bad in (1e7, -1e7, float("nan")):
+                batch = self._embedding_batch([[1.0, 2.0, bad, 4.0]])
+                with pytest.raises(ValueError, match="fixed-point"):
+                    list(fn([batch]))
+            ok = self._embedding_batch([[9e6, -9e6, 0.0, 4.0]])
+            assert list(fn([ok]))[0].num_rows == 4
+
+    def test_fits_raise_past_fixed_point_range(self, spark):
+        from delta_sharing_spark.operators.similarity import kmeans_fit, pq_fit
+
+        df = spark.createDataFrame(
+            [(i, [1e7 * (i + 1), 0.0, 0.0, 0.0]) for i in range(6)],
+            "vec_id long, embedding array<double>")
+        with pytest.raises(Exception, match="fixed-point"):
+            kmeans_fit(df, k=2, iters=1, dim=4).collect()
+        with pytest.raises(Exception, match="fixed-point"):
+            pq_fit(df, m=2, k=2, iters=1, dim=4).collect()
+
 
 class TestWinnowBatchVectorization:
     def test_matches_per_doc_reference(self):

@@ -72,7 +72,6 @@ class TestLazyServingPlane:
         # driver-loop threshold) — at/below the threshold the driver
         # loop materializes by design, which is O(response) there
         monkeypatch.setattr(Tmod, "PRUNE_DRIVER_MAX_FILES", -1)
-        monkeypatch.setattr(L, "ADDS_SMALL_MANIFEST_MAX", -1)
 
     def test_to_df_paths_stay_lazy(self, spark, env, monkeypatch):
         self._forbid(monkeypatch)
@@ -596,7 +595,6 @@ class TestForkedMaterialize:
         import delta_sharing_spark.table as Tmod
 
         monkeypatch.setattr(L, "CHECKPOINT_PARALLEL_MIN_FILES", 1)
-        monkeypatch.setattr(L, "ADDS_SMALL_MANIFEST_MAX", -1)
         monkeypatch.setattr(Tmod, "PRUNE_DRIVER_MAX_FILES", -1)
         t = SharedTable(spark, cp_table)
         snap = t.log.snapshot()

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import json
 import logging
+import os
 import random
 import shutil
 import threading
@@ -18,6 +19,7 @@ import pytest
 from delta_sharing_spark.catalog import TABLE_CACHE_SIZE, ShareCatalog
 from delta_sharing_spark.plans.log import TableLog, VersionNotFoundError
 from delta_sharing_spark.server import SharingServer
+from tests.conftest import ManifestStorage, manifest_storage_set
 
 Q = "/shares/s/schemas/d/tables/t"
 
@@ -363,6 +365,32 @@ class TestJobBudget:
         assert new <= files
         assert files - new == {ln["file"]["id"] for ln in before
                                if "file" in ln}
+
+    def test_file_counts_on_resident_manifest_run_no_job(self, spark,
+                                                         tmp_path):
+        # a version without a .crc counts over the manifest plane: a
+        # driver-resident manifest answers with no Spark job, and both
+        # storages count the same
+        path = str(tmp_path / "t")
+        log = _build(spark, path, commits=3)
+        log.write_checkpoint()
+        log.append(_rows(spark, 500, 560))
+        os.remove(log._crc_path(log.latest_version()))
+        counts = {}
+        for name in ManifestStorage.NAMES:
+            with manifest_storage_set(spark, name) as storage:
+                fresh = TableLog(spark, path)
+                snap = fresh.snapshot()
+                storage.check(fresh.files_df(snap))
+                assert not snap.files_materialized
+                before = _job_ids(spark)
+                counts[name] = fresh.file_counts(snap)
+                jobs = len(_job_ids(spark) - before)
+            if name == "resident":
+                assert jobs == 0
+        files = TableLog(spark, path).snapshot().files
+        assert counts["resident"] == counts["scan"] == (
+            len(files), sum(f.size for f in files))
 
     def test_alternating_versions_keep_one_resident_manifest(
             self, spark, served, monkeypatch):

@@ -4,7 +4,8 @@ Usage: python tools/capture_plans.py <suffix: before|after> [query ...]
 Defaults to every bench.HEADLINE query at $SPARK_GRAFT_SF_DIR.
 
 ``--manifest`` as the first argument dumps, instead, the manifest-prune
-plan (``SharedTable._pruned_manifest(...).select("path")``) of the
+plan (``SharedTable._pruned_manifest(...).select("path", "action_json")``,
+the rows the workloads collect their kept actions from) of the
 workloads in MANIFEST_PRUNES into ``<query>_manifest_<suffix>.txt``:
 their query plans read only the kept data files, so the plan over
 ``TableLog.files_df`` shows nowhere else.
@@ -39,7 +40,7 @@ def manifest_plan(spark, sf_dir: str, name: str) -> "DataFrame":
         {"op": "literal", "value": "48", "valueType": "double"},
     ]}
     return t._pruned_manifest(t.log.snapshot(), hints, None,
-                              None).select("path")
+                              None).select("path", "action_json")
 
 
 def main() -> None:

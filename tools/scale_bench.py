@@ -14,9 +14,9 @@ checkpoint_write   build + write the synthetic checkpoint parquet (setup,
 cold_snapshot      fresh TableLog -> snapshot(): checkpoint parse +
                    AddFile materialization (driver-side, O(files))
 warm_snapshot      second snapshot() on the same TableLog (cache hit)
-files_df_prune     pruned_files() with a min/max stats predicate —
+files_df_prune     kept_adds() with a min/max stats predicate —
                    the DataFrame path (a Spark job over the checkpoint)
-limit_prefix       pruned_files(limit_hint=...) -> the distributed
+limit_prefix       kept_adds(limit_hint=...) -> the distributed
                    two-phase prefix sum; plan-asserted: every WindowExec
                    is partitioned by _pid (no single-task window)
 driver_loop_10k    the <= PRUNE_DRIVER_MAX_FILES driver-loop path at
@@ -604,7 +604,8 @@ def main() -> None:
     keep_files = args.files // 100
     hints = stats_predicate(0, keep_files * ROWS_PER_FILE - 1)
     t0 = time.perf_counter()
-    kept = table.pruned_files(snap, json_predicate_hints=hints)
+    kept = [a.path for a in
+            table.kept_adds(snap, json_predicate_hints=hints)]
     out["files_df_prune_s"] = round(time.perf_counter() - t0, 3)
     assert len(kept) == keep_files, (len(kept), keep_files)
 
@@ -612,7 +613,7 @@ def main() -> None:
     limit = (args.files // 200) * ROWS_PER_FILE + 1
     assert_partitioned_windows(log.files_df(snap), limit)
     t0 = time.perf_counter()
-    kept = table.pruned_files(snap, limit_hint=limit)
+    kept = [a.path for a in table.kept_adds(snap, limit_hint=limit)]
     out["limit_prefix_s"] = round(time.perf_counter() - t0, 3)
     assert len(kept) == args.files // 200 + 1, len(kept)
 
@@ -673,8 +674,8 @@ def main() -> None:
     # warmup table — its snapshot/log caches are hot, like production)
     shints = stats_predicate(0, PRUNE_DRIVER_MAX_FILES * 10 - 1)
     t0 = time.perf_counter()
-    kept = stable.pruned_files(ssnap, json_predicate_hints=shints,
-                               limit_hint=5_000)
+    kept = [a.path for a in stable.kept_adds(
+        ssnap, json_predicate_hints=shints, limit_hint=5_000)]
     out["driver_loop_10k_s"] = round(time.perf_counter() - t0, 3)
     assert len(kept) == 5, kept
 
