@@ -35,6 +35,7 @@ from delta_sharing_spark.plans.log import (
     COMMIT_VERSION_COL,
     Snapshot,
     TableLog,
+    column_mapping_on,
     is_noop_merge,
     wire_protocol,
 )
@@ -394,8 +395,8 @@ def table_changes_actions(
         # not pay a third snapshot resolution for it
         from delta_sharing_spark.plans.log import derive_wire_protocol
 
-        prev_cm = (log.snapshot(version=start).metadata.configuration
-                   or {}).get("delta.columnMapping.mode") == "name"
+        prev_cm = column_mapping_on(
+            log.snapshot(version=start).metadata.configuration)
     # page-gate + resume bookkeeping shared with the version-range form
     # (table.ActionPager owns the token schema — {start,end,v,vbase[,pcm]}
     # — and the boundary rules: file actions cut pages, non-file lines
@@ -436,8 +437,8 @@ def table_changes_actions(
                     emit_meta({"protocol": {
                         **proto_line, "version": commit.version}})
             if commit.metadata is not None:
-                pager.prev_cm = (commit.metadata.configuration or {}).get(
-                    "delta.columnMapping.mode") == "name"
+                pager.prev_cm = column_mapping_on(
+                    commit.metadata.configuration)
         if commit.cdc:
             for c in commit.cdc:
                 emit_file({"cdf": wire_file(

@@ -268,9 +268,10 @@ def _schema_of(meta: dict[str, Any]):
 
     from pyspark.sql import types as T
 
+    from delta_sharing_spark.plans.log import column_mapping_on
+
     schema = T.StructType.fromJson(json.loads(meta["schemaString"]))
-    cm = (meta.get("configuration") or {}).get(
-        "delta.columnMapping.mode") == "name"
+    cm = column_mapping_on(meta.get("configuration"))
     return schema, {
         f.name: ((f.metadata or {}).get("delta.columnMapping.physicalName",
                                         f.name) if cm else f.name)

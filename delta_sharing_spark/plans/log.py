@@ -265,8 +265,7 @@ def derive_wire_protocol(commit, prev_cm: bool) -> "dict | None":
     if commit.protocol is not None:
         return dict(commit.protocol)
     if commit.metadata is not None:
-        cm_now = (commit.metadata.configuration or {}).get(
-            "delta.columnMapping.mode") == "name"
+        cm_now = column_mapping_on(commit.metadata.configuration)
         if cm_now != prev_cm:
             return wire_protocol(cm_now)
     return None
@@ -370,6 +369,9 @@ def stats_field_spec(schema: T.StructType) -> list[tuple[str, str]]:
 
 from delta_sharing_spark.plans.predicates import (  # noqa: E402
     stat_lookup as _stat_lookup,
+)
+from delta_sharing_spark.plans.resident import (  # noqa: E402
+    ResidentManifest,
 )
 
 
@@ -926,6 +928,13 @@ CM_PHYSICAL_KEY = "delta.columnMapping.physicalName"
 CM_ID_KEY = "delta.columnMapping.id"
 CM_MAX_ID_KEY = "delta.columnMapping.maxColumnId"
 
+
+def column_mapping_on(configuration: "dict[str, str] | None") -> bool:
+    """Whether a table configuration turns column mapping on (name
+    mode)."""
+    return (configuration or {}).get(CM_MODE_KEY) == "name"
+
+
 # Row tracking (Delta protocol "Row Tracking", writer feature rowTracking):
 # every AddFile carries a baseRowId; row i of a file has stable id
 # baseRowId + i unless a materialized row-id column (written by
@@ -1023,7 +1032,7 @@ class Snapshot:
 
     @property
     def column_mapping(self) -> bool:
-        return self.metadata.configuration.get(CM_MODE_KEY, "none") == "name"
+        return column_mapping_on(self.metadata.configuration)
 
     @property
     def logical_to_physical(self) -> dict[str, str] | None:
@@ -1131,10 +1140,10 @@ class TableLog:
         # (_cached_snapshot); only "latest" resolution re-lists the
         # directory.
         self._snap_cache: dict[int, tuple[Snapshot, tuple]] = {}
-        # version -> (manifest DataFrame, checkpoint path, its identity
-        # — both None when built on the driver —, driver-resident
-        # checkpoint manifest?): see files_df
-        self._files_df_cache: dict[int, tuple] = {}
+        # version -> a ResidentManifest, or (scan DataFrame, checkpoint
+        # path, its identity — both None for a checkpoint-less manifest
+        # built on the driver): see _manifest_entry
+        self._manifest_cache: dict[int, "ResidentManifest | tuple"] = {}
         # sidecar content hashes verified this process, keyed by relative
         # path -> (size, mtime): the lazy manifest plane deep-verifies
         # every sidecar ONCE before its bytes serve any query
@@ -1433,7 +1442,7 @@ class TableLog:
         with self._cache_lock:
             self._snap_cache.clear()
             self._commit_cache.clear()
-            self._files_df_cache.clear()
+            self._manifest_cache.clear()
         return None
 
     # ------------------------------------------------------------ checkpoints
@@ -1478,12 +1487,12 @@ class TableLog:
                 f"checkpoint install failed and no complete checkpoint "
                 f"exists at {final}")
         # a (re)install replaced the checkpoint files on disk: cached
-        # files_df plans pin the OLD physical part listing and would
+        # scan plans pin the OLD physical part listing and would
         # fail FILE_NOT_EXIST on re-evaluation (surfaced by the r12
         # non-destructive install, which really does swap the dir where
         # the old path silently kept the stale files) — drop them all
         with self._cache_lock:
-            self._files_df_cache.clear()
+            self._manifest_cache.clear()
         try:
             size = (sum(os.path.getsize(os.path.join(final, p))
                         for p in os.listdir(final))
@@ -2195,41 +2204,33 @@ class TableLog:
 
     def _resident_checkpoint_manifest(
             self, src: list[str], changed: "set[str]",
-            tail: "list[AddFile]") -> "DataFrame | None":
-        """The checkpoint-plus-tail manifest as ONE driver-resident
-        ``LocalRelation``, or None when it does not fit under the manifest
-        session's ``spark.sql.execution.arrow.localRelationThreshold``.
-        The checkpoint's add rows are read with pyarrow, tail-changed
-        paths dropped and the tail rows appended in Arrow: Catalyst
-        folds a filter or projection over one LocalRelation, but not
-        over a union of two, which would run as a Spark job again.
-
-        The bound is checked before reading (the footers' row-group
-        byte sizes, so a million-file checkpoint is never pulled to the
-        driver), after reading (the Arrow size) and after building (Spark
-        really made a LocalRelation)."""
+            tail: "list[AddFile]", budget: int) -> "pa.Table | None":
+        """The checkpoint-plus-tail manifest as ONE path-sorted Arrow
+        table, or None when it does not fit in ``budget`` bytes. The
+        checkpoint's add rows are read with pyarrow, tail-changed paths
+        dropped and the tail rows appended. The budget is checked before
+        reading (the footers' row-group byte sizes, so a million-file
+        checkpoint is never pulled to the driver) and after reading (the
+        Arrow size; the footers count parquet's uncompressed bytes, ~20%
+        below it)."""
         import pyarrow as pa
         import pyarrow.compute as pc
         import pyarrow.dataset as pds
 
         dset = pds.dataset(src[0] if len(src) == 1 else src,
                            format="parquet")
-        bound = (self.meta_spark._jsparkSession.sessionState().conf()
-                 .arrowLocalRelationThreshold())
         footer_bytes = 0
         for frag in dset.get_fragments():
             md = frag.metadata
             footer_bytes += sum(md.row_group(i).total_byte_size
                                 for i in range(md.num_row_groups))
-        if footer_bytes > bound:
+        if footer_bytes > budget:
             return None
         tbl = dset.to_table(
             columns=self._manifest_columns(
                 "minValues_parsed" in dset.schema.names),
             filter=pc.field("kind") == "add")
-        if tbl.nbytes > bound:
-            # the footers count parquet's uncompressed bytes, ~20% below
-            # the Arrow size Spark checks: skip a build Spark would refuse
+        if tbl.nbytes > budget:
             return None
         spec = _arrow_parsed_spec(tbl.schema)
         if changed:
@@ -2242,41 +2243,64 @@ class TableLog:
             # between the checkpoint and the tail commits
             tbl = pa.concat_tables(
                 [tbl, self._manifest_arrow(tail, spec).cast(tbl.schema)])
-        # path-sorted (see files_df), in one chunk: the filtered read
-        # leaves empty chunks (state rows, changed paths), and Spark's
-        # Arrow reader ends the stream at the first empty batch, silently
-        # dropping every row after it
-        df = self.meta_spark.createDataFrame(
-            tbl.sort_by("path").combine_chunks(), self._manifest_schema(spec))
-        # above the bound Spark plans a parallelized RDD instead
-        plan = df._jdf.queryExecution().logical()
-        return df if plan.getClass().getSimpleName() == "LocalRelation" \
-            else None
+        # in one chunk: the filtered read leaves empty chunks (state
+        # rows, changed paths), and Spark's Arrow reader ends the stream
+        # at the first empty batch, silently dropping every row after it
+        return tbl.sort_by("path").combine_chunks()
+
+    def _resident_bound(self) -> int:
+        """The manifest session's
+        ``spark.sql.execution.arrow.localRelationThreshold``: Spark's own
+        bound on a driver-side relation, and this log's resident byte
+        budget (0 turns driver-resident manifests off)."""
+        return (self.meta_spark._jsparkSession.sessionState().conf()
+                .arrowLocalRelationThreshold())
+
+    def resident_manifest(self, snapshot: Snapshot
+                          ) -> "ResidentManifest | None":
+        """The snapshot's driver-resident manifest, or None when it is
+        scanned (see ``_manifest_entry``)."""
+        entry = self._manifest_entry(snapshot)
+        return entry if isinstance(entry, ResidentManifest) else None
 
     def files_df(self, snapshot: Snapshot) -> DataFrame:
-        """The file manifest as a DataFrame, the input of every
-        manifest-plane prune, page and count. Two storages, one schema:
+        """The file manifest as a DataFrame, for the Catalyst prune (SQL
+        hints, manifests that are not driver-resident) and the engine's
+        manifest probes. A driver-resident manifest becomes a
+        ``LocalRelation`` built from its Arrow table only here, on first
+        use; its rows are path-sorted. Otherwise it is the scan plan of
+        ``_manifest_entry``."""
+        entry = self._manifest_entry(snapshot)
+        return entry.df() if isinstance(entry, ResidentManifest) else entry
 
-        - Driver-resident: when the manifest fits within Spark's own
-          local-relation bound (the manifest session's
+    def _manifest_entry(self, snapshot: Snapshot
+                        ) -> "ResidentManifest | DataFrame":
+        """The snapshot's manifest, cached per version. Two storages, one
+        column layout:
+
+        - Driver-resident (``ResidentManifest``): one path-sorted Arrow
+          table, pruned, paged and counted in Arrow with no Spark job. A
+          manifest whose AddFiles already live on the driver (a
+          checkpoint-less or materialized snapshot) is always resident,
+          built from them. A checkpoint's manifest (add rows minus
+          tail-changed paths, plus the tail rows) is read with pyarrow
+          into a per-log byte budget: Spark's local-relation bound (the
+          manifest session's
           ``spark.sql.execution.arrow.localRelationThreshold``, 48 MB by
-          default — about 80k files), it is built ONCE per snapshot as
-          one Arrow table (checkpoint add rows minus tail-changed paths,
-          plus the tail rows) and handed to Spark as a ``LocalRelation``.
-          Catalyst's ``ConvertToLocalRelation`` rule then evaluates the
-          prune filter and the ``path, action_json`` projection during
-          optimization, so a pruned listing runs no Spark job. Its rows
-          are path-sorted, and folding a filter, projection or limit
-          keeps their order, which the paged listing relies on. A
-          checkpoint-less manifest is always built this way from the
-          snapshot's files (whatever Spark makes of it).
-        - Scan: above the bound, the newest parquet checkpoint is
-          scanned directly; exact hit scans it, otherwise checkpoint
-          minus tail-changed paths, union the (small) tail adds. The
-          manifest never materializes as O(total files) driver rows, and
-          the prune runs as a Spark job that scales out — at millions of
-          files it must (the reference caps pages at 10k files for the
-          same reason, ServerConfig.scala:93).
+          default — about 80k files), filled newest version first. An
+          older version is admitted into what newer ones leave, and a
+          newer one evicts older ones, so a small table's time travel
+          stays resident and memory stays bounded by the table-handle
+          cache size times the bound. A bound of 0 turns residency off.
+        - Scan: otherwise the newest parquet checkpoint is scanned
+          directly; exact hit scans it, otherwise checkpoint minus
+          tail-changed paths, union the (small) tail adds. The manifest
+          never materializes as O(total files) driver rows, and the prune
+          runs as a Spark job that scales out — at millions of files it
+          must (the reference caps pages at 10k files for the same
+          reason, ServerConfig.scala:93). A version that did not fit
+          keeps its scan plan, so traffic alternating between versions
+          never rebuilds a manifest per request.
 
         Scan entries record the checkpoint file's identity (inode +
         mtime) and re-stat on every hit: a checkpoint reinstall — by
@@ -2292,34 +2316,19 @@ class TableLog:
         that evaluations STARTING after an install are never stale.
         Driver-built entries have no disk dependency; the snapshot
         identity check (``_cached_snapshot``) drops them with the rest
-        when the table is recreated. A log keeps at most one
-        driver-resident checkpoint manifest, the newest version's, so
-        driver memory stays bounded by the table-handle cache size times
-        the bound: a snapshot older than the cached resident one takes
-        the scan plan (cached like any other), so traffic alternating
-        between versions never rebuilds a resident manifest per
-        request."""
+        when the table is recreated."""
         with self._cache_lock:
-            cached = self._files_df_cache.get(snapshot.version)
-            newer_resident = any(
-                e[3] and v > snapshot.version
-                for v, e in self._files_df_cache.items())
+            cached = self._manifest_cache.get(snapshot.version)
+        if isinstance(cached, ResidentManifest):
+            return cached
         if cached is not None:
-            df0, fp0, ident0, _ = cached
-            if fp0 is None:
-                return df0  # built on the driver — no disk dependency
-            if _file_identity(fp0) == ident0:
+            df0, fp0, ident0 = cached
+            if fp0 is None or _file_identity(fp0) == ident0:
                 return df0
             # checkpoint replaced/removed — rebuild below
+        bound = self._resident_bound()
         cp_version = self._latest_checkpoint(at_or_before=snapshot.version)
-        fp = ident = None
-        resident = False
-        if cp_version is None:
-            spec = stats_field_spec(snapshot.physical_schema) or None
-            df = self.meta_spark.createDataFrame(
-                self._manifest_arrow(snapshot.files, spec).sort_by("path"),
-                self._manifest_schema(spec))
-        else:
+        if cp_version is not None:
             # capture the checkpoint identity BEFORE reading its sources
             # or building the plan: a reinstall landing between the build
             # and a later stat would cache the stale plan under the NEW
@@ -2334,46 +2343,89 @@ class TableLog:
             else:
                 changed, tail = self._checkpoint_tail(snapshot, cp_version)
             src = self._checkpoint_manifest_sources(cp_version)
-            df = None if newer_resident else \
-                self._resident_checkpoint_manifest(src, changed, tail)
-            if df is not None:
-                fp = ident = None
-                resident = True
-            else:
-                df = self._checkpoint_manifest_df(src)
-                if changed:
-                    df = df.filter(~F.col("path").isin(*changed))
-                if tail:
-                    spec = self._parsed_spec_of(df)
-                    df = df.unionByName(self.meta_spark.createDataFrame(
-                        self._manifest_arrow(tail, spec),
-                        self._manifest_schema(spec)))
-                if ident is None:
-                    # the checkpoint raced away before the build: the df
-                    # DOES depend on it, so don't cache a plan we can't
-                    # validate — the next call rebuilds against whatever
-                    # is on disk then
-                    return df
+            budget = self._resident_budget(snapshot.version, bound)
+            tbl = (self._resident_checkpoint_manifest(src, changed, tail,
+                                                      budget)
+                   if budget > 0 else None)
+            if tbl is not None:
+                return self._cache_resident(snapshot.version, tbl, True,
+                                            bound)
+        if bound > 0 and (cp_version is None
+                          or snapshot.files_materialized):
+            spec = stats_field_spec(snapshot.physical_schema) or None
+            tbl = self._manifest_arrow(snapshot.files, spec)
+            return self._cache_resident(
+                snapshot.version, tbl.sort_by("path").combine_chunks(),
+                False, bound)
+        if cp_version is None:
+            spec = stats_field_spec(snapshot.physical_schema) or None
+            df = self.meta_spark.createDataFrame(
+                self._manifest_arrow(snapshot.files, spec).sort_by("path"),
+                self._manifest_schema(spec))
+            fp = ident = None
+        else:
+            df = self._checkpoint_manifest_df(src)
+            if changed:
+                df = df.filter(~F.col("path").isin(*changed))
+            if tail:
+                spec = self._parsed_spec_of(df)
+                df = df.unionByName(self.meta_spark.createDataFrame(
+                    self._manifest_arrow(tail, spec),
+                    self._manifest_schema(spec)))
+            if ident is None:
+                # the checkpoint raced away before the build: the df
+                # DOES depend on it, so don't cache a plan we can't
+                # validate — the next call rebuilds against whatever
+                # is on disk then
+                return df
         with self._cache_lock:
-            if resident:
-                older = [v for v, e in self._files_df_cache.items() if e[3]]
-                if any(v > snapshot.version for v in older):
-                    return df  # a newer one was cached meanwhile
-                for v in older:
-                    del self._files_df_cache[v]
-            self._files_df_cache[snapshot.version] = (df, fp, ident,
-                                                      resident)
-            while len(self._files_df_cache) > 8:
-                self._files_df_cache.pop(next(iter(self._files_df_cache)))
+            self._manifest_cache[snapshot.version] = (df, fp, ident)
+            self._trim_manifest_cache(bound)
         return df
+
+    def _resident_budget(self, version: int, bound: int) -> int:
+        """The bytes a resident manifest of ``version`` may take: the
+        bound less the checkpoint-read manifests of newer versions."""
+        with self._cache_lock:
+            return bound - sum(
+                e.nbytes for v, e in self._manifest_cache.items()
+                if v > version and isinstance(e, ResidentManifest)
+                and e.budgeted)
+
+    def _cache_resident(self, version: int, tbl, budgeted: bool,
+                        bound: int) -> ResidentManifest:
+        spec = _arrow_parsed_spec(tbl.schema)
+        made = ResidentManifest(tbl, self._manifest_schema(spec), spec,
+                                lambda: self.meta_spark, budgeted)
+        with self._cache_lock:
+            cur = self._manifest_cache.get(version)
+            if isinstance(cur, ResidentManifest):
+                return cur  # another request built it meanwhile
+            self._manifest_cache[version] = made
+            self._trim_manifest_cache(bound)
+        return made
+
+    def _trim_manifest_cache(self, bound: int) -> None:
+        """Evict checkpoint-read resident manifests past the byte budget,
+        oldest version first, then the oldest entries past eight. Holds
+        ``_cache_lock``."""
+        cache = self._manifest_cache
+        used = 0
+        for v in sorted(cache, reverse=True):
+            e = cache[v]
+            if isinstance(e, ResidentManifest) and e.budgeted:
+                used += e.nbytes
+                if used > bound:
+                    del cache[v]
+        while len(cache) > 8:
+            cache.pop(next(iter(cache)))
 
     def file_counts(self, snapshot: Snapshot) -> tuple[int, int]:
         """(numFiles, totalSizeBytes) for the snapshot WITHOUT
         materializing ``.files``: already-materialized snapshots count in
         memory, else the ``.crc`` checksum sidecar answers O(1) (its
-        whole point), else the manifest plane: a driver-resident manifest
-        collects its ``size`` column with no Spark job, a scanned one
-        runs ONE distributed agg.
+        whole point), else the manifest: a driver-resident one counts its
+        Arrow table, a scanned one runs ONE distributed agg.
         Memoized per snapshot — the metaData wire line needs these on
         every query RPC."""
         if snapshot._counts is not None:
@@ -2387,28 +2439,16 @@ class TableLog:
                     and "tableSizeBytes" in crc:
                 counts = (int(crc["numFiles"]), int(crc["tableSizeBytes"]))
             else:
-                manifest = self.files_df(snapshot)
-                if self._driver_resident(manifest):
-                    # folded into the LocalRelation: no Spark job (an
-                    # aggregate over it would run two)
-                    sizes = [r[0] for r in manifest.select("size").collect()]
-                    counts = (len(sizes), sum(s or 0 for s in sizes))
+                entry = self._manifest_entry(snapshot)
+                if isinstance(entry, ResidentManifest):
+                    counts = entry.counts()
                 else:
-                    row = manifest.agg(
+                    row = entry.agg(
                         F.count("*").alias("n"),
                         F.sum("size").alias("s")).collect()[0]
                     counts = (int(row["n"]), int(row["s"] or 0))
         snapshot._counts = counts
         return counts
-
-    @staticmethod
-    def _driver_resident(manifest: DataFrame) -> bool:
-        """Whether Catalyst folds ``manifest`` (a driver-resident
-        ``files_df`` and the filters on it) into one ``LocalRelation``:
-        then collecting from it runs no Spark job, while every job over
-        it ships the relation's rows inside its tasks."""
-        plan = manifest._jdf.queryExecution().optimizedPlan()
-        return plan.getClass().getSimpleName() == "LocalRelation"
 
     def abs_path(self, rel: str) -> str:
         return os.path.join(self.path, rel)

@@ -16,7 +16,9 @@ Our Spark-first take: translate the op tree 1:1 into Catalyst ``Column``s and
 run the prune as a DataFrame filter over the file manifest. SQL NULL already
 IS the reference's Unknown — ``keep = NOT (pred <=> FALSE)`` reproduces the
 V2 truth tables with zero custom logic, and the whole prune scales out as a
-Spark job instead of a driver loop.
+Spark job instead of a driver loop. A driver-resident manifest is pruned
+by this rewrite's vectorized pyarrow twin (plans/resident.py), which reuses
+the leaf expressions below for every cast it cannot read as stored.
 
 Op vocabulary (PROTOCOL.md:4157-4258): leaves ``column``/``literal``; unary
 ``isNull``/``not``; binary ``equal``/``lessThan``/``lessThanOrEqual``/
@@ -122,6 +124,14 @@ def _leaf_column(op: dict[str, Any], partition_columns: set[str],
     return None
 
 
+def _literal_column(op: dict[str, Any]) -> Column:
+    """A literal leaf. try_cast: a client-supplied literal that doesn't
+    parse as its declared valueType (or overflows it) becomes NULL
+    (comparisons -> Unknown -> keep), never an ANSI cast error crashing
+    the RPC."""
+    return F.lit(op["value"]).try_cast(_SPARK_CAST[op["valueType"]])
+
+
 def to_column(op: dict[str, Any], partition_columns: set[str],
               data_accessor=None) -> Column | None:
     """Translate an op tree to a Catalyst Column over the file manifest.
@@ -135,10 +145,7 @@ def to_column(op: dict[str, Any], partition_columns: set[str],
     if kind == "column":
         return _leaf_column(op, partition_columns, data_accessor)
     if kind == "literal":
-        # try_cast: a client-supplied literal that doesn't parse as its
-        # declared valueType becomes NULL (comparisons -> Unknown ->
-        # keep), never an ANSI cast error crashing the RPC
-        return F.lit(op["value"]).try_cast(_SPARK_CAST[op["valueType"]])
+        return _literal_column(op)
     children = op.get("children", [])
     if kind == "and":
         cols = [to_column(c, partition_columns, data_accessor) for c in children]
@@ -222,9 +229,9 @@ def _stats_json_path(name: str) -> "str | None":
 
 
 def _json_stat(col: str, name: str, vtype: str) -> Column:
-    """Extract a typed stat from the minValues/maxValues JSON strings in the
-    manifest DataFrame; absent key (or a name the JSON-path grammar can't
-    express) -> NULL (Unknown)."""
+    """Extract a typed stat from the minValues/maxValues/nullCount JSON
+    strings in the manifest DataFrame; absent key (or a name the JSON-path
+    grammar can't express) -> NULL (Unknown)."""
     path = _stats_json_path(name)
     if path is None:
         return F.lit(None).try_cast(_SPARK_CAST[vtype])
@@ -275,7 +282,7 @@ def _rewrite_for_stats(op: dict[str, Any], partition_columns: set[str],
         # only column-vs-literal / literal-vs-column rewrites are safe
         if left.get("op") == "column" and right.get("op") == "literal":
             colname, vtype = left["name"], left["valueType"]
-            lit = F.lit(right["value"]).cast(_SPARK_CAST[right["valueType"]])
+            lit = _literal_column(right)
         elif left.get("op") == "literal" and right.get("op") == "column":
             # normalize literal-op-column to column-op'-literal
             flip = {"lessThan": "greaterThan", "greaterThan": "lessThan",
@@ -316,13 +323,7 @@ def _rewrite_for_stats(op: dict[str, Any], partition_columns: set[str],
             return inner.isNull()
         if name in parsed_fields:
             return F.col("nullCount_parsed").getField(name) > 0
-        path = _stats_json_path(name)
-        if path is None:
-            # inexpressible name -> Unknown -> keep (see _stats_json_path)
-            return F.lit(None).cast("boolean")
-        return F.get_json_object(
-            F.col("nullCount"), path
-        ).try_cast("long") > 0
+        return _json_stat("nullCount", name, "long") > 0
     if kind == "and":
         cols = [_rewrite_for_stats(c, partition_columns, parsed_fields)
                 for c in children]

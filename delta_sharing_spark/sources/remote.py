@@ -100,8 +100,9 @@ class _WireSnapshot:
 
     @property
     def column_mapping(self) -> bool:
-        return self.metadata.configuration.get(
-            "delta.columnMapping.mode", "none") == "name"
+        from delta_sharing_spark.plans.log import column_mapping_on
+
+        return column_mapping_on(self.metadata.configuration)
 
     @property
     def logical_to_physical(self) -> dict[str, str] | None:

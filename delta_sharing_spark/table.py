@@ -5,8 +5,11 @@ Re-expresses the reference's QueryTable pipeline
 filter -> SQL hint filter -> limit -> page) as DataFrame operations:
 
 - snapshot resolution / time travel  -> TableLog.snapshot(version|timestamp)
-- jsonPredicateHints (V1+V2 stats)   -> manifest filter (plans/predicates.py)
-- predicateHints (SQL, partitions)   -> manifest filter
+- jsonPredicateHints (V1+V2 stats)   -> Arrow keep mask over a driver-
+                                        resident manifest (plans/
+                                        resident.py), Catalyst filter over
+                                        a scanned one (plans/predicates.py)
+- predicateHints (SQL, partitions)   -> Catalyst manifest filter
 - limitHint                          -> running-sum cutoff over numRecords
                                         (ref DeltaSharedTableKernel.scala:446-449)
 - file list -> DataFrame             -> spark.read.parquet(files, basePath=...)
@@ -16,8 +19,9 @@ filter -> SQL hint filter -> limit -> page) as DataFrame operations:
                                         columns, schema column order — ref
                                         python/delta_sharing/reader.py:630-674)
 
-Scale notes (100 TB): the manifest prune is itself a DataFrame job, so a
-table with millions of files prunes in parallel; the data scan is a plain
+Scale notes (100 TB): above Spark's local-relation bound the manifest
+prune is itself a DataFrame job, so a table with millions of files prunes
+in parallel; the data scan is a plain
 parquet scan, so Catalyst pushes row-level filters/projections into the
 vectorized reader on top of our file-level prune.
 """
@@ -41,33 +45,33 @@ from delta_sharing_spark.plans.log import (
     Snapshot,
     TableLog,
     VersionNotFoundError,
+    column_mapping_on,
     derive_wire_protocol,
     wire_protocol,
 )
 from delta_sharing_spark.plans.predicates import (
     file_keep_condition,
-    keep_file,
     parsed_stat_fields,
     sql_hint_keep_condition,
 )
+from delta_sharing_spark.plans.resident import ResidentManifest
 
-# Where a prune runs is decided in ONE place, ``SharedTable.
-# _prunes_on_driver``: a snapshot whose file list is in memory, or cheap to
-# load (at most this many files), and no SQL hints prunes as a driver loop
-# over ``snapshot.files`` and keeps the AddFile objects themselves. Every
-# other prune is a DataFrame filter over ``TableLog.files_df`` that
-# collects the kept ``path, action_json``. That DataFrame is driver-
-# resident up to Spark's local-relation bound (about 80k files at the
-# default 48 MB): Catalyst evaluates the filter while optimizing, with no
-# Spark job and no AddFile objects. Above the bound it scans the
-# checkpoint, and the prune is a Spark job (~0.3-0.4 s of fixed overhead)
-# that scales out where a driver loop would not. SQL hints need Catalyst
-# (F.expr), so they always take the DataFrame side. The reference pages
-# file listings at 10k for the same crossover reason (ServerConfig.scala:
-# 93). Both evaluators implement identical three-valued semantics,
-# enforced by the hypothesis property suite (tests/test_property_pruning.py)
-# under both manifest storages.
-PRUNE_DRIVER_MAX_FILES = 10_000
+# Where a prune runs follows the manifest's storage (``TableLog.
+# _manifest_entry``). A driver-resident manifest — any manifest whose
+# AddFiles already live on the driver, and a checkpoint's up to Spark's
+# local-relation bound (about 80k files at the default 48 MB) — is one
+# path-sorted Arrow table: json predicate hints, the limitHint cutoff,
+# path-range pages and file counts run as vectorized pyarrow kernels
+# (plans/resident.py) with no Spark job and no Catalyst plan, and only the
+# kept rows' action_json is parsed. Above the bound the checkpoint is
+# scanned and Catalyst prunes it (``_pruned_manifest``) as a Spark job
+# (~0.3-0.4 s of fixed overhead) that scales out. SQL predicateHints need
+# Catalyst (F.expr) on either storage; over a resident manifest Catalyst
+# folds them into its LocalRelation, still with no job. Both evaluators
+# implement identical three-valued semantics, enforced by the parity
+# tests (tests/test_typed_stats.py::TestManifestStorageParity) and the
+# hypothesis property suite (tests/test_property_pruning.py) under both
+# storages; ``keep_file`` stays the sessionless reference.
 
 # Page tokens expire after 3 days (ref queryTablePageTokenTtlMs,
 # ServerConfig.scala:94)
@@ -321,9 +325,9 @@ class SharedTable:
         }
 
     # Above this many commits, DESCRIBE HISTORY builds from a distributed
-    # text scan of the commit files instead of a driver loop (same
-    # crossover rationale as PRUNE_DRIVER_MAX_FILES: a Spark job costs
-    # ~0.3 s fixed, a driver loop over 100k commit files costs minutes).
+    # text scan of the commit files instead of a driver loop (a Spark job
+    # costs ~0.3 s fixed, a driver loop over 100k commit files costs
+    # minutes).
     HISTORY_DRIVER_MAX_COMMITS = 512
 
     def detail(self) -> DataFrame:
@@ -495,18 +499,6 @@ class SharedTable:
         return [a.path for a in self.kept_adds(
             snapshot, json_predicate_hints, predicate_hints, limit_hint)]
 
-    @staticmethod
-    def _prunes_on_driver(snapshot: Snapshot,
-                          predicate_hints: list[str] | None) -> bool:
-        """Whether a prune runs as a driver loop over ``snapshot.files``
-        (see PRUNE_DRIVER_MAX_FILES): no SQL hints, and the file list is
-        already in memory or small. The size check reads the lazy hint
-        (checkpoint row count + tail), so a big manifest is never
-        materialized just to count it."""
-        return not predicate_hints and (
-            snapshot.files_materialized
-            or (snapshot.num_files_hint or 0) <= PRUNE_DRIVER_MAX_FILES)
-
     def kept_adds(
         self,
         snapshot: Snapshot,
@@ -520,31 +512,54 @@ class SharedTable:
         SQL hints (partitions only, best-effort) -> limit cutoff on
         cumulative numRecords.
 
-        ``_prunes_on_driver`` picks the side. The driver loop filters the
-        in-memory file list with the sessionless evaluator and runs no
-        Spark job. Otherwise the kept ``path, action_json`` rows are
-        collected from the pruned manifest: no Spark job while
-        ``files_df`` is driver-resident, ONE above Spark's local-relation
-        bound (plus the limit cutoff's own jobs there)."""
+        A driver-resident manifest prunes in Arrow (``_resident_rows``)
+        and parses only the kept rows' ``action_json``: no Spark job.
+        Otherwise the kept ``path, action_json`` rows are collected from
+        the Catalyst-pruned scan (``_pruned_manifest``): ONE Spark job,
+        plus the limit cutoff's own jobs."""
         # column mapping: file partitionValues/stats are keyed by PHYSICAL
         # names — translate the hints (and evaluate against the physical
         # partition columns) or pruning silently degrades to keep-all
         json_predicate_hints = self.log._physical_hints(
             snapshot, json_predicate_hints)
-        if not self._prunes_on_driver(snapshot, predicate_hints):
+        resident = self.log.resident_manifest(snapshot)
+        if resident is None:
             return self._manifest_adds(self._pruned_manifest(
                 snapshot, json_predicate_hints, predicate_hints,
                 limit_hint))
-        pcols = snapshot.physical_partition_columns
-        files = [  # path-sorted by Snapshot construction
-            f for f in snapshot.files
-            if not json_predicate_hints
-            or keep_file(json_predicate_hints, f.partitionValues,
-                         f.stats_dict(), pcols)]
+        rows = self._resident_rows(resident, snapshot, json_predicate_hints,
+                                   predicate_hints, limit_hint)
+        return [parse_action(js)
+                for js in rows.column("action_json").to_pylist()]
+
+    def _resident_rows(self, resident: ResidentManifest, snapshot: Snapshot,
+                       json_predicate_hints: dict | None,
+                       predicate_hints: list[str] | None,
+                       limit_hint: int | None):
+        """The kept rows of a driver-resident manifest, path-sorted: the
+        Arrow keep mask of the json hints, the SQL hints' kept paths
+        (Catalyst folds them into the resident LocalRelation), then the
+        limit cutoff. ``json_predicate_hints`` must already be translated
+        to physical names."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        rows = resident.table
+        mask = resident.keep_mask(
+            json_predicate_hints, snapshot.physical_partition_columns
+        ) if json_predicate_hints else None
+        if predicate_hints:
+            paths = self._pruned_manifest(snapshot, None, predicate_hints,
+                                          None).select("path").collect()
+            sql = pc.is_in(rows.column("path"), value_set=pa.array(
+                [r[0] for r in paths], pa.string()))
+            mask = sql if mask is None else pc.and_(mask, sql)
+        if mask is not None:
+            rows = rows.filter(mask)
         if limit_hint is not None:
-            files = files[:_limit_cutoff(
-                (f.logical_records for f in files), limit_hint)]
-        return files
+            rows = rows.slice(0, _limit_cutoff(
+                rows.column("numRecords").to_pylist(), limit_hint))
+        return rows
 
     @staticmethod
     def _manifest_adds(manifest: DataFrame) -> list[AddFile]:
@@ -623,9 +638,7 @@ class SharedTable:
         path order) is below the limit (kernel early-termination semantics:
         DeltaSharedTableKernel.scala:446-449,723-733).
 
-        A driver-resident manifest collects its ``path, numRecords`` with
-        no Spark job, so the prefix sum is a driver sort there. Otherwise,
-        a distributed two-phase prefix sum — no unpartitioned window: range-
+        A distributed two-phase prefix sum — no unpartitioned window: range-
         partition the manifest by path (persisted, because the range
         partitioner samples per job — both phases must see the SAME
         boundaries), collect the P per-partition totals (P rows, not P
@@ -635,14 +648,6 @@ class SharedTable:
         never funnels through a single task."""
         from pyspark.storagelevel import StorageLevel
 
-        if TableLog._driver_resident(manifest):
-            # the kept files are a path-order prefix: one range predicate
-            # folds back in (an IN list of them would be evaluated per
-            # row and per listed path)
-            rows = sorted(manifest.select("path", "numRecords").collect())
-            kept = _limit_cutoff((n for _, n in rows), limit_hint)
-            return manifest.filter(F.col("path") <= rows[kept - 1][0]
-                                   if kept else F.lit(False))
         parts = max(1, manifest.sparkSession.sparkContext.defaultParallelism)
         m = (
             # ONLY the columns the prefix sum needs: dragging the wide
@@ -802,7 +807,7 @@ class SharedTable:
         cfg = snap.metadata.configuration or {}
         dv = cfg.get("delta.enableDeletionVectors",
                      cfg.get("enableDeletionVectors", "")).lower() == "true"
-        cm = cfg.get("delta.columnMapping.mode") == "name"
+        cm = column_mapping_on(cfg)
 
         def has_ntz(dt) -> bool:
             if isinstance(dt, T.TimestampNTZType):
@@ -883,14 +888,12 @@ class SharedTable:
 
         ``metadata_only`` (getTableMetadata) lists no files: the response
         is the ``protocol`` and ``metaData`` lines, whose counts come from
-        the memoized ``file_counts``. A listing prunes where
-        ``_prunes_on_driver`` says. An unpaged listing fetches its kept
-        actions through ``kept_adds``; a paged listing that does not
-        prune on the driver cuts its page from the pruned manifest (no
-        Spark job while the manifest is driver-resident, one above
-        Spark's local-relation bound). A paged listing ignores SQL hints
-        in that choice, so it never materializes a large lazy
-        snapshot."""
+        the memoized ``file_counts``. An unpaged listing fetches its kept
+        actions through ``kept_adds``. A paged listing cuts its page by
+        path range from the kept rows: in Arrow on a driver-resident
+        manifest (no Spark job, and only the page's ``action_json`` is
+        parsed), from the Catalyst-pruned scan otherwise (one Spark job).
+        Neither materializes a lazy snapshot."""
         import base64
         import time as _time
 
@@ -996,52 +999,56 @@ class SharedTable:
         next_token = None
         if metadata_only:
             page = []  # getTableMetadata (includeFiles=false): no listing
-        elif (max_files is not None
-                and not self._prunes_on_driver(snap, None)):
-            # paged query over a large LAZY manifest (SQL hints do not
-            # matter here): prune + path-order + page cut run as ONE
-            # Spark job (none while the manifest is driver-resident,
-            # below) and the driver holds only the served page's
+        elif max_files is None:
+            # kept_adds keeps a large LAZY snapshot lazy (the pruned
+            # manifest yields only the kept actions): the unpaged route
+            # must never pin an O(files) AddFile dict to serve a pruned
+            # (or even full — that response is O(files) anyway) listing
+            page = self.kept_adds(snap, json_predicate_hints,
+                                  predicate_hints, limit_hint)[start:]
+        else:
+            # paged listing: the driver holds only the served page's
             # actions — a 5M-file table never materializes 5M AddFiles
-            # to serve a 1000-file page (the
-            # reference kernel's per-batch iteration with early stop,
-            # DeltaSharedTableKernel.scala:293-297,446-449). Fetching
-            # max_files+1 rows answers has-next without a count job.
+            # to serve a 1000-file page (the reference kernel's per-batch
+            # iteration with early stop, DeltaSharedTableKernel.scala:
+            # 293-297,446-449). Fetching max_files+1 rows answers
+            # has-next without a count.
             #
             # Pages cut by PATH RANGE, not row offset: the token carries
             # the last served path, so page N+1 is filter(path > last) +
-            # top-(page+1) — every page pays the same top-k heap of ONE
-            # page size, and the path predicate pushes into the
-            # checkpoint's parquet scan. An offset cut would grow the
-            # heap to offset+page rows and re-discard every earlier page
-            # per request (measured: page 2 ≥ page 1 at 10M files).
+            # top-(page+1) — on a scanned manifest every page pays the
+            # same top-k heap of ONE page size, and the path predicate
+            # pushes into the checkpoint's parquet scan. An offset cut
+            # would grow the heap to offset+page rows and re-discard
+            # every earlier page per request (measured: page 2 ≥ page 1
+            # at 10M files). A token with a start but no lastPath (minted
+            # before path-range pages) is honored via the offset form
+            # once; the token minted below upgrades the walk.
             jph = self.log._physical_hints(snap, json_predicate_hints)
-            manifest = self._pruned_manifest(
-                snap, jph, predicate_hints, limit_hint)
-            sel = manifest.select("path", "action_json")
-            if last_path is not None:
-                sel = sel.filter(F.col("path") > last_path)
-            if self.log._driver_resident(manifest) and (
-                    last_path is not None or not start):
-                # a driver-resident manifest is path-sorted and Catalyst
-                # folds the filter and the limit into its LocalRelation:
-                # no sort, no Spark job
-                rows = sel.limit(max_files + 1).collect()
-            elif last_path is not None:
-                rows = sel.orderBy("path").limit(max_files + 1).collect()
+            resident = self.log.resident_manifest(snap)
+            if resident is not None:
+                import bisect
+
+                rows = self._resident_rows(resident, snap, jph,
+                                           predicate_hints, limit_hint)
+                # path-sorted rows: the path range is a binary search
+                first = start if last_path is None else bisect.bisect_right(
+                    rows.column("path"), last_path, key=lambda p: p.as_py())
+                js = rows.slice(first, max_files + 1).column(
+                    "action_json").to_pylist()
             else:
-                # start > 0 without lastPath = a pre-r10 token: honor it
-                # via the offset form once; the token minted BELOW
-                # upgrades the walk to path-range cuts
-                rows = (
-                    sel.orderBy("path")
-                    .offset(start)
-                    .limit(max_files + 1)
-                    .collect()
-                )
-            page = [parse_action(r["action_json"])
-                    for r in rows[:max_files]]
-            if len(rows) > max_files:
+                sel = self._pruned_manifest(
+                    snap, jph, predicate_hints, limit_hint
+                ).select("path", "action_json")
+                if last_path is not None:
+                    sel = sel.filter(F.col("path") > last_path).orderBy(
+                        "path")
+                else:
+                    sel = sel.orderBy("path").offset(start)
+                js = [r["action_json"]
+                      for r in sel.limit(max_files + 1).collect()]
+            page = [parse_action(j) for j in js[:max_files]]
+            if len(js) > max_files:
                 payload = {"version": snap.version,
                            "start": start + max_files}
                 if page:
@@ -1050,19 +1057,6 @@ class SharedTable:
                     # a zero-file page (metadata probes) advances nothing
                     payload["lastPath"] = last_path
                 next_token = mint_page_token(payload, checksum)
-        else:
-            # kept_adds keeps a large LAZY snapshot lazy (the pruned
-            # manifest yields only the kept actions): the unpaged route
-            # must never pin an O(files) AddFile dict to serve a pruned
-            # (or even full — that response is O(files) anyway) listing
-            files = self.kept_adds(snap, json_predicate_hints,
-                                   predicate_hints, limit_hint)
-            end = (len(files) if max_files is None
-                   else min(start + max_files, len(files)))
-            page = files[start:end]
-            if end < len(files):
-                next_token = mint_page_token(
-                    {"version": snap.version, "start": end}, checksum)
         lines: list[dict[str, Any]] = [
             {"protocol": wire_protocol(snap.column_mapping)},
             {
@@ -1239,8 +1233,7 @@ class SharedTable:
                     out.append((False, {"protocol": {
                         **proto_line, "version": v}}))
             if commit.metadata is not None:
-                cm_next = (commit.metadata.configuration or {}).get(
-                    "delta.columnMapping.mode") == "name"
+                cm_next = column_mapping_on(commit.metadata.configuration)
                 if cm_next and responded_format == "parquet":
                     # files after this commit carry PHYSICAL names a
                     # parquet-profile client cannot decode — same feature

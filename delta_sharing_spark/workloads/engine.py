@@ -256,7 +256,8 @@ def eng_snapshot_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Engine-path full snapshot scan — the BASELINE.md <=2x-of-plain-Spark
     surface, benchmarked against its plain twin ``plain_snapshot_full``.
     The read path is zero-Spark-job on the metadata plane: cached snapshot
-    + driver-loop prune (``SharedTable._prunes_on_driver``)."""
+    + the Arrow prune of its driver-resident manifest
+    (``TableLog.resident_manifest``)."""
     t = SharedTable(spark, _lineitem_shared(spark, sf_dir))
     return t.to_df()
 
@@ -287,9 +288,9 @@ def plain_snapshot_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def eng_snapshot_pruned(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Engine-path partition-pruned scan (file-level prune via the driver
-    loop, then the exact client-side filter per the best-effort contract,
-    PROTOCOL.md:2124-2137)."""
+    """Engine-path partition-pruned scan (file-level prune of the
+    driver-resident manifest in Arrow, then the exact client-side filter
+    per the best-effort contract, PROTOCOL.md:2124-2137)."""
     t = SharedTable(spark, _lineitem_shared(spark, sf_dir))
     hints = {"op": "equal", "children": [
         {"op": "column", "name": "l_returnflag", "valueType": "string"},
@@ -357,8 +358,8 @@ def eng_prune_typed_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     manifest = t.log.files_df(snap)
     assert parsed_stat_fields(manifest), \
         "checkpointed manifest must carry the typed stats structs"
-    # force the DataFrame prune (kept_adds would driver-loop this small
-    # table)
+    # force the Catalyst prune (kept_adds would prune this driver-resident
+    # manifest in Arrow)
     adds = t._manifest_adds(t._pruned_manifest(snap, hints, None, None))
     df = t.log.read_adds(adds, snap=snap)
     return df.filter(F.col("l_quantity") >= 48).agg(

@@ -38,12 +38,12 @@ def table_dir(tmp_path):
 
 
 class ManifestStorage:
-    """How ``TableLog.files_df`` stores a checkpointed manifest, toggled
-    with Spark's own local-relation bound on the manifest session:
-    "resident" keeps the default bound (a small manifest becomes one
-    driver-side ``LocalRelation``), "scan" sets it to 0 (the checkpoint
-    is scanned). Build the ``TableLog`` inside the test: ``files_df``
-    caches per log."""
+    """How ``TableLog`` stores a manifest, toggled with Spark's own
+    local-relation bound on the manifest session: "resident" keeps the
+    default bound (a small manifest is one driver-side Arrow table,
+    pruned in Arrow), "scan" sets it to 0 (residency off: the checkpoint
+    is scanned and Catalyst prunes). Build the ``TableLog`` inside the
+    test: manifests are cached per log."""
 
     KEY = "spark.sql.execution.arrow.localRelationThreshold"
     NAMES = ("resident", "scan")
@@ -51,16 +51,16 @@ class ManifestStorage:
     def __init__(self, name: str):
         self.name = name
 
-    def check(self, manifest) -> None:
-        """Assert that ``manifest`` (a ``files_df``) has this storage."""
-        plan = manifest._jdf.queryExecution().logical()
-        resident = plan.getClass().getSimpleName() == "LocalRelation"
-        assert resident == (self.name == "resident"), plan.toString()
+    def check(self, log, snapshot) -> None:
+        """Assert that ``log`` keeps ``snapshot``'s manifest in this
+        storage."""
+        resident = log.resident_manifest(snapshot) is not None
+        assert resident == (self.name == "resident"), self.name
 
 
 @contextmanager
 def manifest_storage_set(spark, name: str):
-    """Within the block, ``files_df`` builds ``name`` storage (one of
+    """Within the block, ``TableLog`` builds ``name`` storage (one of
     ``ManifestStorage.NAMES``); yields the ``ManifestStorage``. Tests that
     keep their id loop over both storages with it."""
     from delta_sharing_spark.plans.log import manifest_session

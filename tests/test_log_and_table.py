@@ -722,8 +722,8 @@ class TestProjectionNormalization:
 
 class TestLimitPrefixSum:
     def test_large_manifest_cutoff_matches_driver_loop(self, spark):
-        # 25k-file synthetic manifest — the >PRUNE_DRIVER_MAX_FILES shape
-        # the DataFrame path exists for. The distributed two-phase prefix
+        # 25k-file synthetic manifest — the scanned-manifest shape the
+        # DataFrame path exists for. The distributed two-phase prefix
         # sum must keep exactly the files a sequential scan would.
         from delta_sharing_spark.table import SharedTable
 
@@ -4130,8 +4130,7 @@ class TestLazyManifest:
 
     @pytest.fixture(scope="class")
     def forged(self, spark, tmp_path_factory):
-        """A 12k-file table forged via the engine's own checkpoint writer
-        (just above PRUNE_DRIVER_MAX_FILES so the lazy paths engage),
+        """A 12k-file table forged via the engine's own checkpoint writer,
         plus one real tail commit on top."""
         import sys as _sys
 

@@ -277,9 +277,10 @@ def test_nested_missing_stats_only_widen(rows_data, tree):
 
 # --- manifest storage (driver-resident vs scan) ------------------------
 #
-# The same random predicates pruned on the manifest plane of a real
-# checkpointed table with a tail, under both storages ``files_df`` picks
-# (the ``manifest_storage`` fixture): the kept set, including a limitHint
+# The same random predicates pruned through ``kept_adds`` on a real
+# checkpointed table with a tail, under both manifest storages (the
+# ``manifest_storage`` fixture: Arrow over a driver-resident manifest,
+# Catalyst over a scanned one): the kept set, including a limitHint
 # cutoff, must equal the sessionless driver loop's.
 
 
@@ -319,7 +320,7 @@ def test_manifest_storage_matches_driver_loop(
 
     table = SharedTable(spark, storage_table)
     snap = table.log.snapshot()
-    manifest_storage.check(table.log.files_df(snap))
+    manifest_storage.check(table.log, snap)
     files = sorted(TableLog(spark, storage_table).snapshot().files,
                    key=lambda a: a.path)
     want, total = [], 0
@@ -330,8 +331,7 @@ def test_manifest_storage_matches_driver_loop(
             break
         want.append(a.path)
         total += a.logical_records
-    got = sorted(r["path"] for r in table._pruned_manifest(
-        snap, tree, None, limit).select("path").collect())
+    got = sorted(a.path for a in table.kept_adds(snap, tree, None, limit))
     assert got == want
 
 

@@ -472,7 +472,7 @@ class TestNestedTypedStats:
                 log.append(hi)
                 snap = log.snapshot()
                 m = log.files_df(snap)
-                storage.check(m)
+                storage.check(log, snap)
                 pf = parsed_stat_fields(m)
                 assert "m.qty" in pf
                 kept = {r["path"] for r in m.filter(
@@ -512,7 +512,7 @@ class TestSparkJobCheckpoint:
         cp = os.path.join(log.log_path, _fmt_checkpoint(v))
         os.remove(cp) if os.path.isfile(cp) else __import__(
             "shutil").rmtree(cp)
-        log._files_df_cache.clear()
+        log._manifest_cache.clear()
         monkeypatch.setattr(L, "CHECKPOINT_PARALLEL_MIN_FILES", 1)
         out = log.write_checkpoint(version=v)
         assert out == cp and os.path.isdir(cp)
@@ -552,7 +552,7 @@ class TestSparkJobCheckpoint:
         serial = _checkpoint_rows(log)
         cp = os.path.join(log.log_path, _fmt_checkpoint(v))
         os.remove(cp) if os.path.isfile(cp) else shutil.rmtree(cp)
-        log._files_df_cache.clear()
+        log._manifest_cache.clear()
         monkeypatch.setattr(L, "CHECKPOINT_PARALLEL_MIN_FILES", 1)
         out = log.write_checkpoint(version=v)
         # the Spark job wrote it (part directory), no decline
@@ -609,7 +609,7 @@ class TestSparkJobCheckpoint:
                 os.remove(fp)
                 if os.path.exists(fp + ".sha256"):
                     os.remove(fp + ".sha256")
-        log._files_df_cache.clear()
+        log._manifest_cache.clear()
         monkeypatch.setattr(L, "CHECKPOINT_PARALLEL_MIN_FILES", 1)
         log.write_checkpoint(version=v)
         spark_rows = _checkpoint_rows(log)
@@ -657,7 +657,7 @@ class TestSparkJobCheckpoint:
                 os.remove(fp)
                 if os.path.exists(fp + ".sha256"):
                     os.remove(fp + ".sha256")
-        log._files_df_cache.clear()
+        log._manifest_cache.clear()
         monkeypatch.setattr(L, "CHECKPOINT_PARALLEL_MIN_FILES", 1)
         out = log.write_checkpoint(version=v)
         spark_rows = _checkpoint_rows(log)
@@ -687,7 +687,7 @@ class TestSparkJobCheckpoint:
                 log.write_checkpoint()
                 snap = log.snapshot()
                 manifest = log.files_df(snap)
-                storage.check(manifest)
+                storage.check(log, snap)
                 layout = ["kind", "action_json", "path", "partitionValues",
                           "size", "numRecords", "minValues", "maxValues",
                           "nullCount", "version", "timestamp"]

@@ -59,22 +59,24 @@ class TestLazyServingPlane:
         log.append(df.selectExpr("id + 20000 as id", "v", "cat"))
         return d
 
-    def _forbid(self, monkeypatch):
+    def _forbid(self, spark, monkeypatch, request):
+        from contextlib import ExitStack
+
         import delta_sharing_spark.plans.log as L
-        import delta_sharing_spark.table as Tmod
 
         def boom(self, version):
             raise AssertionError(
                 "public serving path materialized the full AddFile set")
 
         monkeypatch.setattr(L.TableLog, "_read_checkpoint_adds", boom)
-        # force the DataFrame plane (production shape: hint above the
-        # driver-loop threshold) — at/below the threshold the driver
-        # loop materializes by design, which is O(response) there
-        monkeypatch.setattr(Tmod, "PRUNE_DRIVER_MAX_FILES", -1)
+        # force the scanned checkpoint (production shape above Spark's
+        # local-relation bound): Catalyst prunes the DataFrame plane
+        stack = ExitStack()
+        stack.enter_context(manifest_storage_set(spark, "scan"))
+        request.addfinalizer(stack.close)
 
-    def test_to_df_paths_stay_lazy(self, spark, env, monkeypatch):
-        self._forbid(monkeypatch)
+    def test_to_df_paths_stay_lazy(self, spark, env, monkeypatch, request):
+        self._forbid(spark, monkeypatch, request)
         st = SharedTable(spark, env)  # cold log: nothing cached
         assert st.to_df().count() == 12000
         hints = {"op": "greaterThan",
@@ -86,7 +88,8 @@ class TestLazyServingPlane:
         assert st.to_df(limit=7).count() == 7
         assert not st.log.snapshot().files_materialized
 
-    def test_rest_routes_stay_lazy(self, spark, env, monkeypatch):
+    def test_rest_routes_stay_lazy(self, spark, env, monkeypatch,
+                                   request):
         import urllib.request
 
         from delta_sharing_spark.catalog import ShareCatalog
@@ -97,7 +100,7 @@ class TestLazyServingPlane:
         srv = SharingServer(cat, bearer_token="tok")
         url = srv.serve_background()
         try:
-            self._forbid(monkeypatch)
+            self._forbid(spark, monkeypatch, request)
 
             def post(path, body):
                 req = urllib.request.Request(
@@ -136,18 +139,19 @@ class TestLazyServingPlane:
         finally:
             srv.shutdown()
 
-    def test_cdf_stays_lazy(self, spark, env, monkeypatch):
+    def test_cdf_stays_lazy(self, spark, env, monkeypatch, request):
         from delta_sharing_spark.cdf import table_changes
 
-        self._forbid(monkeypatch)
+        self._forbid(spark, monkeypatch, request)
         ch = table_changes(spark, env, starting_version=0)
         assert ch.count() >= 12000
 
-    def test_checkpoint_writes_stay_lazy(self, spark, env, monkeypatch):
+    def test_checkpoint_writes_stay_lazy(self, spark, env, monkeypatch,
+                                         request):
         import delta_sharing_spark.plans.log as L
 
         log = TableLog(spark, env)
-        self._forbid(monkeypatch)
+        self._forbid(spark, monkeypatch, request)
         monkeypatch.setattr(L, "CHECKPOINT_PARALLEL_MIN_FILES", 1)
         v = log.latest_version()
         out = log.write_checkpoint(version=v)  # Spark-job path
@@ -592,14 +596,13 @@ class TestForkedMaterialize:
         # serving plane: with the production large-table shape forced
         # (small-manifest hybrids off), serving stays lazy regardless
         import delta_sharing_spark.plans.log as L
-        import delta_sharing_spark.table as Tmod
 
         monkeypatch.setattr(L, "CHECKPOINT_PARALLEL_MIN_FILES", 1)
-        monkeypatch.setattr(Tmod, "PRUNE_DRIVER_MAX_FILES", -1)
-        t = SharedTable(spark, cp_table)
-        snap = t.log.snapshot()
-        assert t.to_df().count() == 6000
-        assert not snap.files_materialized
+        with manifest_storage_set(spark, "scan"):
+            t = SharedTable(spark, cp_table)
+            snap = t.log.snapshot()
+            assert t.to_df().count() == 6000
+            assert not snap.files_materialized
 
 
 class TestFilesDfCacheInvalidation:
@@ -624,7 +627,7 @@ class TestFilesDfCacheInvalidation:
                 log.write_checkpoint()
                 snap = log.snapshot()
                 n0 = log.files_df(snap).count()
-                storage.check(log.files_df(snap))
+                storage.check(log, snap)
                 # reinstall the checkpoint at the same version
                 # (maintenance rewrite) — multi-part path forced so the
                 # dir really swaps
@@ -661,7 +664,7 @@ class TestFilesDfCacheInvalidation:
                 reader = TableLog(spark, d)
                 rsnap = reader.snapshot()
                 n0 = reader.files_df(rsnap).count()
-                storage.check(reader.files_df(rsnap))
+                storage.check(reader, rsnap)
                 old_parts = L.CHECKPOINT_PART_ROWS
                 try:
                     # force the multi-part dir swap
@@ -702,7 +705,7 @@ class TestServeDuringReinstall:
                 reader = TableLog(spark, d)
                 rsnap = reader.snapshot()
                 expect = reader.files_df(rsnap).count()
-                storage.check(reader.files_df(rsnap))
+                storage.check(reader, rsnap)
 
                 old = L.CHECKPOINT_PART_ROWS
                 try:

@@ -18,6 +18,7 @@ import pytest
 
 from delta_sharing_spark.catalog import TABLE_CACHE_SIZE, ShareCatalog
 from delta_sharing_spark.plans.log import TableLog, VersionNotFoundError
+from delta_sharing_spark.plans.resident import ResidentManifest
 from delta_sharing_spark.server import SharingServer
 from tests.conftest import ManifestStorage, manifest_storage_set
 
@@ -221,21 +222,18 @@ class TestConcurrentHandle:
             assert len({body for _, body in outs}) == 1, key
 
 
-    def test_resident_manifests_from_eight_threads(self, spark, tmp_path,
-                                                   monkeypatch):
-        # hinted prunes of two versions interleaved on one handle: only
-        # the newer version's manifest stays driver-resident (one per
-        # log), and every answer must still be its own version's
+    def test_resident_manifests_from_eight_threads(self, spark, tmp_path):
+        # hinted prunes of two versions interleaved on one handle: both
+        # versions' manifests fit the log's resident budget, and every
+        # answer must still be its own version's
         import sys
 
-        import delta_sharing_spark.table as table_mod
         from delta_sharing_spark.table import SharedTable
 
         path = str(tmp_path / "t")
         log = _build(spark, path, commits=3)
         log.write_checkpoint()
         log.append(_rows(spark, 500, 560))
-        monkeypatch.setattr(table_mod, "PRUNE_DRIVER_MAX_FILES", -1)
         hint = _hint("greaterThanOrEqual", "id", "long", 100)
         handle = SharedTable(spark, path)
         want = {v: sorted(_kept(TableLog(spark, path).snapshot(version=v),
@@ -268,8 +266,8 @@ class TestConcurrentHandle:
             sys.setswitchinterval(old)
         assert not any(th.is_alive() for th in threads)
         assert not errors, errors
-        assert {v for v, e in handle.log._files_df_cache.items()
-                if e[3]} == {3}
+        assert {v for v, e in handle.log._manifest_cache.items()
+                if isinstance(e, ResidentManifest)} == {2, 3}
 
 
 def _kept(snap, hint: str) -> list[str]:
@@ -311,19 +309,15 @@ def _job_ids(spark) -> set[int]:
 
 
 class TestJobBudget:
-    """Served requests on a checkpointed table with a tail, pruned on the
-    manifest plane (``PRUNE_DRIVER_MAX_FILES`` patched to -1): the
-    manifest fits Spark's local-relation bound, so it is driver-resident
-    and a warm hinted query runs no Spark job."""
+    """Served requests on a checkpointed table with a tail: the manifest
+    fits Spark's local-relation bound, so it is driver-resident and a
+    warm hinted query runs no Spark job."""
 
     @staticmethod
-    def _table(spark, path, monkeypatch) -> TableLog:
-        import delta_sharing_spark.table as table_mod
-
+    def _table(spark, path) -> TableLog:
         log = _build(spark, path, commits=3)
         log.write_checkpoint()
         log.append(_rows(spark, 500, 560))     # a tail after the checkpoint
-        monkeypatch.setattr(table_mod, "PRUNE_DRIVER_MAX_FILES", -1)
         return log
 
     @staticmethod
@@ -333,9 +327,9 @@ class TestJobBudget:
         return out, len(_job_ids(spark) - before)
 
     def test_large_manifest_query_and_metadata_run_no_job(
-            self, spark, served, monkeypatch):
+            self, spark, served):
         srv, client, path = served
-        self._table(spark, path, monkeypatch)
+        self._table(spark, path)
         hint = {"jsonPredicateHints": _hint("lessThan", "id", "long", 120)}
         warm = client.lines(Q + "/query", hint)
         query, n_query = self._jobs(spark, client, Q + "/query", {
@@ -350,10 +344,9 @@ class TestJobBudget:
         assert [next(iter(ln)) for ln in meta] == ["protocol", "metaData"]
         assert meta[1] == warm[1]
 
-    def test_query_after_append_runs_no_job(self, spark, served,
-                                            monkeypatch):
+    def test_query_after_append_runs_no_job(self, spark, served):
         srv, client, path = served
-        log = self._table(spark, path, monkeypatch)
+        log = self._table(spark, path)
         hint = {"jsonPredicateHints": _hint("greaterThanOrEqual", "id",
                                             "long", 500)}
         before = client.lines(Q + "/query", hint)
@@ -381,7 +374,7 @@ class TestJobBudget:
             with manifest_storage_set(spark, name) as storage:
                 fresh = TableLog(spark, path)
                 snap = fresh.snapshot()
-                storage.check(fresh.files_df(snap))
+                storage.check(fresh, snap)
                 assert not snap.files_materialized
                 before = _job_ids(spark)
                 counts[name] = fresh.file_counts(snap)
@@ -393,32 +386,92 @@ class TestJobBudget:
             len(files), sum(f.size for f in files))
 
     def test_alternating_versions_keep_one_resident_manifest(
-            self, spark, served, monkeypatch):
-        # the newest version's manifest stays resident (no job); an older
-        # version takes its cached scan plan (one job) instead of
-        # rebuilding a resident manifest on every alternation
-        srv, client, path = served
-        log = self._table(spark, path, monkeypatch)
-        new = log.latest_version()
-        hint = _hint("greaterThanOrEqual", "id", "long", 100)
-        first = {v: client.lines(Q + "/query", {
-            "jsonPredicateHints": hint, "version": v})
-            for v in (new, new - 1)}
-        for _ in range(2):
-            for v, jobs in ((new, 0), (new - 1, 1)):
-                out, n = self._jobs(spark, client, Q + "/query", {
-                    "jsonPredicateHints": hint, "version": v})
-                assert (n, out) == (jobs, first[v]), v
-        cache = srv.catalog.load_table("s.d.t").log._files_df_cache
-        assert {v for v, e in cache.items() if e[3]} == {new}
-        assert cache[new - 1][1] is not None   # the scan plan's checkpoint
-
-    def test_above_local_relation_bound_keeps_scan_plan(
-            self, spark, served, monkeypatch):
+            self, spark, served):
+        # a resident budget that holds one version's manifest: the newest
+        # stays resident (no job); an older version takes its cached scan
+        # plan (one job) instead of rebuilding a resident manifest on
+        # every alternation
         from delta_sharing_spark.plans.log import manifest_session
 
         srv, client, path = served
-        self._table(spark, path, monkeypatch)
+        log = self._table(spark, path)
+        new = log.latest_version()
+        hint = _hint("greaterThanOrEqual", "id", "long", 100)
+        first = {new: client.lines(Q + "/query", {
+            "jsonPredicateHints": hint, "version": new})}
+        cache = srv.catalog.load_table("s.d.t").log._manifest_cache
+        meta = manifest_session(spark)
+        meta.conf.set(ManifestStorage.KEY, str(cache[new].nbytes))
+        try:
+            first[new - 1] = client.lines(Q + "/query", {
+                "jsonPredicateHints": hint, "version": new - 1})
+            for _ in range(2):
+                for v, jobs in ((new, 0), (new - 1, 1)):
+                    out, n = self._jobs(spark, client, Q + "/query", {
+                        "jsonPredicateHints": hint, "version": v})
+                    assert (n, out) == (jobs, first[v]), v
+        finally:
+            meta.conf.unset(ManifestStorage.KEY)
+        assert {v for v, e in cache.items()
+                if isinstance(e, ResidentManifest)} == {new}
+        assert cache[new - 1][1] is not None   # the scan plan's checkpoint
+
+    def test_resident_requests_build_no_dataframe(self, spark, served,
+                                                  monkeypatch):
+        # hinted, limitHint and paged requests on a driver-resident
+        # manifest are served from its Arrow table: no manifest
+        # DataFrame, no AddFile materialization and no Spark job, for
+        # the latest version and for an older one (both fit the budget)
+        srv, client, path = served
+        log = self._table(spark, path)
+        new = log.latest_version()
+        hint = _hint("greaterThanOrEqual", "id", "long", 100)
+        want = {v: sorted(_kept(TableLog(spark, path).snapshot(version=v),
+                                hint))
+                for v in (new, new - 1)}
+        every = {v: sorted(a.path for a in
+                           TableLog(spark, path).snapshot(version=v).files)
+                 for v in (new, new - 1)}
+
+        def boom(*args, **kwargs):
+            raise AssertionError("served through the manifest DataFrame "
+                                 "or materialized AddFiles")
+
+        monkeypatch.setattr(TableLog, "files_df", boom)
+        monkeypatch.setattr(TableLog, "_read_checkpoint_adds", boom)
+        client.lines(Q + "/query", {"jsonPredicateHints": _hint(
+            "lessThan", "id", "long", 120)})            # resolves the handle
+        for v in (new, new - 1):
+            out, n = self._jobs(spark, client, Q + "/query", {
+                "jsonPredicateHints": hint, "version": v})
+            assert n == 0, v
+            assert sorted(ln["file"]["id"] for ln in out
+                          if "file" in ln) == want[v], v
+            out, n = self._jobs(spark, client, Q + "/query", {
+                "limitHint": 60, "version": v})
+            assert n == 0, v
+            assert 0 < sum("file" in ln for ln in out) < len(every[v])
+            seen, token = [], None
+            while True:
+                body = {"maxFiles": 5, "version": v}
+                if token:
+                    body["pageToken"] = token
+                out, n = self._jobs(spark, client, Q + "/query", body)
+                assert n == 0, (v, token)
+                seen += [ln["file"]["id"] for ln in out if "file" in ln]
+                token = next((ln["endStreamAction"].get("nextPageToken")
+                              for ln in out if "endStreamAction" in ln),
+                             None)
+                if not token:
+                    break
+            assert seen == every[v], v
+
+    def test_above_local_relation_bound_keeps_scan_plan(
+            self, spark, served):
+        from delta_sharing_spark.plans.log import manifest_session
+
+        srv, client, path = served
+        self._table(spark, path)
         hint = {"jsonPredicateHints": _hint("lessThan", "id", "long", 120)}
         resident = client.lines(Q + "/query", hint)
         handle = srv.catalog.load_table("s.d.t")
@@ -426,7 +479,7 @@ class TestJobBudget:
         key = "spark.sql.execution.arrow.localRelationThreshold"
         meta.conf.set(key, "0")
         try:
-            handle.log._files_df_cache.clear()
+            handle.log._manifest_cache.clear()
             client.lines(Q + "/query", hint)
             scan, n_scan = self._jobs(spark, client, Q + "/query", hint)
             plan = handle.log.files_df(handle.log.snapshot())

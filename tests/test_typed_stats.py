@@ -164,7 +164,7 @@ class TestTypedStatsCheckpoint:
                 log.append(hi)
                 snap = log.snapshot()
                 m = log.files_df(snap)
-                storage.check(m)
+                storage.check(log, snap)
                 assert parsed_stat_fields(m)  # union kept the typed columns
                 # only the tail file(s) survive an id > 99_999 prune
                 kept = {r["path"] for r in m.filter(
@@ -202,7 +202,7 @@ class TestTypedStatsCheckpoint:
                 log.append(ext)
                 snap = log.snapshot()
                 m = log.files_df(snap)
-                storage.check(m)
+                storage.check(log, snap)
                 pf = parsed_stat_fields(m)
                 assert "extra" not in pf and "id" in pf
                 kept = {r["path"] for r in m.filter(
@@ -240,7 +240,7 @@ class TestTypedStatsCheckpoint:
                 log.append(tail)
                 snap = log.snapshot()
                 m = log.files_df(snap)
-                storage.check(m)
+                storage.check(log, snap)
                 assert m.count() == len(snap.files)  # union planned + ran
                 kept = {r["path"] for r in m.filter(
                     file_keep_condition(_hint("n", "long",
@@ -945,24 +945,113 @@ def storage_tables(spark, tmp_path_factory):
     return out
 
 
+@pytest.fixture(scope="module")
+def edge_table(spark, tmp_path_factory):
+    """A forged table (stats written as given, no data files) whose stats
+    and partition values hit Spark's cast edges: double stats 3.0, 3.7
+    and NaN, long stats past int32, ISO-string date and timestamp stats,
+    empty-string (null) partition values and a file without stats.
+    Checkpointed, with a tail commit after the checkpoint."""
+    from delta_sharing_spark.plans.actions import (
+        AddFile, CommitInfo, Metadata, Protocol)
+
+    path = str(tmp_path_factory.mktemp("edge") / "t")
+    schema = T.StructType([
+        T.StructField("p", T.StringType()), T.StructField("d", T.DoubleType()),
+        T.StructField("n", T.LongType()), T.StructField("dt", T.DateType()),
+        T.StructField("ts", T.TimestampType())])
+
+    def add(i, p, lo, hi):
+        stats = None if lo is None else json.dumps({
+            "numRecords": 10, "minValues": lo, "maxValues": hi,
+            "nullCount": {"d": i % 2, "n": 0, "dt": 0, "ts": 0}})
+        return AddFile(path=f"p={p}/f{i}.parquet", partitionValues={"p": p},
+                       size=100 + i, stats=stats)
+
+    def st(d, n, day, hour):
+        return {"d": d, "n": n, "dt": f"2024-01-{day:02d}",
+                "ts": f"2024-01-{day:02d} {hour:02d}:00:00"}
+
+    nan = float("nan")
+    files = [
+        add(0, "a", st(3.0, 1, 5, 0), st(3.0, 10, 10, 6)),
+        add(1, "", st(3.7, 3_000_000_000, 8, 0), st(3.7, 3_000_000_100, 9, 0)),
+        add(2, "b", st(nan, -5, 1, 0), st(nan, 0, 2, 12)),
+        add(3, "", st(1.0, 20, 11, 0), st(nan, 30, 20, 0)),
+        add(4, "a", None, None),
+        add(5, "1", st(-2.5, 7, 3, 0), st(0.5, 9, 4, 0)),
+    ]
+    log = TableLog(spark, path)
+    log._write_commit(0, [
+        Protocol(), Metadata(id="edge", name="edge",
+                             schemaString=schema.json(),
+                             partitionColumns=["p"]),
+        *files[:4], CommitInfo(version=0, timestamp=1, operation="WRITE")])
+    log.write_checkpoint()
+    log._write_commit(1, [*files[4:], CommitInfo(version=1, timestamp=2,
+                                                 operation="WRITE")])
+    return path
+
+
+def _edge_hints() -> list[dict]:
+    """Hints over ``edge_table`` whose leaves need Spark's cast rules."""
+    def h(col, vtype, op, value, lit_vtype=None):
+        return {"op": op, "children": [
+            {"op": "column", "name": col, "valueType": vtype},
+            {"op": "literal", "value": value,
+             "valueType": lit_vtype or vtype}]}
+
+    def null(col, vtype):
+        return {"op": "isNull", "children": [
+            {"op": "column", "name": col, "valueType": vtype}]}
+
+    return [
+        # a long hint over double stats 3.0 and 3.7
+        h("d", "long", "equal", "3"), h("d", "long", "lessThan", "4"),
+        h("d", "long", "greaterThan", "3"),
+        # int literals past int32, and an int hint over stats past it
+        h("n", "int", "greaterThan", "3000000000"),
+        h("n", "int", "lessThan", "5"), h("n", "long", "greaterThan", "99"),
+        # date and timestamp hints over ISO-string stats
+        h("dt", "date", "lessThan", "2024-01-08"),
+        h("dt", "date", "equal", "2024-01-09"),
+        h("ts", "timestamp", "greaterThanOrEqual", "2024-01-09T00:00:00Z"),
+        h("ts", "timestamp", "lessThan", "2024-01-03 00:00:00"),
+        # malformed literals, on stats and on a partition column
+        h("n", "long", "lessThan", "abc"), h("p", "int", "equal", "zz"),
+        h("dt", "date", "greaterThan", "not-a-date"),
+        # empty-string partition values under isNull and under not
+        null("p", "string"), {"op": "not", "children": [null("p", "string")]},
+        {"op": "not", "children": [h("p", "string", "equal", "a")]},
+        h("p", "int", "equal", "1"),
+        # an or with an unsupported child (not over a data column)
+        {"op": "or", "children": [
+            h("p", "string", "equal", "a"),
+            {"op": "not", "children": [h("n", "long", "lessThan", "3")]}]},
+        {"op": "and", "children": [
+            h("p", "string", "equal", "a"),
+            {"op": "not", "children": [h("n", "long", "lessThan", "3")]}]},
+        # NaN double stats
+        h("d", "double", "greaterThan", "5"), h("d", "double", "lessThan", "2"),
+        h("d", "double", "equal", "NaN"), null("d", "double"),
+        # a comparison across value types (Spark coerces long to double)
+        h("n", "long", "lessThan", "2.5", "double"),
+    ]
+
+
 class TestManifestStorageParity:
     """Driver-resident and scanned manifests (``manifest_storage``) keep
     the same files as the sessionless driver loop, page the same walk
     and cut ``limitHint`` at the same file, for every checkpoint layout."""
 
     @pytest.fixture(params=["classic", "multipart", "v2", "mapped"])
-    def layout(self, request, storage_tables, spark, manifest_storage,
-               monkeypatch):
-        import delta_sharing_spark.table as table_mod
-
-        # the manifest plane serves the prune, even at this size
-        monkeypatch.setattr(table_mod, "PRUNE_DRIVER_MAX_FILES", -1)
+    def layout(self, request, storage_tables, spark, manifest_storage):
         path, s_name = storage_tables[request.param]
         truth = TableLog(spark, path).snapshot()
         assert truth.cp_version is not None and truth.tail_changed
         table = SharedTable(spark, path)
         snap = table.log.snapshot()
-        manifest_storage.check(table.log.files_df(snap))
+        manifest_storage.check(table.log, snap)
         if request.param == "multipart":
             cp = os.path.join(table.log.log_path,
                               _fmt_checkpoint(snap.cp_version))
@@ -1013,3 +1102,19 @@ class TestManifestStorageParity:
             got = [a.path for a in table.kept_adds(snap, None, None, limit)]
             assert got == want, limit
         assert not snap.files_materialized
+
+    def test_cast_edges_match_across_storages(self, spark, edge_table):
+        # resident (Arrow) and scan (Catalyst) keep the same files for
+        # hints whose leaves need Spark's cast rules
+        kept = {}
+        for name in ManifestStorage.NAMES:
+            with manifest_storage_set(spark, name) as storage:
+                table = SharedTable(spark, edge_table)
+                snap = table.log.snapshot()
+                storage.check(table.log, snap)
+                kept[name] = [[a.path for a in table.kept_adds(snap, hint)]
+                              for hint in _edge_hints()]
+        for hint, res, scan in zip(_edge_hints(), kept["resident"],
+                                   kept["scan"]):
+            assert res == scan, hint
+        assert sum(len(k) < 6 for k in kept["scan"]) >= 12  # they prune

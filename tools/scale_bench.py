@@ -19,8 +19,6 @@ files_df_prune     kept_adds() with a min/max stats predicate —
 limit_prefix       kept_adds(limit_hint=...) -> the distributed
                    two-phase prefix sum; plan-asserted: every WindowExec
                    is partitioned by _pid (no single-task window)
-driver_loop_10k    the <= PRUNE_DRIVER_MAX_FILES driver-loop path at
-                   exactly 10k files, for the threshold comparison
 cdf_plan + cdf_count
                    table_changes() over a 2,000-commit CDF log: plan
                    build must be O(commits) driver work + ONE parquet
@@ -29,17 +27,24 @@ cdf_plan + cdf_count
 resident_<n>k     (only with ``--resident-only``, which runs the warmup
                    and these sections alone) a hinted prune (kept_adds,
                    1% of files kept) and one 1000-file page on a
-                   20k-file manifest, which files_df holds
+                   20k-file manifest, which the log holds
                    driver-resident, and on a 150k-file one above Spark's
                    local-relation bound, which it scans; each repeated
                    with the bound set to 0 (scan storage), and the kept
                    sets and pages asserted equal
-resident_heap      (also ``--resident-only``) JVM heap after a full GC
-                   with 4 handles each holding an 80k-file manifest
-                   driver-resident (just under the default bound), and
-                   a hinted prune alternating between two versions of
-                   one of them: the newer stays resident, the older
-                   takes its cached scan plan, neither is rebuilt
+arrow_prune_<n>k   (also ``--resident-only``) per hint, the warm prune
+                   (kept_adds) of a 10k, 20k and 80k-file resident
+                   manifest: median wall time, Python thread CPU and
+                   process-tree CPU (Python + JVM) in the Arrow evaluator,
+                   next to the same prune with the bound set to 0 (the
+                   Catalyst scan); the kept sets are asserted equal
+resident_heap      (also ``--resident-only``) JVM heap after a full GC,
+                   and the Arrow bytes held, with 4 handles each holding
+                   an 80k-file manifest driver-resident (just under the
+                   default bound), and a hinted prune alternating between
+                   two versions of one of them: the newer stays resident,
+                   the older no longer fits the log's budget and takes
+                   its cached scan plan, neither is rebuilt
 
 Output: one JSON line with all timings, plus a markdown table on stderr
 ready to paste into SCALE.md.
@@ -312,6 +317,8 @@ def count_parquet_scans(df) -> int:
 
 
 RESIDENT_SIZES = (20_000, 150_000)
+ARROW_PRUNE_SIZES = (10_000, 20_000, 80_000)
+WARMUP_FILES = 10_000
 RESIDENT_HEAP_FILES = 80_000
 RESIDENT_HEAP_TABLES = 4
 
@@ -323,10 +330,8 @@ def _job_ids(spark) -> set:
     return set(sc.statusTracker().getJobIdsForGroup())
 
 
-def _storage(manifest) -> str:
-    plan = manifest._jdf.queryExecution().logical()
-    return ("resident" if plan.getClass().getSimpleName() == "LocalRelation"
-            else "scan")
+def _storage(log, snap) -> str:
+    return "resident" if log.resident_manifest(snap) is not None else "scan"
 
 
 def resident_sections(spark, workdir: str, out: dict) -> None:
@@ -344,10 +349,9 @@ def resident_sections(spark, workdir: str, out: dict) -> None:
         table = SharedTable(spark, root)
         snap = table.log.snapshot()
         t0 = time.perf_counter()
-        manifest = table.log.files_df(snap)
+        out[f"{tag}_storage"] = _storage(table.log, snap)
         out[f"{tag}_build_s"] = round(time.perf_counter() - t0, 3)
         table.log.file_counts(snap)  # the once-per-snapshot count
-        out[f"{tag}_storage"] = _storage(manifest)
         keep = n // 100
         hints = stats_predicate(0, keep * ROWS_PER_FILE - 1)
         before = jobs()
@@ -405,19 +409,24 @@ def resident_heap_sections(spark, workdir: str, out: dict) -> None:
         write_synthetic_table(root, n)
         table = SharedTable(spark, root)
         snap = table.log.snapshot()
-        assert _storage(table.log.files_df(snap)) == "resident"
+        assert _storage(table.log, snap) == "resident"
         assert len(table.kept_adds(snap, hints)) == n // 100
         roots.append(root)
         tables.append(table)
     out["resident_heap_mb"] = heap_mb()
     out["resident_heap_per_table_mb"] = round(
         (out["resident_heap_mb"] - out["resident_heap_base_mb"]) / k)
+    out["resident_arrow_per_table_mb"] = round(sum(
+        t.log.resident_manifest(t.log.snapshot()).nbytes
+        for t in tables) / k / 2**20)
     # one handle, one appended commit, then hinted prunes of the new
     # (1) and the old (0) version in turn
-    table = tables[0]
     lo = n * ROWS_PER_FILE
-    table.log.append(spark.range(lo, lo + 10).selectExpr(
+    tables[0].log.append(spark.range(lo, lo + 10).selectExpr(
         "id", "cast(id as double) as v", "'c00' as cat"))
+    # a fresh handle, as a server resolves it: lazy snapshots (the
+    # writer's own latest snapshot is materialized by the commit)
+    table = SharedTable(spark, roots[0])
     snaps = {v: table.log.snapshot(version=v) for v in (1, 0)}
     for snap in snaps.values():
         table.kept_adds(snap, hints)  # each version's manifest, once
@@ -432,12 +441,74 @@ def resident_heap_sections(spark, workdir: str, out: dict) -> None:
             jobs[v] = max(jobs[v], len(_job_ids(spark) - before))
     for v, snap in snaps.items():
         tag = f"resident_alt_v{v}"
-        out[f"{tag}_storage"] = _storage(table.log.files_df(snap))
+        out[f"{tag}_storage"] = _storage(table.log, snap)
         out[f"{tag}_prune_s"] = round(sorted(wall[v])[len(wall[v]) // 2], 3)
         out[f"{tag}_prune_jobs"] = jobs[v]
     assert out["resident_alt_v1_storage"] == "resident"
     assert out["resident_alt_v0_storage"] == "scan"
     for root in roots:
+        shutil.rmtree(root, ignore_errors=True)
+
+
+def arrow_prune_sections(spark, workdir: str, out: dict) -> None:
+    """The ``arrow_prune_<n>k`` sections (see the module docstring)."""
+    import statistics
+
+    from delta_sharing_spark.plans.log import manifest_session
+    from delta_sharing_spark.table import SharedTable
+    from perfbench.proc import tree_cpu_s
+
+    meta = manifest_session(spark)
+    key = "spark.sql.execution.arrow.localRelationThreshold"
+
+    def hints(n: int) -> dict:
+        cat = {"op": "equal", "children": [
+            {"op": "column", "name": "cat", "valueType": "string"},
+            {"op": "literal", "value": "c03", "valueType": "string"}]}
+        return {
+            "stats": stats_predicate(0, n // 100 * ROWS_PER_FILE - 1),
+            "partition": cat,
+            "both": {"op": "and", "children": [
+                cat, stats_predicate(0, n // 2 * ROWS_PER_FILE)]},
+        }
+
+    def measure(root: str, name: str, hint: dict, tag: str) -> list:
+        table = SharedTable(spark, root)
+        snap = table.log.snapshot()
+        out[f"{tag}_storage"] = _storage(table.log, snap)
+        kept = [a.path for a in table.kept_adds(snap, hint)]  # warm
+        wall, thread, tree, jobs = [], [], [], 0
+        for _ in range(7):
+            before = _job_ids(spark)
+            w, c, t = time.perf_counter(), time.thread_time(), tree_cpu_s()
+            assert [a.path for a in table.kept_adds(snap, hint)] == kept
+            wall.append(time.perf_counter() - w)
+            thread.append(time.thread_time() - c)
+            tree.append(tree_cpu_s() - t)
+            jobs = max(jobs, len(_job_ids(spark) - before))
+        for metric, vals in (("wall", wall), ("thread_cpu", thread),
+                             ("tree_cpu", tree)):
+            out[f"{tag}_{name}_{metric}_ms"] = round(
+                statistics.median(vals) * 1000, 1)
+        out[f"{tag}_{name}_jobs"] = jobs
+        out[f"{tag}_{name}_kept"] = len(kept)
+        return kept
+
+    for n in ARROW_PRUNE_SIZES:
+        root = os.path.join(workdir, f"arrow_{n}")
+        os.makedirs(root, exist_ok=True)
+        write_synthetic_table(root, n)
+        tag = f"arrow_prune_{n // 1000}k"
+        for name, hint in hints(n).items():
+            got = measure(root, name, hint, tag)
+            meta.conf.set(key, "0")
+            try:
+                want = measure(root, name, hint, f"{tag}_scan")
+            finally:
+                meta.conf.unset(key)
+            assert got == want, f"{tag} {name}: kept sets differ"
+        assert out[f"{tag}_storage"] == "resident"
+        assert out[f"{tag}_scan_storage"] == "scan"
         shutil.rmtree(root, ignore_errors=True)
 
 
@@ -460,8 +531,7 @@ def main() -> None:
     args = ap.parse_args()
 
     from delta_sharing_spark.session import get_spark
-    from delta_sharing_spark.table import (
-        PRUNE_DRIVER_MAX_FILES, SharedTable)
+    from delta_sharing_spark.table import SharedTable
     from delta_sharing_spark.plans.log import TableLog, manifest_session
     from delta_sharing_spark.cdf import table_changes
 
@@ -476,7 +546,7 @@ def main() -> None:
     # (first-job cost measured ~5s regardless of manifest size).
     small = os.path.join(args.workdir, "small")
     os.makedirs(small, exist_ok=True)
-    write_synthetic_table(small, PRUNE_DRIVER_MAX_FILES)
+    write_synthetic_table(small, WARMUP_FILES)
     slog = TableLog(spark, small)
     ssnap = slog.snapshot()
     stable = SharedTable(spark, small)
@@ -501,6 +571,7 @@ def main() -> None:
 
     if args.resident_only:
         resident_sections(spark, args.workdir, out)
+        arrow_prune_sections(spark, args.workdir, out)
         resident_heap_sections(spark, args.workdir, out)
         shutil.rmtree(args.workdir, ignore_errors=True)
         print(json.dumps(out))
@@ -512,11 +583,24 @@ def main() -> None:
                 f" | {out[f'resident_{n // 1000}k_storage']} manifest,"
                 f" {out[f'resident_{n // 1000}k_prune_jobs']} prune jobs |\n"
                 for n in RESIDENT_SIZES)
+            + "".join(
+                f"| Hinted prune ({h}), {n // 1000}k files, Arrow / scan |"
+                f" {out[f'arrow_prune_{n // 1000}k_{h}_wall_ms']} /"
+                f" {out[f'arrow_prune_{n // 1000}k_scan_{h}_wall_ms']} ms"
+                " wall; tree CPU"
+                f" {out[f'arrow_prune_{n // 1000}k_{h}_tree_cpu_ms']} /"
+                f" {out[f'arrow_prune_{n // 1000}k_scan_{h}_tree_cpu_ms']}"
+                f" ms | {out[f'arrow_prune_{n // 1000}k_{h}_kept']} kept,"
+                f" {out[f'arrow_prune_{n // 1000}k_{h}_jobs']} /"
+                f" {out[f'arrow_prune_{n // 1000}k_scan_{h}_jobs']} jobs |\n"
+                for n in ARROW_PRUNE_SIZES
+                for h in ("stats", "partition", "both"))
             + f"| JVM heap, {RESIDENT_HEAP_TABLES} resident"
             f" {RESIDENT_HEAP_FILES // 1000}k-file manifests |"
             f" +{out['resident_heap_mb'] - out['resident_heap_base_mb']} MB"
             f" ({out['resident_heap_per_table_mb']} MB each) |"
-            " after a full GC |\n"
+            " after a full GC; Arrow"
+            f" {out['resident_arrow_per_table_mb']} MB each |\n"
             + "| Hinted prune alternating two versions, new / old |"
             f" {out['resident_alt_v1_prune_s']}s /"
             f" {out['resident_alt_v0_prune_s']}s |"
@@ -670,15 +754,6 @@ def main() -> None:
         and rep.avg_files_per_probe <= 2.0, rep
     out["clustering_avg_files_per_probe"] = rep.avg_files_per_probe
 
-    # --- driver-loop threshold comparison at exactly 10k files (the
-    # warmup table — its snapshot/log caches are hot, like production)
-    shints = stats_predicate(0, PRUNE_DRIVER_MAX_FILES * 10 - 1)
-    t0 = time.perf_counter()
-    kept = [a.path for a in stable.kept_adds(
-        ssnap, json_predicate_hints=shints, limit_hint=5_000)]
-    out["driver_loop_10k_s"] = round(time.perf_counter() - t0, 3)
-    assert len(kept) == 5, kept
-
     # --- CDF over a long history: one scan per action kind
     cdf_root = os.path.join(args.workdir, "cdf")
     write_cdf_table(cdf_root, args.commits)
@@ -737,8 +812,6 @@ def main() -> None:
         " | Spark job over the checkpoint parquet |\n"
         f"| Limit prefix sum | {out['limit_prefix_s']}s"
         " | two-phase distributed, windows partitioned by _pid |\n"
-        f"| Driver-loop prune, 10k files | {out['driver_loop_10k_s']}s"
-        " | zero Spark jobs |\n"
         f"| Clustering report, {args.files:,} files |"
         f" {out['clustering_report_s']}s"
         f" ({out['clustering_avg_files_per_probe']} files/probe)"
