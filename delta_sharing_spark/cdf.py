@@ -39,6 +39,7 @@ from delta_sharing_spark.plans.log import (
     is_noop_merge,
     wire_protocol,
 )
+from delta_sharing_spark.session import local_frame
 from delta_sharing_spark.streaming.schema import (
     _datatype_read_compatible,
     _widenable,
@@ -161,7 +162,7 @@ def _attach_commit_columns(
         T.StructField(COMMIT_VERSION_COL, T.LongType()),
         T.StructField(COMMIT_TIMESTAMP_COL, T.LongType()),
     ])
-    meta_df = spark.createDataFrame(file_meta, meta_schema)
+    meta_df = local_frame(spark, file_meta, meta_schema)
     out = (
         df.withColumn(
             # input_file_name is URI-encoded (space -> %20); decode back to
@@ -287,7 +288,7 @@ def table_changes(
             T.StructField(COMMIT_VERSION_COL, T.LongType()),
             T.StructField(COMMIT_TIMESTAMP_COL, T.LongType()),
         ]
-        return spark.createDataFrame([], T.StructType(fields))
+        return local_frame(spark, [], T.StructType(fields))
     unioned = parts[0]
     for p in parts[1:]:
         unioned = unioned.unionByName(p)

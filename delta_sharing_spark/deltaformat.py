@@ -308,6 +308,7 @@ def _scan_epochs(spark: SparkSession,
     from pyspark.sql import types as T
 
     from delta_sharing_spark.plans.dvcodec import decode_inline_dv
+    from delta_sharing_spark.session import local_frame
     from delta_sharing_spark.sources.remote import RemoteTableLog, _parse_file
     from delta_sharing_spark.streaming.schema import (
         _datatype_read_compatible,
@@ -410,8 +411,8 @@ def _scan_epochs(spark: SparkSession,
                         "*", F.col("_metadata.row_index").alias("__rt_ri"))
                 if dv:
                     if dv.get("storageType") == "i":
-                        dv_rows = spark.createDataFrame(
-                            [(ri,) for ri in decode_inline_dv(
+                        dv_rows = local_frame(
+                            spark, [(ri,) for ri in decode_inline_dv(
                                 dv["pathOrInlineDv"],
                                 dv.get("sizeInBytes"))],
                             "__rt_ri long")
@@ -432,8 +433,8 @@ def _scan_epochs(spark: SparkSession,
                 elif attrs.fields:
                     # __path is captured at scan time: input_file_name()
                     # is undefined after a join
-                    meta_df = spark.createDataFrame(
-                        rows, T.StructType([T.StructField("__path",
+                    meta_df = local_frame(
+                        spark, rows, T.StructType([T.StructField("__path",
                                                     T.StringType())]
                                      + attrs.fields))
                     df = (df.withColumn("__path", scan_path)
@@ -453,7 +454,7 @@ def _scan_epochs(spark: SparkSession,
                                        F.lit(_CHANGE_TYPE[kind]))
                 parts.append(finish(df))
     if not parts:
-        return spark.createDataFrame([], T.StructType(
+        return local_frame(spark, [], T.StructType(
             list(schema.fields)
             + [T.StructField(n, t, True) for n, t in extras]))
     out = parts[0]

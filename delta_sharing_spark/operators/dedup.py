@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from delta_sharing_spark.session import local_frame
+
 
 def _spread(df: DataFrame) -> DataFrame:
     """Row-multiplying operators (gram/segment explodes) inherit the SCAN's
@@ -929,8 +931,8 @@ def _dup_key_rows(rows: DataFrame, sample_rows: "DataFrame | None",
     hot_df = None
     if hot:
         spark = rows.sparkSession
-        hot_df = spark.createDataFrame(
-            [(h,) for h in hot], rows.select(key_col).schema)
+        hot_df = local_frame(
+            spark, [(h,) for h in hot], rows.select(key_col).schema)
         base = rows.join(F.broadcast(hot_df), key_col, "left_anti")
     cold_hits = (
         base

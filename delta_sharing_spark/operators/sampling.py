@@ -24,6 +24,9 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from delta_sharing_spark.session import local_frame
 
 # 1e6 buckets: fraction granularity 1e-6 while conv() of 8 hex chars (32
 # bits) stays far below bigint overflow
@@ -320,9 +323,10 @@ def build_mixture(df: DataFrame, strata_col: str, tokens_col: str,
         raise ValueError("build_mixture: weights must name at least one "
                          "stratum (got an empty dict)")
     spark = df.sparkSession
-    bdf = F.broadcast(
-        spark.createDataFrame(budgets, [strata_col, "__budget"])
-    )
+    bdf = F.broadcast(local_frame(spark, budgets, T.StructType([
+        T.StructField(strata_col, df.schema[strata_col].dataType),
+        T.StructField("__budget", T.LongType()),
+    ])))
     docs = (
         df.join(bdf, strata_col)
         .withColumn("__h", h)

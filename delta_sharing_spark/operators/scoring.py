@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from delta_sharing_spark.session import local_frame
+
 WEIGHT_UNIT = 1_000_000
 
 
@@ -594,8 +596,8 @@ def doremi_weights(losses: DataFrame, domain_col: str,
     loss = {d: v for d, v in rows}
     n = len(domains)
     if n == 0:
-        return spark.createDataFrame(
-            [], f"{domain_col} string, {loss_col} long, weight_u long")
+        return local_frame(
+            spark, [], f"{domain_col} string, {loss_col} long, weight_u long")
     s = DOREMI_SCALE
     w = {d: s // n for d in domains}
     for _ in range(steps):
@@ -608,6 +610,6 @@ def doremi_weights(losses: DataFrame, domain_col: str,
         w = {d: (smooth_num * s) // (smooth_den * n)
              + ((smooth_den - smooth_num) * norm[d]) // smooth_den
              for d in domains}
-    return spark.createDataFrame(
-        [(d, loss[d], w[d]) for d in domains],
+    return local_frame(
+        spark, [(d, loss[d], w[d]) for d in domains],
         f"{domain_col} string, {loss_col} long, weight_u long")

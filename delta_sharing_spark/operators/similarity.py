@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from delta_sharing_spark.functions.vectors import cosine
+from delta_sharing_spark.session import local_frame
 
 
 def _topk_per_query(scored: DataFrame, k: int, score_col: str = "cos",
@@ -309,8 +310,8 @@ def kmeans_fit(candidates: DataFrame, k: int = 8, iters: int = 2,
                           for j in range(dim)])
             cells.append(cell)
             ns.append(dims[0][1])
-    return spark.createDataFrame(
-        [(c, v, n) for c, v, n in zip(cells, cents, ns)],
+    return local_frame(
+        spark, [(c, v, n) for c, v, n in zip(cells, cents, ns)],
         "cell int, centroid array<double>, n long")
 
 
@@ -718,8 +719,8 @@ def pq_fit(candidates: DataFrame, id_col: str = "vec_id",
             books[s][1].append([float(dims[i][0]) / 1e12 / dims[i][1]
                                 for i in range(sub_len)])
             ns[s].append(dims[0][1])
-    return spark.createDataFrame(
-        [(s, cell, cent, n)
+    return local_frame(
+        spark, [(s, cell, cent, n)
          for s in sorted(books)
          for cell, cent, n in zip(books[s][0], books[s][1], ns[s])],
         "sub int, cell int, centroid array<double>, n long")

@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from delta_sharing_spark.session import local_frame
+
 
 def word_symbol_freqs(df: DataFrame, text_col: str) -> DataFrame:
     """(sym, n): corpus word frequencies, each word rendered as the
@@ -107,8 +109,8 @@ def bpe_train(df: DataFrame, text_col: str,
             if left in parts else parts
             for parts in words
         ]
-    return spark.createDataFrame(
-        merges, "rank INT, left STRING, right STRING, merged STRING,"
+    return local_frame(
+        spark, merges, "rank INT, left STRING, right STRING, merged STRING,"
         " pair_n BIGINT")
 
 

@@ -58,6 +58,7 @@ from delta_sharing_spark.plans.actions import (
     parse_action,
 )
 from delta_sharing_spark.plans.stats import collect_file_stats
+from delta_sharing_spark.session import local_frame
 
 _LOG = logging.getLogger("dss.log")
 
@@ -1638,7 +1639,8 @@ class TableLog:
             [T.StructField("kind", T.StringType())]
             + list(adds_df.schema.fields[1:]))
         pad = (None,) * (len(layout) - 2)
-        head_df = self.meta_spark.createDataFrame(
+        head_df = local_frame(
+            self.meta_spark,
             [(k, j) + pad for k, j, _path in _state_rows(snap)],
             head_schema)
         final = os.path.join(self.log_path, _fmt_checkpoint(snap.version))
@@ -3953,8 +3955,8 @@ class TableLog:
                 for ri in decode_inline_dv(a.deletionVector["pathOrInlineDv"],
                            a.deletionVector.get("sizeInBytes"))
             ]
-            parts.append(self.spark.createDataFrame(
-                rows, "__dv_file string, __dv_ri long"))
+            parts.append(local_frame(
+                self.spark, rows, "__dv_file string, __dv_ri long"))
         df = parts[0]
         for p in parts[1:]:
             df = df.unionByName(p)
@@ -4163,7 +4165,8 @@ class TableLog:
         ])
         df = self.read_adds(adds, schema=ext, file_col="__rt_file",
                             row_index_col="__rt_ri", snap=snap)
-        manifest = self.spark.createDataFrame(
+        manifest = local_frame(
+            self.spark,
             [(self._scan_abs(a), a.baseRowId,
               a.defaultRowCommitVersion if a.defaultRowCommitVersion
               is not None else a.version) for a in adds],
@@ -4488,8 +4491,8 @@ class TableLog:
             # a moved row keeps its id (Delta row tracking): resolve it
             # from the materialized column or baseRowId + position, so
             # the appended post-image file materializes the SAME id
-            man = self.spark.createDataFrame(
-                [(self._scan_abs(a), a.baseRowId) for a in cand],
+            man = local_frame(
+                self.spark, [(self._scan_abs(a), a.baseRowId) for a in cand],
                 "__dv_file STRING, __rt_base LONG")
             matched = (
                 matched.join(F.broadcast(man), "__dv_file", "left")
@@ -4737,7 +4740,8 @@ class TableLog:
                 # updated rows keep their ids in the appended post-image
                 # (Delta row tracking: id is stable across the row's
                 # lifetime); resolve id = materialized or base + position
-                man = self.spark.createDataFrame(
+                man = local_frame(
+                    self.spark,
                     [(self._scan_abs(a), a.baseRowId) for a in snap.files],
                     "__dv_file STRING, __rt_base LONG")
                 pre_pos = (
@@ -5209,8 +5213,8 @@ class TableLog:
              "partitionValues": {phys2log.get(c, c): v for c, v in key}}
             for i, key in enumerate(keys)
         ]
-        df = self.spark.createDataFrame(
-            rows, "k INT, partitionValues MAP<STRING,STRING>")
+        df = local_frame(
+            self.spark, rows, "k INT, partitionValues MAP<STRING,STRING>")
         kept = {r["k"] for r in df.filter(cond).collect()}
         return {key: groups[key] for i, key in enumerate(keys) if i in kept}
 
@@ -6103,8 +6107,8 @@ class TableLog:
             hi = F.col("mx_d") if numeric else F.col("mx_s")
             per_probe = None
             if probe_vals:
-                probe_rows = self.meta_spark.createDataFrame(
-                    [(v,) for v in probe_vals],
+                probe_rows = local_frame(
+                    self.meta_spark, [(v,) for v in probe_vals],
                     f"p {'double' if numeric else 'string'}")
                 # a file WITHOUT stats can never be pruned, so it counts
                 # as a hit for every probe — otherwise the metric reads
@@ -6117,8 +6121,8 @@ class TableLog:
                 per_probe = hits / len(probe_vals)
             rows.append((logical, int(a.n_files), int(a.n_stats),
                          bool(numeric), width_frac, per_probe))
-        return self.spark.createDataFrame(
-            rows,
+        return local_frame(
+            self.spark, rows,
             "column string, n_files long, files_with_stats long, "
             "numeric boolean, avg_width_frac double, "
             "avg_files_per_probe double")

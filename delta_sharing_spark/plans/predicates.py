@@ -61,6 +61,18 @@ _BINARY_OPS = {
 }
 
 
+_NUMERIC = {"int", "long", "float", "double"}
+
+
+def _comparable(left: dict[str, Any], right: dict[str, Any]) -> bool:
+    """Whether two leaves compare: the same valueType, or two numbers
+    (Spark widens them). Any other pair, such as a string column against
+    an int literal, is Unknown on every prune route, so the file is kept
+    (under ANSI Spark would fail casting the string instead)."""
+    a, b = left.get("valueType"), right.get("valueType")
+    return a == b or (a in _NUMERIC and b in _NUMERIC)
+
+
 class PredicateError(ValueError):
     pass
 
@@ -189,6 +201,8 @@ def to_column(op: dict[str, Any], partition_columns: set[str],
         right = to_column(children[1], partition_columns, data_accessor)
         if left is None or right is None:
             return None
+        if not _comparable(*children):
+            return F.lit(None).cast("boolean")
         return _BINARY_OPS[kind](left, right)
     raise PredicateError(f"unknown op {kind!r}")
 
@@ -294,6 +308,8 @@ def _rewrite_for_stats(op: dict[str, Any], partition_columns: set[str],
             )
         else:
             return None
+        if not _comparable(left, right):
+            return F.lit(None).cast("boolean")
         if colname in partition_columns:
             pcol = col_of(left)
             return _BINARY_OPS[kind](pcol, lit)
@@ -509,8 +525,7 @@ def _eval_file(op: dict, partition_values: dict, stats: dict,
         # Unknown (matches the DataFrame path: the struct itself has no
         # nullCount leaf)
         return None if not isinstance(nc, (int, float)) else nc > 0
-    if kind in ("equal", "lessThan", "lessThanOrEqual", "greaterThan",
-                "greaterThanOrEqual"):
+    if kind in _BINARY_OPS:
         left, right = children
         if left.get("op") == "literal" and right.get("op") == "column":
             flip = {"lessThan": "greaterThan", "greaterThan": "lessThan",
@@ -521,35 +536,23 @@ def _eval_file(op: dict, partition_values: dict, stats: dict,
         if left.get("op") != "column" or right.get("op") != "literal":
             return None
         name, vtype = left["name"], left["valueType"]
+        if not _comparable(left, right):
+            return None
         lit = _py_cast(right["value"], right["valueType"])
         if lit is None:
             return None
         if name in partition_columns:
             raw = partition_values.get(name)
             val = _py_cast(None if raw == "" else raw, vtype)
-            if val is None:
-                return None
-            return {
-                "equal": val == lit,
-                "lessThan": val < lit,
-                "lessThanOrEqual": val <= lit,
-                "greaterThan": val > lit,
-                "greaterThanOrEqual": val >= lit,
-            }[kind]
+            return None if val is None else _BINARY_OPS[kind](val, lit)
         mn = _py_cast(stat_lookup(stats.get("minValues") or {}, name), vtype)
         mx = _py_cast(stat_lookup(stats.get("maxValues") or {}, name), vtype)
         if kind == "equal":
             if mn is None or mx is None:
                 return None
-            return _tri_and([mn <= lit, mx >= lit])
-        if kind == "lessThan":
-            return None if mn is None else mn < lit
-        if kind == "lessThanOrEqual":
-            return None if mn is None else mn <= lit
-        if kind == "greaterThan":
-            return None if mx is None else mx > lit
-        if kind == "greaterThanOrEqual":
-            return None if mx is None else mx >= lit
+            return mn <= lit and mx >= lit
+        bound = mn if kind.startswith("less") else mx
+        return None if bound is None else _BINARY_OPS[kind](bound, lit)
     return None
 
 

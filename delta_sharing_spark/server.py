@@ -50,6 +50,9 @@ _LOG = logging.getLogger("dss.server")
 
 NDJSON = "application/x-ndjson; charset=utf-8"
 JSON_CT = "application/json; charset=utf-8"
+# serve_forever's poll: the longest a shutdown() waits for the serving
+# loop to notice it (the stdlib default is 0.5 s)
+SHUTDOWN_POLL_S = 0.05
 
 _ROUTES = [
     # RFC 6749 client-credentials token endpoint (unauthenticated route;
@@ -259,13 +262,17 @@ class SharingServer:
     # ------------------------------------------------------------ lifecycle
 
     def serve_background(self) -> str:
-        self._thread = threading.Thread(target=self.httpd.serve_forever,
-                                        daemon=True)
+        self._thread = threading.Thread(
+            target=self.httpd.serve_forever,
+            kwargs={"poll_interval": SHUTDOWN_POLL_S}, daemon=True)
         self._thread.start()
         return f"http://127.0.0.1:{self.port}"
 
     def shutdown(self) -> None:
+        """Stop serving (within one ``SHUTDOWN_POLL_S``) and close the
+        listening socket."""
         self.httpd.shutdown()
+        self.httpd.server_close()
 
     # ------------------------------------------------------------- handlers
 

@@ -10,8 +10,18 @@ PROTOCOL.md:3779), and Arrow for the Python <-> JVM boundary.
 from __future__ import annotations
 
 import os
+from collections.abc import Iterable
+from typing import Any
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import (
+    StructType,
+    _create_converter,
+    _make_type_verifier,
+    _parse_datatype_string,
+)
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
@@ -57,3 +67,36 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(spark: SparkSession, rows: Iterable[Any],
+                schema: StructType | str) -> DataFrame:
+    """DataFrame over driver-built ``rows`` that enters Spark as Arrow.
+
+    ``createDataFrame(<list>)`` pickles rows into a parallelized RDD whose
+    conversion runs a Python-worker job each time the frame is scanned or
+    broadcast. Here each row takes the list path's own steps (the schema's
+    type verifier, its converter, ``toInternal``) so values and errors are
+    the same, and the internal columns become one Arrow table. Under
+    ``spark.sql.execution.arrow.localRelationThreshold`` that table is a
+    ``LocalRelation`` (no Spark job to collect or broadcast it); above it,
+    a JVM-side Arrow RDD. Neither forks a Python worker. ``schema`` is
+    required (a ``StructType`` or DDL string): nothing is inferred.
+    """
+    if isinstance(schema, str):
+        schema = _parse_datatype_string(schema)
+    if not isinstance(schema, StructType):
+        raise TypeError(f"local_frame needs a struct schema, got {schema!r}")
+    verify = _make_type_verifier(schema)
+    convert = _create_converter(schema)
+    internal = []
+    for row in rows:
+        verify(row)
+        internal.append(schema.toInternal(convert(row)))
+    arrow_schema = to_arrow_schema(schema)
+    columns = zip(*internal) if internal else [()] * len(schema.fields)
+    table = pa.Table.from_arrays(
+        [pa.array(list(col), type=f.type)
+         for col, f in zip(columns, arrow_schema)],
+        schema=arrow_schema)
+    return spark.createDataFrame(table, schema)

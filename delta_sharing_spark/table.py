@@ -55,6 +55,7 @@ from delta_sharing_spark.plans.predicates import (
     sql_hint_keep_condition,
 )
 from delta_sharing_spark.plans.resident import ResidentManifest
+from delta_sharing_spark.session import local_frame
 
 # Where a prune runs follows the manifest's storage (``TableLog.
 # _manifest_entry``). A driver-resident manifest — any manifest whose
@@ -307,7 +308,11 @@ class SharedTable:
                  timestamp: str | None = None) -> dict[str, Any]:
         """QueryTableMetadata (ref DeltaSharedTable.scala:316-366 service path,
         query with includeFiles=false)."""
-        snap = self.log.snapshot(version=version, timestamp=timestamp)
+        return self._metadata_line(
+            self.log.snapshot(version=version, timestamp=timestamp))
+
+    def _metadata_line(self, snap: Snapshot) -> dict[str, Any]:
+        """The metaData line of an already-resolved snapshot."""
         meta = snap.metadata
         # crc sidecar / manifest-plane agg — never materializes the file
         # list for a count (this line rides EVERY query RPC's head)
@@ -371,7 +376,7 @@ class SharedTable:
             T.StructField("clusteringColumns",
                           T.ArrayType(T.StringType())),
         ])
-        return self.spark.createDataFrame([(
+        return local_frame(self.spark, [(
             (meta.format or {}).get("provider", "parquet")
             if isinstance(meta.format, dict) else "parquet",
             meta.id, meta.name, self.log.path,
@@ -429,7 +434,7 @@ class SharedTable:
                     dict(info.operationParameters) if info else {},
                     dict(info.operationMetrics) if info else {},
                 ))
-            return self.spark.createDataFrame(rows, schema)
+            return local_frame(self.spark, rows, schema)
         # distributed build: scan the wanted commit files as text, parse
         # only the commitInfo lines, left-join onto the (version) manifest
         # so info-less commits still get a row — executors parse, the
@@ -467,8 +472,8 @@ class SharedTable:
                 .alias("operationMetrics"),
             )
         )
-        manifest = self.spark.createDataFrame(
-            [(v,) for v in wanted], "version long")
+        manifest = local_frame(
+            self.spark, [(v,) for v in wanted], "version long")
         empty_map = F.expr("map()").cast("map<string,string>")
         return (
             manifest.join(infos, "version", "left")
@@ -676,8 +681,8 @@ class SharedTable:
             paths = [r["path"] for r in out.select("path").collect()]
         finally:
             m.unpersist()
-        keep = manifest.sparkSession.createDataFrame(
-            [(p,) for p in paths] or [], "path string")
+        keep = local_frame(manifest.sparkSession, [(p,) for p in paths],
+                           "path string")
         return manifest.join(F.broadcast(keep), "path", "left_semi")
 
     # ------------------------------------------------------------------ reads
@@ -764,7 +769,7 @@ class SharedTable:
                     + [T.StructField("_row_id", T.LongType(), True),
                        T.StructField("_row_commit_version", T.LongType(),
                                      True)])
-            return self.spark.createDataFrame([], empty_schema)
+            return local_frame(self.spark, [], empty_schema)
         # explicit declared schema (schema-on-read): files written before a
         # schema evolution lack newer columns and must null-fill them
         # deterministically — never depend on which file Spark samples.
@@ -1059,11 +1064,7 @@ class SharedTable:
                 next_token = mint_page_token(payload, checksum)
         lines: list[dict[str, Any]] = [
             {"protocol": wire_protocol(snap.column_mapping)},
-            {
-                "metaData": {
-                    **self.metadata(version=snap.version),
-                }
-            },
+            {"metaData": self._metadata_line(snap)},
         ]
         if responded_format == "delta" and snap.transactions \
                 and not page_token:
@@ -1205,7 +1206,7 @@ class SharedTable:
             head_proto["version"] = starting_version
         lines: list[dict[str, Any]] = [
             {"protocol": head_proto},
-            {"metaData": {**self.metadata(version=starting_version)}},
+            {"metaData": self._metadata_line(snap)},
         ]
         # streaming emission with early page termination (ref returns
         # mid-loop once numSignedFiles hits the page size,

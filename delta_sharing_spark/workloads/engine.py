@@ -28,6 +28,7 @@ from pyspark.sql import functions as F
 from delta_sharing_spark.cdf import table_changes
 from delta_sharing_spark.io import read_table
 from delta_sharing_spark.plans.log import TableLog
+from delta_sharing_spark.session import local_frame
 from delta_sharing_spark.table import SharedTable
 from delta_sharing_spark.workloads import workload
 
@@ -504,7 +505,7 @@ def eng_history(spark: SparkSession, sf_dir: str) -> DataFrame:
         (c.version, c.info.operation if c.info else None)
         for c in t.log.commits()
     ]
-    return spark.createDataFrame(rows, "version long, operation string")
+    return local_frame(spark, rows, "version long, operation string")
 
 
 # ---------------------------------------------------------------------- CDF

@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 
 from delta_sharing_spark.io import read_table
 from delta_sharing_spark.plans.log import TableLog
+from delta_sharing_spark.session import local_frame
 from delta_sharing_spark.sources.datasource import SharedTableDataSource
 from delta_sharing_spark.workloads import workload
 from delta_sharing_spark.workloads.engine import _events_cdf, _lineitem_shared
@@ -169,7 +170,7 @@ def stream_availablenow_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         # materialize before the tempdir vanishes
         rows = result.collect()
-    return spark.createDataFrame(rows, result.schema)
+    return local_frame(spark, rows, result.schema)
 
 
 @workload(
@@ -402,7 +403,7 @@ def stream_remote_appends(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.countDistinct("l_orderkey").alias("n_orders"),
         )
         rows = result.collect()  # materialize while the server lives
-        return spark.createDataFrame(rows, result.schema)
+        return local_frame(spark, rows, result.schema)
     finally:
         srv.shutdown()
         _os.unlink(prof.name)
@@ -473,7 +474,7 @@ def stream_remote_row_tracking_cdf(spark: SparkSession,
                     F.col("_commit_version").alias("commit_version"))
         )
         rows = result.collect()  # materialize while the server lives
-        return spark.createDataFrame(rows, result.schema)
+        return local_frame(spark, rows, result.schema)
     finally:
         srv.shutdown()
         _os.unlink(prof.name)
@@ -604,7 +605,7 @@ def stream_remote_deep_drain(spark: SparkSession, sf_dir: str) -> DataFrame:
                 f"deep drain cost {len(ranges)} range RPCs for "
                 f"{_DEEP_LOG_COMMITS} commits at maxVersionsPerRpc=20 "
                 f"(budget {budget}) — the window cache regressed")
-        return spark.createDataFrame(rows, result.schema)
+        return local_frame(spark, rows, result.schema)
     finally:
         srv.shutdown()
         _os.unlink(prof.name)
@@ -683,4 +684,4 @@ def stream_schema_evolution_drain(spark: SparkSession, sf_dir: str
             F.countDistinct("event_id").alias("n_ids"),
         )
         rows = result.collect()  # materialize before the tempdir vanishes
-    return spark.createDataFrame(rows, result.schema)
+    return local_frame(spark, rows, result.schema)

@@ -335,6 +335,33 @@ def test_manifest_storage_matches_driver_loop(
     assert got == want
 
 
+@pytest.mark.parametrize("op", ["equal", "lessThan", "greaterThanOrEqual"])
+def test_mismatched_literal_type_keeps_the_file(spark, tmp_path, op):
+    # a string column against an int literal does not compare: every
+    # route keeps the file (Unknown) rather than raising or pruning
+    from delta_sharing_spark.plans.log import TableLog
+    from delta_sharing_spark.table import SharedTable
+    from tests.conftest import manifest_storage_set
+
+    hint = {"op": op, "children": [
+        {"op": "column", "name": "p", "valueType": "string"},
+        {"op": "literal", "value": "1", "valueType": "int"}]}
+    assert keep_file(hint, {"p": "a"}, {}, ["p"])
+    assert keep_file(hint, {}, {"minValues": {"p": "a"},
+                                "maxValues": {"p": "b"}}, [])
+    path = str(tmp_path / "t")
+    TableLog(spark, path).create(
+        spark.createDataFrame([(1, "a"), (2, "b")], "id int, p string"),
+        partition_by=["p"])
+    for name in ("resident", "scan"):
+        with manifest_storage_set(spark, name) as storage:
+            table = SharedTable(spark, path)
+            snap = table.log.snapshot()
+            storage.check(table.log, snap)
+            kept = table.kept_adds(snap, hint, None, None)
+            assert len(kept) == len(snap.files) == 2, name
+
+
 class TestAsyncQuery:
     def test_submit_poll_dedup(self, spark, events, tmp_path):
         from delta_sharing_spark.asyncquery import AsyncQueryManager

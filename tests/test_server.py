@@ -650,3 +650,26 @@ class TestReaderFeatures:
             response_formats="delta,parquet")
         assert any(k in ln for ln in lines
                    for k in ("file", "add", "cdf", "remove"))
+
+
+class TestShutdown:
+    def test_shutdown_is_prompt_and_closes_the_socket(self, spark):
+        import socket
+        import time
+
+        srv = SharingServer(ShareCatalog(spark), bearer_token="t")
+        url = srv.serve_background()
+        assert _get_status(url + "/shares", "t") == 200
+        t0 = time.perf_counter()
+        srv.shutdown()
+        assert time.perf_counter() - t0 < 0.1
+        assert srv.httpd.socket.fileno() == -1
+        with pytest.raises(OSError):
+            socket.create_connection(("127.0.0.1", srv.port), timeout=1)
+
+
+def _get_status(url: str, token: str) -> int:
+    try:
+        return _get(url, token)[0]
+    except urllib.error.HTTPError as exc:
+        return exc.code

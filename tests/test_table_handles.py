@@ -270,6 +270,30 @@ class TestConcurrentHandle:
                 if isinstance(e, ResidentManifest)} == {2, 3}
 
 
+class TestSnapshotResolves:
+    def test_query_lists_the_log_once(self, spark, tmp_path, monkeypatch):
+        # the metaData line reuses the query's resolved snapshot: one
+        # listing of _delta_log per request, not one per line
+        from delta_sharing_spark.table import SharedTable
+
+        path = str(tmp_path / "t")
+        _build(spark, path, commits=2)
+        table = SharedTable(spark, path)
+        table.query_actions()                       # warm the handle
+        calls = []
+        listed = TableLog._list_versions
+
+        def counted(self):
+            calls.append(1)
+            return listed(self)
+
+        monkeypatch.setattr(TableLog, "_list_versions", counted)
+        out = table.query_actions(json_predicate_hints=_hint(
+            "equal", "cat", "string", "1"))
+        assert out["actions"][1]["metaData"]["version"] == 1
+        assert len(calls) == 1
+
+
 def _kept(snap, hint: str) -> list[str]:
     """Paths the sessionless driver loop keeps for ``hint``."""
     from delta_sharing_spark.plans.predicates import keep_file
