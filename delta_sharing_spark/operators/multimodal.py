@@ -6,9 +6,9 @@ pluggable; two vendored pure-python codecs (``operators/png.py`` and the
 baseline-JPEG ``operators/jpeg.py``) make it a REAL decode with no
 dependency at all:
 
-- ``decode_media``: resolves registered codecs first, then real decoders
-  (PIL / imageio) behind import guards, and raises
-  ``NotImplementedError`` only when a named codec is unavailable;
+- ``decode_media``: resolves registered codecs first, then the fake
+  below, and raises ``NotImplementedError`` only when a named codec is
+  not registered;
 - ``fake_decode_media``: a deterministic md5-derived "decoder" that
   exercises the REAL Spark-side plumbing (binary columns, Arrow batch
   transfer, schema contract, per-partition batching) with reproducible
@@ -53,41 +53,13 @@ def with_media_column(df: DataFrame, source_col: str,
 #
 # Pluggable per-row decoders: content bytes -> (width, height, channels,
 # format) or None on decode failure. Resolution order: explicitly
-# registered codecs, then pillow, then imageio, then the deterministic
-# fake. Workers resolve by NAME inside the mapInPandas closure, so each
-# executor imports its own codec library (nothing pickles a C extension).
+# registered codecs (``register_png_codec``, ``register_jpeg_codec`` or a
+# caller's own), then the deterministic fake.
 
 def _fake_decode(content: bytes):
     digest = hashlib.md5(content or b"").hexdigest()
     return (1 + int(digest[0:2], 16), 1 + int(digest[2:4], 16),
             1 + int(digest[4], 16) % 4, "fake/" + digest[5])
-
-
-def _pillow_decode(content: bytes):
-    import io
-
-    import PIL.Image
-
-    try:
-        with PIL.Image.open(io.BytesIO(content or b"")) as img:
-            return (img.width, img.height, len(img.getbands()),
-                    (img.format or "unknown").lower())
-    except Exception:
-        return None
-
-
-def _imageio_decode(content: bytes):
-    import io
-
-    import imageio.v3 as iio
-
-    try:
-        arr = iio.imread(io.BytesIO(content or b""))
-        h, w = arr.shape[0], arr.shape[1]
-        channels = arr.shape[2] if arr.ndim > 2 else 1
-        return (w, h, channels, "imageio")
-    except Exception:
-        return None
 
 
 _CODEC_REGISTRY: dict = {"fake": _fake_decode}
@@ -100,48 +72,32 @@ def register_codec(name: str, decode_fn) -> None:
 
 
 def _codec_available(name: str) -> bool:
-    import importlib.util
-
-    if name == "pillow":
-        return importlib.util.find_spec("PIL") is not None
-    if name == "imageio":
-        return importlib.util.find_spec("imageio") is not None
+    """Whether a codec of this name is registered."""
     return name in _CODEC_REGISTRY
 
 
 def resolve_codec(preferred: str = "auto"):
-    """Return (name, decode_fn). ``auto`` picks the first REAL codec
-    available (pillow, imageio), else the deterministic fake — the operator
-    becomes real the moment a codec library exists in the environment."""
+    """Return (name, decode_fn). ``auto`` picks the first registered
+    codec, else the deterministic fake."""
     if preferred != "auto":
-        if preferred == "pillow" and _codec_available("pillow"):
-            return "pillow", _pillow_decode
-        if preferred == "imageio" and _codec_available("imageio"):
-            return "imageio", _imageio_decode
         if preferred in _CODEC_REGISTRY:
             return preferred, _CODEC_REGISTRY[preferred]
         raise NotImplementedError(
             f"media codec {preferred!r} is not available in this "
             "environment; register one with register_codec() or use "
             "codec='auto' to fall back to the deterministic fake decoder")
-    # documented order: explicitly registered codecs first, then real
-    # libraries, then the deterministic fake
     for name, fn in _CODEC_REGISTRY.items():
         if name != "fake":
             return name, fn
-    if _codec_available("pillow"):
-        return "pillow", _pillow_decode
-    if _codec_available("imageio"):
-        return "imageio", _imageio_decode
     return "fake", _fake_decode
 
 
 def decode_media(df: DataFrame, media_col: str, id_col: str,
                  codec: str = "auto") -> DataFrame:
     """Decode the opaque media column to typed metadata via the codec
-    registry — REAL decoding when a codec library (pillow/imageio) is
-    importable on the executors, the deterministic fake otherwise (marked
-    by ``format`` starting with ``fake/``). Same distributed plumbing
+    registry — REAL decoding when a codec is registered (the vendored PNG
+    and JPEG decoders, or a caller's own), the deterministic fake otherwise
+    (marked by ``format`` starting with ``fake/``). Same distributed plumbing
     either way: Arrow-batched ``mapInPandas``, decode parallelism =
     partition count, payloads never leave the executor."""
     _codec_name, decode_fn = resolve_codec(codec)  # fail fast on the driver

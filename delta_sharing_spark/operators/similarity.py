@@ -20,6 +20,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from delta_sharing_spark.functions.vectors import cosine
 from delta_sharing_spark.session import local_frame
@@ -134,36 +135,31 @@ def ivf_centroids(candidates: DataFrame, cell_col: str,
     )
 
 
-def kmeans_assign(vectors: DataFrame, cents: DataFrame,
-                  id_col: str = "vec_id", vec_col: str = "embedding"
-                  ) -> DataFrame:
-    """Assign each vector to its nearest centroid by squared L2 (per-row
-    left-to-right double fold — deterministic, replayable in SQL; ties break
-    to the lowest cell id). One broadcast of the k centroids, no shuffle."""
-    d = vectors.crossJoin(F.broadcast(cents.select("cell", "centroid")))
-    dist = F.expr(
-        f"aggregate(zip_with({vec_col}, centroid,"
-        " (x, y) -> (CAST(x AS DOUBLE) - y) * (CAST(x AS DOUBLE) - y)),"
-        " CAST(0 AS DOUBLE), (acc, v) -> acc + v)"
-    )
-    w = Window.partitionBy(id_col).orderBy("dist", "cell")
-    return (
-        d.withColumn("dist", dist)
-        .withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn", "centroid", "dist")
-    )
+# ------------------------------------------- the nearest-codeword kernel
+#
+# Every ANN fit, assignment and probe makes one choice: the cells of a
+# small codebook nearest each row, per subspace. ``_nearest`` is that
+# choice in numpy and ``_with_nearest`` runs it as one map-only
+# ``mapInArrow`` against the codebook digest, so no plan joins rows to
+# cells or ranks them in a window. k-means is the one-subspace case of PQ.
 
 
-def _check_vector_lengths(op: str, flat, rows: int, dim: int) -> None:
-    """Raise unless a batch's flattened embeddings hold exactly ``rows``
-    vectors of ``dim`` values: a mis-sized vector whose flat length still
-    divides by ``dim`` would otherwise reshape into misaligned rows and
-    silently corrupt every partial."""
-    if flat.size != rows * dim:
+def _dense(op: str, col, dim: int):
+    """A batch's vector column as a (rows, dim) float64 matrix. Raises on
+    a null row, and unless the rows hold exactly ``dim`` values each: a
+    mis-sized vector whose flat length still divides by ``dim`` would
+    otherwise reshape into misaligned rows."""
+    import numpy as np
+
+    if col.null_count:
+        raise ValueError(f"{op}: null embedding rows are not supported "
+                         "(the dense-vector contract)")
+    flat = col.flatten().to_numpy(zero_copy_only=False)
+    if flat.size != len(col) * dim:
         raise ValueError(
             f"{op}: embedding vectors must all have length {dim}; a batch "
-            f"of {rows} rows holds {flat.size} values")
+            f"of {len(col)} rows holds {flat.size} values")
+    return flat.astype(np.float64).reshape(-1, dim)
 
 
 def _fixed_point(op: str, X):
@@ -182,137 +178,122 @@ def _fixed_point(op: str, X):
     return scaled.astype(np.int64)
 
 
-def _lloyd_partials_fn(cells: list, cents: list, dim: int):
-    """mapInArrow factory: one corpus pass computing, per task, the exact
-    integer update partials of a Lloyd iteration against the broadcast
-    centroid digest. Emits (cell, dim, s_fx, n) — k*dim rows per task.
+def _nearest(X, C, n: int, metric: str):
+    """(rows, min(n, k)) positions in ``C`` (k centroids, cell-ascending)
+    of the codewords nearest each row of ``X``, nearest first.
 
-    Bit-exactness contract (what makes the fused iteration value-identical
-    to the kmeans_assign + ivf_centroids plan it replaces):
-    - distances accumulate dim-by-dim with vectorized float64 ops in the
-      SAME order as the left-to-right SQL fold (acc + (x-y)*(x-y) per
-      dimension) — IEEE doubles are deterministic, so ties fall exactly
-      where the fold put them;
-    - assignment = argmin over cells sorted ascending — numpy's
-      first-minimum matches the (dist, cell) row_number tie-break;
-    - update sums are FLOOR(x*1e12) integers accumulated in Python ints —
-      exact and order-independent, like the DECIMAL(38,0) SUM.
-    """
+    Distances accumulate dim by dim in float64, in the order of the SQL
+    fold ``aggregate(zip_with(x, c, ...), 0D, (acc, v) -> acc + v)``, so
+    they are the doubles Spark computes. ``l2`` (squared Euclidean) ranks
+    ascending with NaN last; ``cosine`` (``functions.vectors.cosine``)
+    ranks descending with NaN first — Spark's double order both ways.
+    Ties fall to the lower cell."""
     import numpy as np
 
-    C = np.array(cents, dtype=np.float64)          # (k, dim), cell-sorted
+    if metric == "l2":
+        acc = np.zeros((X.shape[0], C.shape[0]))
+        for j in range(X.shape[1]):
+            d = X[:, j:j + 1] - C[None, :, j]
+            acc += d * d
+        order = np.argsort(acc, axis=1, kind="stable")
+    else:
+        dot = np.zeros((X.shape[0], C.shape[0]))
+        xx, cc = np.zeros(X.shape[0]), np.zeros(C.shape[0])
+        for j in range(X.shape[1]):
+            dot += X[:, j:j + 1] * C[None, :, j]
+            xx += X[:, j] * X[:, j]
+            cc += C[:, j] * C[:, j]
+        with np.errstate(divide="ignore", invalid="ignore"):
+            cos = dot / (np.sqrt(xx)[:, None] * np.sqrt(cc)[None, :])
+        order = np.lexsort((-cos, ~np.isnan(cos)), axis=1)
+    return order[:, :n]
+
+
+def _digest(books: DataFrame, cell_col: str) -> dict:
+    """``{sub: (cells, centroids)}`` of a codebook frame, cells ascending
+    with null first as Spark sorts them; a frame without ``sub`` is
+    subspace 0."""
+    sub = F.col("sub") if "sub" in books.columns else F.lit(0)
+    out: dict = {}
+    for s, cell, cent in sorted(
+            books.select(sub, cell_col, "centroid").collect(),
+            key=lambda r: (r[0], r[1] is not None, r[1])):
+        out.setdefault(s, ([], []))
+        out[s][0].append(cell)
+        out[s][1].append(cent)
+    return out
+
+
+def _with_nearest(df: DataFrame, books: DataFrame, vec_col: str, op: str,
+                  n: int = 1, metric: str = "l2", cell_col: str = "cell",
+                  residual: bool = False) -> DataFrame:
+    """``df`` plus ``__near``: for each subspace of ``books`` in order, the
+    ids of the row's ``n`` nearest cells, nearest first. Subspaces split
+    the vector into equal consecutive slices. One map-only ``mapInArrow``;
+    the codebook rides in the task closure as a digest. With ``residual``
+    (one subspace, n = 1) also ``__resid``, the row minus its nearest
+    centroid in double. An empty codebook assigns no row."""
+    import numpy as np
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    cell_type = books.schema[cell_col].dataType
+    near = T.StructField("__near", T.ArrayType(cell_type))
+    resid = T.StructField("__resid", T.ArrayType(T.DoubleType()))
+    fields = [*df.schema.fields, near] + ([resid] if residual else [])
+    digest = _digest(books, cell_col)
+    if not digest:
+        return df.limit(0).select(
+            "*", *[F.lit(None).cast(f.dataType).alias(f.name)
+                   for f in fields[len(df.columns):]])
+    subs = [(pa.array(cells, to_arrow_type(cell_type)),
+             np.array(cents, dtype=np.float64))
+            for cells, cents in (digest[s] for s in sorted(digest))]
+    width = subs[0][1].shape[1]
+    starts = np.cumsum([0] + [len(cells) for cells, _ in subs])
+    all_cells = pa.concat_arrays([cells for cells, _ in subs])
 
     def fn(batches):
-        import pyarrow as pa
-
-        S = {}                                     # cell -> int sums [dim]
-        N = {}                                     # cell -> row count
         for batch in batches:
-            col = batch.column(0)
-            if col.null_count:
-                raise ValueError(
-                    "kmeans_fit: null embedding rows are not supported "
-                    "(the dense-vector contract)")
-            flat = col.flatten().to_numpy(zero_copy_only=False)
-            _check_vector_lengths("kmeans_fit", flat, len(col), dim)
-            X = flat.astype(np.float64).reshape(-1, dim)
-            acc = np.zeros((X.shape[0], C.shape[0]), dtype=np.float64)
-            for j in range(dim):
-                d = X[:, j:j + 1] - C[None, :, j]
-                acc += d * d
-            amin = acc.argmin(axis=1)
-            X_int = _fixed_point("kmeans_fit", X)
-            for ci in range(C.shape[0]):
-                mask = amin == ci
-                cnt = int(mask.sum())
-                if not cnt:
-                    continue
-                cell = cells[ci]
-                part = X_int[mask].sum(axis=0)     # batch-bounded: exact
-                if cell in S:
-                    prev = S[cell]
-                    S[cell] = [p + int(v) for p, v in zip(prev, part)]
-                    N[cell] += cnt
-                else:
-                    S[cell] = [int(v) for v in part]
-                    N[cell] = cnt
-        out_cell, out_dim, out_s, out_n = [], [], [], []
-        for cell, sums in S.items():
-            for j, s in enumerate(sums):
-                out_cell.append(cell)
-                out_dim.append(j)
-                out_s.append(s)
-                out_n.append(N[cell])
-        import decimal
+            X = _dense(op, batch.column(vec_col), width * len(subs))
+            pos = np.hstack([
+                _nearest(X[:, s * width:(s + 1) * width], C, n, metric)
+                + starts[s] for s, (_cells, C) in enumerate(subs)])
+            offsets = pa.array(np.arange(len(X) + 1) * pos.shape[1],
+                               pa.int32())
+            cols = [*batch.columns, pa.ListArray.from_arrays(
+                offsets, all_cells.take(pa.array(pos.ravel())))]
+            if residual:
+                R = X - subs[0][1][pos[:, 0]]
+                cols.append(pa.ListArray.from_arrays(
+                    pa.array(np.arange(len(X) + 1) * width, pa.int32()),
+                    pa.array(R.ravel())))
+            yield pa.RecordBatch.from_arrays(
+                cols, names=[f.name for f in fields])
 
-        yield pa.record_batch(
-            [pa.array(out_cell, pa.int32()),
-             pa.array(out_dim, pa.int32()),
-             pa.array([decimal.Decimal(s) for s in out_s],
-                      pa.decimal128(38, 0)),
-             pa.array(out_n, pa.int64())],
-            names=["cell", "dim", "s_fx", "n"])
+    return df.mapInArrow(fn, T.StructType(fields))
 
-    return fn
+
+def kmeans_assign(vectors: DataFrame, cents: DataFrame,
+                  id_col: str = "vec_id", vec_col: str = "embedding"
+                  ) -> DataFrame:
+    """Each row of ``vectors`` with ``cell``, its nearest centroid by
+    squared L2 (ties to the lowest cell): the one-subspace case of the
+    nearest-codeword kernel, map-only. ``id_col`` is unused; rows are
+    assigned one by one."""
+    return _with_nearest(vectors, cents, vec_col, "kmeans_assign").select(
+        *vectors.columns, F.explode("__near").alias("cell"))
 
 
 def kmeans_fit(candidates: DataFrame, k: int = 8, iters: int = 2,
                id_col: str = "vec_id", vec_col: str = "embedding",
                dim: int = 64) -> DataFrame:
-    """Lloyd's k-means — the learned-centroid coarse quantizer for IVF.
-    Deterministic end to end: init = the k vectors with the smallest ids
-    (cast to double), assignment = per-row squared-L2 with (dist, cell)
-    tie-break, update = the exact fixed-point per-(cell, dim) integer
-    sums of :func:`ivf_centroids`. Returns (cell, centroid, n); cells
-    that lose all members drop out (standard Lloyd behavior, replayed
-    identically by the SQL oracle).
-
-    r13 fused iteration: the centroid set is a k-row DIGEST, so each
-    Lloyd round runs as ONE corpus pass — a mapInArrow computing
-    vectorized assignments + per-task integer update partials against
-    the broadcast digest (`_lloyd_partials_fn`) — followed by a tiny
-    (k*dim rows/task) aggregation collected to the driver, which rebuilds
-    the centroids exactly as the SQL plan did (CAST(decimal AS
-    DOUBLE)/1e12/n). The previous all-DataFrame iteration planned a
-    crossJoin(k) + row_number window (an Exchange + sort of k*N rows) +
-    posexplode + two more Exchanges PER ROUND; the fused round shuffles
-    k*dim*tasks digest rows instead of ever shuffling the corpus, and
-    values are bit-identical (argmin/tie-break/update order replicated —
-    see `_lloyd_partials_fn`'s contract and
-    tests/test_opt_r13.py::TestFusedLloyd)."""
-    spark = candidates.sparkSession
-    seed_rows = sorted(
-        candidates.orderBy(id_col).limit(k)
-        .select(id_col, vec_col).collect(),
-        key=lambda r: r[0])
-    cells = list(range(len(seed_rows)))
-    cents = [[float(x) for x in r[1]] for r in seed_rows]
-    ns = [1] * len(seed_rows)
-    if not cents:
-        iters = 0  # empty input: no cells, nothing to iterate
-    for _ in range(iters):
-        parts = candidates.select(vec_col).mapInArrow(
-            _lloyd_partials_fn(cells, cents, dim),
-            schema="cell int, dim int, s_fx decimal(38,0), n bigint")
-        rows = (parts.groupBy("cell", "dim")
-                .agg(F.expr("SUM(s_fx)").alias("s_fx"),
-                     F.sum("n").alias("n"))
-                .collect())
-        by_cell: dict = {}
-        for r in rows:
-            by_cell.setdefault(int(r["cell"]), {})[int(r["dim"])] = \
-                (int(r["s_fx"]), int(r["n"]))
-        cells, cents, ns = [], [], []
-        for cell in sorted(by_cell):
-            dims = by_cell[cell]
-            # CAST(s_fx AS DOUBLE) / 1e12 / n, in the plan's exact op order
-            cents.append([float(dims[j][0]) / 1e12 / dims[j][1]
-                          for j in range(dim)])
-            cells.append(cell)
-            ns.append(dims[0][1])
-    return local_frame(
-        spark, [(c, v, n) for c, v, n in zip(cells, cents, ns)],
-        "cell int, centroid array<double>, n long")
+    """Lloyd's k-means — the learned-centroid coarse quantizer for IVF:
+    :func:`pq_fit` with one subspace, minus its ``sub`` column. Returns
+    (cell, centroid, n); cells that lose all members drop out (standard
+    Lloyd behavior, replayed identically by the SQL oracle)."""
+    return pq_fit(candidates, id_col=id_col, vec_col=vec_col, m=1, k=k,
+                  iters=iters, dim=dim).drop("sub")
 
 
 def ivf_topk(queries: DataFrame, candidates: DataFrame, cell_col: str,
@@ -342,16 +323,9 @@ def ivf_search(queries: DataFrame, candidates: DataFrame, cents: DataFrame,
     q = queries.select(
         F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")
     )
-    probe_w = Window.partitionBy("query_id").orderBy(
-        F.desc("cell_cos"), F.asc(cell_col)
-    )
-    probed = (
-        q.crossJoin(F.broadcast(cents))
-        .withColumn("cell_cos", cosine("q_vec", "centroid"))
-        .withColumn("cell_rank", F.row_number().over(probe_w))
-        .filter(F.col("cell_rank") <= nprobe)
-        .select("query_id", "q_vec", cell_col)
-    )
+    probed = _with_nearest(q, cents, "q_vec", "ivf_search", n=nprobe,
+                           metric="cosine", cell_col=cell_col).select(
+        "query_id", "q_vec", F.explode("__near").alias(cell_col))
     c = candidates.select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).alias("c_vec"),
@@ -579,33 +553,12 @@ def _subvectors(df: DataFrame, id_col: str, vec_col: str,
     ).select(id_col, "__s.sub", "__s.sv")
 
 
-def _pq_assign(subs: DataFrame, books: DataFrame, id_col: str) -> DataFrame:
-    """Nearest codeword per (vector, subspace): broadcast the m*k codebook,
-    same deterministic left-to-right double fold + (dist, cell) tie-break
-    as kmeans_assign."""
-    d = subs.join(F.broadcast(books.select("sub", "cell", "centroid")),
-                  "sub")
-    dist = F.expr(
-        "aggregate(zip_with(sv, centroid,"
-        " (x, y) -> (x - y) * (x - y)),"
-        " CAST(0 AS DOUBLE), (acc, v) -> acc + v)"
-    )
-    w = Window.partitionBy(id_col, "sub").orderBy("dist", "cell")
-    return (
-        d.withColumn("dist", dist)
-        .withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .select(id_col, "sub", F.col("cell").alias("code"))
-    )
-
-
 def _pq_partials_fn(books: dict, m: int, sub_len: int):
-    """mapInArrow factory for the fused PQ Lloyd round: one corpus pass
-    emits, per task, the exact integer update partials for ALL m
-    subspaces — (sub, cell, i, s_fx, n) rows. Same bit-exactness
-    contract as `_lloyd_partials_fn` (dim-ordered float64 accumulation ==
-    the `_pq_assign` fold; argmin over cell-ascending == the (dist, cell)
-    tie-break; FLOOR(x*1e12) Python-int sums == the DECIMAL(38,0) SUM)."""
+    """mapInArrow factory for one fused Lloyd round: a corpus pass that
+    assigns every row of each of the m subspaces to its nearest codeword
+    (``_nearest``) and emits, per task, the exact integer update partials
+    — (sub, cell, i, s_fx, n) rows. ``FLOOR(x*1e12)`` sums in Python ints
+    are exact and order-independent, like the SQL DECIMAL(38,0) SUM."""
     import numpy as np
 
     Cs = {s: np.array(cents, dtype=np.float64)
@@ -619,25 +572,13 @@ def _pq_partials_fn(books: dict, m: int, sub_len: int):
         S: dict = {}
         N: dict = {}
         for batch in batches:
-            col = batch.column(0)
-            if col.null_count:
-                raise ValueError(
-                    "pq_fit: null embedding rows are not supported "
-                    "(the dense-vector contract)")
-            flat = col.flatten().to_numpy(zero_copy_only=False)
-            _check_vector_lengths("pq_fit", flat, len(col), m * sub_len)
-            X = flat.astype(np.float64).reshape(-1, m * sub_len)
+            X = _dense("pq_fit", batch.column(0), m * sub_len)
             for s in range(m):
                 Xs = X[:, s * sub_len:(s + 1) * sub_len]
-                C = Cs[s]
-                acc = np.zeros((Xs.shape[0], C.shape[0]), dtype=np.float64)
-                for j in range(sub_len):
-                    d = Xs[:, j:j + 1] - C[None, :, j]
-                    acc += d * d
-                amin = acc.argmin(axis=1)
+                amin = _nearest(Xs, Cs[s], 1, "l2")[:, 0]
                 Xs_int = _fixed_point("pq_fit", Xs)
                 cells_s = books[s][0]
-                for ci in range(C.shape[0]):
+                for ci in range(Cs[s].shape[0]):
                     mask = amin == ci
                     cnt = int(mask.sum())
                     if not cnt:
@@ -673,16 +614,19 @@ def pq_fit(candidates: DataFrame, id_col: str = "vec_id",
            vec_col: str = "embedding", m: int = 4, k: int = 8,
            iters: int = 1, dim: int = 64) -> DataFrame:
     """Per-subspace codebooks (sub, cell, centroid, n) via Lloyd
-    iterations — the same deterministic, SQL-replayable recipe as
-    :func:`kmeans_fit`, for all m subspaces in one pass.
+    iterations, deterministic and replayable in SQL: init = the k vectors
+    with the smallest ids (cast to double), assignment = per-row squared
+    L2 with (dist, cell) tie-break, update = the exact fixed-point
+    per-(cell, dim) integer sums of :func:`ivf_centroids`. With m = 1 this
+    is :func:`kmeans_fit`.
 
-    r13 fused iteration (same rationale as ``kmeans_fit``): the m*k
-    codebook is a digest, so each round is ONE corpus pass (mapInArrow
-    partials for all subspaces at once) + a tiny aggregation collected
-    and rebuilt driver-side — replacing the per-round broadcast join +
-    (id, sub) row_number window + re-join + posexplode + two-Exchange
-    aggregate. Values bit-identical (`_pq_partials_fn` contract;
-    tests/test_opt_r13.py::TestFusedLloyd)."""
+    The codebook is a digest, so each round is ONE corpus pass — a
+    mapInArrow computing assignments and per-task integer update
+    partials for all subspaces at once (`_pq_partials_fn`) — plus a tiny
+    (m*k*dim rows per task) aggregation collected to the driver, which
+    rebuilds the centroids in the SQL op order (CAST(decimal AS
+    DOUBLE)/1e12/n). Values are pinned against the SQL Lloyd loop in
+    tests/test_opt_r13.py::TestFusedLloyd."""
     spark = candidates.sparkSession
     sub_len = dim // m
     seed_rows = sorted(
@@ -730,9 +674,11 @@ def pq_encode(vectors: DataFrame, books: DataFrame,
               id_col: str = "vec_id", vec_col: str = "embedding",
               m: int = 4, dim: int = 64) -> DataFrame:
     """(id, sub, code) rows — the PQ-compressed corpus representation
-    (persist this partitioned by sub, or pivot to an array column)."""
-    subs = _subvectors(vectors, id_col, vec_col, m, dim)
-    return _pq_assign(subs, books, id_col)
+    (persist this partitioned by sub, or pivot to an array column). The
+    subspace split is read from ``books`` (m slices of dim / m values)."""
+    return _with_nearest(vectors.select(id_col, vec_col), books, vec_col,
+                         "pq_encode").select(
+        id_col, F.posexplode("__near").alias("sub", "code"))
 
 
 def pq_adc_topk(queries: DataFrame, codes: DataFrame, books: DataFrame,
@@ -782,19 +728,6 @@ def pq_adc_topk(queries: DataFrame, codes: DataFrame, books: DataFrame,
 # nprobe/k_coarse of the data, and each candidate costs m integer lookups.
 
 
-def _residuals(assigned: DataFrame, coarse: DataFrame, id_col: str,
-               vec_col: str) -> DataFrame:
-    """(id, cell, __resid): per-vector residual against its coarse
-    centroid (double), one broadcast join."""
-    return assigned.join(
-        F.broadcast(coarse.select("cell", "centroid")), "cell"
-    ).select(
-        F.col(id_col), F.col("cell"),
-        F.expr(f"zip_with({vec_col}, centroid,"
-               " (x, y) -> CAST(x AS DOUBLE) - y)").alias("__resid"),
-    )
-
-
 def ivf_pq_fit(candidates: DataFrame, id_col: str = "vec_id",
                vec_col: str = "embedding", k_coarse: int = 8,
                m: int = 4, k: int = 8, coarse_iters: int = 2,
@@ -802,8 +735,10 @@ def ivf_pq_fit(candidates: DataFrame, id_col: str = "vec_id",
     """Fit the composed index: returns ``(coarse, books, codes)`` —
     coarse centroids (cell, centroid, n), per-subspace residual codebooks
     (sub, cell, centroid, n), and the encoded corpus
-    (id, cell, sub, code). Every stage reuses the deterministic,
-    SQL-replayable recipes (kmeans_fit / pq_fit)."""
+    (id, sub, code, cell). Every stage reuses the deterministic,
+    SQL-replayable recipes (kmeans_fit / pq_fit); the coarse cell and the
+    residual come from one assignment map pass, and the codes keep its
+    cell column, so no stage joins."""
     # fit artifacts are MODELS: materialize the tiny results (k_coarse
     # rows / m*k rows) so downstream consumers (assignment, residuals,
     # encoding, every search) don't re-execute the whole iterative fit
@@ -811,14 +746,14 @@ def ivf_pq_fit(candidates: DataFrame, id_col: str = "vec_id",
     coarse = kmeans_fit(candidates, k=k_coarse, iters=coarse_iters,
                         id_col=id_col, vec_col=vec_col, dim=dim) \
         .localCheckpoint(eager=True)
-    assigned = kmeans_assign(candidates, coarse, id_col, vec_col)
-    resid = _residuals(assigned, coarse, id_col, vec_col)
+    resid = _with_nearest(candidates.select(id_col, vec_col), coarse,
+                          vec_col, "ivf_pq_fit", residual=True).select(
+        id_col, F.explode("__near").alias("cell"), "__resid")
     books = pq_fit(resid, id_col=id_col, vec_col="__resid",
                    m=m, k=k, iters=pq_iters, dim=dim) \
         .localCheckpoint(eager=True)
-    codes = pq_encode(resid, books, id_col=id_col, vec_col="__resid",
-                      m=m, dim=dim).join(
-        resid.select(id_col, "cell"), id_col)
+    codes = _with_nearest(resid, books, "__resid", "ivf_pq_fit").select(
+        id_col, F.posexplode("__near").alias("sub", "code"), "cell")
     return coarse, books, codes
 
 
@@ -835,17 +770,10 @@ def ivf_pq_topk(queries: DataFrame, coarse: DataFrame, books: DataFrame,
     sub_len = dim // m
     q = queries.select(F.col(id_col).alias("query_id"),
                        F.col(vec_col).alias("q_vec"))
-    coarse_dist = F.expr(
-        "aggregate(zip_with(q_vec, centroid,"
-        " (x, y) -> (CAST(x AS DOUBLE) - y) * (CAST(x AS DOUBLE) - y)),"
-        " CAST(0 AS DOUBLE), (acc, v) -> acc + v)"
-    )
-    probe_w = Window.partitionBy("query_id").orderBy("cdist", "cell")
     probed = (
-        q.crossJoin(F.broadcast(coarse.select("cell", "centroid")))
-        .withColumn("cdist", coarse_dist)
-        .withColumn("__rn", F.row_number().over(probe_w))
-        .filter(F.col("__rn") <= nprobe)
+        _with_nearest(q, coarse, "q_vec", "ivf_pq_topk", n=nprobe)
+        .select("query_id", "q_vec", F.explode("__near").alias("cell"))
+        .join(F.broadcast(coarse.select("cell", "centroid")), "cell")
         .select("query_id", "cell",
                 F.expr("zip_with(q_vec, centroid,"
                        " (x, y) -> CAST(x AS DOUBLE) - y)").alias("__qr"))

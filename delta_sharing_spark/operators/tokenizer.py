@@ -49,26 +49,6 @@ def word_symbol_freqs(df: DataFrame, text_col: str) -> DataFrame:
     )
 
 
-def _adjacent_pairs(freqs: DataFrame) -> DataFrame:
-    """(l, r, pair_n): weighted adjacent-symbol pair counts over the
-    word-frequency table. Words of a single symbol contribute nothing."""
-    arr = F.split(F.col("sym"), " ")
-    return (
-        freqs.select("n", arr.alias("a"))
-        .filter(F.size("a") >= 2)
-        .select(
-            "n",
-            F.explode(F.expr(
-                "transform(sequence(1, size(a) - 1),"
-                " j -> struct(element_at(a, j) AS l,"
-                "             element_at(a, j + 1) AS r))"
-            )).alias("p"),
-        )
-        .groupBy(F.col("p.l").alias("l"), F.col("p.r").alias("r"))
-        .agg(F.sum("n").alias("pair_n"))
-    )
-
-
 def bpe_train(df: DataFrame, text_col: str,
               num_merges: int = 6) -> DataFrame:
     """Learn the first ``num_merges`` BPE merges; returns a DataFrame

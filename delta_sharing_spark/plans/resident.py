@@ -20,9 +20,11 @@ columns, non-string partition values) is converted ONCE per manifest by the
 Catalyst expression the scan evaluator uses (``_leaf_column``,
 ``_typed_stat``, ``_json_stat``), folded over a narrow ``LocalRelation``
 and cached with the manifest. Literals take the same ``try_cast``,
-memoized per value. A tree the vectorized evaluator cannot match exactly
-(a comparison across value types Spark would coerce, a non-boolean leaf
-where a predicate is expected) is evaluated once by
+memoized per value. A comparison of leaves that do not compare (a string
+column against an int literal) is Unknown, as in ``to_column``. A tree
+the vectorized evaluator cannot match exactly (a comparison across
+numeric value types Spark would widen, a non-boolean leaf where a
+predicate is expected) is evaluated once by
 ``file_keep_condition`` the same way and cached per tree.
 """
 
@@ -40,6 +42,7 @@ from pyspark.sql import types as T
 
 from delta_sharing_spark.plans.predicates import (
     _BINARY_OPS,
+    _comparable,
     _json_stat,
     _leaf_column,
     _literal_column,
@@ -68,6 +71,8 @@ _ARROW_CMP = {"equal": pc.equal, "lessThan": pc.less,
 _FLIP = {"lessThan": "greaterThan", "greaterThan": "lessThan",
          "lessThanOrEqual": "greaterThanOrEqual",
          "greaterThanOrEqual": "lessThanOrEqual", "equal": "equal"}
+# a comparison of two leaves that do not compare (``_comparable``)
+_UNKNOWN = (pa.scalar(None, pa.bool_()), "bool")
 _STAT_SOURCES = ("partitionValues", "minValues", "maxValues", "nullCount",
                  "minValues_parsed", "maxValues_parsed", "nullCount_parsed")
 
@@ -179,6 +184,8 @@ class _Evaluator:
                                    "children": [right, left]})
             if left.get("op") != "column" or right.get("op") != "literal":
                 return None
+            if not _comparable(left, right):
+                return _UNKNOWN
             name, vtype = left["name"], left["valueType"]
             lit = self.literal(right)
             if name in self.pcols:
@@ -244,6 +251,12 @@ class _Evaluator:
                 return pc.is_null(inner[0]), "bool"
             return pc.invert(_predicate(inner)), "bool"
         if kind in _BINARY_OPS:
+            if not _comparable(*children):
+                # Unknown once both sides resolve; leaves resolve unread
+                return _UNKNOWN if all(
+                    c["name"] in self.pcols if c.get("op") == "column"
+                    else c.get("op") == "literal"
+                    or self.exact(c) is not None for c in children) else None
             left, right = (self.exact(c) for c in children)
             if left is None or right is None:
                 return None

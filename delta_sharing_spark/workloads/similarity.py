@@ -188,8 +188,8 @@ def _kmeans_ctes(k: int, iters: int, dim: int = 64) -> str:
     """,
 )
 def q_ann_kmeans_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Learned coarse quantizer: 2 Lloyd iterations as pure DataFrame ops
-    (broadcast assign + exact fixed-point update per iteration), fully
+    """Learned coarse quantizer: 2 Lloyd iterations (nearest-centroid
+    assignment + exact fixed-point update, one corpus pass each), fully
     replayed by the SQL oracle — even the iterative algorithm is
     value-checked bit-exactly."""
     from delta_sharing_spark.operators.similarity import kmeans_fit
@@ -595,9 +595,9 @@ def _pq_ctes(m: int, k: int, dim: int) -> str:
 )
 def q_ann_pq_codebooks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product-quantization codebooks (m=4 subspaces x k=8 codewords, one
-    Lloyd iteration): all m subspaces fit in ONE plan with the subspace id
-    as a key — the oracle replays init, assignment, and the fixed-point
-    update per subspace bit-exactly."""
+    Lloyd iteration): all m subspaces fit in one corpus pass per round —
+    the oracle replays init, assignment, and the fixed-point update per
+    subspace bit-exactly."""
     from delta_sharing_spark.operators.similarity import pq_fit
 
     emb = read_table(spark, sf_dir, "embeddings")

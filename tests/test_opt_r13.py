@@ -1,6 +1,6 @@
 """Round-13 optimization regression tests.
 
-Pins the three operator-internal changes of the round:
+Pins the operator-internal changes of the round and their successors:
 - the skew-hybrid duplicated-key routing in dedup (_dup_key_rows):
   value-equivalence of the hot (aggregate + broadcast digest) route vs the
   window route vs brute force, and the plan-shape guarantees (no Union at
@@ -8,6 +8,10 @@ Pins the three operator-internal changes of the round:
   keys are detected);
 - the driver-side BPE fit: identical merges to the distributed
   argmax/replace loop it replaced, including tie-breaks;
+- the fused Lloyd fits and the nearest-codeword kernel behind every ANN
+  assignment and probe: the same cells as the SQL plans they replaced,
+  its input contract (null and mis-sized vectors, repeated ids, NaN
+  cosines, exact ties) and its plan shape;
 - scale-adaptive state partitions for stateful drains: the sizing formula.
 """
 
@@ -154,14 +158,32 @@ class TestDupKeySkewHybrid:
         assert run() == pure
 
 
+def _adjacent_pairs(freqs):
+    """(l, r, pair_n): weighted adjacent-symbol pair counts over the
+    word-frequency table. Words of a single symbol contribute nothing.
+    The pre-r13 merge loop's pair count, kept as its reference."""
+    arr = F.split(F.col("sym"), " ")
+    return (
+        freqs.select("n", arr.alias("a"))
+        .filter(F.size("a") >= 2)
+        .select(
+            "n",
+            F.explode(F.expr(
+                "transform(sequence(1, size(a) - 1),"
+                " j -> struct(element_at(a, j) AS l,"
+                "             element_at(a, j + 1) AS r))"
+            )).alias("p"),
+        )
+        .groupBy(F.col("p.l").alias("l"), F.col("p.r").alias("r"))
+        .agg(F.sum("n").alias("pair_n"))
+    )
+
+
 class TestBpeDriverFit:
     def _old_distributed_fit(self, spark, df, text_col, num_merges):
         """The pre-r13 Spark merge loop, replicated verbatim (argmax via
         orderBy(desc(pair_n), l, r).limit(1), merge via chained replace)."""
-        from delta_sharing_spark.operators.tokenizer import (
-            _adjacent_pairs,
-            word_symbol_freqs,
-        )
+        from delta_sharing_spark.operators.tokenizer import word_symbol_freqs
 
         freqs = word_symbol_freqs(df, text_col).localCheckpoint(eager=True)
         merges = []
@@ -209,10 +231,55 @@ class TestBpeDriverFit:
         assert bpe_train(df1, "text", num_merges=3).count() == 0
 
 
+def _sql_kmeans_assign(vectors, cents, id_col="vec_id",
+                       vec_col="embedding"):
+    """Assign each vector to its nearest centroid by squared L2 (per-row
+    left-to-right double fold — deterministic, replayable in SQL; ties break
+    to the lowest cell id). One broadcast of the k centroids, no shuffle.
+    The SQL plan ``kmeans_assign`` ran before the nearest-codeword kernel,
+    kept as its reference."""
+    d = vectors.crossJoin(F.broadcast(cents.select("cell", "centroid")))
+    dist = F.expr(
+        f"aggregate(zip_with({vec_col}, centroid,"
+        " (x, y) -> (CAST(x AS DOUBLE) - y) * (CAST(x AS DOUBLE) - y)),"
+        " CAST(0 AS DOUBLE), (acc, v) -> acc + v)"
+    )
+    w = Window.partitionBy(id_col).orderBy("dist", "cell")
+    return (
+        d.withColumn("dist", dist)
+        .withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") == 1)
+        .drop("__rn", "centroid", "dist")
+    )
+
+
+def _sql_pq_assign(subs, books, id_col):
+    """Nearest codeword per (vector, subspace): broadcast the m*k codebook,
+    same deterministic left-to-right double fold + (dist, cell) tie-break
+    as kmeans_assign. The SQL plan behind ``pq_encode`` before the
+    nearest-codeword kernel, kept as its reference."""
+    d = subs.join(F.broadcast(books.select("sub", "cell", "centroid")),
+                  "sub")
+    dist = F.expr(
+        "aggregate(zip_with(sv, centroid,"
+        " (x, y) -> (x - y) * (x - y)),"
+        " CAST(0 AS DOUBLE), (acc, v) -> acc + v)"
+    )
+    w = Window.partitionBy(id_col, "sub").orderBy("dist", "cell")
+    return (
+        d.withColumn("dist", dist)
+        .withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") == 1)
+        .select(id_col, "sub", F.col("cell").alias("code"))
+    )
+
+
 class TestFusedLloyd:
     """The fused (mapInArrow partials + driver rebuild) kmeans_fit /
-    pq_fit must be bit-identical to the all-DataFrame Lloyd loops they
-    replaced — including assignment tie-breaks and dropped empty cells."""
+    pq_fit and the nearest-codeword kernel behind every assignment and
+    probe must be bit-identical to the all-DataFrame plans they replaced
+    on dense vectors — including assignment tie-breaks and dropped empty
+    cells."""
 
     def _vectors(self, spark, dim=8, n=40):
         rows = []
@@ -225,10 +292,7 @@ class TestFusedLloyd:
             rows, "vec_id long, embedding array<double>"), dim
 
     def _old_kmeans(self, candidates, k, iters, dim):
-        from delta_sharing_spark.operators.similarity import (
-            ivf_centroids,
-            kmeans_assign,
-        )
+        from delta_sharing_spark.operators.similarity import ivf_centroids
 
         init_w = Window.partitionBy(
             F.pmod(F.col("vec_id"), F.lit(1))).orderBy("vec_id")
@@ -240,8 +304,8 @@ class TestFusedLloyd:
                     .alias("centroid"),
                     F.lit(1).cast("long").alias("n")))
         for _ in range(iters):
-            assigned = kmeans_assign(candidates, cents, "vec_id",
-                                     "embedding")
+            assigned = _sql_kmeans_assign(candidates, cents, "vec_id",
+                                          "embedding")
             cents = ivf_centroids(assigned, "cell", "vec_id", "embedding",
                                   dim)
         return cents
@@ -259,7 +323,6 @@ class TestFusedLloyd:
 
     def test_pq_fit_matches_dataframe_loop(self, spark):
         from delta_sharing_spark.operators.similarity import (
-            _pq_assign,
             _subvectors,
             pq_fit,
         )
@@ -275,7 +338,7 @@ class TestFusedLloyd:
                  .select("sub", "cell", F.col("sv").alias("centroid"),
                          F.lit(1).cast("long").alias("n")))
         for _ in range(2):
-            assigned = _pq_assign(subs, books, "vec_id")
+            assigned = _sql_pq_assign(subs, books, "vec_id")
             ex = subs.join(assigned, ["vec_id", "sub"]) \
                 .select("sub", F.col("code").alias("cell"),
                         F.posexplode("sv").alias("i", "x"))
@@ -298,10 +361,18 @@ class TestFusedLloyd:
         assert new == old
 
     def test_kmeans_fit_empty_input(self, spark):
-        from delta_sharing_spark.operators.similarity import kmeans_fit
+        from delta_sharing_spark.operators.similarity import (
+            kmeans_assign,
+            kmeans_fit,
+        )
 
         df = spark.createDataFrame([], "vec_id long, embedding array<double>")
-        assert kmeans_fit(df, k=4, iters=2, dim=8).count() == 0
+        cents = kmeans_fit(df, k=4, iters=2, dim=8)
+        assert cents.count() == 0
+        # an empty codebook assigns no row
+        one, _dim = self._vectors(spark, n=1)
+        assert kmeans_assign(one, cents).columns == [*one.columns, "cell"]
+        assert kmeans_assign(one, cents).count() == 0
 
     @staticmethod
     def _embedding_batch(vectors):
@@ -314,11 +385,9 @@ class TestFusedLloyd:
     def test_lloyd_partials_reject_mis_sized_vectors(self):
         # two 2-value vectors flatten to 4 values, which reshape(-1, 4)
         # would silently read as ONE 4-dim vector
-        from delta_sharing_spark.operators.similarity import (
-            _lloyd_partials_fn,
-        )
+        from delta_sharing_spark.operators.similarity import _pq_partials_fn
 
-        fn = _lloyd_partials_fn([0], [[0.0, 0.0, 0.0, 0.0]], 4)
+        fn = _pq_partials_fn({0: ([0], [[0.0, 0.0, 0.0, 0.0]])}, 1, 4)
         batch = self._embedding_batch([[1.0, 2.0], [3.0, 4.0]])
         with pytest.raises(ValueError, match="length 4"):
             list(fn([batch]))
@@ -342,12 +411,9 @@ class TestFusedLloyd:
     def test_partials_reject_values_past_fixed_point_range(self):
         # FLOOR(x * 1e12) of |x| = 1e7 is 1e19, past int64's 9.22e18:
         # numpy's cast would wrap it into a wrong update sum
-        from delta_sharing_spark.operators.similarity import (
-            _lloyd_partials_fn,
-            _pq_partials_fn,
-        )
+        from delta_sharing_spark.operators.similarity import _pq_partials_fn
 
-        kmeans = _lloyd_partials_fn([0], [[0.0, 0.0, 0.0, 0.0]], 4)
+        kmeans = _pq_partials_fn({0: ([0], [[0.0, 0.0, 0.0, 0.0]])}, 1, 4)
         pq = _pq_partials_fn({0: ([0], [[0.0, 0.0]]),
                               1: ([0], [[0.0, 0.0]])}, 2, 2)
         for fn in (kmeans, pq):
@@ -368,6 +434,162 @@ class TestFusedLloyd:
             kmeans_fit(df, k=2, iters=1, dim=4).collect()
         with pytest.raises(Exception, match="fixed-point"):
             pq_fit(df, m=2, k=2, iters=1, dim=4).collect()
+
+    def test_assignments_match_sql_plans(self, spark):
+        """The kernel's kmeans_assign and pq_encode pick the cells of the
+        SQL plans they replaced, exact ties included."""
+        from delta_sharing_spark.operators.similarity import (
+            _subvectors,
+            kmeans_assign,
+            kmeans_fit,
+            pq_encode,
+            pq_fit,
+        )
+
+        df, dim = self._vectors(spark)
+        cents = kmeans_fit(df, k=4, iters=1, dim=dim)
+        assert sorted(map(tuple, kmeans_assign(df, cents).collect())) == \
+            sorted(map(tuple, _sql_kmeans_assign(df, cents).collect()))
+        books = pq_fit(df, m=2, k=4, iters=1, dim=dim)
+        subs = _subvectors(df, "vec_id", "embedding", 2, dim)
+        assert sorted(map(tuple, pq_encode(df, books, m=2, dim=dim)
+                          .collect())) == \
+            sorted(map(tuple, _sql_pq_assign(subs, books, "vec_id")
+                       .collect()))
+
+    @pytest.mark.parametrize("vector", [None, [1.0, 2.0, 3.0]])
+    def test_assignments_reject_null_and_mis_sized_vectors(self, spark,
+                                                           vector):
+        # a null or short vector has no nearest cell: the assignments
+        # raise the fits' error
+        from delta_sharing_spark.operators.similarity import (
+            kmeans_assign,
+            pq_encode,
+            pq_fit,
+        )
+
+        cents = spark.createDataFrame(
+            [(0, [0.0] * 4), (1, [1.0] * 4)], "cell int, centroid array<double>")
+        books = pq_fit(spark.createDataFrame(
+            [(0, [0.0] * 4), (1, [1.0] * 4)],
+            "vec_id long, embedding array<double>"), m=2, k=2, iters=0, dim=4)
+        bad = spark.createDataFrame([(0, [0.5] * 4), (1, vector)],
+                                    "vec_id long, embedding array<double>")
+        with pytest.raises(Exception, match="kmeans_assign: (null|.*length)"):
+            kmeans_assign(bad, cents).collect()
+        with pytest.raises(Exception, match="pq_encode: (null|.*length)"):
+            pq_encode(bad, books, m=2, dim=4).collect()
+
+    def test_duplicate_ids_are_each_assigned(self, spark):
+        # rows are assigned one by one, whatever their ids
+        from delta_sharing_spark.operators.similarity import (
+            kmeans_assign,
+            pq_encode,
+            pq_fit,
+        )
+
+        cents = spark.createDataFrame(
+            [(0, [0.0, 0.0]), (1, [1.0, 1.0])],
+            "cell int, centroid array<double>")
+        df = spark.createDataFrame(
+            [(7, [0.1, 0.1]), (7, [0.9, 0.9]), (8, [0.2, 0.0])],
+            "vec_id long, embedding array<double>")
+        assert sorted((r["vec_id"], r["cell"]) for r in
+                      kmeans_assign(df, cents).collect()) == \
+            [(7, 0), (7, 1), (8, 0)]
+        books = pq_fit(df, m=2, k=2, iters=0, dim=2)
+        assert pq_encode(df, books, m=2, dim=2).count() == 6
+
+    def test_exact_ties_fall_to_the_lowest_cell(self):
+        import numpy as np
+
+        from delta_sharing_spark.operators.similarity import _nearest
+
+        # cells 0 and 2 coincide, cell 1 is a scaled copy (same cosine)
+        C = np.array([[1.0, 2.0], [2.0, 4.0], [1.0, 2.0], [-1.0, 0.0]])
+        X = np.array([[1.0, 2.0], [0.0, 0.0], [1.5, 3.0]])
+        assert _nearest(X, C, 2, "l2").tolist() == [[0, 2], [3, 0], [0, 1]]
+        # cosine: a zero-norm row is NaN against every cell -> cell order
+        assert _nearest(X, C, 3, "cosine").tolist() == \
+            [[0, 1, 2], [0, 1, 2], [0, 1, 2]]
+
+    def test_cosine_probe_orders_like_spark(self, spark):
+        """The probe ranks cells as Spark orders the cosines: descending,
+        NaN (a zero-norm query or centroid) first, ties to the lower
+        cell."""
+        from delta_sharing_spark.functions.vectors import dot, norm
+        from delta_sharing_spark.operators.similarity import (
+            _with_nearest,
+            ivf_search,
+        )
+
+        cents = spark.createDataFrame(
+            [(0, [1.0, 0.0]), (1, [0.0, 0.0]), (2, [0.0, 1.0]),
+             (3, [2.0, 0.0]), (4, [1.0, 1.0])],
+            "cell int, centroid array<double>")
+        q = spark.createDataFrame(
+            [(0, [0.0, 0.0]), (1, [3.0, 1.0]), (2, [-1.0, 2.0])],
+            "query_id long, q_vec array<double>")
+        den = norm("q_vec") * norm("centroid")
+        cos = F.when(den == 0, F.lit(float("nan"))) \
+            .otherwise(dot("q_vec", "centroid") / den)
+        w = Window.partitionBy("query_id").orderBy(F.desc("cos"), "cell")
+        want = {(r["query_id"], r["cell"]) for r in
+                q.crossJoin(cents).withColumn("cos", cos)
+                .withColumn("rk", F.row_number().over(w))
+                .filter("rk <= 3").collect()}
+        got = {(r["query_id"], r["cell"]) for r in
+               _with_nearest(q, cents, "q_vec", "probe", n=3,
+                             metric="cosine")
+               .select("query_id", F.explode("__near").alias("cell"))
+               .collect()}
+        assert got == want
+        assert (0, 1) in got and (1, 1) in got  # NaN ranks first
+        # end to end over queries of non-zero norm (the candidate scoring
+        # still divides by the query norm in SQL)
+        cands = spark.createDataFrame(
+            [(10 + c, [1.0, float(c)], c) for c in range(5)],
+            "vec_id long, embedding array<double>, cell int")
+        out = ivf_search(q.filter("query_id > 0")
+                         .toDF("vec_id", "embedding"),
+                         cands, cents, "cell", k=5, nprobe=3)
+        assert {(r["query_id"], r["neighbor_id"] - 10) for r in
+                out.collect()} == {p for p in want if p[0] > 0}
+
+    def test_ann_plans_have_no_nested_loop_or_assignment_window(self, spark):
+        """Assignments and probes are map passes: no plan has a
+        BroadcastNestedLoopJoin, and the only Windows are the two of
+        ``_topk_per_query``."""
+        from delta_sharing_spark.operators.similarity import (
+            ivf_pq_fit,
+            ivf_pq_topk,
+            ivf_search,
+            kmeans_assign,
+            kmeans_fit,
+            pq_encode,
+            pq_fit,
+        )
+
+        df, dim = self._vectors(spark)
+        cents = kmeans_fit(df, k=4, iters=1, dim=dim)
+        coarse, books, codes = ivf_pq_fit(df, k_coarse=3, m=2, k=3,
+                                          coarse_iters=1, dim=dim)
+        queries = df.filter("vec_id < 3")
+        plans = {
+            "kmeans_assign": (kmeans_assign(df, cents), 0),
+            "pq_encode": (pq_encode(df, pq_fit(df, m=2, k=3, dim=dim),
+                                    m=2, dim=dim), 0),
+            "ivf_search": (ivf_search(queries, kmeans_assign(df, cents),
+                                      cents, "cell", nprobe=2), 2),
+            "ivf_pq_topk": (ivf_pq_topk(queries, coarse, books, codes,
+                                        nprobe=2, m=2, dim=dim), 2),
+        }
+        for name, (out, windows) in plans.items():
+            plan = out._jdf.queryExecution().executedPlan().toString()
+            assert "BroadcastNestedLoopJoin" not in plan, name
+            nodes = [line.split("- ", 1)[-1].split(" ")[0]
+                     for line in plan.splitlines()]
+            assert nodes.count("Window") == windows, (name, plan)
 
 
 class TestWinnowBatchVectorization:

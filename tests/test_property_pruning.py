@@ -362,6 +362,59 @@ def test_mismatched_literal_type_keeps_the_file(spark, tmp_path, op):
             assert len(kept) == len(snap.files) == 2, name
 
 
+_P_IS_A = {"op": "equal", "children": [
+    {"op": "column", "name": "p", "valueType": "string"},
+    {"op": "literal", "value": "a", "valueType": "string"}]}
+_P_VS_INT = {"op": "lessThan", "children": [
+    {"op": "column", "name": "p", "valueType": "string"},
+    {"op": "literal", "value": "1", "valueType": "int"}]}
+_ID_VS_STRING = {"op": "equal", "children": [
+    {"op": "literal", "value": "x", "valueType": "string"},
+    {"op": "column", "name": "id", "valueType": "int"}]}
+
+
+@pytest.mark.parametrize("hint, want", [
+    (_P_VS_INT, ["a", "b"]),
+    (_ID_VS_STRING, ["a", "b"]),
+    ({"op": "and", "children": [_P_IS_A, _P_VS_INT]}, ["a"]),
+    ({"op": "or", "children": [_P_IS_A, _ID_VS_STRING]}, ["a", "b"]),
+    ({"op": "not", "children": [_P_VS_INT]}, ["a", "b"]),
+    ({"op": "not", "children": [{"op": "and", "children": [
+        _P_IS_A, _P_VS_INT]}]}, ["a", "b"]),
+])
+def test_mismatched_literal_type_is_unknown_in_arrow(spark, tmp_path,
+                                                     monkeypatch, hint, want):
+    # a leaf pair that does not compare is Unknown in the resident
+    # evaluator itself, as in to_column: the kept set matches the
+    # checkpoint scan and no Catalyst fold runs
+    from delta_sharing_spark.plans.log import TableLog
+    from delta_sharing_spark.plans.resident import ResidentManifest
+    from delta_sharing_spark.table import SharedTable
+    from tests.conftest import manifest_storage_set
+
+    path = str(tmp_path / "t")
+    TableLog(spark, path).create(
+        spark.createDataFrame([(1, "a"), (2, "b")], "id int, p string"),
+        partition_by=["p"])
+    folds = []
+    for method in ("_fold", "_catalyst_mask"):
+        real = getattr(ResidentManifest, method)
+        monkeypatch.setattr(
+            ResidentManifest, method,
+            lambda self, *a, _m=method, _f=real: folds.append(_m)
+            or _f(self, *a))
+    kept = {}
+    for name in ("resident", "scan"):
+        with manifest_storage_set(spark, name) as storage:
+            table = SharedTable(spark, path)
+            snap = table.log.snapshot()
+            storage.check(table.log, snap)
+            kept[name] = sorted(a.partitionValues["p"] for a in
+                                table.kept_adds(snap, hint, None, None))
+    assert kept == {"resident": want, "scan": want}
+    assert folds == []
+
+
 class TestAsyncQuery:
     def test_submit_poll_dedup(self, spark, events, tmp_path):
         from delta_sharing_spark.asyncquery import AsyncQueryManager
